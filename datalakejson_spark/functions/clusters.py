@@ -104,7 +104,7 @@ def connected_components(
     replacing the count job + exceptAll job (exceptAll alone shuffled both
     sides). Same fixpoint condition, exactly (set equality either way).
     Measured on the l2g pair graph: CC stage 1.57× sf0.1 / see
-    OPTIMIZATION_r16.md for tiers (tools/ab_r16.py cc)."""
+    OPTIMIZATION_r16.md for tiers (tools/ab.py cc)."""
     adj = _canonical(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     ).localCheckpoint()

@@ -29,27 +29,25 @@ import logging
 import os
 import re
 import shutil
+import time
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from datalakejson_spark import publish
 from datalakejson_spark.functions.dedup import band_table, minhash_signatures
 from datalakejson_spark.fsutil import atomic_write_json
 from datalakejson_spark.plans.killpoints import fire
+from datalakejson_spark.publish import STAGING as _STAGING
+from datalakejson_spark.publish import STALE_STAGE_S, is_missing_file_error
 from datalakejson_spark.registry import register
 from datalakejson_spark.sources.tables import load_table
 
 _LOG = logging.getLogger(__name__)
 
 BAND_KEY = ["band", "band_hash"]
-_STAGING = "_staging"
 _INDEX_SUBDIRS = ("hashes", "bands")
-#: markerless (uncommitted) stages younger than this are left alone — they
-#: may belong to a LIVE concurrent runner mid-stage, not a crashed one.
-#: A crashed run's stage is garbage either way (its batch replays and
-#: re-stages), so deferring the cleanup one grace period is free.
-STALE_STAGE_S = 3600.0
 
 
 def _error_condition(exc) -> str | None:
@@ -65,24 +63,6 @@ def _error_condition(exc) -> str | None:
             if cond:
                 return cond
     return None
-
-
-def _is_missing_file_error(exc: Exception) -> bool:
-    """True when a Spark job failed because an input file vanished under
-    it — the signature of a CONCURRENT maintenance publish deleting a
-    subsumed file between the reader's listing and its scan. Matched on
-    the JVM exception text (the Python-visible class is a generic
-    Py4JJavaError/SparkException)."""
-    text = str(exc)
-    return any(
-        marker in text
-        for marker in (
-            "FileNotFoundException",
-            "PATH_NOT_FOUND",
-            "FILE_NOT_EXIST",
-            "does not exist",
-        )
-    )
 
 
 def _read_index_pair(
@@ -211,296 +191,123 @@ def _read_index_pair_pruned(
     return out["hashes"], out["bands"], stats
 
 
-def stage_newest_mtime(stage: str) -> float:
-    """Newest mtime anywhere in the stage TREE — the garbage sweep's age
-    basis. A live stager writing a long batch keeps updating deep files
-    (parquet parts under ``cells/cell=N/``) while the top dir's mtime
-    stays at creation time; aging on the top mtime alone would let a
-    concurrent publish pass sweep an ACTIVE write mid-flight — real at
-    the multi-hour batch sizes a 100 TB deployment appends (the
-    STALE_STAGE_S grace is one hour). O(files-in-one-stage) per pass."""
-    try:
-        newest = os.path.getmtime(stage)
-    except OSError:
-        return time.time()  # vanishing under us: fresh, never sweep
-    for root, _dirs, files in os.walk(stage):
-        for name in files:
-            try:
-                newest = max(
-                    newest, os.path.getmtime(os.path.join(root, name))
+class _DedupStore(publish.Store):
+    """The index pair on the shared staged publish (:mod:`publish`):
+    appends stage ``hashes/`` + ``bands/`` deltas; compaction, rebuild and
+    major stages also carry a ``_SUBSUMED.json`` snapshot. Store steps:
+    resumable rebuild/major checkpoints are never swept, a discarded
+    committed stage is never silent, moved files warm the stats sidecar,
+    and a rebuild stage's lane marker flips last."""
+
+    def holds(self, stage: str) -> bool:
+        # a multi-hour subdir write has no heartbeat that distinguishes it
+        # from a crash: only the owning admin verb adopts or resets it
+        return os.path.exists(os.path.join(stage, _REBUILD_META)) or os.path.exists(
+            os.path.join(stage, _MAJOR_META)
+        )
+
+    def lost(self, stage: str, missing: list[str]) -> None:
+        # Discarding must never be SILENT: the in-process rebuild_index
+        # verifies its own outcome, but a rebuild that CRASHED after its
+        # commit and is discarded here by a LATER entry point would
+        # otherwise throw away hours of work with no operator signal. Warn
+        # always, and leave a tombstone for a rebuild/major stage (a plain
+        # file in the staging root — the publish loop only walks dirs).
+        token = os.path.basename(stage)
+        _LOG.warning(
+            "discarding committed maintenance stage %s under %s as a "
+            "publish-race loser (%d subsumed-snapshot files already "
+            "gone, e.g. %s) — the concurrent winner's layout is live",
+            token, self.root, len(missing), missing[0],
+        )
+        if token in (_REBUILD_STAGE, _MAJOR_STAGE):
+            try:  # advisory observability only
+                atomic_write_json(
+                    os.path.join(self.staging, f"_LOST_{token}.json"),
+                    {
+                        "stage": token,
+                        "discarded_at": time.time(),
+                        "missing_subsumed": missing[:32],
+                        "missing_count": len(missing),
+                    },
                 )
-            except OSError:
-                continue
-    return newest
+            except OSError:  # pragma: no cover - advisory
+                pass
 
-
-_SWEEP_PREFIX = "_SWEEP-"
-
-
-def _sweep_stale_stage(stage: str) -> None:
-    """Reclaim an aged-out uncommitted stage ATOMICALLY: rename it to a
-    ``_SWEEP-`` claim first, re-check for a commit that raced in, and
-    only then delete. A plain rmtree could interleave with the stager's
-    own ``_COMMITTED`` write (check-then-act): the marker lands while the
-    tree is half-deleted and the next publish would roll a PARTIAL batch
-    forward — silent row loss. After the rename the stager's marker write
-    fails ENOENT (loud, it re-stages); a marker that landed BEFORE the
-    rename travels with the dir, the re-check sees it, and the stage is
-    renamed back intact (the commit won)."""
-    trash = os.path.join(
-        os.path.dirname(stage), _SWEEP_PREFIX + os.path.basename(stage)
-    )
-    try:
-        os.rename(stage, trash)
-    except OSError:
-        return  # vanished or another runner's claim: not ours to sweep
-    if os.path.exists(os.path.join(trash, "_COMMITTED")):
-        try:
-            os.rename(trash, stage)  # commit won the race: restore whole
-        except OSError:
-            pass  # original name re-taken: leave the claim for rescue
-        return
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def _settle_sweep_claim(staging: str, token: str) -> None:
-    """Rescue or clear a ``_SWEEP-`` claim left by a sweeper that died
-    between its rename and its re-check: a claim holding a ``_COMMITTED``
-    marker is a committed stage in trash-limbo — rename it back under its
-    original token (roll-forward work); anything else is the garbage the
-    dead sweeper already judged it to be."""
-    trash = os.path.join(staging, token)
-    orig = os.path.join(staging, token[len(_SWEEP_PREFIX):])
-    if os.path.exists(os.path.join(trash, "_COMMITTED")) and not os.path.exists(
-        orig
-    ):
-        try:
-            os.rename(trash, orig)
-        except OSError:
-            pass  # raced with another rescuer: either terminal is fine
-        return
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def _publish_staged(
-    index_dir: str, stale_stage_s: float = STALE_STAGE_S
-) -> dict[str, str]:
-    """Roll the staged index deltas forward into the live dirs. Returns
-    ``{stage_token: "published" | "lost" | "pending" | "raced"}`` so a
-    maintenance caller (rebuild_index) can tell whether ITS stage took
-    effect or was discarded as a publish-race loser.
-
-    Each batch stages BOTH parquet deltas under ``_staging/<token>/`` and
-    drops a ``_COMMITTED`` marker only after both writes finish; publishing
-    is then a sequence of idempotent file moves. A crash at ANY point
-    replays safely: no marker -> the stage is garbage (the batch itself
-    replays and re-stages) and is swept once it is older than
-    ``stale_stage_s`` — the age guard keeps a CONCURRENT runner's
-    mid-write stage from being deleted under it; marker present -> the
-    moves are completed here before the next audit reads the indexes, so
-    the pair can never stay half-appended (the failure mode where a replay
-    sees its exact-hash but not its bands and develops a permanent
-    near-dup blind spot).
-
-    A COMPACTION stage (compact_index) additionally carries a
-    ``_SUBSUMED.json`` manifest naming the live files its compacted set
-    replaces; those are deleted AFTER the moves complete, so the only
-    crash windows leave either the old layout (no marker) or a
-    temporarily DUPLICATED index (published, deletes incomplete) —
-    duplicate rows are harmless to the semi-join probes, and the deletes
-    are idempotent roll-forward work finished here before the next audit.
-
-    Local-filesystem rename, like the archive move (plans/ingest.py:313);
-    on an object store the same contract is a staged prefix + manifest.
-    """
-    import json
-    import time
-
-    staging_root = os.path.join(index_dir, _STAGING)
-    outcomes: dict[str, str] = {}
-    if not os.path.isdir(staging_root):
-        return outcomes
-    for token in sorted(os.listdir(staging_root)):
-        stage = os.path.join(staging_root, token)
-        if not os.path.isdir(stage):
-            continue
-        if token.startswith(_SWEEP_PREFIX):
-            _settle_sweep_claim(staging_root, token)  # dead sweeper's limbo
-            continue
-        try:
-            outcomes[token] = _publish_one_stage(index_dir, stage, stale_stage_s)
-        except FileNotFoundError:
-            # Two runners rolling forward the SAME stage: the other one
-            # published or loser-discarded it between our checks and our
-            # reads (manifest/marker/listing vanished mid-flight). Either
-            # terminal state is complete and correct on its own — nothing
-            # left for us to do with this stage.
-            outcomes[token] = "raced"
-    return outcomes
-
-
-def _write_lost_tombstone(
-    index_dir: str, token: str, missing: list[str]
-) -> None:
-    """Record that a committed maintenance stage was discarded as a
-    publish-race loser — ``_staging/_LOST_<token>.json`` with a timestamp
-    and the vanished snapshot files. Advisory observability only (the live
-    index is the winner's complete layout); best-effort by design."""
-    import json
-    import time
-
-    try:
-        path = os.path.join(index_dir, _STAGING, f"_LOST_{token}.json")
-        tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "stage": token,
-                    "discarded_at": time.time(),
-                    "missing_subsumed": missing[:32],
-                    "missing_count": len(missing),
-                },
-                fh,
-            )
-        os.replace(tmp, path)
-    except OSError:  # pragma: no cover - advisory
-        pass
-
-
-def _publish_one_stage(index_dir: str, stage: str, stale_stage_s: float) -> str:
-    """Roll one stage forward; returns "published", "lost" (discarded as a
-    publish-race loser), or "pending" (uncommitted, left alone/swept)."""
-    import json
-    import time
-
-    if True:  # hold the original loop body's indentation (diff-minimal)
-        if not os.path.exists(os.path.join(stage, "_COMMITTED")):
-            if os.path.exists(
-                os.path.join(stage, _REBUILD_META)
-            ) or os.path.exists(os.path.join(stage, _MAJOR_META)):
-                # A resumable rebuild/major-compaction checkpoint: a
-                # multi-hour subdir write has no heartbeat that
-                # distinguishes it from a crash, so the age sweep must
-                # never reclaim it — only the owning admin verb adopts or
-                # resets this stage.
-                return "pending"
-            # age on the NEWEST mtime in the tree (a live stager's deep
-            # writes keep it fresh) and reclaim by atomic rename-then-
-            # recheck — a commit racing the sweep is either restored whole
-            # or fails loudly ENOENT, never half-swept (round 15)
-            if time.time() - stage_newest_mtime(stage) >= stale_stage_s:
-                _sweep_stale_stage(stage)
-            return "pending"
-        manifest = os.path.join(stage, "_SUBSUMED.json")
-        subsumed: dict[str, list[str]] = {}
-        if os.path.exists(manifest):
-            with open(manifest) as fh:
-                subsumed = json.load(fh)
-        # Publish-race loser detection (round 12): a maintenance stage
-        # (compaction/rebuild — anything with a _SUBSUMED manifest) is
-        # valid only against the live-file SNAPSHOT it read. If another
-        # runner's maintenance already subsumed any of those files, this
-        # stage LOST the race: its outputs would duplicate rows the winner
-        # already rewrote, so it is discarded whole (correct either way —
-        # the winner's layout is complete). The check runs only BEFORE
-        # this stage's own deletes begin: the _PUBLISHING marker is
-        # dropped at the point of no return, and a replay that finds it
-        # always rolls FORWARD (missing subsumed files are then this
-        # stage's own completed deletes, not a lost race).
-        publishing = os.path.join(stage, "_PUBLISHING")
-        if subsumed and not os.path.exists(publishing):
-            missing = [
-                f"{sub}/{name}"
-                for sub, names in subsumed.items()
-                for name in names
-                if not os.path.exists(os.path.join(index_dir, sub, name))
-            ]
-            if missing:
-                # Discarding must never be SILENT (ADVICE r12): the
-                # in-process rebuild_index verifies its own outcome, but a
-                # rebuild that CRASHED after _COMMITTED and is discarded
-                # here by a LATER entry point would otherwise throw away
-                # hours of work with no operator signal. Warn always and
-                # leave a tombstone for a rebuild stage (a plain file in
-                # the staging root — the publish loop only walks dirs).
-                token = os.path.basename(stage)
-                _LOG.warning(
-                    "discarding committed maintenance stage %s under %s as a "
-                    "publish-race loser (%d subsumed-snapshot files already "
-                    "gone, e.g. %s) — the concurrent winner's layout is live",
-                    token, index_dir, len(missing), missing[0],
-                )
-                if token in (_REBUILD_STAGE, _MAJOR_STAGE):
-                    _write_lost_tombstone(index_dir, token, missing)
-                shutil.rmtree(stage, ignore_errors=True)
-                return "lost"
-            with open(publishing, "w") as fh:
-                fh.write("ok")
+    def publishing(self, stage: str) -> None:
         fire("dedup:publish_publishing")  # marked: replay must roll forward
-        sidecar_adds: dict[str, dict] = {}
         for sub in _INDEX_SUBDIRS:
-            src_dir, dst_dir = os.path.join(stage, sub), os.path.join(index_dir, sub)
-            os.makedirs(dst_dir, exist_ok=True)
-            adds = sidecar_adds.setdefault(sub, {})
-            if os.path.isdir(src_dir):
-                for name in os.listdir(src_dir):
-                    if not name.endswith(".parquet"):
-                        continue
-                    dst = os.path.join(dst_dir, name)
-                    if not os.path.exists(dst):  # idempotent re-publish
-                        # Warm the stats sidecar from the STAGED file's
-                        # footer before the move: just-written and
-                        # page-hot locally, and on an object store this
-                        # turns N per-probe footer GETs after a
-                        # compaction into zero (the self-heal in
-                        # _file_stats remains the fallback). Advisory —
-                        # a failed read just means lazy healing later.
-                        try:
-                            rng, rows = _footer_stats(
-                                os.path.join(src_dir, name), _PRUNE_KEY[sub]
-                            )
-                            adds[name] = _encode_sidecar_entry(rng, rows)
-                        except Exception:  # noqa: BLE001
-                            pass
-                        try:
-                            os.replace(os.path.join(src_dir, name), dst)
-                        except FileNotFoundError:
-                            # two runners publishing the SAME stage: the
-                            # other one moved this file between our
-                            # exists() check and the replace — done is
-                            # done, as long as the file really is live
-                            if not os.path.exists(dst):
-                                raise
-                            adds.pop(name, None)
-        for sub, names in subsumed.items():
-            live = os.path.join(index_dir, sub)
-            for name in names:
-                try:
-                    os.remove(os.path.join(live, name))
-                except FileNotFoundError:  # idempotent re-delete
-                    pass
-        for sub in _INDEX_SUBDIRS:
-            if sidecar_adds.get(sub) or subsumed.get(sub):
-                _merge_sidecar_cache(
-                    os.path.join(index_dir, sub),
-                    sidecar_adds.get(sub, {}),
-                    subsumed.get(sub, []),
+            os.makedirs(os.path.join(self.root, sub), exist_ok=True)
+
+    def finish(self, stage: str, moved: list[str], subsumed: list[str]) -> None:
+        # Warm the stats sidecar from the just-moved files' footers (page-hot
+        # locally; on an object store this turns N per-probe footer GETs
+        # after a compaction into zero). Advisory — a failed read just means
+        # _file_stats heals the entry lazily later.
+        adds: dict[str, dict] = {sub: {} for sub in _INDEX_SUBDIRS}
+        gone: dict[str, list[str]] = {sub: [] for sub in _INDEX_SUBDIRS}
+        for rel in moved:
+            sub, name = rel.split("/", 1)
+            try:
+                rng, rows = _footer_stats(
+                    os.path.join(self.root, rel), _PRUNE_KEY[sub]
                 )
-        # A REBUILD stage (rebuild_index) carries the new lane-definition
-        # marker; it replaces the live one only after the new files are in
-        # and the subsumed old-definition files are gone, so the marker
-        # flip is the last act of the publish. Crash before it: the stage
-        # is still committed and the next _publish_staged — which every
-        # entry point runs BEFORE _check_lane_meta — finishes the flip, so
-        # the guard never fires on a half-rebuilt index.
+                adds[sub][name] = _encode_sidecar_entry(rng, rows)
+            except Exception:  # noqa: BLE001
+                pass
+        for rel in subsumed:
+            sub, name = rel.split("/", 1)
+            gone[sub].append(name)
+        for sub in _INDEX_SUBDIRS:
+            if adds[sub] or gone[sub]:
+                _merge_sidecar_cache(
+                    os.path.join(self.root, sub), adds[sub], gone[sub]
+                )
+        # A REBUILD stage carries the new lane-definition marker; it replaces
+        # the live one only after the new files are in and the subsumed
+        # old-definition files are gone. Crash before it: the stage is still
+        # committed and the next _publish_staged — which every entry point
+        # runs BEFORE _check_lane_meta — finishes the flip, so the guard
+        # never fires on a half-rebuilt index.
         staged_lanes = os.path.join(stage, _LANES_META)
         if os.path.exists(staged_lanes):
             try:
-                os.replace(staged_lanes, os.path.join(index_dir, _LANES_META))
+                os.replace(staged_lanes, os.path.join(self.root, _LANES_META))
             except FileNotFoundError:  # same-stage race: the other runner
                 pass                   # flipped the marker already
-        shutil.rmtree(stage, ignore_errors=True)
-        return "published"
+
+
+def _publish_staged(index_dir: str) -> dict[str, str]:
+    """Roll the staged index deltas forward into the live dirs; returns
+    ``{stage_token: outcome}`` (see :mod:`publish`) so a maintenance
+    caller can tell whether ITS stage took effect. Every entry point runs
+    this first, so the pair can never stay half-appended (the failure mode
+    where a replay sees its exact-hash but not its bands and develops a
+    permanent near-dup blind spot)."""
+    return publish.publish_staged(_DedupStore(index_dir))
+
+
+def _publish_verified(
+    index_dir: str, token: str, staged: list[str], verb: str
+) -> None:
+    """Publish a maintenance verb's own committed stage and VERIFY it took
+    effect. The subsumed-snapshot check may discard the stage as a
+    publish-race LOSER, or a concurrent runner may have raced us to it; a
+    multi-hour rewrite silently thrown away would strand the operator on
+    the OLD index with no signal. The staged names are unique to this
+    stage, so "all live now" == "took effect" whichever runner moved
+    them."""
+    outcome = _publish_staged(index_dir).get(token)
+    if outcome == "published":
+        return
+    missing = [r for r in staged if not os.path.exists(os.path.join(index_dir, r))]
+    if missing:
+        raise RuntimeError(
+            f"{verb} lost a concurrent maintenance publish race "
+            f"(outcome={outcome!r}, {len(missing)} staged files never went "
+            "live) — the live index is the concurrent winner's layout; "
+            "rerun, or stop concurrent maintenance and retry"
+        )
 
 
 # -- per-file key-range sidecars (round 11) --------------------------------
@@ -736,8 +543,6 @@ def _merge_sidecar_cache(live_dir: str, add: dict, remove: list[str]) -> None:
     except OSError:
         pass
     try:  # sweep tmps orphaned by hard crashes (age-guarded like stages)
-        import time
-
         for n in os.listdir(live_dir):
             if n.startswith(_RANGES + ".") and n.endswith(".tmp"):
                 p = os.path.join(live_dir, n)
@@ -970,7 +775,7 @@ _PRUNE_KEY = {"hashes": "text_hash", "bands": "band_hash"}
 
 #: consecutive race-aborted compactions per index_dir (this runner's view).
 #: A LOST maintenance race is normal and self-healing — the winner's layout
-#: is complete and the next trigger re-plans — but _is_missing_file_error
+#: is complete and the next trigger re-plans — but is_missing_file_error
 #: matches on substrings (incl. the broad "does not exist"), so a PERSISTENT
 #: non-race failure (manually deleted file, bad mount, an unrelated error
 #: whose text matches) could masquerade as an endless lost race: every
@@ -1138,7 +943,7 @@ _PART_UUID = re.compile(
 )
 
 
-def _derive_runs(files) -> list[list[str]]:
+def derive_runs(files) -> list[list[str]]:
     """Group the live files into RUNS = write generations, identified by
     the job UUID every Spark write embeds in its part filenames
     (``part-NNNNN-<uuid>-c000...``) — no manifest to keep crash-consistent,
@@ -1238,7 +1043,7 @@ def compact_index(
     Concurrency posture (round 12): safe to run WHILE another runner
     audits+appends. A concurrent audit that catches a subsumed file
     vanishing mid-scan re-plans from a fresh listing
-    (``_is_missing_file_error`` retry in ingest_batch_dedup); two RACING
+    (``is_missing_file_error`` retry in ingest_batch_dedup); two RACING
     maintenance publishes are fenced by the `_SUBSUMED` snapshot check in
     ``_publish_staged`` (the loser discards itself) plus stage-unique
     output names in the segmented path, so the worst surviving overlap is
@@ -1251,7 +1056,6 @@ def compact_index(
     run it from ONE maintenance runner by preference: a lost race is
     wasted work, never corruption.
     """
-    import json
     import math
 
     _publish_staged(index_dir)  # complete any predecessor first
@@ -1285,7 +1089,7 @@ def compact_index(
                     for n in run
                 )
 
-            runs = sorted(_derive_runs(files), key=run_rows)
+            runs = sorted(derive_runs(files), key=run_rows)
             # The BASE candidate is the largest generation; it gets per-FILE
             # classification (segmented repair). Every other generation keeps
             # the run-level rules: DIRTY — must rewrite regardless of run
@@ -1447,7 +1251,7 @@ def compact_index(
             ).parquet(os.path.join(stage, sub))
             counts[sub] = (len(files), len(files) - len(merge) - len(zero) + parts)
     except Exception as exc:  # noqa: BLE001 — narrowed below
-        if not _is_missing_file_error(exc):
+        if not is_missing_file_error(exc):
             raise
         # A concurrent maintenance publish deleted a live file between
         # this compaction's listing and its scan: this run LOST the
@@ -1485,19 +1289,15 @@ def compact_index(
         _record_fold_history(index_dir, target_rows_per_file, max_runs, counts)
         return counts
     fire("dedup:compact_staged")  # no marker yet: crash = old layout wins
-    # The stage dir normally comes into existence via the Spark parquet
-    # write above — but every subdir can take the n_rows==0
-    # subsume-without-write path (e.g. a tail of all-duplicate replay
-    # batches, each appending a 0-row stats-less file, crosses max_runs
-    # while nothing non-empty folds in). subsumed is non-empty then, and
-    # the manifest open below must not FileNotFoundError (ADVICE r11 —
-    # an inline-triggered compaction raising after publish wedges the
-    # ingest loop).
-    os.makedirs(stage, exist_ok=True)
-    with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump(subsumed, fh)
-    with open(os.path.join(stage, "_COMMITTED"), "w") as marker:
-        marker.write("ok")
+    # write_subsumed creates the stage dir: every subdir can take the
+    # n_rows==0 subsume-without-write path (e.g. a tail of all-duplicate
+    # replay batches, each appending a 0-row stats-less file, crosses
+    # max_runs while nothing non-empty folds in), leaving no Spark write
+    # to have created it
+    publish.write_subsumed(
+        stage, [f"{sub}/{n}" for sub, names in subsumed.items() for n in names]
+    )
+    publish.commit_stage(stage)
     fire("dedup:compact_committed")  # committed, not yet published
     _publish_staged(index_dir)
     _record_fold_history(index_dir, target_rows_per_file, max_runs, counts)
@@ -1695,9 +1495,7 @@ def rebuild_index(
     # finished work the publish below rolls forward (nothing to resume);
     # an uncommitted one resumes only when its checkpoint matches THIS
     # call's corpus and knobs.
-    if os.path.isdir(stage) and not os.path.exists(
-        os.path.join(stage, "_COMMITTED")
-    ):
+    if os.path.isdir(stage) and not publish.is_committed(stage):
         recorded = None
         try:
             with open(meta_path) as fh:
@@ -1742,45 +1540,21 @@ def rebuild_index(
             written[sub] = rows[sub]
         atomic_write_json(done_path, {"rows": written[sub]})
         fire("dedup:rebuild_subdir_done")  # checkpoint: resume skips this sub
-    subsumed = {
-        sub: _live_files(os.path.join(index_dir, sub)) for sub in _INDEX_SUBDIRS
-    }
-    with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump(subsumed, fh)
+    publish.write_subsumed(
+        stage,
+        [
+            f"{sub}/{n}"
+            for sub in _INDEX_SUBDIRS
+            for n in _live_files(os.path.join(index_dir, sub))
+        ],
+    )
     with open(os.path.join(stage, _LANES_META), "w") as fh:
         json.dump(_current_lane_meta(), fh)
-    staged_names = {
-        sub: _live_files(os.path.join(stage, sub)) for sub in _INDEX_SUBDIRS
-    }
+    staged = publish.staged_files(stage)
     fire("dedup:rebuild_staged")  # no marker yet: crash = old index wins
-    with open(os.path.join(stage, "_COMMITTED"), "w") as marker:
-        marker.write("ok")
+    publish.commit_stage(stage)
     fire("dedup:rebuild_committed")  # committed, not yet published
-    outcome = _publish_staged(index_dir).get(_REBUILD_STAGE)
-    if outcome != "published":
-        # The _SUBSUMED snapshot check may have discarded this rebuild as a
-        # publish-race LOSER (a concurrent runner's compaction subsumed one
-        # of the live files this rebuild promised to replace) — or a
-        # concurrent runner's _publish_staged raced us to the stage.
-        # Success must be verified, not assumed: a multi-hour rebuild
-        # silently thrown away while returning row counts would strand the
-        # operator on the OLD index with no signal. The staged output names
-        # are unique to this rebuild, so "all live now" == "took effect"
-        # regardless of which runner moved them.
-        missing = [
-            n
-            for sub, names in staged_names.items()
-            for n in names
-            if not os.path.exists(os.path.join(index_dir, sub, n))
-        ]
-        if missing:
-            raise RuntimeError(
-                f"rebuild_index lost a concurrent maintenance publish race "
-                f"(outcome={outcome!r}, {len(missing)} staged files never "
-                "went live) — the live index is the concurrent winner's "
-                "layout; rerun the rebuild, or stop concurrent maintenance "
-                "and retry"
-            )
+    _publish_verified(index_dir, _REBUILD_STAGE, staged, "rebuild_index")
     return written
 
 
@@ -1958,7 +1732,7 @@ def _needs_compaction(
 
     for sub in _INDEX_SUBDIRS:
         stats = _file_stats(os.path.join(index_dir, sub), _PRUNE_KEY[sub])
-        runs = _derive_runs(stats)
+        runs = derive_runs(stats)
         if len(runs) > max_runs:
             return True
         if any(
@@ -2174,7 +1948,7 @@ def ingest_batch_dedup(
             ).localCheckpoint(eager=True)
             break
         except Exception as exc:  # noqa: BLE001 — retried narrowly below
-            if attempt == 2 or not _is_missing_file_error(exc):
+            if attempt == 2 or not is_missing_file_error(exc):
                 raise
     if on_kept is not None:
         on_kept(kept)
@@ -2199,8 +1973,7 @@ def ingest_batch_dedup(
     )
     fan_in(kept_bands).write.mode("overwrite").parquet(os.path.join(stage, "bands"))
     fire("dedup:before_commit_marker")  # both staged, marker missing
-    with open(os.path.join(stage, "_COMMITTED"), "w") as marker:
-        marker.write("ok")
+    publish.commit_stage(stage)
     fire("dedup:after_commit_marker")  # committed, not yet published
     _publish_staged(index_dir)
     # one resolution shared by the trigger AND the triggered compaction —
@@ -2329,7 +2102,7 @@ def _base_frag_excess(
     (mirrors _needs_compaction's 4-file slack), >0 = fragmented."""
     import math
 
-    runs = _derive_runs(stats)
+    runs = derive_runs(stats)
     if not runs:
         return 0, 0, 0
 
@@ -2357,7 +2130,6 @@ def _record_fold_history(
     tail line is skipped by the reader) — the trigger needs a few recent
     records, never a consistent full log."""
     import json
-    import time
 
     try:
         rec: dict = {"ts": time.time(), "max_runs": max_runs,
@@ -2460,9 +2232,7 @@ def major_compact_index(
         "target_rows_per_file": target_rows_per_file,
         "snapshot": snapshot,
     }
-    if os.path.isdir(stage) and not os.path.exists(
-        os.path.join(stage, "_COMMITTED")
-    ):
+    if os.path.isdir(stage) and not publish.is_committed(stage):
         recorded = None
         try:
             with open(meta_path) as fh:
@@ -2520,31 +2290,14 @@ def major_compact_index(
         written[sub] = n_rows
         atomic_write_json(done_path, {"rows": n_rows})
         fire("dedup:major_subdir_done")  # checkpoint: resume skips this sub
-    with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump(snapshot, fh)
-    staged_names = {
-        sub: _live_files(os.path.join(stage, sub)) for sub in _INDEX_SUBDIRS
-    }
+    publish.write_subsumed(
+        stage, [f"{sub}/{n}" for sub, names in snapshot.items() for n in names]
+    )
+    staged = publish.staged_files(stage)
     fire("dedup:major_staged")  # no marker yet: crash = old layout wins
-    with open(os.path.join(stage, "_COMMITTED"), "w") as marker:
-        marker.write("ok")
+    publish.commit_stage(stage)
     fire("dedup:major_committed")  # committed, not yet published
-    outcome = _publish_staged(index_dir).get(_MAJOR_STAGE)
-    if outcome != "published":
-        missing = [
-            n
-            for sub, names in staged_names.items()
-            for n in names
-            if not os.path.exists(os.path.join(index_dir, sub, n))
-        ]
-        if missing:
-            raise RuntimeError(
-                f"major_compact_index lost a concurrent maintenance publish "
-                f"race (outcome={outcome!r}, {len(missing)} staged files "
-                "never went live) — the live index is the concurrent "
-                "winner's layout; rerun, or stop concurrent maintenance "
-                "and retry"
-            )
+    _publish_verified(index_dir, _MAJOR_STAGE, staged, "major_compact_index")
     # the major rewrite IS the cure the history was evidencing: reset it so
     # the trigger re-arms only on fresh post-major measurements
     try:

@@ -1,32 +1,23 @@
 """Shared maintenance plane for persisted, partition-keyed vector indexes
-(SURVEY.md §2.12 L3 scale path): the staged-publish / exactly-once-append /
-tiered-compaction machinery that BOTH persisted ANN indexes ride —
+(SURVEY.md §2.12 L3 scale path): the exactly-once-append / tiered-compaction
+/ tombstone machinery that BOTH persisted ANN indexes ride —
 
 - the IVF index (functions/ivf.py): parquet partitioned by ``cell=N`` with a
   ``_IVF.json`` quantizer meta, and
 - the LSH index (functions/lsh_index.py): parquet partitioned by ``tb=N``
   with a ``_LSH.json`` family meta.
 
-Factored out of functions/ivf.py in round 14 (VERDICT r13 #6 — the same
-one-definition rule ADVICE r12 applied to the nprobe default): the machinery
-was already subdir-parameterized and LSH imported it privately; now there is
-exactly one implementation both indexes import by its public name.
+Every write goes through the shared staged-publish protocol in
+datalakejson_spark/publish.py (stage → manifest-verified ``_COMMITTED`` →
+idempotent moves → subsumed deletes, with the snapshot loser check). This
+module supplies the ANN indexes' store steps (:class:`_VectorStore`):
 
-The crash/concurrency contract is the one proven out by the dedup index
-(incremental_dedup._publish_staged) and carried over verbatim:
-
-- deltas and rewrites land under ``_staging/<token>/`` and become real only
-  when a ``_COMMITTED`` marker exists; unmarked stages are garbage, swept
-  after a grace period;
-- committed stages publish by IDEMPOTENT per-partition file moves, so a
-  kill at any point is roll-forward work for the next entry;
-- a maintenance stage records the exact files it replaces in
-  ``_SUBSUMED.json``; a publish that finds any of them already gone lost a
-  concurrent race and discards itself BEFORE any move;
+- publishes of different stages serialize on the PUBLISH slot;
 - quantizer-changing stages (``_SPLIT.json`` cell splits, ``_RETRAIN.json``
-  delta retrains — IVF only) flip the index meta BETWEEN the moves and the
-  subsumed deletes, the ordering that keeps every crash window probe-exact
-  under the probes' candidate-pair dedup;
+  delta retrains — IVF only) fence on their slot / generation before any
+  move and flip the index meta BETWEEN the moves and the subsumed deletes,
+  the ordering that keeps every crash window probe-exact under the probes'
+  candidate-pair dedup;
 - streaming appends carry a ``_BATCH.json``; publish records an
   applied-batch marker after all moves+deletes complete, making replays
   exactly-once.
@@ -46,19 +37,12 @@ import uuid as _uuid
 
 from pyspark.sql import SparkSession
 
-from datalakejson_spark.functions.incremental_dedup import (
-    STALE_STAGE_S,
-    _SWEEP_PREFIX,
-    _derive_runs,
-    _is_missing_file_error,
-    _settle_sweep_claim,
-    _sweep_stale_stage,
-    stage_newest_mtime,
-)
+from datalakejson_spark import publish
+from datalakejson_spark.functions.incremental_dedup import derive_runs
 from datalakejson_spark.fsutil import atomic_write_json
 from datalakejson_spark.plans.killpoints import fire
+from datalakejson_spark.publish import STAGING, claim_slot, is_missing_file_error
 
-STAGING = "_staging"
 APPLIED = "_applied"
 
 #: applied-batch markers older than this are swept when a new one is
@@ -159,59 +143,6 @@ def live_partition_files(index_dir: str, subdir: str) -> dict[str, list[str]]:
     return out
 
 
-def commit_stage(stage: str, subdir: str) -> None:
-    """Commit a stage with a file MANIFEST: ``_COMMITTED`` holds the
-    staged parquet relpaths, written atomically (tmp + rename so a torn
-    marker can never exist). The publisher cross-checks the manifest and
-    refuses — loud ``"corrupt"`` outcome, never a partial publish — if
-    any listed file is gone from both the stage and its publish
-    destination. With the sweep-by-rename fence this is a TRIPWIRE
-    (committed stages can no longer be half-deleted by a raced sweep),
-    kept as defense in depth. Legacy ``ok`` markers (stages committed by
-    pre-manifest code) publish unverified, preserving mid-upgrade
-    roll-forward."""
-    src_root = os.path.join(stage, subdir)
-    files: list[str] = []
-    if os.path.isdir(src_root):
-        for part in sorted(os.listdir(src_root)):
-            part_dir = os.path.join(src_root, part)
-            if "=" not in part or not os.path.isdir(part_dir):
-                continue
-            for name in sorted(os.listdir(part_dir)):
-                if name.endswith(".parquet"):
-                    files.append(f"{part}/{name}")
-    atomic_write_json(os.path.join(stage, "_COMMITTED"), {"files": files})
-
-
-def _destroyed_manifest_files(
-    index_dir: str, stage: str, subdir: str
-) -> list[str]:
-    """Manifest entries present at NEITHER the stage NOR the publish
-    destination. A replayed half-moved stage passes (its moved files
-    exist at the destination); only genuinely destroyed data — a raced
-    sweep's half-rmtree — reports. Empty list for legacy ``ok``
-    markers."""
-    try:
-        with open(os.path.join(stage, "_COMMITTED")) as fh:
-            raw = fh.read()
-    except OSError:
-        return []
-    try:
-        doc = json.loads(raw)
-    except ValueError:
-        return []  # legacy marker: no manifest to verify
-    files = doc.get("files") if isinstance(doc, dict) else None
-    if not isinstance(files, list):
-        return []
-    src_root = os.path.join(stage, subdir)
-    return [
-        rel
-        for rel in files
-        if not os.path.exists(os.path.join(src_root, rel))
-        and not os.path.exists(os.path.join(index_dir, subdir, rel))
-    ]
-
-
 def settle_committed_replay(
     index_dir: str,
     stage: str,
@@ -231,27 +162,25 @@ def settle_committed_replay(
     batch is applied; additive stages cannot lose)."""
     if not os.path.isdir(stage):
         return False
-    if not os.path.exists(os.path.join(stage, "_COMMITTED")):
+    if not publish.is_committed(stage):
         shutil.rmtree(stage, ignore_errors=True)
         return False
     token = os.path.basename(stage)
-    for _ in range(attempts):
-        out = publish_staged(index_dir, subdir, meta_name).get(token)
-        if out == "corrupt":
-            raise RuntimeError(
-                f"replayed batch stage {token} in {index_dir} was committed "
-                "but its manifest names staged files that no longer exist — "
-                "a raced sweep destroyed data the sweep fences should have "
-                "protected; refusing to publish or re-stage a partial batch"
-            )
-        if out != "pending":
-            return True
-        time.sleep(sleep_s)
-    raise RuntimeError(
-        f"replayed batch stage {token} in {index_dir} stayed pending past "
-        f"{attempts} publish passes — a wedged publisher holds the slot; "
-        "retry when it clears"
-    )
+    out = await_publish(index_dir, subdir, meta_name, token, attempts, sleep_s)
+    if out == "corrupt":
+        raise RuntimeError(
+            f"replayed batch stage {token} in {index_dir} was committed "
+            "but its manifest names staged files that no longer exist — "
+            "a raced sweep destroyed data the sweep fences should have "
+            "protected; refusing to publish or re-stage a partial batch"
+        )
+    if out == "pending":
+        raise RuntimeError(
+            f"replayed batch stage {token} in {index_dir} stayed pending past "
+            f"{attempts} publish passes — a wedged publisher holds the slot; "
+            "retry when it clears"
+        )
+    return True
 
 
 # ---------------------------------------------------------------------------
@@ -345,7 +274,7 @@ def _retire_tombstones_verified(
                     .count()
                 )
             except Exception as exc:  # noqa: BLE001 — narrowed to the race
-                if not _is_missing_file_error(exc):
+                if not is_missing_file_error(exc):
                     raise
                 return 0  # racing publish mid-verify: kept, retry next run
             if remaining:
@@ -359,217 +288,120 @@ def _retire_tombstones_verified(
 # ---------------------------------------------------------------------------
 # Staged publish
 # ---------------------------------------------------------------------------
-def publish_staged(index_dir: str, subdir: str, meta_name: str) -> dict[str, str]:
-    """Roll staged deltas forward into the live partitions — the
-    partition-keyed twin of incremental_dedup._publish_staged (same
-    outcomes: published / lost / pending / raced; same crash taxonomy:
-    unmarked stages are garbage swept after a grace period, committed
-    stages are idempotent roll-forward work, a maintenance stage whose
-    ``_SUBSUMED`` snapshot no longer matches the live files lost a
-    concurrent publish race and discards itself)."""
-    staging = os.path.join(index_dir, STAGING)
-    outcomes: dict[str, str] = {}
-    if not os.path.isdir(staging):
-        return outcomes
-    for token in sorted(os.listdir(staging)):
-        stage = os.path.join(staging, token)
-        if not os.path.isdir(stage) or token.startswith("_SLOT_"):
-            continue  # slot-claim dirs are fence state, not stages
-        if token.startswith(_SWEEP_PREFIX):
-            _settle_sweep_claim(staging, token)  # dead sweeper's limbo
-            continue
-        try:
-            outcomes[token] = _publish_one_stage(
-                index_dir, stage, STALE_STAGE_S, subdir, meta_name
-            )
-        except FileNotFoundError:
-            # two runners rolling the same stage forward: the other one
-            # finished it — either terminal state is complete on its own
-            outcomes[token] = "raced"
-    return outcomes
+class _VectorStore(publish.Store):
+    """A partition-keyed ANN index (``<subdir>/<col>=N/*.parquet``) on the
+    shared staged publish — see the module docstring for its steps."""
 
+    serialize = True
 
-def _publish_one_stage(
-    index_dir: str,
-    stage: str,
-    stale_stage_s: float,
-    subdir: str,
-    meta_name: str,
-) -> str:
-    if not os.path.exists(os.path.join(stage, "_COMMITTED")):
-        # age on the NEWEST mtime in the tree (a live stager's deep parquet
-        # writes keep it fresh) and reclaim by atomic rename-then-recheck
-        # (a commit racing the sweep either travels with the rename and is
-        # restored, or fails loudly ENOENT — never a half-swept publish)
-        if time.time() - stage_newest_mtime(stage) >= stale_stage_s:
-            _sweep_stale_stage(stage)
-        return "pending"
-    destroyed = _destroyed_manifest_files(index_dir, stage, subdir)
-    if destroyed:
-        shutil.rmtree(stage, ignore_errors=True)
-        return "corrupt"
-    # publish roll-forwards SERIALIZE on one slot (round 15, cross-process
-    # soak): the subsumed-existence loser check below is check-then-act —
-    # two processes' publishes of stages subsuming the SAME files could
-    # both pass it before either ran its deletes, and both move their
-    # copies in (duplicate rows; combined with tombstone retirement, a
-    # resurrection vector). The claim is the atomic-mkdir slot machinery:
-    # a crash mid-publish leaves the claim owned by this stage's token,
-    # and the next publish pass of the SAME stage (any process) re-enters
-    # it (own-token rule) and releases on completion.
-    own_token = os.path.basename(stage)
-    if not claim_slot(index_dir, "PUBLISH", own_token):
-        return "pending"
-    try:
-        return _publish_one_stage_locked(
-            index_dir, stage, subdir, meta_name
-        )
-    finally:
-        _release_slot(index_dir, "PUBLISH", own_token)
+    def __init__(self, index_dir: str, subdir: str, meta_name: str) -> None:
+        super().__init__(index_dir, subdir)
+        self.meta_name = meta_name
 
+    @staticmethod
+    def _quantizer(stage: str) -> tuple[dict | None, dict | None]:
+        """(split meta, retrain meta) of a quantizer-changing stage."""
+        out = []
+        for name in ("_SPLIT.json", "_RETRAIN.json"):
+            try:
+                with open(os.path.join(stage, name)) as fh:
+                    out.append(json.load(fh))
+            except FileNotFoundError:
+                out.append(None)
+        return out[0], out[1]
 
-def _publish_one_stage_locked(
-    index_dir: str,
-    stage: str,
-    subdir: str,
-    meta_name: str,
-) -> str:
-    subsumed: list[str] = []
-    manifest = os.path.join(stage, "_SUBSUMED.json")
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            subsumed = json.load(fh)
-    split_meta = None
-    split_path = os.path.join(stage, "_SPLIT.json")
-    if os.path.exists(split_path):
-        with open(split_path) as fh:
-            split_meta = json.load(fh)
-    retrain_meta = None
-    retrain_path = os.path.join(stage, "_RETRAIN.json")
-    if os.path.exists(retrain_path):
-        with open(retrain_path) as fh:
-            retrain_meta = json.load(fh)
-    is_quantizer_stage = split_meta is not None or retrain_meta is not None
-    publishing = os.path.join(stage, "_PUBLISHING")
-    if (subsumed or is_quantizer_stage) and not os.path.exists(publishing):
-        # loser detection BEFORE this stage's own moves/deletes begin; once
-        # the _PUBLISHING marker is down, a replay always rolls FORWARD
-        missing = [
-            rel
-            for rel in subsumed
-            if not os.path.exists(os.path.join(index_dir, subdir, rel))
-        ]
-        # a SPLIT stage additionally claims a new-centroid SLOT: if another
-        # split already took it, publishing this stage's files would merge
-        # two different cells' vectors into one partition — discard whole,
-        # BEFORE any move happens. The claim is an ATOMIC os.mkdir (a plain
-        # check-then-act would leave a seconds-long window where two
-        # concurrent publishes both pass and both move — review catch,
-        # round 13); the winner releases it after its meta flip makes the
-        # slot permanent.
-        fenced_out = False
+    def fenced(self, stage: str) -> bool:
+        split_meta, retrain_meta = self._quantizer(stage)
+        if split_meta is None and retrain_meta is None:
+            return False
+        meta = load_index_meta(self.root, self.meta_name, "the builder")
+        # a SPLIT stage claims its new-centroid SLOT: if another split
+        # already took it, publishing this stage's files would merge two
+        # different cells' vectors into one partition. The claim is an
+        # ATOMIC os.mkdir; the winner releases it after its meta flip makes
+        # the slot permanent.
         if split_meta is not None:
-            live_meta = load_index_meta(index_dir, meta_name, "the builder")
-            n_now = len(live_meta["centroids"])
-            expected = int(split_meta["new_cell"])
-            already_applied = n_now > expected and (
-                live_meta["centroids"][expected] == split_meta["centroids"][1]
-            )
-            if n_now != expected and not already_applied:
-                fenced_out = True
-            elif not already_applied and not claim_slot(
-                index_dir, expected, os.path.basename(stage)
+            cents = meta["centroids"]
+            slot = int(split_meta["new_cell"])
+            applied = len(cents) > slot and cents[slot] == split_meta["centroids"][1]
+            if not applied and (
+                len(cents) != slot
+                or not claim_slot(self.root, slot, os.path.basename(stage))
             ):
-                fenced_out = True
+                return True
         # a RETRAIN stage fences on the quantizer GENERATION it was planned
-        # against: any split or other retrain that flipped the meta since
-        # (gen advanced) makes this stage's re-assignment stale — publishing
-        # it would resurrect pre-flip residency and clobber the winner's
-        # centroids. A replay of an already-flipped retrain (its own token
-        # is recorded in the meta) rolls forward instead. (This check is
-        # re-validated under the flip mutex below — here it only discards
-        # obvious losers before any move is wasted.)
+        # against: any flip since makes its re-assignment stale. A replay of
+        # an already-flipped retrain (its token is in the meta) rolls
+        # forward. Re-validated under the flip mutex — here it only
+        # discards obvious losers before any move is wasted.
         if retrain_meta is not None:
-            live_meta = load_index_meta(index_dir, meta_name, "the builder")
-            already_applied = live_meta.get("retrain_token") == retrain_meta[
-                "token"
-            ]
-            if not already_applied and live_meta.get("gen", 0) != retrain_meta[
-                "base_gen"
-            ]:
-                fenced_out = True
-        if missing or fenced_out:
-            shutil.rmtree(stage, ignore_errors=True)
-            return "lost"
-        with open(publishing, "w") as fh:
-            fh.write("ok")
-    fire("ivf:publish_publishing")
-    src_root = os.path.join(stage, subdir)
-    # quantizer stages record the files they are about to move BEFORE any
-    # move (write-once): if the flip is later fenced out (another runner's
-    # flip landed in between — see the mutex block below), the additive
-    # moved-in copies are removed by exactly this manifest, so a fenced
-    # stage can never leave rows reachable only under a meta that will
-    # never probe them, nor permanent duplicates.
-    if is_quantizer_stage and os.path.isdir(src_root):
-        _record_planned_moves(stage, src_root)
-    if os.path.isdir(src_root):
-        for part in sorted(os.listdir(src_root)):
-            src_part = os.path.join(src_root, part)
-            if "=" not in part or not os.path.isdir(src_part):
-                continue
-            dst_part = os.path.join(index_dir, subdir, part)
-            os.makedirs(dst_part, exist_ok=True)
-            for name in sorted(os.listdir(src_part)):
-                if not name.endswith(".parquet"):
-                    continue
-                dst = os.path.join(dst_part, name)
-                if not os.path.exists(dst):  # idempotent re-publish
-                    try:
-                        os.replace(os.path.join(src_part, name), dst)
-                    except FileNotFoundError:
-                        if not os.path.exists(dst):
-                            raise
-    # a quantizer-changing stage flips the meta BETWEEN the moves and the
-    # deletes — the ordering is load-bearing: after the moves, the source
-    # partitions transiently hold both the full originals and the re-homed
-    # copies, which is EXACT under the probes' pair dedup with EITHER meta;
-    # flipping before the deletes means no meta ever probes a partition
-    # whose rows already moved away. All flips SERIALIZE on one atomic
-    # claim and re-validate their precondition under it (round 14: with
-    # retrain joining split as a second flipping verb, two RUNNERS'
-    # publishes could otherwise interleave a flip between this stage's
-    # loser check and its own flip — the fenced stage would then run its
-    # subsumed DELETES with its own flip skipped, leaving rows reachable
-    # only under a meta that never probes them). Outcomes: flip applied or
-    # already applied → fall through to the deletes; fenced under the
-    # mutex → moved-in copies rolled back, stage discarded, "lost"; mutex
-    # held by a live competing flip → "pending" (a later publish pass
-    # retries; nothing is deleted early).
-    if is_quantizer_stage:
-        verdict = _flip_quantizer_meta(
-            index_dir, stage, split_meta, retrain_meta, subdir, meta_name
+            if meta.get("retrain_token") != retrain_meta["token"] and meta.get(
+                "gen", 0
+            ) != retrain_meta["base_gen"]:
+                return True
+        return False
+
+    def publishing(self, stage: str) -> None:
+        fire("ivf:publish_publishing")
+        # quantizer stages record the files they are about to move BEFORE
+        # any move (write-once): if the flip is later fenced out, the
+        # moved-in copies are removed by exactly this manifest
+        src_root = os.path.join(stage, self.data)
+        if any(m is not None for m in self._quantizer(stage)) and os.path.isdir(
+            src_root
+        ):
+            _record_planned_moves(stage, src_root)
+
+    def flip(self, stage: str) -> str | None:
+        # BETWEEN the moves and the deletes: after the moves the source
+        # partitions hold both the originals and the re-homed copies, EXACT
+        # under the probes' pair dedup with either meta, so no meta ever
+        # probes a partition whose rows already moved away
+        split_meta, retrain_meta = self._quantizer(stage)
+        if split_meta is None and retrain_meta is None:
+            return None
+        return _flip_quantizer_meta(
+            self.root, stage, split_meta, retrain_meta, self.data, self.meta_name
         )
-        if verdict is not None:
-            return verdict
-    for rel in subsumed:
-        try:
-            os.remove(os.path.join(index_dir, subdir, rel))
-        except FileNotFoundError:  # idempotent re-delete
-            pass
-    fire("ivf:publish_moved")
-    # applied-batch marker LAST-but-one (before stage removal): a replayed
-    # streaming batch checks this to skip re-staging — the exactly-once
-    # half of the append contract. Written only after every move+delete
-    # completed, so "marker present" always means "fully live".
-    batch_meta = os.path.join(stage, "_BATCH.json")
-    if os.path.exists(batch_meta):
-        with open(batch_meta) as fh:
-            bid = json.load(fh).get("batch_id")
-        if bid is not None:
-            mark_batch_applied(index_dir, str(bid))
-    shutil.rmtree(stage, ignore_errors=True)
-    return "published"
+
+    def finish(self, stage: str, moved: list[str], subsumed: list[str]) -> None:
+        fire("ivf:publish_moved")
+        # applied-batch marker after every move+delete: a replayed streaming
+        # batch checks it to skip re-staging, so "marker present" always
+        # means "fully live"
+        batch_meta = os.path.join(stage, "_BATCH.json")
+        if os.path.exists(batch_meta):
+            with open(batch_meta) as fh:
+                bid = json.load(fh).get("batch_id")
+            if bid is not None:
+                mark_batch_applied(self.root, str(bid))
+
+
+def publish_staged(index_dir: str, subdir: str, meta_name: str) -> dict[str, str]:
+    """Roll staged deltas forward into the live partitions; returns
+    ``{stage_token: outcome}`` (see datalakejson_spark/publish.py)."""
+    return publish.publish_staged(_VectorStore(index_dir, subdir, meta_name))
+
+
+def await_publish(
+    index_dir: str,
+    subdir: str,
+    meta_name: str,
+    token: str,
+    attempts: int = 20,
+    sleep_s: float = 0.05,
+) -> str:
+    """Publish passes until the committed stage ``token`` reaches a terminal
+    outcome ("raced" once another runner finished it). "pending" means a
+    live competing publish or flip held its slot past every attempt: the
+    stage stays committed and a later entry publish finishes it, so a
+    caller must NOT rerun its verb on top of it."""
+    for _ in range(attempts):
+        out = publish_staged(index_dir, subdir, meta_name).get(token, "raced")
+        if out != "pending":
+            return out
+        time.sleep(sleep_s)
+    return "pending"
 
 
 def _record_planned_moves(stage: str, src_root: str) -> None:
@@ -585,14 +417,7 @@ def _record_planned_moves(stage: str, src_root: str) -> None:
             return  # complete manifest from a previous pass
         except (ValueError, OSError):
             pass  # corrupt (crash mid-write, pre-moves): recompute
-    planned = sorted(
-        f"{part}/{name}"
-        for part in os.listdir(src_root)
-        if "=" in part and os.path.isdir(os.path.join(src_root, part))
-        for name in os.listdir(os.path.join(src_root, part))
-        if name.endswith(".parquet")
-    )
-    atomic_write_json(manifest, planned)
+    atomic_write_json(manifest, publish.staged_files(src_root))
 
 
 def _rollback_stage_moves(index_dir: str, stage: str, subdir: str) -> None:
@@ -618,19 +443,6 @@ def _rollback_stage_moves(index_dir: str, stage: str, subdir: str) -> None:
 #: index) claims this slot name, so no flip can land between another
 #: stage's under-mutex re-validation and its own write.
 _FLIP_SLOT = "FLIP"
-
-
-def _release_slot(index_dir: str, slot, token: str) -> None:
-    """Release a claim we own (idempotent; a claim owned by another token
-    is never touched)."""
-    claim = os.path.join(index_dir, STAGING, f"_SLOT_{slot}")
-    try:
-        with open(os.path.join(claim, "token")) as fh:
-            if fh.read().strip() != token:
-                return
-    except OSError:
-        return
-    shutil.rmtree(claim, ignore_errors=True)
 
 
 def _flip_quantizer_meta(
@@ -663,7 +475,7 @@ def _flip_quantizer_meta(
                 # retrain regenerated the quantizer) after our loser check
                 _rollback_stage_moves(index_dir, stage, subdir)
                 shutil.rmtree(stage, ignore_errors=True)
-                _release_slot(index_dir, new_cell, token)
+                publish.release_slot(index_dir, new_cell, token)
                 return "lost"
             if not already:
                 cents[int(split_meta["cell"])] = split_meta["centroids"][0]
@@ -675,10 +487,7 @@ def _flip_quantizer_meta(
             # the flip made the slot permanent in the meta — release the
             # fence claim (idempotent; claim dirs are per slot number, so
             # a later split's claim of the NEXT slot is never touched)
-            shutil.rmtree(
-                os.path.join(index_dir, STAGING, f"_SLOT_{new_cell}"),
-                ignore_errors=True,
-            )
+            publish.release_slot(index_dir, new_cell)
             fire("ivf:split_meta_flipped")
         if retrain_meta is not None:
             already = meta_now.get("retrain_token") == retrain_meta["token"]
@@ -696,7 +505,7 @@ def _flip_quantizer_meta(
                 write_index_meta(index_dir, meta_now, meta_name)
             fire("ivf:retrain_meta_flipped")
     finally:
-        _release_slot(index_dir, _FLIP_SLOT, token)
+        publish.release_slot(index_dir, _FLIP_SLOT, token)
     return None
 
 
@@ -751,7 +560,7 @@ def needs_compaction(index_dir: str, max_runs: int, subdir: str) -> bool:
         if "=" not in entry.name or not entry.is_dir():
             continue
         files = [n for n in os.listdir(entry.path) if n.endswith(".parquet")]
-        if len(_derive_runs(files)) > max_runs:
+        if len(derive_runs(files)) > max_runs:
             return True
     return False
 
@@ -805,7 +614,7 @@ def compact_partitions(
     dirty: dict[str, list[str]] = {}  # partition -> FOLD set (tail runs)
     before: dict[str, int] = {}
     for part, files in live.items():
-        runs = _derive_runs(files)
+        runs = derive_runs(files)
         if len(runs) <= max_runs:
             continue
 
@@ -847,17 +656,15 @@ def compact_partitions(
             .parquet(os.path.join(stage, subdir))
         )
     except Exception as exc:  # noqa: BLE001 — narrowed to the race below
-        if not _is_missing_file_error(exc):
+        if not is_missing_file_error(exc):
             raise
         shutil.rmtree(stage, ignore_errors=True)
         return {}
     fire("ivf:compact_staged")  # no marker yet: crash = old layout wins
-    subsumed = sorted(
-        f"{part}/{f}" for part, files in dirty.items() for f in files
+    publish.write_subsumed(
+        stage, [f"{part}/{f}" for part, files in dirty.items() for f in files]
     )
-    with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump(subsumed, fh)
-    commit_stage(stage, subdir)  # manifest-carrying marker
+    publish.commit_stage(stage, subdir)
     fire("ivf:compact_committed")  # committed, not yet published
     publish_staged(index_dir, subdir, meta_name)
     after = live_partition_files(index_dir, subdir)
@@ -865,59 +672,6 @@ def compact_partitions(
         part: (before[part], len(after.get(part, [])))
         for part in sorted(dirty)
     }
-
-
-# ---------------------------------------------------------------------------
-# Slot claims (split fencing)
-# ---------------------------------------------------------------------------
-def claim_slot(index_dir: str, slot: int | str, token: str) -> bool:
-    """Atomically claim the new-centroid slot for one split publish. The
-    claim is an os.mkdir (atomic on one filesystem) of
-    ``_staging/_SLOT_<slot>`` holding the claiming stage's token. Rules:
-
-    - fresh claim → ours;
-    - claim holds OUR token → a previous (crashed) publish pass of this
-      same stage: still ours, proceed;
-    - claim holds another token whose stage DIR still exists → that
-      publish is in flight (or committed and will roll forward): lost;
-    - claim holds another token whose stage is GONE and the meta never
-      advanced (the owner was swept uncommitted) → stale: take over, with
-      the takeover race itself decided by the atomic re-mkdir;
-    - claim holds NO token (a crash between the mkdir and the token write,
-      ADVICE r13 — previously this read as "mid-creation by another
-      runner" forever, leaving the slot permanently unclaimable): young
-      claims are a live claimer mid-creation (lost), claims older than the
-      stale-stage grace are debris — swept and re-raced, the same age
-      taxonomy as unmarked stages.
-    """
-    claim = os.path.join(index_dir, STAGING, f"_SLOT_{slot}")
-    for _attempt in range(3):
-        try:
-            os.mkdir(claim)
-            with open(os.path.join(claim, "token"), "w") as fh:
-                fh.write(token)
-            return True
-        except FileExistsError:
-            try:
-                with open(os.path.join(claim, "token")) as fh:
-                    owner = fh.read().strip()
-            except OSError:
-                try:
-                    age = time.time() - os.path.getmtime(claim)
-                except OSError:
-                    continue  # claim vanished under us: re-race the mkdir
-                if age >= STALE_STAGE_S:
-                    # token-less AND old: the claimer died between mkdir
-                    # and token write — sweep and re-race
-                    shutil.rmtree(claim, ignore_errors=True)
-                    continue
-                return False  # mid-creation by a live claimer: theirs
-            if owner == token:
-                return True
-            if os.path.isdir(os.path.join(index_dir, STAGING, owner)):
-                return False  # live (or roll-forward-able) owner: lost
-            shutil.rmtree(claim, ignore_errors=True)  # stale: take over
-    return False
 
 
 # ---------------------------------------------------------------------------
@@ -1141,19 +895,20 @@ def vacuum_deleted(
             .parquet(os.path.join(stage, subdir))
         )
     except Exception as exc:  # noqa: BLE001 — narrowed to the race below
-        if not _is_missing_file_error(exc):
+        if not is_missing_file_error(exc):
             raise
         shutil.rmtree(stage, ignore_errors=True)
         return report  # race loser: tombstones kept, rerun
     fire("ivf:vacuum_staged")  # no marker yet: crash = old layout wins
-    subsumed = sorted(
-        f"{part_col}={p}/{f}"
-        for p in affected
-        for f in live.get(f"{part_col}={p}", [])
+    publish.write_subsumed(
+        stage,
+        [
+            f"{part_col}={p}/{f}"
+            for p in affected
+            for f in live.get(f"{part_col}={p}", [])
+        ],
     )
-    with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump(subsumed, fh)
-    commit_stage(stage, subdir)  # manifest-carrying marker
+    publish.commit_stage(stage, subdir)
     fire("ivf:vacuum_committed")  # committed, not yet published
     outcome = publish_staged(index_dir, subdir, meta_name).get(
         os.path.basename(stage)
@@ -1227,7 +982,7 @@ def probe_retrying(make_df, attempts: int = 5, backoff_s: float = 0.2):
         try:
             return make_df().collect()
         except Exception as exc:  # noqa: BLE001 — retried narrowly
-            if attempt == attempts - 1 or not _is_missing_file_error(exc):
+            if attempt == attempts - 1 or not is_missing_file_error(exc):
                 raise
             # let the racing publish's move/delete window pass before
             # re-listing (round 15: under CROSS-PROCESS maintenance churn —
@@ -1286,7 +1041,7 @@ def index_report(index_dir: str) -> dict:
         "files": sum(files_per),
         "max_files_per_partition": max(files_per, default=0),
         "max_runs_per_partition": max(
-            (len(_derive_runs(v)) for v in live.values()), default=0
+            (len(derive_runs(v)) for v in live.values()), default=0
         ),
     }
 
@@ -1303,7 +1058,7 @@ def index_report(index_dir: str) -> dict:
     report["committed_stages_pending"] = sorted(
         t
         for t in (os.listdir(staging) if os.path.isdir(staging) else [])
-        if os.path.exists(os.path.join(staging, t, "_COMMITTED"))
+        if publish.is_committed(os.path.join(staging, t))
     )
 
     streams = {}

@@ -541,7 +541,7 @@ def ivf_index_append(
         with open(os.path.join(stage, "_BATCH.json"), "w") as fh:
             json.dump({"batch_id": str(batch_id)}, fh)
     fire("ivf:append_staged")  # no marker yet: crash = no append happened
-    commit_stage(stage, _IVF_CELLS)  # manifest-carrying marker
+    commit_stage(stage, _IVF_CELLS)
     fire("ivf:append_committed")  # committed, not yet published
     out = _publish_ivf_staged(index_dir).get(os.path.basename(stage))
     if out == "corrupt":
@@ -854,14 +854,15 @@ def l3g_ann_ivf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # silently). The cure mirrors the dedup index's loop policy, re-expressed
 # for a partition-keyed layout:
 #
-# - Appends and compactions ride a staged publish (``_staging/<token>/``
-#   with a ``_COMMITTED`` marker, idempotent file moves, ``_SUBSUMED``
-#   snapshot manifests with publish-race loser detection) — the exact
-#   contract proven out in incremental_dedup._publish_staged, so every
-#   crash window leaves either the old layout or a harmlessly-duplicated
-#   cell (duplicate rows change nothing for a top-k probe over distinct
-#   vec_ids... they'd duplicate result rows — which is why appends are
-#   exactly-once via applied-batch markers, not at-least-once).
+# - Appends and compactions ride the one staged-publish protocol every
+#   persisted store shares (datalakejson_spark/publish.py: ``_staging/
+#   <token>/`` stages, a manifest-verified commit marker, idempotent file
+#   moves, ``_SUBSUMED`` snapshots with publish-race loser detection), so
+#   every crash window leaves either the old layout or a
+#   harmlessly-duplicated cell (duplicate rows change nothing for a top-k
+#   probe over distinct vec_ids... they'd duplicate result rows — which is
+#   why appends are exactly-once via applied-batch markers, not
+#   at-least-once).
 # - Run counting reuses the dedup index's generation identity (the job
 #   UUID Spark embeds in part filenames): each append is one run per
 #   touched cell, a compacted cell is ONE run however many rows it holds —
@@ -877,10 +878,10 @@ _IVF_APPLIED = "_applied"
 _IVF_CELLS = "cells"
 
 
-# The machinery itself lives in functions/index_maintenance.py since round
-# 14 (VERDICT r13 #6 — one definition, imported by both persisted indexes).
-# These wrappers keep the historical IVF-default spellings that tests and
-# tools pin; they are thin delegations, never a second implementation.
+# The machinery itself lives in functions/index_maintenance.py (the ANN
+# indexes' store steps) on top of datalakejson_spark/publish.py. These
+# wrappers keep the historical IVF-default spellings that tests and tools
+# pin; they are thin delegations, never a second implementation.
 def _ivf_live_files(
     index_dir: str, subdir: str = _IVF_CELLS
 ) -> dict[str, list[str]]:
@@ -1029,9 +1030,10 @@ def ivf_needs_retrain(
 
 from datalakejson_spark.functions.index_maintenance import (  # noqa: E402
     APPLIED_RETENTION_S as _APPLIED_RETENTION_S,
-    commit_stage,
+    await_publish,
     probe_retrying,
 )
+from datalakejson_spark.publish import commit_stage, write_subsumed  # noqa: E402
 
 
 def ivf_cell_rows(index_dir: str) -> dict[int, int]:
@@ -1100,9 +1102,7 @@ def split_ivf_cell(
     import os
     import shutil
 
-    from datalakejson_spark.functions.incremental_dedup import (
-        _is_missing_file_error,
-    )
+    from datalakejson_spark.publish import is_missing_file_error
     from datalakejson_spark.functions.index_maintenance import (
         begin_copier_stage,
     )
@@ -1147,7 +1147,7 @@ def split_ivf_cell(
             .parquet(os.path.join(stage, _IVF_CELLS))
         )
     except Exception as exc:  # noqa: BLE001 — narrowed to the race below
-        if not _is_missing_file_error(exc):
+        if not is_missing_file_error(exc):
             raise
         # a concurrent maintenance publish deleted a listed file between
         # this split's listing and its reads: clean race loser, same
@@ -1160,11 +1160,12 @@ def split_ivf_cell(
             {"cell": cell, "new_cell": new_cell, "centroids": sub_centroids},
             fh,
         )
-    with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump([f"{cell_dir}/{n}" for n in names], fh)
-    commit_stage(stage, _IVF_CELLS)  # manifest-carrying marker
+    write_subsumed(stage, [f"{cell_dir}/{n}" for n in names])
+    commit_stage(stage, _IVF_CELLS)
     fire("ivf:split_committed")  # committed, not yet published
-    outcome = _await_publish(index_dir, os.path.basename(stage))
+    outcome = await_publish(
+        index_dir, _IVF_CELLS, _IVF_META, os.path.basename(stage)
+    )
     if outcome != "published":
         # "raced" can mean another runner rolled OUR stage forward — check
         # the evidence (our sub-centroid in our slot) before reporting a
@@ -1177,24 +1178,6 @@ def split_ivf_cell(
             return new_cell
         return None  # lost a race (slot or snapshot): rerun against the winner
     return new_cell
-
-
-def _await_publish(index_dir: str, token: str, attempts: int = 20) -> str:
-    """Publish a just-committed quantizer stage to a TERMINAL outcome.
-    "pending" here means a live competing flip holds the mutex — returning
-    it to the caller would read as "lost, rerun" while the committed stage
-    still rolls forward later (a rerun would then double-apply the verb).
-    Bounded retries; if the contender wedges past them, the stage stays
-    committed and the next entry publish finishes it — the caller sees
-    "pending" and must NOT rerun the verb."""
-    import time as _time
-
-    for _ in range(attempts):
-        outcome = _publish_ivf_staged(index_dir).get(token, "raced")
-        if outcome != "pending":
-            return outcome
-        _time.sleep(0.05)
-    return "pending"
 
 
 #: delta-retrain movement threshold, as a fraction of the mean
@@ -1279,9 +1262,7 @@ def retrain_ivf_delta(
     import os
     import shutil
 
-    from datalakejson_spark.functions.incremental_dedup import (
-        _is_missing_file_error,
-    )
+    from datalakejson_spark.publish import is_missing_file_error
     from datalakejson_spark.functions.index_maintenance import (
         live_partition_files,
     )
@@ -1316,7 +1297,7 @@ def retrain_ivf_delta(
             dtype=np.float64,
         )
     except Exception as exc:  # noqa: BLE001 — narrowed to the race below
-        if not _is_missing_file_error(exc):
+        if not is_missing_file_error(exc):
             raise
         return {**summary, "outcome": "lost"}
     # tolerance: fraction of the mean nearest-neighbor spacing of the OLD
@@ -1382,7 +1363,7 @@ def retrain_ivf_delta(
             .parquet(os.path.join(stage, _IVF_CELLS))
         )
     except Exception as exc:  # noqa: BLE001 — narrowed to the race below
-        if not _is_missing_file_error(exc):
+        if not is_missing_file_error(exc):
             raise
         # a concurrent maintenance publish deleted a listed file between
         # this retrain's listing and its reads: clean race loser, same
@@ -1400,14 +1381,12 @@ def retrain_ivf_delta(
             },
             fh,
         )
-    with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump(
-            sorted(f"cell={c}/{n}" for c, files in names.items() for n in files),
-            fh,
-        )
-    commit_stage(stage, _IVF_CELLS)  # manifest-carrying marker
+    write_subsumed(
+        stage, [f"cell={c}/{n}" for c, files in names.items() for n in files]
+    )
+    commit_stage(stage, _IVF_CELLS)
     fire("ivf:retrain_committed")  # committed, not yet published
-    outcome = _await_publish(index_dir, token)
+    outcome = await_publish(index_dir, _IVF_CELLS, _IVF_META, token)
     if outcome != "published":
         if load_ivf_meta(index_dir).get("retrain_token") == token:
             pass  # another runner rolled our stage forward: published
@@ -1429,12 +1408,6 @@ def retrain_ivf_delta(
             _write_ivf_meta(index_dir, fresh)
         summary["recall"] = recall
     return summary
-
-
-def _claim_split_slot(index_dir: str, slot: int, token: str) -> bool:
-    from datalakejson_spark.functions.index_maintenance import claim_slot
-
-    return claim_slot(index_dir, slot, token)
 
 
 def ivf_index_delete(index_dir: str, ids) -> int:

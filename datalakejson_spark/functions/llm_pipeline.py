@@ -95,7 +95,7 @@ def connected_components(
     # re-measured on Spark 4.1 the opposite holds: with AQE off every loop
     # stage launches shuffle-partition-many tasks over a few hundred rows,
     # while AQE coalesces them to ~1 task; measured 1.4-1.5× faster with
-    # AQE left on (tools/ab_r16.py / OPTIMIZATION_r16.md), same plan shape
+    # AQE left on (tools/ab.py / OPTIMIZATION_r16.md), same plan shape
     # at scale where partitions are genuinely full.
     labels = (
         sym.select(F.col("src").alias("node"))

@@ -20,9 +20,9 @@ PartitionFilters posture. The autotune rule (similarity.autotune_lsh) keeps
 n / 2^planes ≈ constant as the corpus grows, so probe cost stays flat.
 
 Maintenance is SHARED with the IVF index: staged exactly-once appends,
-publish-race fencing, tiered per-partition compaction, all via the ONE
-implementation in functions/index_maintenance.py (both indexes import it by
-its public names — VERDICT r13 #6).
+publish-race fencing, tiered per-partition compaction, all via
+functions/index_maintenance.py on top of the one staged-publish protocol in
+datalakejson_spark/publish.py.
 """
 
 from __future__ import annotations
@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from datalakejson_spark.functions.index_maintenance import (
     batch_applied,
     bump_index_count,
-    commit_stage,
     compact_partitions,
     live_partition_files,
     load_index_meta,
@@ -52,6 +51,7 @@ from datalakejson_spark.functions.similarity import (
     lsh_bucket_np,
     lsh_planes,
 )
+from datalakejson_spark.publish import commit_stage
 from datalakejson_spark.registry import register
 from datalakejson_spark.sources.tables import load_table
 
@@ -189,7 +189,7 @@ def lsh_index_append(
         with open(os.path.join(stage, "_BATCH.json"), "w") as fh:
             json.dump({"batch_id": str(batch_id)}, fh)
     fire("lsh:append_staged")
-    commit_stage(stage, _BUCKETS)  # manifest-carrying marker
+    commit_stage(stage, _BUCKETS)
     fire("lsh:append_committed")
     out = publish_staged(index_dir, _BUCKETS, _LSH_META).get(
         os.path.basename(stage)

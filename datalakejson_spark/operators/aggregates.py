@@ -222,7 +222,7 @@ def g6_rollup_time_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, and a rollup-of-sums over a grain equal to its finest
     grouping set reproduces ROLLUP over the raw rows exactly (NULL-shipdate
     rows form their own finest group and flow into every level the same
-    way). Interleaved A/B (tools/ab_r16.py g6): 1.29× sf0.1 / 1.42× sf1 vs
+    way). Interleaved A/B (tools/ab.py g6): 1.29× sf0.1 / 1.42× sf1 vs
     the r15 union, 1.42× / 1.57× vs the native rollup."""
     li = load_table(spark, sf_dir, "lineitem")
     finest = li.groupBy(

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from datalakejson_spark.session import local_df
 from pyspark.sql import types as T
 
+from datalakejson_spark import publish
 from datalakejson_spark.plans.killpoints import fire
 from datalakejson_spark.plans.ledger import PROCESSING_LEASE_S, Ledger, LedgerStatus
 from datalakejson_spark.plans.schema_evolution import (
@@ -362,22 +363,20 @@ def _archive_parallel(paths: list[str], conf: IngestConfig) -> None:
             f.result()  # surface the first failure (crash-recovery path)
 
 
+#: per-run curated stages live here, invisible to readers and compaction
+#: (``_`` prefix) while they exist
+CURATED_STAGING = "_ingest_staging"
+
+
 def _publish_curated_stage(stage_dir: str, curated_dir: str) -> None:
     """Move one run's staged curated write into the live partitioned layout
-    by same-filesystem file moves (see the call site for why staging exists:
-    concurrent direct appends share one committer ``_temporary/0``).
-    Committer markers (``_SUCCESS`` etc.) are dropped; partition
-    subdirectories are preserved relative to the stage root. Idempotent per
-    file (``os.replace``); the staging subtree is removed afterwards and is
-    invisible to readers/compaction while it exists (``_`` prefix)."""
-    for root, _dirs, files in os.walk(stage_dir):
-        rel = os.path.relpath(root, stage_dir)
-        for fname in files:
-            if fname.startswith(("_", ".")):
-                continue
-            dst_dir = curated_dir if rel == "." else os.path.join(curated_dir, rel)
-            os.makedirs(dst_dir, exist_ok=True)
-            os.replace(os.path.join(root, fname), os.path.join(dst_dir, fname))
+    with the shared path-preserving mover (see the call site for why
+    staging exists: concurrent direct appends share one committer
+    ``_temporary/0``). Committer markers (``_SUCCESS`` etc.) are dropped.
+    No commit marker: a crash mid-move leaves a partial append with no
+    ledger commit, which deduplicate_replays() resolves after the replay,
+    and the orphaned stage is reclaimed by the next run's stale sweep."""
+    publish.move_files(stage_dir, curated_dir, publish.staged_files(stage_dir))
     shutil.rmtree(stage_dir, ignore_errors=True)
     try:  # prune the shared _ingest_staging root once it empties
         os.rmdir(os.path.dirname(stage_dir))
@@ -393,6 +392,9 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
     # per file, so ids must order by attempt time even for same-second
     # retries — zero-padded nanoseconds, uuid only as a collision suffix.
     run_id = f"run-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
+    # a run that crashed between its curated stage write and the publish
+    # left that stage behind; reclaim it once aged past the live-runner grace
+    publish.sweep_stale(os.path.join(conf.curated_dir, CURATED_STAGING))
     ledger = make_ledger(spark, conf)
     result = IngestResult(run_id=run_id)
 
@@ -504,7 +506,7 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
                 # batch re-appends under a new run id and
                 # deduplicate_replays() resolves it (T2 idempotency).
                 stage_dir = os.path.join(
-                    conf.curated_dir, "_ingest_staging", run_id
+                    conf.curated_dir, CURATED_STAGING, run_id
                 )
                 curated.write.mode("overwrite").partitionBy(
                     *PARTITION_COLS

@@ -7,6 +7,9 @@ compacts/rebuilds WHILE another audits+appends. The fencing contract:
   snapshot check (the loser discards itself; the winner's layout wins);
 - a publish interrupted AFTER its `_PUBLISHING` point-of-no-return rolls
   FORWARD on replay instead of misreading its own deletes as a lost race.
+
+The two publish-protocol behaviours run once per store (the dedup index
+and the IVF index), since both ride datalakejson_spark/publish.py.
 """
 
 from __future__ import annotations
@@ -135,80 +138,147 @@ def test_concurrent_compaction_soak(spark, tmp_path):
             )
 
 
-def test_publish_race_loser_is_discarded(spark, tmp_path):
+class _DedupIndex:
+    """A dedup index pair with three appended runs."""
+
+    kill = "dedup:compact_committed"
+
+    def __init__(self, spark, tmp_path):
+        self.spark, self.idx = spark, str(tmp_path / "idx")
+        self.live = self.idx  # subsumed relpaths are under the index root
+        for b in range(3):
+            ingest_batch_dedup(
+                spark,
+                _docs(spark, [(b * 6 + k, _distinct_text(b * 6 + k)) for k in range(6)]),
+                self.idx,
+                compact_max_runs=None,
+            )
+
+    def compact(self):
+        compact_index(self.spark, self.idx, target_rows_per_file=16, max_runs=1)
+
+    def publish(self):
+        return inc._publish_staged(self.idx)
+
+    def rows(self):
+        return _index_rows(self.spark, self.idx, "bands")
+
+    def runs(self):
+        return [
+            len(inc.derive_runs(inc._live_files(f"{self.idx}/{sub}")))
+            for sub in ("hashes", "bands")
+        ]
+
+
+class _IvfIndex:
+    """An IVF index with two appended runs per touched cell."""
+
+    kill = "ivf:compact_committed"
+    _SCHEMA = "vec_id bigint, embedding array<double>"
+
+    def __init__(self, spark, tmp_path):
+        from datalakejson_spark.functions.ivf import (
+            build_ivf_index,
+            ivf_index_append,
+        )
+
+        self.spark, self.idx = spark, str(tmp_path / "ivf")
+        self.live = os.path.join(self.idx, "cells")
+        build_ivf_index(self._rows(0, 60), self.idx, n_cells=2)
+        for b in range(2):
+            ivf_index_append(spark, self._rows(1000 + 10 * b, 10), self.idx)
+
+    def _rows(self, start, n):
+        return self.spark.createDataFrame(
+            [(i, [float(i % 7), float(i % 11)]) for i in range(start, start + n)],
+            self._SCHEMA,
+        )
+
+    def compact(self):
+        from datalakejson_spark.functions.ivf import compact_ivf_cells
+
+        compact_ivf_cells(self.spark, self.idx, max_runs_per_cell=1)
+
+    def publish(self):
+        from datalakejson_spark.functions.ivf import _publish_ivf_staged
+
+        return _publish_ivf_staged(self.idx)
+
+    def rows(self):
+        return sorted(
+            (r.vec_id, tuple(r.embedding), r.cell)
+            for r in self.spark.read.parquet(self.live).collect()
+        )
+
+    def runs(self):
+        from datalakejson_spark.functions.index_maintenance import (
+            live_partition_files,
+        )
+
+        return [
+            len(inc.derive_runs(files))
+            for files in live_partition_files(self.idx, "cells").values()
+        ]
+
+
+@pytest.fixture(params=["dedup", "ivf"])
+def store(request, spark, tmp_path):
+    return {"dedup": _DedupIndex, "ivf": _IvfIndex}[request.param](spark, tmp_path)
+
+
+def _killed_compaction(store):
+    """A committed, unpublished compaction stage (the crash window between
+    the commit and the publish) — returns the staging dir and its token."""
+    from datalakejson_spark.plans import killpoints
+    from datalakejson_spark.plans.killpoints import InjectedKill
+
+    killpoints.kill_once(store.kill)
+    with pytest.raises(InjectedKill):
+        store.compact()
+    staging = os.path.join(store.idx, inc._STAGING)
+    (token,) = os.listdir(staging)
+    return staging, token
+
+
+def test_publish_race_loser_is_discarded(store):
     """Two committed maintenance stages subsuming the same snapshot: the
     first publish wins; the second must detect the missing subsumed files
     and discard itself — never delete the winner's output or resurrect
     duplicated rows."""
-    from datalakejson_spark.plans import killpoints
-    from datalakejson_spark.plans.killpoints import InjectedKill
-
-    idx = str(tmp_path / "idx")
-    for b in range(3):
-        ingest_batch_dedup(
-            spark,
-            _docs(spark, [(b * 6 + k, _distinct_text(b * 6 + k)) for k in range(6)]),
-            idx,
-            compact_max_runs=None,
-        )
-    rows_before = _index_rows(spark, idx, "bands")
-
-    killpoints.kill_once("dedup:compact_committed")
-    with pytest.raises(InjectedKill):
-        compact_index(spark, idx, target_rows_per_file=16, max_runs=1)
-    staging = os.path.join(idx, inc._STAGING)
-    (token,) = os.listdir(staging)
+    rows_before = store.rows()
+    staging, token = _killed_compaction(store)
     # the racing twin: an identical committed stage from "another runner"
     shutil.copytree(
         os.path.join(staging, token), os.path.join(staging, "zz-racer")
     )
 
-    inc._publish_staged(idx)  # publishes the winner, discards the loser
+    out = store.publish()  # publishes the winner, discards the loser
+    assert out == {token: "published", "zz-racer": "lost"}, out
     assert not (os.path.isdir(staging) and os.listdir(staging))
-    assert _index_rows(spark, idx, "bands") == rows_before  # no loss, no dup
-    for sub in ("hashes", "bands"):
-        assert len(inc._derive_runs(inc._live_files(f"{idx}/{sub}"))) == 1
+    assert store.rows() == rows_before  # no loss, no dup
+    assert set(store.runs()) == {1}
 
 
-def test_publishing_marker_rolls_forward_not_loses(spark, tmp_path):
+def test_publishing_marker_rolls_forward_not_loses(store):
     """A publish that crashed AFTER its _PUBLISHING point-of-no-return has
     already deleted some subsumed files; the replay must roll FORWARD
     (finish moves + deletes), not misread its own progress as a lost race
     and discard the stage (which would lose the moved-out rows)."""
-    from datalakejson_spark.plans import killpoints
-    from datalakejson_spark.plans.killpoints import InjectedKill
+    from datalakejson_spark import publish
 
-    idx = str(tmp_path / "idx")
-    for b in range(3):
-        ingest_batch_dedup(
-            spark,
-            _docs(spark, [(b * 6 + k, _distinct_text(b * 6 + k)) for k in range(6)]),
-            idx,
-            compact_max_runs=None,
-        )
-    rows_before = _index_rows(spark, idx, "bands")
-
-    killpoints.kill_once("dedup:compact_committed")
-    with pytest.raises(InjectedKill):
-        compact_index(spark, idx, target_rows_per_file=16, max_runs=1)
-    staging = os.path.join(idx, inc._STAGING)
-    (token,) = os.listdir(staging)
+    rows_before = store.rows()
+    staging, token = _killed_compaction(store)
     stage = os.path.join(staging, token)
     # simulate the crash window: marker down, one subsumed delete done
     with open(os.path.join(stage, "_PUBLISHING"), "w") as fh:
         fh.write("ok")
-    import json
+    victim = publish.read_subsumed(stage)[0]
+    os.remove(os.path.join(store.live, victim))
 
-    with open(os.path.join(stage, "_SUBSUMED.json")) as fh:
-        subsumed = json.load(fh)
-    victim = subsumed["bands"][0]
-    os.remove(os.path.join(idx, "bands", victim))
-
-    inc._publish_staged(idx)
+    assert store.publish() == {token: "published"}
     assert not (os.path.isdir(staging) and os.listdir(staging))
-    assert _index_rows(spark, idx, "bands") == rows_before  # rolled forward
-    for sub in ("hashes", "bands"):
-        assert len(inc._derive_runs(inc._live_files(f"{idx}/{sub}"))) == 1
+    assert store.rows() == rows_before  # rolled forward
+    assert set(store.runs()) == {1}
 
 
 def test_kill_at_publishing_marker_recovers(spark, tmp_path):

@@ -830,12 +830,12 @@ def test_tiered_compaction_merges_tail_not_base(spark, tmp_path):
             compact_target_rows_per_file=8,
         )
     from datalakejson_spark.functions.incremental_dedup import (
-        _derive_runs,
+        derive_runs,
         _file_ranges,
     )
     import os
 
-    n_runs = len(_derive_runs(_file_ranges(os.path.join(idx, "bands"), "band_hash")))
+    n_runs = len(derive_runs(_file_ranges(os.path.join(idx, "bands"), "band_hash")))
     assert n_runs <= 5, n_runs
     # Base STILL untouched through all loop-triggered merges.
     assert base_bands <= _parquet_files(idx, "bands")

@@ -191,6 +191,31 @@ def test_replay_after_partial_crash_is_deduplicable(spark, ingest_conf, monkeypa
     assert deduped.select("ingest_run_id").distinct().count() == 1
 
 
+def test_orphaned_curated_stage_is_swept(spark, ingest_conf):
+    """A run that died between its curated stage write and the publish
+    leaves ``_ingest_staging/<run_id>`` behind (no ledger commit, so its
+    batch replays). The next ingest_batch reclaims it once every mtime in
+    its tree is older than STALE_STAGE_S, and keeps a fresh one — it may
+    belong to a live concurrent runner."""
+    import time
+
+    from datalakejson_spark.plans.ingest import CURATED_STAGING
+    from datalakejson_spark.publish import STALE_STAGE_S
+
+    staging = Path(ingest_conf.curated_dir) / CURATED_STAGING
+    for run in ("run-old", "run-fresh"):
+        part = staging / run / "year=2024" / "part-00000.parquet"
+        part.parent.mkdir(parents=True)
+        part.write_bytes(b"x")
+    old = time.time() - 2 * STALE_STAGE_S
+    for path in (staging / "run-old").rglob("*"):
+        os.utime(path, (old, old))
+    os.utime(staging / "run-old", (old, old))
+
+    ingest_batch(spark, ingest_conf)
+    assert sorted(os.listdir(staging)) == ["run-fresh"]
+
+
 def test_transform_handles_missing_fields(spark):
     """Apply_Transformations on records missing optional nested fields —
     flattened columns become NULL, not errors."""

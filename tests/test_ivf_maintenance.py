@@ -357,10 +357,10 @@ def test_tiered_fold_keeps_the_largest_runs_untouched(spark, tmp_path):
         # every original base file is still live under its own name
         assert set(files) <= set(after.get(cell, [])), cell
     # folded cells now hold exactly base + one folded tail run
-    from datalakejson_spark.functions.incremental_dedup import _derive_runs
+    from datalakejson_spark.functions.incremental_dedup import derive_runs
 
     for cell in folded:
-        assert len(_derive_runs(after[cell])) <= 2, (cell, after[cell])
+        assert len(derive_runs(after[cell])) <= 2, (cell, after[cell])
     assert _topk_rows(spark, queries, idx) == want
 
 

@@ -182,7 +182,7 @@ def test_major_compaction_restores_layout_and_audit(spark, tmp_path):
     for sub in inc._INDEX_SUBDIRS:
         live = os.path.join(idx, sub)
         stats = inc._file_stats(live, inc._PRUNE_KEY[sub])
-        runs = inc._derive_runs(stats)
+        runs = inc.derive_runs(stats)
         assert len(runs) == 1, runs  # one clean run
         files, _rows, excess = inc._base_frag_excess(stats, TARGET)
         assert excess <= 0, (sub, files, excess)
@@ -225,7 +225,7 @@ def test_major_compaction_resumes_from_subdir_checkpoint(spark, tmp_path):
     assert _audit_rows(spark, idx) == audit_before
     for sub in inc._INDEX_SUBDIRS:
         assert (
-            len(inc._derive_runs(inc._live_files(os.path.join(idx, sub)))) == 1
+            len(inc.derive_runs(inc._live_files(os.path.join(idx, sub)))) == 1
         )
     assert done_mtime  # (adoption asserted via the unfinished/finished split)
 

@@ -141,7 +141,7 @@ def test_oversized_base_file_repairs_segmentally(spark, tmp_path):
     assert f"part-90000-{uuid}-c000.snappy.parquet" not in after
     new = after - untouched
     assert new and all(inc._PART_UUID.match(f).group(1) == uuid for f in new)
-    assert len(inc._derive_runs(sorted(after))) == 1  # still ONE base run
+    assert len(inc.derive_runs(sorted(after))) == 1  # still ONE base run
     assert all(
         pq.ParquetFile(os.path.join(live, f)).metadata.num_rows <= 2 * 8
         for f in new
@@ -257,7 +257,7 @@ def test_narrow_span_appends_fold_into_base_segmentally(spark, tmp_path):
     }
     # every original base file except the touched one is still there
     assert base_after >= (untouched_base - {target_file})
-    runs = inc._derive_runs(sorted(after))
+    runs = inc.derive_runs(sorted(after))
     assert len(runs) == 2, [sorted(r)[:2] for r in runs]  # base + 1 append
     base_run = max(runs, key=len)
     ranges = inc._file_ranges(live, "band_hash")
@@ -293,7 +293,7 @@ def test_full_span_appends_still_take_the_tiered_path(spark, tmp_path):
         if inc._PART_UUID.match(f)
     }
     assert uuid not in merged_gen  # fold output is NOT renamed into base
-    assert len(inc._derive_runs(sorted(after))) <= 4
+    assert len(inc.derive_runs(sorted(after))) <= 4
 
 
 @pytest.mark.parametrize("point", ["dedup:compact_staged", "dedup:compact_committed"])
@@ -327,6 +327,6 @@ def test_segmented_repair_kill_points(spark, tmp_path, point):
     # recovery rides any entry point's _publish_staged roll-forward
     compact_index(spark, idx, target_rows_per_file=8, max_runs=8)
     _assert_disjoint(idx, "bands")
-    assert len(inc._derive_runs(_files(idx, "bands"))) == 1
+    assert len(inc.derive_runs(_files(idx, "bands"))) == 1
     assert _rows(spark, idx, "bands") == rows_before
     assert _audit(spark, idx) == audit_before

@@ -1,25 +1,28 @@
-"""Stale-stage sweep fences (round 15, third pass): the garbage sweep
-ages a stage by the NEWEST mtime in its tree (a live stager's deep
-parquet writes keep it fresh — the top dir's mtime alone froze at
-creation, so a >1h batch write could be reclaimed mid-flight), reclaims
-by atomic rename-then-recheck (a commit racing the sweep is restored
-whole or fails loudly, never half-deleted), and ``_COMMITTED`` carries a
-file manifest the publisher verifies — a partially destroyed committed
-stage becomes a loud "corrupt" outcome, never a silent partial publish.
+"""Stale-stage sweep fences of the shared staged publish
+(datalakejson_spark/publish.py), pinned once per store — the dedup index
+pair and the IVF index: the garbage sweep ages a stage by the NEWEST mtime
+in its tree (a live stager's deep parquet writes keep it fresh — the top
+dir's mtime alone froze at creation, so a >1h batch write could be
+reclaimed mid-flight), reclaims by atomic rename-then-recheck (a commit
+racing the sweep is restored whole or fails loudly, never half-deleted),
+and ``_COMMITTED`` carries a file manifest the publisher verifies — a
+partially destroyed committed stage becomes a loud "corrupt" outcome,
+never a silent partial publish. Stages committed by older code (an ``ok``
+marker, either ``_SUBSUMED.json`` shape) still roll forward.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 
 import pyspark.sql.functions as F
 import pytest
 
+from datalakejson_spark import publish
+from datalakejson_spark.functions import incremental_dedup as inc
 from datalakejson_spark.functions.index_maintenance import (
-    commit_stage,
     publish_staged,
     settle_committed_replay,
 )
@@ -28,6 +31,7 @@ from datalakejson_spark.functions.ivf import (
     build_ivf_index,
     load_ivf_meta,
 )
+from datalakejson_spark.publish import commit_stage
 
 _SCHEMA = "vec_id bigint, embedding array<double>"
 
@@ -60,6 +64,73 @@ def _stage_batch(spark, idx, token, n=10, start=5000, commit=True):
     return stage
 
 
+class _IvfStore:
+    name, data, key, rows_dir = "ivf", "cells", "vec_id", "cells"
+
+    def __init__(self, spark, tmp_path):
+        self.spark = spark
+        self.root = _build(spark, tmp_path)
+
+    def stage(self, token, n=10, start=5000, commit=True):
+        return _stage_batch(self.spark, self.root, token, n, start, commit)
+
+    def publish(self):
+        return publish_staged(self.root, "cells", "_IVF.json")
+
+
+class _DedupStore:
+    """A dedup index pair written directly (no audit): the publish never
+    reads the rows it moves, so plain hash/band rows pin it."""
+
+    name, data, key, rows_dir = "dedup", "", "doc_id", "bands"
+
+    def __init__(self, spark, tmp_path):
+        self.spark = spark
+        self.root = str(tmp_path / "dedup")
+        self._write(self.root, 20, 0)
+
+    def _write(self, root, n, start):
+        ids = range(start, start + n)
+        self.spark.createDataFrame(
+            [(f"h{i}",) for i in ids], "text_hash string"
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(root, "hashes"))
+        self.spark.createDataFrame(
+            [(i, 0, f"b{i}") for i in ids], "doc_id bigint, band int, band_hash string"
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(root, "bands"))
+
+    def stage(self, token, n=10, start=5000, commit=True):
+        stage = os.path.join(self.root, "_staging", token)
+        self._write(stage, n, start)
+        if commit:
+            commit_stage(stage)
+        return stage
+
+    def publish(self):
+        return inc._publish_staged(self.root)
+
+
+def _stores(spark, tmp_path):
+    return [
+        _DedupStore(spark, tmp_path / "dedup-case"),
+        _IvfStore(spark, tmp_path / "ivf-case"),
+    ]
+
+
+def _live_rows(store):
+    return store.spark.read.parquet(os.path.join(store.root, store.rows_dir))
+
+
+def _assert_landed_once(store, start, n):
+    planted = _live_rows(store).filter(F.col(store.key) >= start)
+    assert planted.count() == n, store.name
+    dup = planted.groupBy(store.key).count().filter("count > 1").count()
+    assert dup == 0, store.name
+
+
+def _first_parquet(root):
+    return os.path.join(root, publish.staged_files(root)[0])
+
+
 def _backdate(path, age_s):
     old = time.time() - age_s
     for root, dirs, files in os.walk(path):
@@ -72,30 +143,38 @@ def test_live_stager_is_not_swept_by_tree_mtime(spark, tmp_path):
     """An uncommitted stage whose TOP dir mtime is ancient but whose deep
     files are fresh (a live Spark write in progress) survives the sweep —
     the age basis is the newest mtime in the tree."""
-    idx = _build(spark, tmp_path)
-    stage = _stage_batch(spark, idx, "inflight", commit=False)
-    # backdate everything, then refresh ONE deep file (the live write)
-    _backdate(stage, 2 * 3600)
-    for root, _dirs, files in os.walk(stage):
-        for n in files:
-            if n.endswith(".parquet"):
-                os.utime(os.path.join(root, n), None)
-                break
-    publish_staged(idx, "cells", "_IVF.json")
-    assert os.path.isdir(stage), "live stage was swept"
+    for store in _stores(spark, tmp_path):
+        stage = store.stage("inflight", commit=False)
+        # backdate everything, then refresh ONE deep file (the live write)
+        _backdate(stage, 2 * 3600)
+        os.utime(_first_parquet(stage), None)
+        store.publish()
+        assert os.path.isdir(stage), f"{store.name}: live stage was swept"
 
 
 def test_quiescent_uncommitted_stage_is_swept(spark, tmp_path):
     """A fully quiescent uncommitted stage (every mtime past the grace)
     is reclaimed — and reclaimed WHOLE: no half-deleted remnant, no
     lingering _SWEEP claim."""
-    idx = _build(spark, tmp_path)
-    stage = _stage_batch(spark, idx, "crashed", commit=False)
-    _backdate(stage, 2 * 3600)
-    publish_staged(idx, "cells", "_IVF.json")
-    staging = os.path.join(idx, "_staging")
-    leftover = [t for t in os.listdir(staging) if "crashed" in t]
-    assert leftover == [], leftover
+    for store in _stores(spark, tmp_path):
+        stage = store.stage("crashed", commit=False)
+        _backdate(stage, 2 * 3600)
+        store.publish()
+        staging = os.path.join(store.root, "_staging")
+        leftover = [t for t in os.listdir(staging) if "crashed" in t]
+        assert leftover == [], (store.name, leftover)
+
+
+def test_vanished_stage_reads_as_fresh(tmp_path):
+    """A stage that vanishes under the sweep (another runner published or
+    reclaimed it) is aged as fresh and left alone — never a crash of the
+    publish pass."""
+    gone = str(tmp_path / "_staging" / "vanished")
+    before = time.time()
+    assert publish.stage_newest_mtime(gone) >= before
+    publish.sweep_stale(str(tmp_path / "_staging"))  # no staging dir: no-op
+    publish._reclaim_if_stale(gone)
+    assert not os.path.exists(gone)
 
 
 def test_sweep_claim_with_commit_is_rescued(spark, tmp_path):
@@ -103,26 +182,23 @@ def test_sweep_claim_with_commit_is_rescued(spark, tmp_path):
     dead sweeper left in trash-limbo (it renamed, then died before the
     re-check): the next publish pass renames it back and rolls it
     forward — the rows land, exactly once."""
-    idx = _build(spark, tmp_path)
-    stage = _stage_batch(spark, idx, "batch-limbo", n=10, start=7000)
-    staging = os.path.join(idx, "_staging")
-    os.rename(stage, os.path.join(staging, "_SWEEP-batch-limbo"))
-    publish_staged(idx, "cells", "_IVF.json")  # rescues the claim
-    out = publish_staged(idx, "cells", "_IVF.json")  # publishes the stage
-    assert out.get("batch-limbo") == "published", out
-    cells = spark.read.parquet(os.path.join(idx, "cells"))
-    planted = cells.filter(F.col("vec_id") >= 7000)
-    assert planted.count() == 10
-    assert planted.groupBy("vec_id").count().filter("count > 1").count() == 0
+    for store in _stores(spark, tmp_path):
+        stage = store.stage("batch-limbo", n=10, start=7000)
+        staging = os.path.join(store.root, "_staging")
+        os.rename(stage, os.path.join(staging, "_SWEEP-batch-limbo"))
+        store.publish()  # rescues the claim
+        out = store.publish()  # publishes the stage
+        assert out.get("batch-limbo") == "published", (store.name, out)
+        _assert_landed_once(store, 7000, 10)
 
 
 def test_sweep_claim_without_commit_is_cleared(spark, tmp_path):
-    idx = _build(spark, tmp_path)
-    stage = _stage_batch(spark, idx, "garbage", commit=False)
-    staging = os.path.join(idx, "_staging")
-    os.rename(stage, os.path.join(staging, "_SWEEP-garbage"))
-    publish_staged(idx, "cells", "_IVF.json")
-    assert not any("garbage" in t for t in os.listdir(staging))
+    for store in _stores(spark, tmp_path):
+        stage = store.stage("garbage", commit=False)
+        staging = os.path.join(store.root, "_staging")
+        os.rename(stage, os.path.join(staging, "_SWEEP-garbage"))
+        store.publish()
+        assert not any("garbage" in t for t in os.listdir(staging)), store.name
 
 
 def test_corrupt_committed_stage_refuses_to_publish(spark, tmp_path):
@@ -130,25 +206,16 @@ def test_corrupt_committed_stage_refuses_to_publish(spark, tmp_path):
     the stage and the live layout (a half-destroyed stage) must NOT
     publish the surviving subset — outcome 'corrupt', stage removed,
     live data untouched."""
-    idx = _build(spark, tmp_path)
-    n_before = spark.read.parquet(os.path.join(idx, "cells")).count()
-    stage = _stage_batch(spark, idx, "batch-torn", n=10, start=8000)
-    # destroy one staged parquet after the commit
-    gone = None
-    for root, _dirs, files in os.walk(os.path.join(stage, "cells")):
-        for n in files:
-            if n.endswith(".parquet"):
-                gone = os.path.join(root, n)
-                break
-        if gone:
-            break
-    os.remove(gone)
-    out = publish_staged(idx, "cells", "_IVF.json")
-    assert out.get("batch-torn") == "corrupt", out
-    assert not os.path.isdir(stage)
-    cells = spark.read.parquet(os.path.join(idx, "cells"))
-    assert cells.count() == n_before
-    assert cells.filter(F.col("vec_id") >= 8000).count() == 0
+    for store in _stores(spark, tmp_path):
+        n_before = _live_rows(store).count()
+        stage = store.stage("batch-torn", n=10, start=8000)
+        os.remove(_first_parquet(stage))  # destroyed after the commit
+        out = store.publish()
+        assert out.get("batch-torn") == "corrupt", (store.name, out)
+        assert not os.path.isdir(stage), store.name
+        live = _live_rows(store)
+        assert live.count() == n_before, store.name
+        assert live.filter(F.col(store.key) >= 8000).count() == 0, store.name
 
 
 def test_settle_raises_on_corrupt_committed_replay(spark, tmp_path):
@@ -187,40 +254,40 @@ def test_half_moved_replay_passes_manifest_check(spark, tmp_path):
 
 
 def test_legacy_ok_marker_publishes_unverified(spark, tmp_path):
-    """Stages committed by pre-manifest code ('ok' marker) still roll
+    """Stages committed by pre-manifest code ('ok' marker — what the dedup
+    writers wrote until they moved onto the shared commit) still roll
     forward — mid-upgrade compatibility."""
-    idx = _build(spark, tmp_path)
-    stage = _stage_batch(spark, idx, "batch-legacy", n=5, start=9500, commit=False)
-    with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
-        fh.write("ok")
-    out = publish_staged(idx, "cells", "_IVF.json")
-    assert out.get("batch-legacy") == "published", out
-    assert (
-        spark.read.parquet(os.path.join(idx, "cells"))
-        .filter(F.col("vec_id") >= 9500)
-        .count()
-        == 5
-    )
+    for store in _stores(spark, tmp_path):
+        stage = store.stage("batch-legacy", n=5, start=9500, commit=False)
+        with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
+            fh.write("ok")
+        out = store.publish()
+        assert out.get("batch-legacy") == "published", (store.name, out)
+        _assert_landed_once(store, 9500, 5)
 
 
-def test_dedup_plane_sweep_uses_tree_mtime(spark, tmp_path):
-    """The dedup index publisher shares the fences: a live-looking stage
-    (fresh deep file) survives, a quiescent one is reclaimed whole."""
-    from datalakejson_spark.functions.incremental_dedup import _publish_staged
-
-    root = str(tmp_path / "dedup")
-    staging = os.path.join(root, "_staging")
-    live = os.path.join(staging, "live-stage")
-    dead = os.path.join(staging, "dead-stage")
-    for stage in (live, dead):
-        os.makedirs(os.path.join(stage, "exact"), exist_ok=True)
-        with open(os.path.join(stage, "exact", "part-0.parquet"), "w") as fh:
-            fh.write("x")
-        _backdate(stage, 2 * 3600)
-    os.utime(os.path.join(live, "exact", "part-0.parquet"), None)
-    _publish_staged(root)
-    assert os.path.isdir(live)
-    assert not any("dead-stage" in t for t in os.listdir(staging))
+def test_legacy_subsumed_shapes_roll_forward(spark, tmp_path):
+    """A committed maintenance stage left on disk by older code rolls
+    forward with its own ``_SUBSUMED.json`` shape: the dedup index's
+    ``{subdir: [names]}`` map and the IVF index's ``[relpaths]`` list —
+    the staged rows land and the subsumed file is deleted."""
+    for store in _stores(spark, tmp_path):
+        live = os.path.join(store.root, store.data)
+        if store.name == "dedup":
+            name = publish.staged_files(os.path.join(live, "bands"))[0]
+            shape, victim = {"bands": [name]}, os.path.join("bands", name)
+        else:
+            victim = publish.staged_files(live)[0]
+            shape = [victim]
+        stage = store.stage("compact-legacy", n=5, start=9700, commit=False)
+        with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
+            json.dump(shape, fh)
+        with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
+            fh.write("ok")
+        out = store.publish()
+        assert out.get("compact-legacy") == "published", (store.name, out)
+        assert not os.path.exists(os.path.join(live, victim)), store.name
+        _assert_landed_once(store, 9700, 5)
 
 
 def test_concurrent_meta_writers_never_tear_the_meta(tmp_path):

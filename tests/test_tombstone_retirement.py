@@ -216,18 +216,13 @@ def test_publish_rollforwards_serialize_on_the_publish_slot(
     def publish_other_midflight():
         # models a second PROCESS publishing stage t2 while this one is
         # inside t1's critical section (different token -> must wait)
-        from datalakejson_spark.functions.index_maintenance import (
-            STALE_STAGE_S,
-            _publish_one_stage,
-        )
+        from datalakejson_spark.functions.index_maintenance import _VectorStore
+        from datalakejson_spark.publish import publish_one
 
         disarm("ivf:publish_publishing")
-        inner[t2] = _publish_one_stage(
-            idx,
+        inner[t2] = publish_one(
+            _VectorStore(idx, "cells", "_IVF.json"),
             os.path.join(idx, "_staging", t2),
-            STALE_STAGE_S,
-            "cells",
-            "_IVF.json",
         )
 
     arm("ivf:publish_publishing", publish_other_midflight)

@@ -1,11 +1,12 @@
-"""Interleaved A/B micro-bench for candidate r16 optimizations.
+"""Interleaved A/B micro-bench for candidate query optimizations.
 
-Same methodology as tools/ab_r15.py (guide §1): variant pairs run in ONE
-session, alternating A/B/A/B so position/thermal noise cancels, min-of-N via
-the noop sink, and a collect-and-compare equality gate BEFORE timing so a
-fast-but-wrong variant can never look good.
+Variant pairs run in ONE session, alternating A/B/A/B so position/thermal
+noise cancels, min-of-N via the noop sink, and a collect-and-compare
+equality gate BEFORE timing so a fast-but-wrong variant can never look good.
+Cases are named by the query they measure (g6, cc, l2g); their results are
+recorded in OPTIMIZATION_r16.md.
 
-Usage: python tools/ab_r16.py <case> [sf_dir] [reps]
+Usage: python tools/ab.py <case> [sf_dir] [reps]
 """
 
 from __future__ import annotations

@@ -114,7 +114,7 @@ if __name__ == "__main__":
         repetition_signals,
         _derived_newline_docs,
     )
-    import ab_r15
+    import ab
 
     spark = get_spark("ab-rowlocal")
     for sfd in ("/root/testdata/sf0.01", "/root/testdata/sf0.1", "/tmp/datalakejson_sf1"):
@@ -122,10 +122,10 @@ if __name__ == "__main__":
         opt_w = lambda s, d: repetition_signals_rowlocal(
             spread_scan(load_table(s, d, "documents"), "doc_id")
         )
-        ab_r15.ab(spark, f"l21 rowlocal (window mode)", base_w, opt_w, sfd, 3)
+        ab.ab(spark, f"l21 rowlocal (window mode)", base_w, opt_w, sfd, 3)
         base_n = lambda s, d: repetition_signals(_derived_newline_docs(s, d), newlines=True)
         opt_n = lambda s, d: repetition_signals_rowlocal(
             spread_scan(_derived_newline_docs(s, d), "doc_id"), newlines=True
         )
-        ab_r15.ab(spark, f"l21b rowlocal (newline mode)", base_n, opt_n, sfd, 3)
+        ab.ab(spark, f"l21b rowlocal (newline mode)", base_n, opt_n, sfd, 3)
     spark.stop()

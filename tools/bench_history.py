@@ -108,7 +108,7 @@ NOTES = [
     "exchange reuse that the committed plan never proved; the r16 "
     "rollup-over-finest form is structurally single-scan (executed plan + "
     "test pin), measured 1.29x sf0.1 / 1.42x sf1 vs the union and 1.42x / "
-    "1.57x vs a native rollup (tools/ab_r16.py g6).",
+    "1.57x vs a native rollup (tools/ab.py g6).",
     "Calibrated units = sec / numpy_mt_sec measured in the SAME session "
     "right after the query block (bench.py kernel, frozen definition); "
     "they are box-independent and are the series to trend. Box-anomalous "

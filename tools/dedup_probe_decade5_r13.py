@@ -21,7 +21,7 @@ count.
 
 Per N in {30519, 100k, 305190, 1M}: listdir wall, sidecar bytes + load
 wall, _prune_files wall (the bisect pass) + selected-file count vs the K
-expectation, _derive_runs wall (trigger cost), and the driver RSS increase
+expectation, derive_runs wall (trigger cost), and the driver RSS increase
 from holding the range map.
 
 Writes tools/dedup_probe_decade5_r13.jsonl.
@@ -109,7 +109,7 @@ def main() -> None:
             prune_s = time.time() - t0
 
             t0 = time.time()
-            runs = inc._derive_runs(stats)
+            runs = inc.derive_runs(stats)
             runs_s = time.time() - t0
 
             # steady-state batch: the sidecar is unchanged since the last

@@ -179,7 +179,7 @@ def main() -> None:
             files_after, _rows, excess_after = inc._base_frag_excess(
                 stats, PROBE_TARGET
             )
-            runs = len(inc._derive_runs(stats))
+            runs = len(inc.derive_runs(stats))
             batch_clean = one_batch_seconds(spark, idx, 20_000_000_000)
             fh.write(json.dumps({
                 "phase": "major", "H": h, "resumed_after_kill": killed,

@@ -122,9 +122,7 @@ def main() -> None:
         load_tombstones,
         probe_retrying,
     )
-    from datalakejson_spark.functions.incremental_dedup import (
-        _is_missing_file_error,
-    )
+    from datalakejson_spark.publish import is_missing_file_error
     from datalakejson_spark.functions.ivf import (
         build_ivf_index,
         ivf_index_topk,
@@ -182,7 +180,7 @@ def main() -> None:
                         lambda: ivf_index_topk(spark, queries, idx)
                     )
                 except Exception as exc:  # noqa: BLE001 — audit below
-                    if _is_missing_file_error(exc):
+                    if is_missing_file_error(exc):
                         exhausted[0] += 1
                         continue
                     probe_errors.append(f"{type(exc).__name__}: {exc}")

@@ -1,13 +1,12 @@
 """Capture EXECUTED .explain("formatted") plans into plans/r16/.
 
-Unlike tools/plan_capture_r15.py (which dumped the pre-execution plan —
-`AdaptiveSparkPlan isFinalPlan=false`, the r15 g6 evidence gap), this runs
-each query to completion first (collect() attaches metrics/final plan to the
-df's own QueryExecution) so the dump is the final adaptive plan
+Each query runs to completion first (collect() attaches metrics/final plan
+to the df's own QueryExecution), so the dump is the final adaptive plan
 (`isFinalPlan=true`) with AQEShuffleRead nodes and any runtime exchange
-reuse visible — the plan the judge can trust.
+reuse visible — not the pre-execution `isFinalPlan=false` plan, which can
+hide whether a runtime reuse actually happened.
 
-Usage: python tools/plan_capture_r16.py <suffix> [query ...]
+Usage: python tools/plan_capture.py <suffix> [query ...]
 Writes plans/r16/<query>_<suffix>.txt (default query set: bench HEADLINE).
 Plans are captured at sf0.1, the bench tier.
 """
@@ -37,7 +36,7 @@ def main() -> None:
     from bench import HEADLINE
 
     names = sys.argv[2:] or HEADLINE
-    spark = get_spark("plan-capture-r16")
+    spark = get_spark("plan-capture")
     specs = all_specs()
     out_dir = Path(__file__).resolve().parent.parent / "plans" / "r16"
     out_dir.mkdir(parents=True, exist_ok=True)

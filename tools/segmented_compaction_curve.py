@@ -196,7 +196,7 @@ def main() -> None:
                 "files_before": counts["bands"][0],
                 "files_after": counts["bands"][1],
                 "base_untouched": untouched_ok,
-                "runs_after": len(inc._derive_runs(sorted(after))),
+                "runs_after": len(inc.derive_runs(sorted(after))),
             }) + "\n")
 
             # -- scenario B: narrow-span appends fold into touched base --
@@ -227,7 +227,7 @@ def main() -> None:
                 after[f] == s for f, s in before.items() if f not in gone
             )
             rewritten = touched_rows + 2 * append_rows
-            base_run = max(inc._derive_runs(sorted(after)), key=len)
+            base_run = max(inc.derive_runs(sorted(after)), key=len)
             ranges = inc._file_ranges(live, key)
             assert inc._ranges_disjoint(
                 {f: ranges[f] for f in base_run}
@@ -241,7 +241,7 @@ def main() -> None:
                 "rewritten_fraction": round(rewritten / corpus_rows, 5),
                 "files_folded": sorted(gone),
                 "base_untouched": untouched_ok,
-                "runs_after": len(inc._derive_runs(sorted(after))),
+                "runs_after": len(inc.derive_runs(sorted(after))),
             }) + "\n")
 
             # -- baseline: wholesale full rewrite (max_runs=1) ------------

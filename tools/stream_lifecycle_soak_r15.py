@@ -276,9 +276,7 @@ def main() -> None:
             """Probe WHILE both streams race: an id whose delete round
             completed must never surface, no matter which publishes land
             mid-probe (file-pinned retry handles racing layouts)."""
-            from datalakejson_spark.functions.incremental_dedup import (
-                _is_missing_file_error,
-            )
+            from datalakejson_spark.publish import is_missing_file_error
 
             frozen = set(confirmed_deleted)
             while not stop.is_set():
@@ -291,7 +289,7 @@ def main() -> None:
                         )
                     in_round_probes[0] += 1
                 except BaseException as exc:  # noqa: BLE001 — the audit line
-                    if _is_missing_file_error(exc):
+                    if is_missing_file_error(exc):
                         probe_exhausted[0] += 1
                         continue
                     probe_errors.append(f"{type(exc).__name__}: {exc}")

@@ -179,9 +179,7 @@ def main() -> None:
         load_tombstones,
         probe_retrying,
     )
-    from datalakejson_spark.functions.incremental_dedup import (
-        _is_missing_file_error,
-    )
+    from datalakejson_spark.publish import is_missing_file_error
 
     if plane == "ivf":
         from datalakejson_spark.functions.ivf import ivf_index_topk as topk_fn
@@ -259,7 +257,7 @@ def main() -> None:
                         lambda: topk_fn(spark, queries, idx)
                     )
                 except Exception as exc:  # noqa: BLE001 — audit below
-                    if _is_missing_file_error(exc):
+                    if is_missing_file_error(exc):
                         exhausted[0] += 1
                         continue
                     probe_errors.append(f"{type(exc).__name__}: {exc}")
