@@ -165,6 +165,25 @@ def test_quiescent_uncommitted_stage_is_swept(spark, tmp_path):
         assert leftover == [], (store.name, leftover)
 
 
+def test_dedup_plane_sweep_uses_tree_mtime(spark, tmp_path):
+    """The dedup index publisher shares the fences: a live-looking stage
+    (fresh deep file) survives, a quiescent one is reclaimed whole — in
+    the same publish pass, on a root with no published pair yet."""
+    root = str(tmp_path / "dedup")
+    staging = os.path.join(root, "_staging")
+    live = os.path.join(staging, "live-stage")
+    dead = os.path.join(staging, "dead-stage")
+    for stage in (live, dead):
+        os.makedirs(os.path.join(stage, "exact"), exist_ok=True)
+        with open(os.path.join(stage, "exact", "part-0.parquet"), "w") as fh:
+            fh.write("x")
+        _backdate(stage, 2 * 3600)
+    os.utime(os.path.join(live, "exact", "part-0.parquet"), None)
+    inc._publish_staged(root)
+    assert os.path.isdir(live)
+    assert not any("dead-stage" in t for t in os.listdir(staging))
+
+
 def test_vanished_stage_reads_as_fresh(tmp_path):
     """A stage that vanishes under the sweep (another runner published or
     reclaimed it) is aged as fresh and left alone — never a crash of the
