@@ -40,7 +40,11 @@ from datalakejson_spark.functions.dedup import band_table, minhash_signatures
 from datalakejson_spark.fsutil import atomic_write_json
 from datalakejson_spark.plans.killpoints import fire
 from datalakejson_spark.publish import STAGING as _STAGING
-from datalakejson_spark.publish import STALE_STAGE_S, is_missing_file_error
+from datalakejson_spark.publish import (
+    STALE_STAGE_S,
+    error_condition,
+    is_missing_file_error,
+)
 from datalakejson_spark.registry import register
 from datalakejson_spark.sources.tables import load_table
 
@@ -48,21 +52,6 @@ _LOG = logging.getLogger(__name__)
 
 BAND_KEY = ["band", "band_hash"]
 _INDEX_SUBDIRS = ("hashes", "bands")
-
-
-def _error_condition(exc) -> str | None:
-    """Best-effort error-class/condition of a PySpark exception (the name
-    changed getErrorClass -> getCondition across 4.x)."""
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(exc, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:  # pragma: no cover - defensive
-                cond = None
-            if cond:
-                return cond
-    return None
 
 
 def _read_index_pair(
@@ -85,7 +74,7 @@ def _read_index_pair(
         try:
             return spark.read.parquet(path)
         except AnalysisException as exc:
-            if _error_condition(exc) == "PATH_NOT_FOUND":
+            if error_condition(exc) == "PATH_NOT_FOUND":
                 return None
             raise
     hp, bp = (os.path.join(index_dir, s) for s in _INDEX_SUBDIRS)

@@ -16,8 +16,8 @@ Reference parity (operator-by-operator):
 
 Deliberate improvements over the pseudocode (SURVEY.md §7.0/§7.3):
 - the raw batch is read ONCE and cached; the reference re-scans up to 4×
-  (two filters × (count + write), psuedo_code.txt:185-225). Corrupt/good
-  counts come from one cached pass.
+  (two filters × (count + write), psuedo_code.txt:185-225). Per-file
+  corrupt/good counts come from one aggregate over the cached batch.
 - ``mergeSchema`` is applied at READ time (it is a no-op on OSS Parquet
   writes, §1.3 fidelity note); appends rely on Parquet schema union.
 - the ``col("*") + explicit columns`` duplication bug in the reference's
@@ -213,9 +213,16 @@ def discover(
                 "s3_key string, file_size_bytes long",
             )
         discovered = discovered.unionByName(listed)
-    ledger = make_ledger(spark, conf)
-    registered = ledger.register(discovered)
-    _finish_interrupted_archives(ledger, discovered, conf)
+    # register's anti-join and the straggler join share ONE listing: the
+    # fan-out runs a Python walk per prefix, so it is materialised once
+    # (by register's first action) instead of walked twice
+    discovered = discovered.persist()
+    try:
+        ledger = make_ledger(spark, conf)
+        registered = ledger.register(discovered)
+        _finish_interrupted_archives(ledger, discovered, conf)
+    finally:
+        discovered.unpersist()
     return registered
 
 
@@ -465,24 +472,31 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
         good_paths: set[str] = set()
         corrupt_paths: set[str] = set()
         if raw is not None:
-            corrupt = raw.filter(F.col(CORRUPT_COL).isNotNull())
-            good = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-
-            result.corrupt_rows = corrupt.count()
+            # One per-file aggregate over the persisted batch classifies
+            # every file and gives both row counts (bounded: one row per
+            # claimed file); the two writes below are the only other passes.
+            per_file = (
+                raw.groupBy("source_s3_path")
+                .agg(
+                    F.count(CORRUPT_COL).alias("n_corrupt"),
+                    F.count(F.when(F.col(CORRUPT_COL).isNull(), 1)).alias("n_good"),
+                )
+                .collect()
+            )
+            result.corrupt_rows = sum(r.n_corrupt for r in per_file)
+            result.good_rows = sum(r.n_good for r in per_file)
+            corrupt_paths = {_norm(r.source_s3_path) for r in per_file if r.n_corrupt}
+            good_paths = {_norm(r.source_s3_path) for r in per_file if r.n_good}
             if result.corrupt_rows:
                 # DLQ: corrupt rows + lineage, bucketed by run id
                 # (sudo_code.txt:169).
-                corrupt.select(CORRUPT_COL, "source_s3_path").write.mode(
-                    "append"
-                ).json(os.path.join(conf.dlq_dir, run_id))
-                corrupt_paths = {
-                    _norm(r[0])
-                    for r in corrupt.select("source_s3_path").distinct().collect()
-                }
+                raw.filter(F.col(CORRUPT_COL).isNotNull()).select(
+                    CORRUPT_COL, "source_s3_path"
+                ).write.mode("append").json(os.path.join(conf.dlq_dir, run_id))
                 fire("ingest:after_dlq_write")
 
-            result.good_rows = good.count()
             if result.good_rows:
+                good = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
                 curated = apply_transformations(good, conf.mode_default)
                 # Run stamp: if a crash lands between this append and the
                 # ledger commit, the re-claimed batch re-appends the same
@@ -512,10 +526,6 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
                     *PARTITION_COLS
                 ).parquet(stage_dir)
                 _publish_curated_stage(stage_dir, conf.curated_dir)
-                good_paths = {
-                    _norm(r[0])
-                    for r in good.select("source_s3_path").distinct().collect()
-                }
                 fire("ingest:after_curated_append")
             raw.unpersist()
 
@@ -701,12 +711,17 @@ def read_curated(spark: SparkSession, curated_dir: str) -> DataFrame:
 def write_dlq_summary(spark: SparkSession, conf: IngestConfig) -> DataFrame:
     """DLQ audit: corrupt rows per run per source file (monitoring surface,
     sudo_code.txt:272 'Alarm if DLQ is being actively used'). An empty or
-    absent DLQ — the healthy case — returns an empty frame, not an error."""
+    absent DLQ — the healthy case — returns an empty frame; a DLQ that
+    exists but cannot be read raises."""
+    from pyspark.errors import AnalysisException
+
     try:
         df = spark.read.json(os.path.join(conf.dlq_dir, "*"))
-        if "source_s3_path" not in df.columns:
-            raise FileNotFoundError(conf.dlq_dir)
-    except Exception:  # noqa: BLE001 — no DLQ activity yet
+    except AnalysisException as exc:
+        if publish.error_condition(exc) != "PATH_NOT_FOUND":
+            raise
+        df = None  # no DLQ activity yet
+    if df is None or "source_s3_path" not in df.columns:
         return local_df(
             spark, [], "source_s3_path string, n_corrupt_rows long"
         )

@@ -28,6 +28,18 @@ falls back to one full compaction write; segment count is bounded by
 compaction at MAX_TERMINAL_SEGMENTS. Legacy single-snapshot pointers are read
 transparently and migrate to the split layout on their next write.
 
+Job budget per transition: on bounded metadata each Spark action is its own
+job, and the job count, not the data, sets the cost. A claim is one collect
+of the claimable keys plus one write. A list-keyed commit (``apply_outcomes``,
+``set_status`` with a list) is one bounded probe — the batch keys' current
+rows, collected — plus one write (two when it splits terminal rows into a
+segment). The probe alone yields the fenced-out keys, whether a terminal
+segment row is being transitioned, and the exact change to the deferred
+terminal count; the update is one projection stamped with a driver-side
+timestamp literal. Keys reach Spark as one parsed ``IN`` list, not one py4j
+literal each. DataFrame-keyed bulk flips (operational tools) join their keys
+instead and keep a count-based probe.
+
 Multi-runner semantics: the reference serializes concurrent claims with
 ``FOR UPDATE SKIP LOCKED`` (psuedo_code.txt:170-181). The filesystem analogue
 here is a lock file (O_CREAT|O_EXCL — atomic on POSIX and NFSv4+) held only
@@ -51,7 +63,7 @@ import uuid
 from pathlib import Path
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from datalakejson_spark.session import local_df
 from pyspark.sql import types as T
@@ -109,6 +121,70 @@ LEDGER_SCHEMA = T.StructType(
         T.StructField("run_id", T.StringType(), True),
     ]
 )
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _key_in(keys: list[str]) -> Column:
+    """``s3_key IN (keys)`` parsed from ONE SQL string. ``Column.isin``
+    builds one py4j literal per key (4.7 s for 10k keys on a 4-core box);
+    the parse takes milliseconds and the optimizer turns the list into a
+    hash ``InSet``."""
+    if not keys:
+        return F.lit(False)
+    return F.expr(f"s3_key IN ({','.join(map(_sql_string, keys))})")
+
+
+def _owned(fence_run_id: str | None) -> Column:
+    """Does a row still carry the fence run_id? (Always, with no fence; a
+    NULL run_id is never owned.)"""
+    if fence_run_id is None:
+        return F.lit(True)
+    return F.coalesce(F.col("run_id") == F.lit(fence_run_id), F.lit(False))
+
+
+def _transition(
+    df: DataFrame,
+    rules: list[tuple[Column, str, str | None]],
+    run_id: str | None,
+    fence_run_id: str | None = None,
+    increment_retry: bool = False,
+) -> DataFrame:
+    """The one status/fence update, as a projection over the ledger
+    columns: a row takes the first rule whose key test it matches — under a
+    fence only while it still carries ``fence_run_id`` — and gets that
+    rule's status and error, ``run_id`` (when given), retry_count+1 (when
+    asked) and a fresh ``last_updated_at``. The timestamp is a driver-side
+    UTC literal, so every write of one transition stamps the same value."""
+    owned = _owned(fence_run_id)
+    pick = None
+    for i, (test, _status, _msg) in enumerate(rules):
+        pick = (F.when if pick is None else pick.when)(test & owned, F.lit(i))
+    marked = df.withColumn("_rule", pick)
+    hit = F.col("_rule").isNotNull()
+
+    def per_rule(values: list, current: str) -> Column:
+        out = F.col(current)
+        for i in reversed(range(len(values))):
+            out = F.when(F.col("_rule") == i, F.lit(values[i])).otherwise(out)
+        return out.alias(current)
+
+    def on_hit(value: Column, current: str) -> Column:
+        return F.when(hit, value).otherwise(F.col(current)).alias(current)
+
+    now = F.timestamp_micros(F.lit(time.time_ns() // 1000))
+    return marked.select(
+        "s3_key",
+        "file_size_bytes",
+        per_rule([status for _, status, _ in rules], "status"),
+        on_hit(F.col("retry_count") + 1, "retry_count") if increment_retry else "retry_count",
+        per_rule([msg for _, _, msg in rules], "error_message"),
+        "first_discovered_at",
+        on_hit(now, "last_updated_at"),
+        on_hit(F.lit(run_id), "run_id") if run_id is not None else "run_id",
+    )
 
 
 # A runner that dies holding the lock must not wedge the fleet: locks whose
@@ -289,28 +365,33 @@ class Ledger:
         return txt, [], True
 
     def _deferred_terminal(self) -> int | None:
-        """Terminal rows currently riding in the active dir (an UPPER bound
-        — see _commit_active_update), or None when unknowable (legacy
-        pointer). Pre-round-9 split pointers lack the field and never
-        deferred, so 0 is exact for them."""
+        """Terminal rows currently riding in the active dir, or None when
+        unknowable (legacy pointer). List-keyed transitions keep it exact
+        (their probe sees every row they change); a count carried over from
+        an older pointer may overcount, which is safe — see _commit_active.
+        Pre-round-9 split pointers lack the field and never deferred, so 0
+        is exact for them."""
         d = self._pointer_meta()
         if d is None:
             return None if self._pointer.exists() else 0
         return int(d.get("deferred_terminal", 0))
 
     def _active_row_count(self) -> int | None:
-        """Row count of the active dir from parquet FOOTER metadata — a
-        driver-side file-stat, no Spark job. None when unavailable (the
-        caller falls back to counting)."""
+        """Row count of the active dir (see ``_dir_row_count``)."""
         active, _segs, legacy = self._current_parts()
         if not active or legacy:
             return None
+        return self._dir_row_count(active)
+
+    def _dir_row_count(self, dirname: str) -> int | None:
+        """Row count of a written parquet dir from FOOTER metadata — a
+        driver-side file-stat, no Spark job. None when unavailable."""
         try:
             import pyarrow.parquet as pq
 
             return sum(
                 pq.ParquetFile(str(f)).metadata.num_rows
-                for f in (self.root / active).glob("*.parquet")
+                for f in (self.root / dirname).glob("*.parquet")
             )
         except Exception:  # noqa: BLE001 — advisory fast path only
             return None
@@ -430,18 +511,29 @@ class Ledger:
         status group into a fresh active part + ONE terminal segment: this
         is also what compacts legacy layouts and folds accumulated
         segments. A state with zero terminal rows publishes no segment
-        (ADVICE r8: never create empty segment dirs)."""
+        (ADVICE r8: never create empty segment dirs; ``_publish`` drops
+        it). The persist keeps the two filtered writes of a caller's
+        arbitrary ``df`` consistent."""
         df = df.persist()
         try:
-            terminal = df.filter(F.col("status").isin(*TERMINAL_STATUSES))
             self._publish(
                 df.filter(F.col("status").isin(*ACTIVE_STATUSES)),
                 [],
-                terminal if terminal.limit(1).count() else None,
+                df.filter(F.col("status").isin(*TERMINAL_STATUSES)),
                 deferred_terminal=0,  # active part is status-filtered
             )
         finally:
             df.unpersist()
+
+    def _write_dir(self, df: DataFrame, name: str) -> None:
+        """Write one snapshot dir as a single parquet file. ``coalesce``,
+        not ``repartition``: the inputs are snapshot files, projections of
+        them or persisted frames, so the single task serializes no upstream
+        work, and the write stays one Spark job instead of a shuffle-map
+        job plus a result job."""
+        df.select([f.name for f in LEDGER_SCHEMA.fields]).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(self.root / name))
 
     def _publish(
         self,
@@ -464,29 +556,28 @@ class Ledger:
         read-modify-write under a fresh acquisition."""
         ns = time.time_ns()
         version = f"v{ns}"
-        cols = [f.name for f in LEDGER_SCHEMA.fields]
-        active_df.select(cols).repartition(1).write.mode("overwrite").parquet(
-            str(self.root / version)
-        )
+        self._write_dir(active_df, version)
         segs = list(segments)
         if new_segment_df is not None:
             seg = f"t{ns}"
-            new_segment_df.select(cols).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / seg))
-            # Sidecar bounds come from the just-written file's footer stats
-            # (driver-side, no job); the aggregation is only the fallback.
-            self._write_seg_range(
-                seg,
-                *(self._dir_key_stats(seg) or self._key_bounds(new_segment_df)),
-            )
-            segs.append(seg)
+            self._write_dir(new_segment_df, seg)
+            if self._dir_row_count(seg) == 0:
+                # nothing reached a terminal status: never reference an
+                # empty segment (the footers say so without a count job)
+                shutil.rmtree(self.root / seg, ignore_errors=True)
+            else:
+                # Sidecar bounds come from the just-written file's footer
+                # stats (driver-side, no job); the aggregation is only the
+                # fallback.
+                self._write_seg_range(
+                    seg,
+                    *(self._dir_key_stats(seg) or self._key_bounds(new_segment_df)),
+                )
+                segs.append(seg)
         if len(segs) > MAX_TERMINAL_SEGMENTS:
             merged = f"t{ns}c"
             folded = self._read_dirs(segs)
-            folded.select(cols).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(str(self.root / merged))
+            self._write_dir(folded, merged)
             # Fold the sidecars driver-side when every input has one; a
             # legacy (pre-sidecar) segment falls back to the merged file's
             # own footer stats, then to a re-scan.
@@ -680,9 +771,12 @@ class Ledger:
 
         Reads ONLY the active part of the split snapshot — the terminal
         majority never participates in a claim (the reference's
-        ``idx_processing_status`` index, sudo_code.txt:49)."""
+        ``idx_processing_status`` index, sudo_code.txt:49). One collect of
+        the claimable keys, then one write: the keys come from the active
+        part, so no probe is needed."""
         with self._mutex():
-            current = self._active_part()
+            active, segs, _legacy = self._current_parts()
+            current = self._read_dirs([active] if active else [])
             stale = (F.col("status") == LedgerStatus.PROCESSING) & (
                 F.col("last_updated_at")
                 < F.current_timestamp() - F.expr(f"INTERVAL {int(stale_lease_s)} SECONDS")
@@ -697,12 +791,13 @@ class Ledger:
             )
             paths = [r.s3_key for r in claimable.select("s3_key").collect()]
             if paths:
-                self._set_status_unlocked(
-                    paths,
-                    LedgerStatus.PROCESSING,
-                    run_id=run_id,
-                    increment_retry=True,
-                    _keys_known_active=True,  # picked from the active part
+                claim = [(_key_in(paths), LedgerStatus.PROCESSING, None)]
+                # PROCESSING is not terminal: the deferred count carries over
+                # (None under a legacy pointer, whose next write migrates it)
+                self._commit_active(
+                    _transition(current, claim, run_id, increment_retry=True),
+                    segs,
+                    self._deferred_terminal(),
                 )
             return paths
 
@@ -724,264 +819,24 @@ class Ledger:
         claim's DB transaction. A slow runner whose PROCESSING lease expired
         and whose files were reclaimed by another runner is fenced out here
         instead of silently overwriting the new owner's state. Returns the
-        fenced-out (lost-claim) paths; empty when not fencing."""
+        fenced-out (lost-claim) paths; empty when not fencing.
+
+        A DataFrame of keys is a bulk flip (operational tools): its keys
+        are joined, never collected, so it keeps the range-pruned
+        terminal probe and the split write without the driver-side
+        bookkeeping of the list-keyed path."""
         with self._mutex():
-            return self._set_status_unlocked(
-                paths,
-                status,
-                error_message=error_message,
-                run_id=run_id,
-                increment_retry=increment_retry,
-                fence_run_id=fence_run_id,
+            if isinstance(paths, DataFrame):
+                return self._set_status_frame(
+                    paths, status, error_message, run_id, increment_retry,
+                    fence_run_id,
+                )
+            return self._transition_keys(
+                [(list(paths), status, error_message)],
+                run_id,
+                fence_run_id,
+                increment_retry,
             )
-
-    def _terminal_hit(
-        self,
-        segs: list[str],
-        keys: DataFrame,
-        fence_run_id: str | None,
-        key_bounds: tuple[str | None, str | None] | None = None,
-    ) -> bool:
-        """Does any requested key currently live in a terminal segment AND
-        could its transition actually apply? Read-only key-pruned probe;
-        True routes the operation to the rare full-compaction path (a
-        terminal row is genuinely being transitioned). Under a fence only
-        terminal rows CARRYING the fence run_id can transition — a row
-        reclaimed-and-completed by another runner carries that runner's id,
-        is fenced out untouched, and must NOT trigger a spurious O(N)
-        rewrite (a routine lease-expiry race, not an operator action).
-
-        Range-pruned (round 9): only segments whose ``_RANGE.json`` sidecar
-        can contain a batch key are scanned, so the probe cost tracks batch
-        key locality, not total terminal history."""
-        if not segs:
-            return False
-        if key_bounds is None:
-            key_bounds = self._key_bounds(keys)
-        segs = self._segs_for_keys(segs, *key_bounds)
-        if not segs:
-            return False
-        term = self._read_dirs(segs).join(
-            F.broadcast(keys.select("s3_key")), "s3_key", "left_semi"
-        )
-        if fence_run_id is not None:
-            term = term.filter(F.col("run_id") == F.lit(fence_run_id))
-        return term.limit(1).count() > 0
-
-    def _fenced_out(
-        self,
-        keys: DataFrame,
-        fence_run_id: str,
-        key_bounds: tuple[str | None, str | None] | None = None,
-    ) -> list[str]:
-        """Requested keys whose current row does NOT carry the fence run_id
-        (lost claims). Bounded by the batch's key list; reads the active
-        part plus only the terminal segments whose key range can contain a
-        batch key (a reclaimed row may already sit in a terminal segment,
-        but the ``_RANGE.json`` sidecars exclude the segments that cannot
-        hold one — the commit path stays O(active + touched segments), not
-        O(all history)."""
-        active, segs, _legacy = self._current_parts()
-        if key_bounds is None:
-            key_bounds = self._key_bounds(keys)
-        segs = self._segs_for_keys(segs, *key_bounds)
-        state = self._read_dirs(([active] if active else []) + segs)
-        return [
-            r.s3_key
-            for r in state
-            .join(F.broadcast(keys.select("s3_key")), "s3_key", "left_semi")
-            .filter(
-                F.col("run_id").isNull()
-                | (F.col("run_id") != F.lit(fence_run_id))
-            )
-            .select("s3_key")
-            .collect()
-        ]
-
-    def _route_update(
-        self,
-        keys: DataFrame,
-        transform,
-        fence_run_id: str | None,
-        may_move: bool,
-        skip_probe: bool = False,
-        batch_terminal_bound: int | None = None,
-        key_bounds: tuple[str | None, str | None] | None = None,
-    ) -> None:
-        """Shared routing tail of the two update paths (set_status /
-        apply_outcomes): fast active-part publish, or the rare full
-        compaction when a terminal row is genuinely being transitioned.
-        ``batch_terminal_bound``: driver-side upper bound on how many rows
-        this update can move to a terminal status (enables the no-persist
-        deferral fast path in _commit_active_update). ``key_bounds``:
-        driver-side (min, max) of the batch keys where known — saves the
-        probe its aggregation job."""
-        _active, segs, legacy = self._current_parts()
-        if (
-            not skip_probe
-            and not legacy
-            and self._terminal_hit(segs, keys, fence_run_id, key_bounds)
-        ):
-            self.overwrite(transform(self.read()))
-            return
-        self._commit_active_update(
-            transform(self._active_part()),
-            segs,
-            may_move or legacy,
-            batch_terminal_bound=None if legacy else batch_terminal_bound,
-        )
-
-    def _set_status_unlocked(
-        self,
-        paths: list[str] | DataFrame,
-        status: str,
-        error_message: str | None = None,
-        run_id: str | None = None,
-        increment_retry: bool = False,
-        fence_run_id: str | None = None,
-        _keys_known_active: bool = False,
-    ) -> list[str]:
-        if isinstance(paths, DataFrame):
-            keys = paths.select(F.col(paths.columns[0]).alias("s3_key"))
-            kb = None  # computed (once) by the consumers that need it
-        else:
-            keys = local_df(
-                self.spark, [(p,) for p in paths], "s3_key string"
-            )
-            # Driver-side bounds: the probe and fenced-out check need no
-            # aggregation job at all for list-keyed transitions.
-            kb = (min(paths), max(paths)) if paths else (None, None)
-        hit = F.col("_hit").isNotNull()
-        fenced_out: list[str] = []
-        if fence_run_id is not None:
-            hit = hit & (F.col("run_id") == F.lit(fence_run_id))
-            fenced_out = self._fenced_out(keys, fence_run_id, key_bounds=kb)
-
-        def transform(df: DataFrame) -> DataFrame:
-            return (
-                df.join(
-                    F.broadcast(keys.withColumn("_hit", F.lit(1))),
-                    "s3_key",
-                    "left",
-                )
-                .withColumn(
-                    "status",
-                    F.when(hit, F.lit(status)).otherwise(F.col("status")),
-                )
-                .withColumn(
-                    "retry_count",
-                    F.when(
-                        hit & F.lit(increment_retry), F.col("retry_count") + 1
-                    ).otherwise(F.col("retry_count")),
-                )
-                .withColumn(
-                    "error_message",
-                    F.when(hit, F.lit(error_message)).otherwise(
-                        F.col("error_message")
-                    ),
-                )
-                .withColumn(
-                    "last_updated_at",
-                    F.when(hit, F.current_timestamp()).otherwise(
-                        F.col("last_updated_at")
-                    ),
-                )
-                .withColumn(
-                    "run_id",
-                    F.when(
-                        hit & F.lit(run_id is not None), F.lit(run_id)
-                    ).otherwise(F.col("run_id")),
-                )
-                .drop("_hit")
-            )
-
-        self._route_update(
-            keys,
-            transform,
-            fence_run_id,
-            # Rows can land in terminal only when this transition targets a
-            # terminal status (legacy migration is handled by the router).
-            may_move=status in TERMINAL_STATUSES,
-            skip_probe=_keys_known_active,
-            # Driver-side terminal bound: exact for list-keyed transitions;
-            # unknown (fallback split path) for DataFrame-keyed bulk flips.
-            batch_terminal_bound=(
-                len(paths)
-                if status in TERMINAL_STATUSES and not isinstance(paths, DataFrame)
-                else (None if status in TERMINAL_STATUSES else 0)
-            ),
-            key_bounds=kb,
-        )
-        return fenced_out
-
-    def _commit_active_update(
-        self,
-        updated: DataFrame,
-        segs: list[str],
-        may_move: bool,
-        batch_terminal_bound: int | None = None,
-    ) -> None:
-        """Publish an updated ACTIVE part: rows whose new status is terminal
-        move to an appended segment; the rest rewrite the active part.
-        ``may_move=False`` (statically no terminal-bound rows — e.g. a
-        claim's PROCESSING flip) skips the segment write entirely. The
-        persist keeps the two filtered writes consistent (one evaluation of
-        current_timestamp).
-
-        Adaptive deferral (round 9): even when terminal-bound rows are
-        possible, the split is paid only once they exceed
-        TERMINAL_SPLIT_MIN_FRAC of the active dir. Below that — the
-        all-PENDING backfill phase, or a fully fenced-out / no-match commit
-        whose terminal delta is ZERO rows (ADVICE r8: such a commit used to
-        append an EMPTY segment per batch, burning segment slots) — the
-        commit is one plain legacy-cost write and terminal rows simply ride
-        along in the active part until the fraction crosses the threshold,
-        at which point one segment write drains them all.
-
-        The defer decision is DRIVER-SIDE metadata, not a Spark job: the
-        pointer tracks an upper bound on deferred terminal rows, callers
-        pass the batch's terminal-bound row count, and the active dir size
-        comes from parquet footers — so the deferred path is exactly ONE
-        write (no persist, no counts; measured: persist+counts alone held
-        the 10^6 all-PENDING batch at ~9 s vs legacy 6.7). The bound only
-        ever overcounts (fenced-out/no-match rows never actually move), so
-        the worst case is a slightly-early split, after which the recorded
-        count resets to exact zero."""
-        if not may_move:
-            self._publish(updated, segs)
-            return
-        is_terminal = F.col("status").isin(*TERMINAL_STATUSES)
-        deferred = self._deferred_terminal()
-        n_active = self._active_row_count()
-        if (
-            deferred is not None
-            and batch_terminal_bound is not None
-            and n_active is not None
-        ):
-            est_term = deferred + batch_terminal_bound
-            if n_active == 0 or est_term <= TERMINAL_SPLIT_MIN_FRAC * n_active:
-                self._publish(updated, segs, deferred_terminal=est_term)
-                return
-        # Split (or fall back where driver-side metadata is unavailable —
-        # legacy pointers, DataFrame-keyed bulk transitions): one persist,
-        # two filtered writes, and the deferral bookkeeping resets to the
-        # truth (zero terminal rows remain in the active part).
-        updated = updated.persist()
-        try:
-            terminal = updated.filter(is_terminal)
-            if terminal.limit(1).count() == 0:
-                # Nothing actually transitioned (fully fenced-out commit) and
-                # nothing was deferred: never append an empty segment.
-                self._publish(updated, segs, deferred_terminal=0)
-            else:
-                self._publish(
-                    updated.filter(~is_terminal),
-                    segs,
-                    terminal,
-                    deferred_terminal=0,
-                )
-        finally:
-            updated.unpersist()
 
     def apply_outcomes(
         self,
@@ -999,92 +854,187 @@ class Ledger:
         owns the claim. Reclaimed rows (lease expired, another runner took
         over) are left untouched and returned as lost-claim paths so the
         caller can abort their side effects (see ingest_batch)."""
-        rows = [
-            (p, status, msg)
-            for paths, status, msg in outcomes
-            for p in paths
-        ]
-        if not rows:
+        groups = [(list(paths), status, msg) for paths, status, msg in outcomes if paths]
+        if not groups:
             return []
-        updates = local_df(
-            self.spark, rows, "s3_key string, new_status string, new_error string"
-        ).dropDuplicates(["s3_key"])
         with self._mutex():
-            return self._apply_updates_unlocked(
-                updates,
-                run_id,
-                fence_run_id=run_id if fence else None,
-                # Statuses are known driver-side: a commit carrying only
-                # active outcomes (e.g. all-FAILED retry batch) must not
-                # append an empty terminal segment per batch.
-                may_move=any(
-                    paths and status in TERMINAL_STATUSES
-                    for paths, status, _ in outcomes
-                ),
-                batch_terminal_bound=len(
-                    {
-                        p
-                        for paths, status, _ in outcomes
-                        if status in TERMINAL_STATUSES
-                        for p in paths
-                    }
-                ),
-                key_bounds=(
-                    min(r[0] for r in rows),
-                    max(r[0] for r in rows),
-                ),
-            )
+            return self._transition_keys(groups, run_id, run_id if fence else None)
 
-    def _apply_updates_unlocked(
-        self,
-        updates: DataFrame,
-        run_id: str,
-        fence_run_id: str | None = None,
-        may_move: bool = True,
-        batch_terminal_bound: int | None = None,
-        key_bounds: tuple[str | None, str | None] | None = None,
-    ) -> list[str]:
-        hit = F.col("new_status").isNotNull()
-        fenced_out: list[str] = []
-        if fence_run_id is not None:
-            hit = hit & (F.col("run_id") == F.lit(fence_run_id))
-            fenced_out = self._fenced_out(updates, fence_run_id, key_bounds)
-
-        def transform(df: DataFrame) -> DataFrame:
-            return (
-                df.join(F.broadcast(updates), "s3_key", "left")
-                .withColumn(
-                    "status",
-                    F.when(hit, F.col("new_status")).otherwise(F.col("status")),
-                )
-                .withColumn(
-                    "error_message",
-                    F.when(hit, F.col("new_error")).otherwise(
-                        F.col("error_message")
-                    ),
-                )
-                .withColumn(
-                    "last_updated_at",
-                    F.when(hit, F.current_timestamp()).otherwise(
-                        F.col("last_updated_at")
-                    ),
-                )
-                .withColumn(
-                    "run_id",
-                    F.when(hit, F.lit(run_id)).otherwise(F.col("run_id")),
-                )
-                .drop("new_status", "new_error")
-            )
-
-        self._route_update(
-            updates,
-            transform,
-            fence_run_id,
-            may_move,
-            batch_terminal_bound=batch_terminal_bound,
-            key_bounds=key_bounds,
+    def _key_state(self, active: str | None, segs: list[str]) -> DataFrame:
+        """The active part plus ``segs``, each row tagged ``in_segment``."""
+        state = self._read_dirs([active] if active else []).withColumn(
+            "in_segment", F.lit(False)
         )
+        if segs:
+            state = state.unionByName(
+                self._read_dirs(segs).withColumn("in_segment", F.lit(True))
+            )
+        return state
+
+    def _transition_keys(
+        self,
+        groups: list[tuple[list[str], str, str | None]],
+        run_id: str | None,
+        fence_run_id: str | None,
+        increment_retry: bool = False,
+    ) -> list[str]:
+        """List-keyed transition (caller holds the mutex): one bounded
+        probe, then one write. ``groups`` is [(paths, status, error), ...];
+        a key listed twice takes its first group.
+
+        The probe collects the batch keys' current rows from the active part
+        and from the terminal segments whose ``_RANGE.json`` range can hold
+        a batch key — O(batch) rows, never O(history). From those rows, on
+        the driver:
+
+        - the fenced-out keys: rows not carrying ``fence_run_id`` (lost
+          claims), returned to the caller;
+        - the terminal hit: a transitioning row that lives in a terminal
+          segment routes the update to the rare full compaction. Under a
+          fence a segment row reclaimed-and-completed by another runner
+          carries that runner's id and is fenced out, so a routine
+          lease-expiry race never triggers an O(N) rewrite;
+        - the exact change in terminal rows of the active part, which keeps
+          the pointer's deferred count exact for the split decision.
+
+        A transition that moves no row (every key fenced out or unknown)
+        writes nothing."""
+        keys = sorted({p for paths, _, _ in groups for p in paths})
+        if not keys:
+            return []
+        active, segs, _legacy = self._current_parts()
+        rows = (
+            self._key_state(active, self._segs_for_keys(segs, keys[0], keys[-1]))
+            .filter(_key_in(keys))
+            .select("s3_key", "status", "run_id", "in_segment")
+            .collect()
+        )
+        moving, fenced_out = [], []
+        for r in rows:
+            if fence_run_id is None or r.run_id == fence_run_id:
+                moving.append(r)
+            else:
+                fenced_out.append(r.s3_key)
+        if not moving:
+            return fenced_out  # nothing transitions: the snapshot stands
+        new_status: dict[str, str] = {}
+        for paths, status, _msg in groups:
+            for p in paths:
+                new_status.setdefault(p, status)
+        rules = [(_key_in(paths), status, msg) for paths, status, msg in groups]
+
+        def transition(df: DataFrame) -> DataFrame:
+            return _transition(df, rules, run_id, fence_run_id, increment_retry)
+
+        if any(r.in_segment for r in moving):
+            self.overwrite(transition(self.read()))
+        else:
+            terminal_rows = self._deferred_terminal()
+            if terminal_rows is not None:
+                terminal_rows = max(
+                    0,
+                    terminal_rows
+                    + sum(
+                        (new_status[r.s3_key] in TERMINAL_STATUSES)
+                        - (r.status in TERMINAL_STATUSES)
+                        for r in moving
+                    ),
+                )
+            self._commit_active(transition(self._active_part()), segs, terminal_rows)
         return fenced_out
+
+    def _set_status_frame(
+        self,
+        paths: DataFrame,
+        status: str,
+        error_message: str | None,
+        run_id: str | None,
+        increment_retry: bool,
+        fence_run_id: str | None,
+    ) -> list[str]:
+        # persisted: the probe and both split writes must see one key set,
+        # whatever the caller's frame is built from
+        keys = paths.select(F.col(paths.columns[0]).alias("s3_key")).persist()
+        try:
+            active, segs, _legacy = self._current_parts()
+            probe_segs = self._segs_for_keys(segs, *self._key_bounds(keys)) if segs else []
+            state = self._key_state(active, probe_segs).join(
+                F.broadcast(keys), "s3_key", "left_semi"
+            )
+            owned = _owned(fence_run_id)
+            fenced_out = (
+                []
+                if fence_run_id is None
+                else [r.s3_key for r in state.filter(~owned).select("s3_key").collect()]
+            )
+            rules = [(F.col("_hit").isNotNull(), status, error_message)]
+
+            def transition(df: DataFrame) -> DataFrame:
+                hits = F.broadcast(keys.withColumn("_hit", F.lit(1)))
+                return _transition(
+                    df.join(hits, "s3_key", "left"),
+                    rules,
+                    run_id,
+                    fence_run_id,
+                    increment_retry,
+                )
+
+            if probe_segs and state.filter(F.col("in_segment") & owned).limit(1).count():
+                self.overwrite(transition(self.read()))
+            else:
+                self._commit_active(
+                    transition(self._active_part()),
+                    segs,
+                    # a non-terminal flip can only shrink the deferred
+                    # count; a terminal one is unknown without counting
+                    None if status in TERMINAL_STATUSES else self._deferred_terminal(),
+                )
+            return fenced_out
+        finally:
+            keys.unpersist()
+
+    def _commit_active(
+        self,
+        updated: DataFrame,
+        segs: list[str],
+        terminal_rows: int | None,
+    ) -> None:
+        """Publish an updated ACTIVE part. ``terminal_rows`` bounds the
+        terminal rows it holds (exact for list-keyed transitions; None when
+        unknown — legacy pointers, terminal bulk flips).
+
+        Adaptive deferral (round 9): the split into an appended terminal
+        segment is paid only once terminal rows exceed
+        TERMINAL_SPLIT_MIN_FRAC of the active dir. Below that — the
+        all-PENDING backfill phase, or a fully fenced-out / no-match commit
+        whose terminal delta is ZERO rows (ADVICE r8: such a commit used to
+        append an EMPTY segment per batch, burning segment slots) — the
+        commit is one plain write and terminal rows ride along in the
+        active part until the fraction crosses the threshold, at which
+        point one segment write drains them all.
+
+        The decision is driver-side metadata, not a Spark job: the pointer
+        carries the deferred count, the probe gives the batch's change to
+        it, and the active dir size comes from parquet footers. The split
+        itself filters one projection twice; the transition's timestamp is
+        a driver-side literal and its inputs are immutable snapshot files,
+        so the two writes agree without a persist, and ``_publish`` drops a
+        segment that came out empty."""
+        if terminal_rows is not None:
+            n_active = self._active_row_count() if terminal_rows else 0
+            if not terminal_rows or (
+                n_active is not None
+                and (n_active == 0 or terminal_rows <= TERMINAL_SPLIT_MIN_FRAC * n_active)
+            ):
+                self._publish(updated, segs, deferred_terminal=terminal_rows)
+                return
+        is_terminal = F.col("status").isin(*TERMINAL_STATUSES)
+        self._publish(
+            updated.filter(~is_terminal),
+            segs,
+            updated.filter(is_terminal),
+            deferred_terminal=0,
+        )
 
     def owned_by(self, paths: list[str], run_id: str) -> set[str]:
         """The subset of ``paths`` whose ledger row currently carries
@@ -1093,12 +1043,10 @@ class Ledger:
         commit); used to skip side effects for already-reclaimed files."""
         if not paths:
             return set()
-        keys = local_df(self.spark, [(p,) for p in paths], "s3_key string")
         return {
             r.s3_key
             for r in self.read()
-            .join(F.broadcast(keys), "s3_key", "left_semi")
-            .filter(F.col("run_id") == F.lit(run_id))
+            .filter(_key_in(paths) & (F.col("run_id") == F.lit(run_id)))
             .select("s3_key")
             .collect()
         }

@@ -47,7 +47,7 @@ def run_throughput(spark: SparkSession, conf: IngestConfig) -> DataFrame:
 
     try:
         curated = read_curated(spark, conf.curated_dir)
-    except Exception:  # noqa: BLE001 — nothing ingested yet
+    except FileNotFoundError:  # no parquet file yet: nothing ingested
         return local_df(
             spark, [], "ingest_run_id string, n_rows long, n_files long"
         )

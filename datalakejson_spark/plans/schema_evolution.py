@@ -93,13 +93,30 @@ def split_compatible_files(
     again — inference is a full data scan). Slow path (a conflict exists):
     per-file inference to attribute it, then re-infer over the compatible
     subset — acceptable because conflicts are rare and the batch is bounded
-    (batch_size files, sudo_code.txt:128)."""
+    (batch_size files, sudo_code.txt:128).
+
+    The per-file inferences are independent one-task jobs, so they run
+    concurrently on a pool bounded by the session's parallelism instead of
+    back to back (a 10k-file batch with one drifted file would otherwise
+    queue 10k jobs). ``inheritable_thread_target`` hands each worker the
+    caller's local properties and session tags, so the caller's job group,
+    scheduler pool and job tags still mark every job."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
     batch_schema = spark.read.json(paths).schema
     if not incompatible_columns(curated, batch_schema):
         return paths, {}, batch_schema
+
+    def conflicts_of(p: str) -> list[tuple[str, str, str]]:
+        return incompatible_columns(curated, spark.read.json(p).schema)
+
+    workers = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        per_file = list(pool.map(inheritable_thread_target(spark)(conflicts_of), paths))
     good, bad = [], {}
-    for p in paths:
-        conflicts = incompatible_columns(curated, spark.read.json(p).schema)
+    for p, conflicts in zip(paths, per_file):
         if conflicts:
             bad[p] = conflicts
         else:

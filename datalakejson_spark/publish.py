@@ -173,6 +173,21 @@ def move_files(src: str, dst: str, rels: list[str]) -> list[str]:
     return moved
 
 
+def error_condition(exc) -> str | None:
+    """Best-effort error-class/condition of a PySpark exception (the name
+    changed getErrorClass -> getCondition across 4.x)."""
+    for attr in ("getCondition", "getErrorClass"):
+        fn = getattr(exc, attr, None)
+        if fn is not None:
+            try:
+                cond = fn()
+            except Exception:  # pragma: no cover - defensive
+                cond = None
+            if cond:
+                return cond
+    return None
+
+
 def is_missing_file_error(exc: Exception) -> bool:
     """True when a Spark job failed because an input file vanished under
     it — the signature of a CONCURRENT publish deleting a subsumed file

@@ -949,3 +949,151 @@ def test_retirement_grace_is_publish_count_based(spark, tmp_path, monkeypatch):
             assert (tmp_path / "led" / name).is_dir(), (
                 "segment deleted before its publish-count grace elapsed"
             )
+
+
+def _jobs_of(spark, group: str, fn):
+    """Run ``fn`` under its own Spark job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ledger_transition_job_budget(spark, tmp_path):
+    """A list-keyed ledger transition is one bounded probe plus one write:
+    a claim is one collect of the claimable keys and one snapshot write; a
+    fully fenced-out commit is the probe alone (nothing moves, nothing is
+    written); a splitting commit is the probe plus the active-part and
+    segment writes. Each write is a single job."""
+    led = Ledger(spark, str(tmp_path / "led"))
+    led.register(_synth_files(spark, 0, 40))
+    tag = tmp_path.name
+
+    slow, n_claim = _jobs_of(
+        spark, f"{tag}-claim", lambda: led.claim_batch(10, "run-slow")
+    )
+    assert len(slow) == 10
+    assert n_claim == 2, n_claim
+    # lease 0: runner B reclaims the same ten files
+    fast = led.claim_batch(10, "run-fast", stale_lease_s=0.0)
+    assert sorted(fast) == sorted(slow)
+
+    fenced, n_fenced = _jobs_of(
+        spark,
+        f"{tag}-fenced",
+        lambda: led.apply_outcomes(
+            [(slow, LedgerStatus.SUCCEEDED, None)], run_id="run-slow"
+        ),
+    )
+    assert sorted(fenced) == sorted(slow)
+    assert n_fenced == 1, n_fenced
+
+    # 10 of 40 rows turn terminal (> 5%): probe + active write + segment
+    _, n_split = _jobs_of(
+        spark,
+        f"{tag}-split",
+        lambda: led.apply_outcomes(
+            [(fast, LedgerStatus.SUCCEEDED, None)], run_id="run-fast"
+        ),
+    )
+    assert n_split == 3, n_split
+    assert led.counts() == {
+        LedgerStatus.SUCCEEDED: 10,
+        LedgerStatus.PENDING: 30,
+    }
+
+
+def test_discover_job_budget(spark, tmp_path):
+    """Discovery over a fanned-out zone (>= DISCOVERY_FANOUT_THRESHOLD
+    prefixes) stays within its job budget: the AQE stages of register's
+    anti-join and write and of the interrupted-archive sweep's join. Both
+    read one persisted listing instead of each re-running the per-prefix
+    walk."""
+    from datalakejson_spark.plans.ingest import DISCOVERY_FANOUT_THRESHOLD
+
+    root = tmp_path / "landing"
+    for i in range(DISCOVERY_FANOUT_THRESHOLD + 3):
+        write_ndjson(root / f"p{i:02d}" / f"f{i}.json", [good_record(i)])
+    conf = IngestConfig(
+        landing_dir=str(root),
+        curated_dir=str(tmp_path / "curated"),
+        dlq_dir=str(tmp_path / "dlq"),
+        archive_dir=str(tmp_path / "archive"),
+        ledger_dir=str(tmp_path / "ledger"),
+    )
+    group = f"{tmp_path.name}-discover"
+    n, jobs = _jobs_of(spark, group, lambda: discover(spark, conf))
+    assert n == DISCOVERY_FANOUT_THRESHOLD + 3
+    assert jobs <= 8, jobs
+    # rediscovery registers nothing and stays within the same budget
+    n2, jobs2 = _jobs_of(spark, f"{group}-again", lambda: discover(spark, conf))
+    assert n2 == 0
+    assert jobs2 <= 8, jobs2
+
+
+def test_ledger_transitions_match_awkward_keys(spark, tmp_path):
+    """List-keyed transitions match their keys through one parsed SQL IN
+    list, so quotes, backslashes, whitespace and non-ASCII characters in a
+    path must round-trip through claim and commit."""
+    keys = [
+        "/l/it's.json",
+        "/l/back\\slash.json",
+        '/l/double"quote.json',
+        "/l/sp ace\tand\nnewline.json",
+        "/l/ünïcødé.json",
+        "/l/plain.json",
+    ]
+    led = Ledger(spark, str(tmp_path / "led"))
+    led.register(
+        spark.createDataFrame([(k, 1) for k in keys], "s3_key string, file_size_bytes long")
+    )
+    claimed = led.claim_batch(10, "run-a")
+    assert sorted(claimed) == sorted(keys)
+    done, failed = claimed[:3], claimed[3:]
+    assert led.apply_outcomes(
+        [(done, LedgerStatus.SUCCEEDED, None), (failed, LedgerStatus.FAILED, "x")],
+        run_id="run-a",
+    ) == []
+    rows = {r.s3_key: (r.status, r.retry_count) for r in led.read().collect()}
+    assert rows == {
+        **{k: (LedgerStatus.SUCCEEDED, 1) for k in done},
+        **{k: (LedgerStatus.FAILED, 1) for k in failed},
+    }
+
+
+def test_bulk_flip_by_dataframe(spark, tmp_path):
+    """DataFrame-keyed set_status (the operational bulk flip) joins its
+    keys instead of collecting them: a terminal flip splits into a segment,
+    a fenced flip reports the rows it may not touch, and re-enqueueing a
+    segment row takes the full-compaction path."""
+    import json as J
+
+    def frame(keys):
+        return spark.createDataFrame([(k,) for k in keys], "s3_key string")
+
+    led = Ledger(spark, str(tmp_path / "led"))
+    led.register(_synth_files(spark, 0, 20))
+    every = [f"s3://lake/f{i}" for i in range(20)]
+    claimed = led.claim_batch(5, "run-a")
+    done = [k for k in every if k not in claimed][:10]
+    assert led.set_status(frame(done), LedgerStatus.SUCCEEDED) == []
+    ptr = J.loads((tmp_path / "led" / "_LATEST").read_text())
+    assert len(ptr["terminal"]) == 1 and ptr["deferred_terminal"] == 0
+
+    fenced = led.set_status(
+        frame(every), LedgerStatus.FAILED, error_message="bulk", fence_run_id="run-a"
+    )
+    assert sorted(fenced) == sorted(k for k in every if k not in claimed)
+
+    led.set_status(frame(done[:2]), LedgerStatus.PENDING)
+    ptr = J.loads((tmp_path / "led" / "_LATEST").read_text())
+    assert len(ptr["terminal"]) == 1
+    rows = {r.s3_key: r.status for r in led.read().collect()}
+    assert rows == {
+        **{k: LedgerStatus.PENDING for k in every},
+        **{k: LedgerStatus.SUCCEEDED for k in done[2:]},
+        **{k: LedgerStatus.FAILED for k in claimed},
+    }

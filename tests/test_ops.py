@@ -11,6 +11,7 @@ from datalakejson_spark.plans.ingest import (
     discover,
     read_curated,
     run_until_drained,
+    write_dlq_summary,
 )
 from datalakejson_spark.plans.monitor import (
     ALARM_DLQ_ACTIVE,
@@ -84,3 +85,19 @@ def test_alarm_board_healthy_then_dlq(spark, tmp_path):
     board = {r.alarm: r for r in ingest_alarms(spark, conf).collect()}
     assert board[ALARM_DLQ_ACTIVE].triggered
     assert board[ALARM_DLQ_ACTIVE].observed == 2.0
+
+
+def test_monitor_raises_on_unreadable_curated_lake(spark, tmp_path):
+    """Only an absent curated lake or DLQ reads as "nothing ingested yet";
+    a curated lake that exists but cannot be read raises instead of
+    showing an empty throughput board."""
+    conf = _conf(tmp_path, tmp_path / "landing")
+    assert run_throughput(spark, conf).collect() == []
+    assert write_dlq_summary(spark, conf).collect() == []
+
+    part = tmp_path / "curated" / "year=2024"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        run_throughput(spark, conf)
+    assert not isinstance(err.value, FileNotFoundError)

@@ -50,7 +50,7 @@ def test_merge_widens_and_unions():
     assert set(by_name) == {"x", "keep", "extra"}
 
 
-def test_incompatible_drift_quarantines_file_only(spark, ingest_conf):
+def test_incompatible_drift_quarantines_file_only(spark, ingest_conf, monkeypatch):
     # batch 1 establishes the landing contract (payload is a struct)
     discover(spark, ingest_conf)
     ingest_batch(spark, ingest_conf)
@@ -72,7 +72,28 @@ def test_incompatible_drift_quarantines_file_only(spark, ingest_conf):
         [good_record(500, ts="2024-02-20T01:00:00Z")],
     )
     discover(spark, ingest_conf)
+    # the per-file attribution runs on a thread pool: every one of its jobs
+    # must still carry the caller's job group (1 batch inference + 1 per
+    # file + 1 over the compatible files)
+    import datalakejson_spark.plans.ingest as ingest_mod
+
+    gate = ingest_mod.split_compatible_files
+    sc = spark.sparkContext
+    group = f"drift-gate-{Path(ingest_conf.ledger_dir).parent.name}"
+    seen = {}
+
+    def gate_in_group(spark_, paths, contract):
+        sc.setJobGroup(group, "drift gate")
+        try:
+            return gate(spark_, paths, contract)
+        finally:
+            sc.setJobGroup(None, None)
+            seen["files"] = len(paths)
+
+    monkeypatch.setattr(ingest_mod, "split_compatible_files", gate_in_group)
     res = ingest_batch(spark, ingest_conf)
+    assert seen["files"] == 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == seen["files"] + 2
 
     drifted = str(week / "drift_incompatible.json")
     assert drifted in res.drifted_files

@@ -7,13 +7,12 @@ ingest: 10^7 completed files whose keys are time-ordered (the common
 date-prefixed s3 layout — here zero-padded numeric keys, so lexical order =
 arrival order), living in a handful of append-only terminal segments, plus a
 50k-file active working set at the TOP of the key space (new files have new
-keys). A batch's commit runs two terminal-history reads:
+keys). A batch's commit runs one terminal-history read, the key probe
+(``Ledger._transition_keys``): it collects the batch keys' current rows,
+which tell which claims were reclaimed (fenced out) and whether the
+transition touches a terminal row.
 
-- the terminal-key probe (_terminal_hit): can this transition touch a
-  terminal row?
-- the fenced-out check (_fenced_out): which of my claims were reclaimed?
-
-Both are now range-pruned: the batch's [min,max] key is compared against
+The probe is range-pruned: the batch's [min,max] key is compared against
 each segment's sidecar, and time-ordered keys fall OUTSIDE every historic
 segment's range, so the probe touches zero terminal segments regardless of
 history size. Deleting the sidecars restores the r8 behavior (conservative
