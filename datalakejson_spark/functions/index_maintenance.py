@@ -193,7 +193,7 @@ def settle_committed_replay(
 #: exists: a copier that pinned files before a vacuum's rewrite can hold
 #: copies of tombstoned rows and publish them after — retiring the
 #: tombstones in that window RESURRECTS the rows (caught live by
-#: tools/multiproc_ann_race_r15.py: a split's halves re-surfaced 82
+#: tools/multiproc_ann_race.py: a split's halves re-surfaced 82
 #: vacuumed ids). mkdir-before-pin makes the happens-before airtight: a
 #: copier invisible to the retire check must have pinned after the
 #: vacuum's publish, so its copies are clean.

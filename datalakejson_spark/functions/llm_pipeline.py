@@ -7,11 +7,11 @@ These extend SURVEY.md §2's L-tier (L1/L2/L4) with the three operations a
 
 - Pair lists are not dedup decisions: near-dup candidates form CHAINS
   (a~b, b~c but not a~c). Deduplication must resolve them to clusters and
-  keep one representative per cluster — connected components, computed here
-  as iterative min-label propagation (each round is one shuffle join; rounds
-  = graph diameter, which for near-dup clusters is tiny). The DuckDB oracle
-  computes the same fixpoint as a recursive CTE — an exact cross-engine
-  check of an iterative distributed algorithm.
+  keep one representative per cluster — connected components, computed by
+  the large-star/small-star loop in clusters.py (O(log² n) rounds whatever
+  the chain length). The DuckDB oracle computes the same labels as a
+  recursive CTE — an exact cross-engine check of an iterative distributed
+  algorithm.
 - Benchmark contamination: training documents sharing word n-grams with an
   evaluation suite must be flagged/removed. The eval suite is tiny relative
   to the corpus → its shingle set is broadcast; the corpus is never
@@ -29,6 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from datalakejson_spark.functions.clusters import label_components
 from datalakejson_spark.functions.dedup import (
     _DUCK_SHINGLES,
     _L2_SQL,
@@ -39,7 +40,6 @@ from datalakejson_spark.functions.dedup import (
 from datalakejson_spark.registry import register
 from datalakejson_spark.sources.tables import load_table
 
-CC_MAX_ITERS = 25
 SHARD_TOKEN_BUDGET = 256
 # Target bytes of input per range partition in the shard-packing scan; the
 # partition count is derived from Catalyst's size estimate so it scales with
@@ -59,86 +59,6 @@ BENCH_PRED_DUCK = "doc_id % 97 = 0"
 # --------------------------------------------------------------------------
 # L2e: connected-component dedup clusters over MinHash-LSH candidate pairs
 # --------------------------------------------------------------------------
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = CC_MAX_ITERS,
-) -> DataFrame:
-    """(node, cluster_id) where cluster_id = min node id reachable in the
-    undirected graph — iterative min-label propagation.
-
-    Per round: one join of labels onto the symmetrized edge list + a min
-    aggregate, i.e. two shuffles over (node, label) pairs only (never
-    payload data). Converges in O(component diameter) rounds; labels
-    decrease monotonically, so the sum of labels is a cheap fixpoint test.
-    ``localCheckpoint`` truncates lineage each round — without it the plan
-    doubles per iteration.
-
-    Scale shape: only nodes that APPEAR IN AN EDGE enter the loop — in a
-    near-dup corpus that is a small fraction of all documents, so the
-    per-round shuffle is O(candidate-pair nodes), not O(corpus). Singletons
-    get their identity label in one final left join. If cluster diameters
-    ever grow beyond shallow near-dup chains, the alternating
-    small-star/large-star optimization drops round count to O(log d)."""
-    sym = edges.select(
-        F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst")
-    )
-    sym = sym.union(sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # Materialize the edge list ONCE: without this, the (expensive) candidate
-    # generation upstream re-executes inside every propagation round.
-    sym = sym.localCheckpoint()
-    # ADVICE r03 kept: lazy checkpoints materialize inside the SAME job as
-    # the convergence aggregate (no separate checkpoint job). ADVICE r03
-    # REVERSED in r16: the loop used to turn AQE off on the theory that
-    # AQE's per-stage jobs are pure overhead for bare (node,label) frames —
-    # re-measured on Spark 4.1 the opposite holds: with AQE off every loop
-    # stage launches shuffle-partition-many tasks over a few hundred rows,
-    # while AQE coalesces them to ~1 task; measured 1.4-1.5× faster with
-    # AQE left on (tools/ab.py / OPTIMIZATION_r16.md), same plan shape
-    # at scale where partitions are genuinely full.
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(F.sum("lbl")).first()[0]
-    for _ in range(max_iters):
-        neighbor_min = (
-            labels.join(sym, labels["node"] == sym["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(F.sum("lbl")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"connected components did not converge in {max_iters} rounds"
-        )
-    # Singletons (no candidate pair) never entered the loop: label = self.
-    return (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(labels, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce("lbl", F.col("node")).alias("cluster_id"),
-        )
-    )
-
-
 _L2E_SQL = f"""
     WITH RECURSIVE pairs AS (
         SELECT * FROM ({_L2_SQL}) __lsh
@@ -177,7 +97,7 @@ def l2e_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = lsh_candidate_pairs(minhash_signatures(docs))
-    cc = connected_components(docs.select("doc_id"), pairs)
+    cc = label_components(docs, pairs)
     return cc.select(
         "doc_id",
         "cluster_id",
@@ -376,7 +296,7 @@ def prepare_training_corpus(
     Input: (doc_id, text, n_chars, ...). Output: (doc_id, text, n_tokens,
     shard_id) for the surviving corpus, packed in doc_id order. Every stage
     is shuffle-bounded: dedup keys are hashes, CC shuffles only
-    edge-adjacent (node,label) pairs, the benchmark set broadcasts, and the
+    the (bigint, bigint) edge list, the benchmark set broadcasts, and the
     prefix sum is partition-parallel — no stage is O(corpus²) or
     single-task.
 
@@ -398,7 +318,7 @@ def prepare_training_corpus(
 
     # 2. near-dup clusters → representatives only
     pairs = lsh_candidate_pairs(minhash_signatures(corpus))
-    cc = connected_components(corpus.select("doc_id"), pairs)
+    cc = label_components(corpus, pairs)
     reps = cc.filter(F.col("cluster_id") == F.col("doc_id")).select("doc_id")
     corpus = corpus.join(reps, "doc_id", "left_semi")
 

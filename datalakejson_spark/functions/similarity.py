@@ -448,7 +448,7 @@ def _lsh_ann_topk(emb: DataFrame) -> DataFrame:
 # Gaussian hyperplane tensor ONCE from a seeded RNG on the driver and
 # buckets each Arrow batch with a single matmul + sign-packing. Both are
 # valid, deterministic LSH families; recall curves for both are measured in
-# tools/ann_recall_curve_r12.py and SCALE.md.
+# tools/ann_recall_curve.py and SCALE.md.
 # --------------------------------------------------------------------------
 LSH_SEED = 7
 

@@ -25,7 +25,7 @@ pytestmark = pytest.mark.soak
 TOOL = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "tools",
-    "multiproc_ann_race_r15.py",
+    "multiproc_ann_race.py",
 )
 
 

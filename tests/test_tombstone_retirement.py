@@ -1,5 +1,5 @@
 """Tombstone retirement vs racing copiers (round 15): the cross-process
-soak (tools/multiproc_ann_race_r15.py) resurrected 82 vacuumed ids — a
+soak (tools/multiproc_ann_race.py) resurrected 82 vacuumed ids — a
 split's staged halves, pinned before the vacuum's rewrite, published
 after the vacuum retired the tombstone files. The fix is three fences:
 

@@ -1,16 +1,23 @@
 """Interleaved A/B micro-bench for candidate query optimizations.
 
-Variant pairs run in ONE session, alternating A/B/A/B so position/thermal
-noise cancels, min-of-N via the noop sink, and a collect-and-compare
+Variant pairs run in ONE session, alternating A/B then B/A so
+position/thermal noise cancels, min-of-N via the noop sink, and a collect-and-compare
 equality gate BEFORE timing so a fast-but-wrong variant can never look good.
-Cases are named by the query they measure (g6, cc, l2g); their results are
-recorded in OPTIMIZATION_r16.md.
+Cases are named by the query they measure (g6, cc, l2g).
 
-Usage: python tools/ab.py <case> [sf_dir] [reps]
+The cc case times the registered l2e and l2h queries of this checkout (B)
+against the same queries of a BASE checkout (A) — any other commit of
+this repository, exported to its own directory, for example
+``git archive <rev> | tar -x -C <base_dir>``. The base package is imported
+under its own name in a private ``sys.modules`` swap (``base_specs``), so
+both versions run in the same session.
+
+Usage: python tools/ab.py <case> [sf_dir] [reps] [base_dir]
 """
 
 from __future__ import annotations
 
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -61,12 +68,17 @@ def ab(spark, name, a_fn, b_fn, sf_dir, reps=5, check=True):
     ta, tb = [], []
     timed(spark, f"{name}:warmA", a_fn, sf_dir, 1)
     timed(spark, f"{name}:warmB", b_fn, sf_dir, 1)
-    for _ in range(reps):
+    for i in range(reps):  # alternate which side runs first
+        if i % 2:
+            tb += timed(spark, f"{name}:B", b_fn, sf_dir, 1)
         ta += timed(spark, f"{name}:A", a_fn, sf_dir, 1)
-        tb += timed(spark, f"{name}:B", b_fn, sf_dir, 1)
+        if not i % 2:
+            tb += timed(spark, f"{name}:B", b_fn, sf_dir, 1)
     print(f"  A(base): min={min(ta):.3f} all={[round(t, 3) for t in ta]}")
     print(f"  B(opt):  min={min(tb):.3f} all={[round(t, 3) for t in tb]}")
-    print(f"  speedup min/min: {min(ta) / min(tb):.2f}x")
+    print(f"  speedup min/min: {min(ta) / min(tb):.2f}x, "
+          f"median/median: {statistics.median(ta) / statistics.median(tb):.2f}x, "
+          f"B faster in {sum(b < a for a, b in zip(ta, tb))}/{reps} pairs")
 
 
 # ---------------------------------------------------------------- variants --
@@ -117,96 +129,63 @@ def case_g6(spark, sf_dir, reps):
        _g6_rollup_over_finest, sf_dir, reps)
 
 
-# --- connected components (l2h star loop) ----------------------------------
+# --- connected components (l2e / l2h) vs a base checkout -------------------
+
+_PKG = "datalakejson_spark"
 
 
-def _cc_star_r15(edges, src="src", dst="dst", max_iter=20):
-    """The PRE-r16 clusters.connected_components, inlined as the A/B base:
-    symmetric loop state (per-round _symmetric().distinct() passes), two
-    eager localCheckpoints per round, convergence via count + exceptAll."""
-
-    def symmetric(e):
-        e = e.filter(F.col("u") != F.col("v"))
-        return e.union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-
-    def large_star(adj):
-        mins = adj.groupBy("u").agg(F.min("v").alias("mv"))
-        m = F.least(F.col("u"), F.col("mv"))
-        return (
-            adj.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), m.alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(adj):
-        oriented = adj.filter(F.col("v") < F.col("u"))
-        mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        joined = oriented.join(mins, "u")
-        to_min = joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-        self_link = mins.select("u", F.col("m").alias("v"))
-        return to_min.union(self_link).filter(F.col("u") != F.col("v")).distinct()
-
-    adj = symmetric(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        stars = small_star(symmetric(large_star(adj))).localCheckpoint()
-        new_adj = symmetric(stars).localCheckpoint()
-        if new_adj.count() == adj.count() and new_adj.exceptAll(adj).isEmpty():
-            adj = new_adj
-            break
-        adj = new_adj
-    else:
-        raise RuntimeError("no convergence")
-    members = (
-        adj.filter(F.col("v") < F.col("u"))
-        .groupBy("u")
-        .agg(F.min("v").alias("component"))
-        .select(F.col("u").alias("node"), "component")
-    )
-    roots = (
-        members.select(F.col("component").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    return members.union(roots)
+def _own_modules():
+    return {k: m for k, m in sys.modules.items() if k == _PKG or k.startswith(_PKG + ".")}
 
 
-def _l2h_r15_base(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from datalakejson_spark.functions.dedup import l2g_verified_neardup_pairs
-    from datalakejson_spark.sources.tables import spread_scan
-
-    docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    pairs = l2g_verified_neardup_pairs(spark, sf_dir)
-    comp = _cc_star_r15(pairs, src="doc_a", dst="doc_b")
-    assigned = (
-        docs.select("doc_id")
-        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select("doc_id", F.coalesce("component", "doc_id").alias("cluster_id"))
-    )
-    size_w = Window.partitionBy("cluster_id")
-    return assigned.select(
-        "doc_id",
-        "cluster_id",
-        F.count("*").over(size_w).alias("cluster_size"),
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_keeper"),
-    )
+def _install(modules):
+    """Make ``modules`` the package's only entries in ``sys.modules``."""
+    for k in _own_modules():
+        del sys.modules[k]
+    sys.modules.update(modules)
 
 
-def case_cc(spark, sf_dir, reps):
+def base_specs(base_dir):
+    """``all_specs()`` of the package checked out at ``base_dir``. Each fn
+    runs with the base modules swapped into ``sys.modules``, so imports
+    inside query bodies resolve to the base too; Python UDF bodies that
+    pickle by reference still run the worker's own copy."""
+    head = _own_modules()
+    _install({})
+    sys.path.insert(0, str(base_dir))
+    try:
+        from datalakejson_spark.registry import all_specs as base_all_specs
+
+        specs = base_all_specs()
+        base = _own_modules()
+    finally:
+        sys.path.remove(str(base_dir))
+        _install(head)
+
+    def swapped(fn):
+        def run(spark, sf_dir):
+            _install(base)
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                _install(head)
+
+        return run
+
+    return {name: swapped(spec.fn) for name, spec in specs.items()}
+
+
+def case_cc(spark, sf_dir, reps, base_dir=None):
+    if base_dir is None:
+        sys.exit("cc needs a base checkout: python tools/ab.py cc <sf_dir> <reps> <base_dir>")
     specs = all_specs()
+    base = base_specs(base_dir)
     # floor: the pair stage alone (shared by base and candidate)
     pair_fn = specs["l2g_verified_neardup_pairs"].fn
     t = timed(spark, "l2g floor", pair_fn, sf_dir, 3)
     print(f"l2g pair stage alone: min={min(t):.3f} all={[round(x,3) for x in t]}")
-    ab(spark, "l2h r15-CC(base) vs r16 canonical+fused", _l2h_r15_base,
-       specs["l2h_neardup_clusters"].fn, sf_dir, reps)
+    for q in ("l2e_dedup_clusters", "l2h_neardup_clusters"):
+        ab(spark, f"{q} base vs this checkout", base[q], specs[q].fn, sf_dir, reps)
 
 
 # --- l2g verify-stage pruning ----------------------------------------------
@@ -266,8 +245,8 @@ def main():
     case = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 5
-    spark = get_spark("ab-r16")
-    CASES[case](spark, sf_dir, reps)
+    spark = get_spark("ab")
+    CASES[case](spark, sf_dir, reps, *sys.argv[4:])
     spark.stop()
 
 

@@ -18,7 +18,7 @@ candidate pairs scored, scan fraction, and wall seconds.
 The derived rule lives in functions/ivf.autotune_ivf: nlist = 2^round(log2 √n)
 clamped to [16, 65536], nprobe = max(4, nlist/16).
 
-Usage: python tools/ann_recall_curve_r12.py [n ...] [--out=PATH]
+Usage: python tools/ann_recall_curve.py [n ...] [--out=PATH]
 Default sizes: 100000 1000000; out: /tmp/ann_recall_r12.jsonl
 """
 

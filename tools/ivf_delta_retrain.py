@@ -24,7 +24,7 @@ Claims under test, per line of the jsonl:
 - the trigger fires before and clears after, on its own measurement.
 
 Writes tools/ivf_delta_retrain_r14.jsonl (one JSON object per line).
-Run on a QUIET box: python tools/ivf_delta_retrain_r14.py [base_n]
+Run on a QUIET box: python tools/ivf_delta_retrain.py [base_n]
 """
 
 from __future__ import annotations

@@ -24,7 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import pyspark.sql.functions as F  # noqa: E402
 
-from ann_recall_curve_r12 import (  # noqa: E402
+from ann_recall_curve import (  # noqa: E402
     K,
     recall_at_k,
     synth_clustered,

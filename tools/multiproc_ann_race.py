@@ -35,7 +35,7 @@ stages, every child exit code 0.
 
 Writes tools/multiproc_ann_race_r15.jsonl (IVF) or
 tools/multiproc_ann_race_lsh_r15.jsonl (LSH). Run on a QUIET box:
-python tools/multiproc_ann_race_r15.py [ivf|lsh] [base_n] [gens] [gen_n] [events] [del_n]
+python tools/multiproc_ann_race.py [ivf|lsh] [base_n] [gens] [gen_n] [events] [del_n]
 """
 
 from __future__ import annotations
