@@ -103,6 +103,18 @@ def test_langid_separates_scripts(spark):
 # ---------------------------------------------------------------------------
 # LLM-pipeline completions (functions/llm_pipeline.py)
 # ---------------------------------------------------------------------------
+def test_connected_components_resolves_chains(spark):
+    """a~b, b~c (no a~c edge) must land in ONE cluster — the reason pair
+    lists aren't dedup decisions — and an edge-less node labels itself.
+    l2e labels its documents through ``clusters.label_components``."""
+    from datalakejson_spark.functions.clusters import label_components
+
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id long")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
+    out = {r.doc_id: r.cluster_id for r in label_components(nodes, edges).collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
+
+
 def test_dedup_clusters_match_pair_transitivity(spark):
     """Every LSH candidate pair must share a cluster; representatives are the
     cluster minima; cluster count + singleton docs add up."""
@@ -150,6 +162,42 @@ def test_token_shards_pack_in_order(spark):
     assert rows[-1].shard_id > 0  # multiple shards actually produced
 
 
+def test_connected_components_matches_union_find_on_random_graphs(spark):
+    """The every-node labelling behind l2e and corpus prep vs a driver-side
+    union-find over seeded random graphs — the distributed star loop must
+    produce exactly the canonical components, including long chains
+    (worst-case diameter) and edge-less nodes."""
+    import random
+
+    from datalakejson_spark.functions.clusters import label_components
+
+    for seed in (7, 23):
+        rng = random.Random(seed)
+        n = 60
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(45)]
+        edges += [(i, i + 1) for i in range(50, 58)]  # a guaranteed chain
+
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            parent[find(a)] = find(b)
+        expected = {x: min(y for y in range(n) if find(y) == find(x)) for x in range(n)}
+
+        nodes_df = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        edges_df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        got = {
+            r.doc_id: r.cluster_id
+            for r in label_components(nodes_df, edges_df).collect()
+        }
+        assert got == expected, f"seed {seed}"
+
+
 def test_prepare_training_corpus_end_to_end(spark):
     """The composed prep pipeline: output has no exact dups, no surviving
     near-dup pair, no benchmark overlap, and contiguous budget-packed
@@ -188,6 +236,36 @@ def test_prepare_training_corpus_end_to_end(spark):
     for r in rows:
         assert r.shard_id == acc // SHARD_TOKEN_BUDGET
         acc += r.n_tokens
+
+
+def test_connected_components_one_action_per_round(spark):
+    """The every-node labelling must keep the star loop's one Spark action
+    per round (the lazy localCheckpoint materializes inside the star-forest
+    test) and add no per-round work for the singleton re-attach. Audited
+    with AQE OFF: with AQE on every adaptive query stage is its own job id,
+    which would make the job count a proxy for AQE internals instead of the
+    loop's action structure."""
+    from datalakejson_spark.functions.clusters import label_components
+
+    n = 9  # a pure chain: the worst-case diameter for its size
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    sc = spark.sparkContext
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("cc-job-count", "connected components job audit")
+    try:
+        out = label_components(nodes, edges).collect()
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    assert {r.doc_id: r.cluster_id for r in out} == {i: 0 for i in range(n)}
+    jobs = sc.statusTracker().getJobIdsForGroup("cc-job-count")
+    # budget: the star loop's rounds plus the final collect; a shape that
+    # costs ~2 jobs per round blows well past this bound.
+    assert len(jobs) <= n + 5, len(jobs)
 
 
 def test_corpus_prep_with_external_benchmark(spark):
