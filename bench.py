@@ -682,6 +682,16 @@ def bench_containers(spark) -> dict[str, int]:
     return counts
 
 
+def _run_extra(payload: dict, key: str, extra) -> None:
+    """Run one optional extra measurement. Extras are never allowed to
+    break the primary metric line: a failure is recorded as
+    ``payload["errors"][key] = "<ExcType>: <msg>"`` and the run moves on."""
+    try:
+        extra()
+    except Exception as exc:  # noqa: BLE001 — recorded in the payload
+        payload.setdefault("errors", {})[key] = f"{type(exc).__name__}: {exc}"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
@@ -709,7 +719,9 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
-    try:
+
+    # Extras: keys beside the primary metric, each run by _run_extra.
+    def calibration() -> None:
         # Machine calibration + normalized times: query_sec / numpy_mt_sec
         # is box-independent (unitless "calibration units"); compare THOSE
         # across rounds, not raw seconds.
@@ -719,21 +731,17 @@ def main() -> None:
         payload["queries_calibrated"] = {
             n: round(t / cal["numpy_mt_sec"], 2) for n, t in timings.items()
         }
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # extra keys; never allowed to break the primary metric line
+
+    def ingest() -> None:
         payload["ingest_files_per_sec"] = bench_ingest(spark)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def stream() -> None:
         payload["stream_rows_per_sec"] = bench_stream(spark)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def feed() -> None:
         payload["feed_rows_per_sec"] = bench_feed(spark, sf_dir)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def dedup_curve() -> None:
         # Batch-size curve: rows/s must GROW with batch size (the fixed
         # per-batch overhead — job launch, localCheckpoint, commit —
         # amortizes); dedup_rows_per_sec stays the 1x point for continuity.
@@ -744,21 +752,17 @@ def main() -> None:
             if k == 1:
                 payload["dedup_rows_per_sec"] = rps
         payload["dedup_curve_rows_per_sec"] = curve
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def multimodal() -> None:
         payload["multimodal_tier_counts"] = bench_multimodal(spark)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def audio() -> None:
         payload["audio_codec_counts"] = bench_audio(spark)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def containers() -> None:
         payload["container_meta_counts"] = bench_containers(spark)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def executed_metrics() -> None:
         # Compact executed-SQLMetrics history for EVERY headliner (full
         # table in METRICS.md; this keeps a per-round trace in the recorded
         # bench line — shuffle/spill/scan drift is visible round-over-round
@@ -782,9 +786,8 @@ def main() -> None:
                 "n_broadcasts": s["n_broadcasts"],
             }
         payload["executed_metrics"] = em
-    except Exception:  # noqa: BLE001
-        pass
-    try:
+
+    def sf1_tier() -> None:
         # sf1 tier: one decade of measured scaling for the headline set.
         # Exponent e = log10(t_sf1 / t_sf0.1): e≈0 = overhead-dominated,
         # e≈1 = linear, e>1.1 = worse than ~O(n log n) over the decade.
@@ -863,8 +866,20 @@ def main() -> None:
                     )
                     for n in HEADLINE
                 }
-    except Exception:  # noqa: BLE001
-        pass
+
+    for key, extra in (
+        ("calibration", calibration),
+        ("ingest_files_per_sec", ingest),
+        ("stream_rows_per_sec", stream),
+        ("feed_rows_per_sec", feed),
+        ("dedup_curve_rows_per_sec", dedup_curve),
+        ("multimodal_tier_counts", multimodal),
+        ("audio_codec_counts", audio),
+        ("container_meta_counts", containers),
+        ("executed_metrics", executed_metrics),
+        ("sf1", sf1_tier),
+    ):
+        _run_extra(payload, key, extra)
     # Full payload first (humans + local records), compact contract line LAST:
     # the driver keeps only the last ~2000 chars of stdout, so the final line
     # must carry every cross-round-critical field and stay under that budget.

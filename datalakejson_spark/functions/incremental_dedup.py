@@ -36,6 +36,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from datalakejson_spark import publish
+from datalakejson_spark.footers import UNDECODABLE, _Undecodable, dir_stats
+from datalakejson_spark.footers import footer_stats as _footer_stats
 from datalakejson_spark.functions.dedup import band_table, minhash_signatures
 from datalakejson_spark.fsutil import atomic_write_json
 from datalakejson_spark.plans.killpoints import fire
@@ -104,9 +106,9 @@ def _read_index_pair_pruned(
     band_keys: list[str],
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Range-pruned index read for a MICRO-BATCH probe: given the delta's
-    (bounded, sorted) key sets, read only the index files whose
-    ``_RANGES.json``/footer key range can contain a delta key. Sound by
-    construction — a skipped file provably holds no delta key, so it can
+    (bounded, sorted) key sets, read only the index files whose footer
+    key range (cached in the stats sidecar) can contain a delta key. Sound
+    by construction — a skipped file provably holds no delta key, so it can
     contribute neither exact- nor near-collisions; the audit result is
     byte-identical to the full read. Returns the pair plus a stats dict
     (``{sub: (files_scanned, files_total)}``) for observability.
@@ -299,21 +301,23 @@ def _publish_verified(
         )
 
 
-# -- per-file key-range sidecars (round 11) --------------------------------
+# -- per-file key-range stats cache (round 11) ------------------------------
 # The r10 probe flip made the audit's SHUFFLE O(batch), but every micro-batch
 # still SCANNED the full band/hash index (5.01M rows in SQLMetrics at a
 # 10^6-doc index; at 10^9 docs that is a full-index columnar scan every
-# 15 minutes). Same disease, same cure as the ledger's `_RANGE.json`
-# segment sidecars (plans/ledger.py:329): per-FILE min/max of the probe key,
-# read driver-side at probe-planning time, so the scan touches only files
-# whose key range can contain a delta key. md5 keys are uniform, so pruning
-# only bites on files that are RANGE-SORTED by the key — which is exactly
-# what compact_index now produces (repartitionByRange) — while the small
-# since-last-compaction appends span the space and are always scanned;
-# steady state = a handful of fresh appends + the few compacted files whose
-# narrow range holds a delta key. Advisory like the ledger's: a missing or
-# unreadable sidecar/footer only means that file is scanned conservatively.
-_RANGES = "_RANGES.json"
+# 15 minutes). The cure is the one the ledger's terminal segments use:
+# per-FILE min/max of the probe key from the parquet footers
+# (datalakejson_spark/footers.py), read driver-side at probe-planning time,
+# so the scan touches only files whose key range can contain a delta key.
+# md5 keys are uniform, so pruning only bites on files that are
+# RANGE-SORTED by the key — which is exactly what compact_index now
+# produces (repartitionByRange) — while the small since-last-compaction
+# appends span the space and are always scanned; steady state = a handful
+# of fresh appends + the few compacted files whose narrow range holds a
+# delta key. Unlike the ledger's few segments, an index subdir can hold
+# 10^6 files, so the footer answers are cached in a sharded ``_RANGES``
+# sidecar (below). Advisory: a missing or unreadable sidecar/footer only
+# means that file is scanned conservatively.
 #: Use the pruned (explicit-file-list) read only when it skips at least
 #: this fraction of the live files. An explicit list of N root paths costs
 #: a parallel-listing Spark job of N tasks (spark fans the listing out past
@@ -331,7 +335,7 @@ PRUNE_MIN_SKIP_FRACTION = 0.5
 #: batch at 10^6 files (a 112 MB sidecar), while the listing and the bisect
 #: pruning loop stay sub-second. The parse is now keyed by (mtime, size):
 #: steady-state batches reparse only when a publish actually rewrote the
-#: sidecar. Entries are replaced per path (one live parse per subdir), and
+#: sidecar. Entries are replaced per path (one live parse per shard), and
 #: the parsed dict is shared READ-ONLY — every consumer that mutates takes
 #: a copy.
 _SIDECAR_PARSE_CACHE: dict[str, tuple[int, int, dict]] = {}
@@ -352,11 +356,9 @@ _STATS_RESULT_CACHE: dict[str, tuple[tuple, dict]] = {}
 #: touched files — at the measured decade-6 point (10^7 entries) that
 #: turns the 53 s / 1.2 GB whole-file reparse after every publish into a
 #: ~1/16 reparse, while the merged READ view stays cached per sidecar
-#: STATE (re-merged, not re-parsed, when any shard changes). The legacy
-#: single-file ``_RANGES.json`` form stays readable (fabricated decade
-#: fixtures, pre-shard indexes) and migrates to shards on the first
-#: write. Pure cache throughout: losing or corrupting any shard only
-#: degrades that shard's files to footer reads.
+#: STATE (re-merged, not re-parsed, when any shard changes). Pure cache
+#: throughout: losing or corrupting any shard only degrades that shard's
+#: files to footer reads.
 _RANGES_SHARD_CHARS = "0123456789abcdef"
 
 
@@ -371,12 +373,11 @@ def _shard_file(ch: str) -> str:
 
 
 def _sidecar_state(live_dir: str) -> tuple | None:
-    """((name, mtime_ns, size), ...) for every sidecar file present
-    (legacy first, shards after — merge order matters: shard entries are
-    newer and override legacy ones), or None when no sidecar exists. One
-    listdir-free stat pass: the candidate names are fixed."""
+    """((name, mtime_ns, size), ...) for every sidecar shard present, or
+    None when no shard exists. One listdir-free stat pass: the candidate
+    names are fixed."""
     state = []
-    for name in [_RANGES] + [_shard_file(c) for c in _RANGES_SHARD_CHARS]:
+    for name in [_shard_file(c) for c in _RANGES_SHARD_CHARS]:
         try:
             st = os.stat(os.path.join(live_dir, name))
         except OSError:
@@ -386,8 +387,8 @@ def _sidecar_state(live_dir: str) -> tuple | None:
 
 
 def _sidecar_paths(live_dir: str) -> list[str]:
-    """Full paths of every sidecar file present (legacy + shards) — the
-    shard-agnostic spelling tests and tools use to poke at the cache."""
+    """Full paths of every sidecar shard present — the shard-agnostic
+    spelling tests and tools use to poke at the cache."""
     return [
         os.path.join(live_dir, name)
         for name, _m, _s in (_sidecar_state(live_dir) or ())
@@ -413,11 +414,11 @@ def _load_one_sidecar(path: str, mtime_ns: int, size: int) -> dict:
 
 
 def _load_sidecar_shared(live_dir: str) -> dict:
-    """The MERGED stats-sidecar view across shards (+ legacy), cached per
-    sidecar state. READ-ONLY: callers must not mutate the returned dict
-    (take a copy to edit). When one shard changes, only that shard
-    re-parses; the merge itself (a dict-update pass over already-parsed
-    shards) re-runs — O(files) of pointer copies, not of JSON decode."""
+    """The MERGED stats-sidecar view across shards, cached per sidecar
+    state. READ-ONLY: callers must not mutate the returned dict. When one
+    shard changes, only that shard re-parses; the merge itself (a
+    dict-update pass over already-parsed shards) re-runs — O(files) of
+    pointer copies, not of JSON decode."""
     state = _sidecar_state(live_dir)
     if state is None:
         return {}
@@ -433,43 +434,26 @@ def _load_sidecar_shared(live_dir: str) -> dict:
     return merged
 
 
-def _load_sidecar(live_dir: str) -> dict:
-    """A MUTABLE copy of the merged stats sidecar."""
-    return dict(_load_sidecar_shared(live_dir))
-
-
 def _write_sidecar_file(live_dir: str, name: str, data: dict) -> None:
-    """Atomic advisory write of one sidecar file (runner-unique tmp: two
-    concurrent writers sharing one tmp name could replace a half-written
-    file into place; last-writer-wins on the file itself is fine —
-    advisory cache). An EMPTY shard is removed rather than written."""
-    import json
-
+    """Advisory write of one sidecar shard through
+    :func:`fsutil.atomic_write_json` (runner-unique tmp, atomic replace,
+    and a sweep of the shard's aged orphan tmps; last-writer-wins on the
+    file itself is fine — advisory cache). An EMPTY shard is removed
+    rather than written."""
     path = os.path.join(live_dir, name)
-    if not data:
-        try:
-            os.remove(path)
-        except OSError:
-            pass
-        return
-    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
     try:
-        with open(tmp, "w") as fh:
-            json.dump(data, fh)
-        os.replace(tmp, path)
+        if data:
+            atomic_write_json(path, data)
+        else:
+            os.remove(path)
     except OSError:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
+        pass
 
 
 def _persist_sidecar_sharded(live_dir: str, desired: dict) -> None:
     """Make the persisted sidecar equal ``desired``, touching ONLY the
     shards whose content differs (the publish-granular invalidation the
-    sharding exists for), then retire the legacy single file — its entries
-    are all represented in the shards afterwards, and merge order means it
-    could only have served stale data."""
+    sharding exists for)."""
     by_shard: dict[str, dict] = {c: {} for c in _RANGES_SHARD_CHARS}
     for f, v in desired.items():
         by_shard[_shard_of(f)][f] = v
@@ -484,11 +468,6 @@ def _persist_sidecar_sharded(live_dir: str, desired: dict) -> None:
             cur = {}
         if by_shard[ch] != cur:
             _write_sidecar_file(live_dir, name, by_shard[ch])
-    if _RANGES in state:  # legacy retired only AFTER the shards hold it all
-        try:
-            os.remove(os.path.join(live_dir, _RANGES))
-        except OSError:
-            pass
 
 
 def _merge_sidecar_cache(live_dir: str, add: dict, remove: list[str]) -> None:
@@ -496,49 +475,24 @@ def _merge_sidecar_cache(live_dir: str, add: dict, remove: list[str]) -> None:
     entries for just-moved files merge in (computed from their staged
     footers), entries for just-subsumed files drop out — rewriting ONLY
     the affected shards. Failure is harmless — _file_stats self-heals
-    lazily from footers. A legacy single-file sidecar migrates to shards
-    here (one full split on the first post-upgrade publish)."""
-    try:
-        if os.path.exists(os.path.join(live_dir, _RANGES)):
-            # legacy form: fold everything into shards once
-            cache = _load_sidecar(live_dir)
-            for n in remove:
-                cache.pop(n, None)
-            cache.update(add)
-            _persist_sidecar_sharded(live_dir, cache)
-        else:
-            touched: dict[str, tuple[dict, set]] = {}
-            for n in remove:
-                touched.setdefault(_shard_of(n), ({}, set()))[1].add(n)
-            for n, v in add.items():
-                touched.setdefault(_shard_of(n), ({}, set()))[0][n] = v
-            state = {
-                name: (m, s)
-                for name, m, s in (_sidecar_state(live_dir) or ())
-            }
-            for ch, (adds, removes) in touched.items():
-                name = _shard_file(ch)
-                cur = dict(
-                    _load_one_sidecar(
-                        os.path.join(live_dir, name), *state[name]
-                    )
-                    if name in state
-                    else {}
-                )
-                for n in removes:
-                    cur.pop(n, None)
-                cur.update(adds)
-                _write_sidecar_file(live_dir, name, cur)
-    except OSError:
-        pass
-    try:  # sweep tmps orphaned by hard crashes (age-guarded like stages)
-        for n in os.listdir(live_dir):
-            if n.startswith(_RANGES + ".") and n.endswith(".tmp"):
-                p = os.path.join(live_dir, n)
-                if time.time() - os.path.getmtime(p) >= STALE_STAGE_S:
-                    os.remove(p)
-    except OSError:
-        pass
+    lazily from footers."""
+    touched: dict[str, tuple[dict, set]] = {}
+    for n in remove:
+        touched.setdefault(_shard_of(n), ({}, set()))[1].add(n)
+    for n, v in add.items():
+        touched.setdefault(_shard_of(n), ({}, set()))[0][n] = v
+    state = {name: (m, s) for name, m, s in (_sidecar_state(live_dir) or ())}
+    for ch, (adds, removes) in touched.items():
+        name = _shard_file(ch)
+        cur = dict(
+            _load_one_sidecar(os.path.join(live_dir, name), *state[name])
+            if name in state
+            else {}
+        )
+        for n in removes:
+            cur.pop(n, None)
+        cur.update(adds)
+        _write_sidecar_file(live_dir, name, cur)
 
 
 def _live_files(live_dir: str) -> list[str]:
@@ -547,75 +501,12 @@ def _live_files(live_dir: str) -> list[str]:
     return sorted(n for n in os.listdir(live_dir) if n.endswith(".parquet"))
 
 
-class _Undecodable:
-    """Sentinel range: the footer HAS min/max stats but they don't decode
-    losslessly as UTF-8 (a lossy decode substitutes U+FFFD, which can reorder
-    the decoded bound relative to true byte order — pruning on it would be
-    unsound for a generic binary key). Distinct from ``None`` (stats MISSING,
-    fixable by a rewrite): rewriting a truly binary-keyed file reproduces
-    undecodable stats, so classifying it stats-dirty would put it in a
-    permanent rewrite-every-compaction loop (ADVICE r12). An UNDECODABLE
-    file is never pruned (always scanned) and never repaired for its stats.
-    Unreachable for today's md5-hex probe keys; the helpers are generic."""
-
-    def __repr__(self) -> str:  # pragma: no cover - debugging aid
-        return "UNDECODABLE"
-
-
-UNDECODABLE = _Undecodable()
-
-
-def _footer_stats(
-    path: str, column: str
-) -> tuple[tuple[str, str] | _Undecodable | None, int]:
-    """(min/max range | UNDECODABLE | None, num_rows) from one parquet
-    FOOTER — driver-side, no Spark job. Truncated stats stay conservative
-    (a truncated min is a prefix <= true min; a truncated max has its last
-    byte incremented >= true max). Range is None when stats are absent from
-    any row group (a rewrite fixes that), and UNDECODABLE when stats exist
-    but at least one byte stat doesn't decode losslessly as UTF-8 (see
-    :class:`_Undecodable` — permanent; don't repair, just never prune)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    mins: list[str] = []
-    maxs: list[str] = []
-    missing = False
-    undecodable = False
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            if col.path_in_schema != column:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                missing = True
-                continue
-            lo, hi = st.min, st.max
-            try:
-                if isinstance(lo, bytes):
-                    lo = lo.decode("utf-8", "strict")
-                if isinstance(hi, bytes):
-                    hi = hi.decode("utf-8", "strict")
-            except UnicodeDecodeError:
-                undecodable = True  # conservatively: always scan this file
-                continue
-            mins.append(str(lo))
-            maxs.append(str(hi))
-    if undecodable:
-        rng: tuple[str, str] | _Undecodable | None = UNDECODABLE
-    elif mins and not missing:
-        rng = (min(mins), max(maxs))
-    else:
-        rng = None
-    return rng, md.num_rows
-
-
 def _file_stats(
     live_dir: str, column: str
 ) -> dict[str, tuple[tuple[str, str] | None, int | None]]:
-    """Per-live-file (key range, num_rows), cached in
-    ``{live_dir}/_RANGES.json`` and self-healed from footers: files the
+    """Per-live-file (key range, num_rows), cached in the
+    ``{live_dir}/_RANGES.<x>.json`` shards and self-healed from footers
+    (:func:`datalakejson_spark.footers.footer_stats`): files the
     sidecar doesn't know (fresh appends, or a crash between publish and
     sidecar rewrite) are footer-read here and merged in; entries for files
     that no longer exist (compaction subsumed them) are dropped. The
@@ -626,10 +517,8 @@ def _file_stats(
     ``{"rows": n, "undecodable": true}`` for stats that exist but don't
     decode losslessly (see :class:`_Undecodable` — always scanned, never
     stats-repaired); a footer READ ERROR maps to ``(None, None)`` and is
-    NOT cached (transient). Legacy 2-element ``[lo, hi]`` entries
-    (pre-rows cache) are treated as unknown and re-read once."""
-    import json
-
+    NOT cached (transient). Any other entry is treated as unknown and
+    re-read."""
     cache = _load_sidecar_shared(live_dir)  # read-only; never mutated here
     files = _live_files(live_dir)
     # Result cache (decade-5, tools/dedup_probe_decade5_r13.jsonl): at 10^6
@@ -1227,7 +1116,7 @@ def compact_index(
             # spans most of it): one range-sorted rewrite into a NEW
             # generation. Range-sorting by the probe key makes compacted files
             # range-DISJOINT on uniformly-distributed md5 keys — what makes
-            # the _RANGES.json file pruning selective (an unsorted file always
+            # the footer-range file pruning selective (an unsorted file always
             # spans ~the whole key space and can never be skipped).
             n_rows = sum(rows[n] or 0 for n in merge)
             df = spark.read.parquet(*(os.path.join(live, n) for n in merge))
@@ -1444,7 +1333,7 @@ def rebuild_index(
     Corpus-scale job by design (one pass over ``docs`` per subdir): run
     it offline, single-runner, like compaction. The output layout is the
     compacted one — few large files, range-disjoint on the probe keys —
-    so the ``_RANGES.json`` pruning is armed from the first post-rebuild
+    so the footer-range pruning is armed from the first post-rebuild
     audit.
     """
     import json
@@ -1519,12 +1408,7 @@ def rebuild_index(
         # actual rows from the just-written footers (hashes are DISTINCT
         # md5, so the n_docs bound above is only the layout estimate)
         try:
-            import pyarrow.parquet as pq
-
-            written[sub] = sum(
-                pq.ParquetFile(os.path.join(stage, sub, n)).metadata.num_rows
-                for n in _live_files(os.path.join(stage, sub))
-            )
+            written[sub] = dir_stats(os.path.join(stage, sub), key)[1]
         except Exception:  # noqa: BLE001 — informational only
             written[sub] = rows[sub]
         atomic_write_json(done_path, {"rows": written[sub]})
@@ -1800,7 +1684,7 @@ def ingest_batch_dedup(
     (``broadcast_delta=True``) the delta's distinct text-hash and band-hash
     key sets — already driver-bounded, they are the broadcast sides — are
     collected once and used to range-prune the index READ via the
-    ``_RANGES.json``/footer sidecars, so each audit scans only the index
+    cached footer ranges, so each audit scans only the index
     files whose key range can contain a delta key (sound: a skipped file
     provably holds no collision). The bulk posture skips pruning — a
     corpus-proportional delta's key set is not driver-collectable, and it

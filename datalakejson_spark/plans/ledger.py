@@ -65,6 +65,8 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from datalakejson_spark.footers import dir_stats
+from datalakejson_spark.fsutil import atomic_write_json, atomic_write_text
 from datalakejson_spark.session import local_df
 from pyspark.sql import types as T
 
@@ -247,23 +249,42 @@ class Ledger:
           the renamed inode, then unlinks THAT file. Rename captures exactly
           one inode — when two waiters race, the loser's rename fails ENOENT
           instead of blindly unlinking the path (which could by then hold the
-          winner's brand-new lock)."""
+          winner's brand-new lock).
+        - **No barging**: a waiter leaves a ``_LOCK.wait.<hex>`` marker, and a
+          fresh acquirer that sees another waiter's marker queues (polls)
+          beside it instead of taking a just-freed lock first. Without it a
+          runner that releases and re-acquires within a millisecond wins
+          every race against a waiter polling every 50 ms, and the waiter
+          times out while the other runner drains the whole backlog. A
+          waiter refreshes its marker on every poll; one not refreshed for
+          LOCK_HEARTBEAT_S belongs to a dead waiter and is removed."""
         token = f"pid={os.getpid()} token={uuid.uuid4().hex}"
         deadline = time.monotonic() + timeout_s
-        while True:
-            try:
-                fd = os.open(self._lockfile, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, token.encode())
-                os.close(fd)
-                break
-            except FileExistsError:
-                if self._break_if_stale():
-                    continue  # lock broken (or vanished) — retry immediately
+        queued: Path | None = None  # this acquirer's wait marker
+        try:
+            while True:
+                if queued is not None or not self._others_waiting():
+                    try:
+                        fd = os.open(
+                            self._lockfile, os.O_CREAT | os.O_EXCL | os.O_WRONLY
+                        )
+                        os.write(fd, token.encode())
+                        os.close(fd)
+                        break
+                    except FileExistsError:
+                        if self._break_if_stale():
+                            continue  # lock broken (or vanished) — retry now
+                if queued is None:
+                    queued = self.root / f"_LOCK.wait.{uuid.uuid4().hex[:12]}"
                 if time.monotonic() > deadline:
                     raise TimeoutError(
                         f"ledger lock {self._lockfile} held for >{timeout_s}s"
-                    ) from None
+                    )
+                queued.touch()  # (re)creates the marker and refreshes it
                 time.sleep(0.05)
+        finally:
+            if queued is not None:
+                queued.unlink(missing_ok=True)
         stop = threading.Event()
         beat = threading.Thread(
             target=self._heartbeat, args=(stop, token), daemon=True
@@ -277,6 +298,21 @@ class Ledger:
             stop.set()
             beat.join(timeout=2 * LOCK_HEARTBEAT_S)
             self._unlink_if_owner(token)
+
+    def _others_waiting(self) -> bool:
+        """Is a live waiter queued on the lock (see ``_mutex``)? Removes the
+        markers of dead waiters on the way."""
+        now = time.time()
+        waiting = False
+        for p in self.root.glob("_LOCK.wait.*"):
+            try:
+                if now - p.stat().st_mtime <= LOCK_HEARTBEAT_S:
+                    waiting = True
+                else:
+                    p.unlink(missing_ok=True)
+            except FileNotFoundError:
+                continue  # its waiter just took the lock
+        return waiting
 
     def _break_if_stale(self) -> bool:
         """Break the current lock iff its heartbeat stopped LOCK_STALE_S ago.
@@ -377,24 +413,22 @@ class Ledger:
         return int(d.get("deferred_terminal", 0))
 
     def _active_row_count(self) -> int | None:
-        """Row count of the active dir (see ``_dir_row_count``)."""
+        """Row count of the active dir (see ``_dir_stats``)."""
         active, _segs, legacy = self._current_parts()
         if not active or legacy:
             return None
-        return self._dir_row_count(active)
+        return self._dir_stats(active)[1]
 
-    def _dir_row_count(self, dirname: str) -> int | None:
-        """Row count of a written parquet dir from FOOTER metadata — a
-        driver-side file-stat, no Spark job. None when unavailable."""
+    def _dir_stats(self, dirname: str) -> tuple[tuple[str, str] | None, int | None]:
+        """(s3_key range, row count) of a written parquet dir from its
+        FOOTERS (:func:`datalakejson_spark.footers.dir_stats`) — a
+        driver-side file-stat, no Spark job. A missing dir or unreadable
+        footer gives (None, None): the range is then unknown and so is the
+        count."""
         try:
-            import pyarrow.parquet as pq
-
-            return sum(
-                pq.ParquetFile(str(f)).metadata.num_rows
-                for f in (self.root / dirname).glob("*.parquet")
-            )
-        except Exception:  # noqa: BLE001 — advisory fast path only
-            return None
+            return dir_stats(str(self.root / dirname), "s3_key")
+        except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
+            return None, None
 
     def _read_dirs(self, names: list[str]) -> DataFrame:
         paths = [str(self.root / n) for n in names]
@@ -406,68 +440,16 @@ class Ledger:
         active, segs, _legacy = self._current_parts()
         return self._read_dirs(([active] if active else []) + segs)
 
-    # -- per-segment key-range sidecars (round 9) ----------------------------
-    # Written INSIDE the segment dir as ``_RANGE.json`` (the leading
-    # underscore makes Spark's parquet reader treat it as metadata), so the
-    # sidecar travels with the segment through folds and prunes. Advisory:
-    # a missing/corrupt sidecar merely means the probe must include that
-    # segment (legacy segments keep working). This is the reference's
+    # -- per-segment key ranges from the segment footers -------------------
+    # A terminal segment is one parquet file whose footer already records the
+    # min/max s3_key of its rows. This is the reference's
     # ``idx_processing_status``+pkey analogue for the terminal majority: a
     # commit-path probe over 10^8 terminal rows touches only segments whose
     # [min,max] s3_key range can contain a batch key, so probe cost tracks
-    # batch locality instead of total history.
-    def _write_seg_range(self, seg: str, kmin: str | None, kmax: str | None) -> None:
-        if kmin is None or kmax is None:
-            return  # empty segment (never published in practice) — no sidecar
-        from datalakejson_spark.fsutil import atomic_write_json
-
-        try:
-            atomic_write_json(
-                str(self.root / seg / "_RANGE.json"),
-                {"min": kmin, "max": kmax},
-            )
-        except OSError:
-            pass  # advisory — probe stays conservative
-
-    def _seg_range(self, seg: str) -> tuple[str, str] | None:
-        try:
-            d = json.loads((self.root / seg / "_RANGE.json").read_text())
-            return str(d["min"]), str(d["max"])
-        except (OSError, ValueError, KeyError, TypeError):
-            # TypeError covers valid-but-non-dict JSON (null/list/scalar):
-            # ANY unreadable sidecar degrades to a conservative scan.
-            return None
-
-    def _dir_key_stats(self, dirname: str) -> tuple[str, str] | None:
-        """min/max s3_key of a written parquet dir from FOOTER column
-        statistics — driver-side, no Spark job (the _active_row_count
-        pattern). Parquet stat truncation keeps the bounds conservative: a
-        truncated min is a prefix (<= true min) and a truncated max has its
-        last byte incremented (>= true max). None when any file lacks
-        usable stats (caller falls back to an aggregation job)."""
-        try:
-            import pyarrow.parquet as pq
-
-            mins: list[str] = []
-            maxs: list[str] = []
-            for f in (self.root / dirname).glob("*.parquet"):
-                md = pq.ParquetFile(str(f)).metadata
-                for rg in range(md.num_row_groups):
-                    for ci in range(md.num_columns):
-                        col = md.row_group(rg).column(ci)
-                        if col.path_in_schema != "s3_key":
-                            continue
-                        st = col.statistics
-                        if st is None or not st.has_min_max:
-                            return None
-                        mins.append(str(st.min))
-                        maxs.append(str(st.max))
-            if not mins:
-                return None
-            return min(mins), max(maxs)
-        except Exception:  # noqa: BLE001 — advisory fast path only
-            return None
-
+    # batch locality instead of total history. A segment whose footer lacks
+    # usable stats is conservatively probed. Segments written by older
+    # ledgers may still hold an underscore-named range sidecar file; Spark
+    # skips underscore files and nothing reads it.
     def _key_bounds(self, keys: DataFrame) -> tuple[str | None, str | None]:
         row = keys.agg(
             F.min("s3_key").alias("kmin"), F.max("s3_key").alias("kmax")
@@ -477,13 +459,13 @@ class Ledger:
     def _segs_for_keys(
         self, segs: list[str], kmin: str | None, kmax: str | None
     ) -> list[str]:
-        """Segments whose key range can intersect [kmin, kmax]; segments
-        without a sidecar are conservatively included."""
+        """Segments whose footer key range can intersect [kmin, kmax];
+        segments without usable footer stats are conservatively included."""
         if kmin is None or kmax is None:
             return []  # no keys — nothing can hit
         out = []
         for s in segs:
-            r = self._seg_range(s)
+            r = self._dir_stats(s)[0]
             if r is None or (r[0] <= kmax and kmin <= r[1]):
                 out.append(s)
         return out
@@ -561,38 +543,15 @@ class Ledger:
         if new_segment_df is not None:
             seg = f"t{ns}"
             self._write_dir(new_segment_df, seg)
-            if self._dir_row_count(seg) == 0:
+            if self._dir_stats(seg)[1] == 0:
                 # nothing reached a terminal status: never reference an
                 # empty segment (the footers say so without a count job)
                 shutil.rmtree(self.root / seg, ignore_errors=True)
             else:
-                # Sidecar bounds come from the just-written file's footer
-                # stats (driver-side, no job); the aggregation is only the
-                # fallback.
-                self._write_seg_range(
-                    seg,
-                    *(self._dir_key_stats(seg) or self._key_bounds(new_segment_df)),
-                )
                 segs.append(seg)
         if len(segs) > MAX_TERMINAL_SEGMENTS:
             merged = f"t{ns}c"
-            folded = self._read_dirs(segs)
-            self._write_dir(folded, merged)
-            # Fold the sidecars driver-side when every input has one; a
-            # legacy (pre-sidecar) segment falls back to the merged file's
-            # own footer stats, then to a re-scan.
-            ranges = [self._seg_range(s) for s in segs]
-            if all(r is not None for r in ranges):
-                self._write_seg_range(
-                    merged,
-                    min(r[0] for r in ranges),
-                    max(r[1] for r in ranges),
-                )
-            else:
-                self._write_seg_range(
-                    merged,
-                    *(self._dir_key_stats(merged) or self._key_bounds(folded)),
-                )
+            self._write_dir(self._read_dirs(segs), merged)
             segs = [merged]
         if not self._owns_lock():
             raise LedgerLockLost(
@@ -609,10 +568,8 @@ class Ledger:
         # never wall-clock-derived names (see _prune).
         meta = self._pointer_meta() or {}
         seq = int(meta.get("publish_seq", 0)) + 1
-        from datalakejson_spark.fsutil import unique_tmp
-
-        tmp = self.root / unique_tmp("_LATEST")
-        tmp.write_text(
+        atomic_write_text(  # atomic commit point
+            str(self._pointer),
             json.dumps(
                 {
                     "active": version,
@@ -620,9 +577,8 @@ class Ledger:
                     "deferred_terminal": deferred_terminal,
                     "publish_seq": seq,
                 }
-            )
+            ),
         )
-        os.replace(tmp, self._pointer)  # atomic commit point
         self._prune(keep=3, current=version, segments=segs, seq=seq)
 
     def _retrying(self, body, attempts: int = 5):
@@ -709,8 +665,6 @@ class Ledger:
                 retired.pop(name)
                 changed = True
         if changed:
-            from datalakejson_spark.fsutil import atomic_write_json
-
             atomic_write_json(str(retired_path), retired)
 
     # -- reference operations ----------------------------------------------
@@ -883,8 +837,8 @@ class Ledger:
         a key listed twice takes its first group.
 
         The probe collects the batch keys' current rows from the active part
-        and from the terminal segments whose ``_RANGE.json`` range can hold
-        a batch key — O(batch) rows, never O(history). From those rows, on
+        and from the terminal segments whose footer key range can hold a
+        batch key — O(batch) rows, never O(history). From those rows, on
         the driver:
 
         - the fenced-out keys: rows not carrying ``fence_run_id`` (lost

@@ -69,7 +69,7 @@ def streaming_dedup_ingest(
     mechanisms — a compaction mid-stream never invalidates the source log,
     and a crash in either recovers independently (killpoint-pinned in
     tests/test_incremental_dedup.py; latency measured in
-    tools/streaming_dedup_soak_r12.py).
+    tools/streaming_dedup_soak_r12.jsonl).
 
     Returns the StreamingQuery; call ``.awaitTermination()``.
     """

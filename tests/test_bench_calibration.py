@@ -25,7 +25,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "tools"))
 
-from bench import SF1_NOMINAL_REF, calibration_check  # noqa: E402
+from bench import SF1_NOMINAL_REF, _run_extra, calibration_check  # noqa: E402
 from bench_history import apply_calibration_checks, load_rounds  # noqa: E402
 
 # r8's actual artifact values — the case that motivated the check.
@@ -186,3 +186,21 @@ def test_epoch_fence_blocks_cross_epoch_adjudication():
     # 2x code speedup therefore does not read as box anomaly
     assert rounds[16]["check"]["ref_round"] == 15
     assert rounds[16]["check"]["box_anomalous"] is False
+
+
+def test_failed_extra_is_recorded_not_swallowed():
+    """A failing bench extra leaves its error in the payload's ``errors``
+    map and the run moves on; extras that succeed add no ``errors`` key."""
+    payload = {"metric": "headline_query_total_sec", "value": 1.0}
+
+    def ok() -> None:
+        payload["ingest_files_per_sec"] = 12.5
+
+    def broken() -> None:
+        raise ValueError("no landing zone")
+
+    _run_extra(payload, "ingest_files_per_sec", ok)
+    assert "errors" not in payload
+    _run_extra(payload, "feed_rows_per_sec", broken)
+    assert payload["errors"] == {"feed_rows_per_sec": "ValueError: no landing zone"}
+    assert payload["ingest_files_per_sec"] == 12.5

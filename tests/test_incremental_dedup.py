@@ -1614,23 +1614,28 @@ def test_rebuild_resume_rejects_same_count_different_content(spark, tmp_path):
 
 
 def test_sidecar_tmp_files_are_swept(spark, tmp_path):
-    """Crashed sidecar writers leave runner-unique .tmp files that nothing
-    would ever overwrite; the merge sweeps them once stale (review, r12)."""
+    """Crashed sidecar writers leave runner-unique shard tmps
+    (``_RANGES.<x>.json.<hex>.tmp``) that nothing would ever overwrite; the
+    next write of that shard sweeps them once they are older than the tmp
+    grace, and a live writer's fresh tmp survives (review, r12)."""
     import os
     import time
 
+    from datalakejson_spark import fsutil
     from datalakejson_spark.functions import incremental_dedup as inc
 
     idx = str(tmp_path / "idx")
     ingest_batch_dedup(spark, _docs(spark, [(1, _distinct_text(1))]), idx)
     live = os.path.join(idx, "hashes")
-    orphan = os.path.join(live, f"{inc._RANGES}.deadbeef.tmp")
+    name = "part-99999-planted-c000.parquet"
+    shard = os.path.join(live, inc._shard_file(inc._shard_of(name)))
+    orphan = f"{shard}.deadbeef.tmp"
     open(orphan, "w").write("{")
-    old = time.time() - 2 * inc.STALE_STAGE_S
+    old = time.time() - 2 * fsutil.TMP_GRACE_S
     os.utime(orphan, (old, old))
-    fresh = os.path.join(live, f"{inc._RANGES}.cafecafe.tmp")
+    fresh = f"{shard}.cafecafe.tmp"
     open(fresh, "w").write("{")  # a LIVE writer's tmp must survive
-    inc._merge_sidecar_cache(live, {}, [])
+    inc._merge_sidecar_cache(live, {name: {"rows": 0}}, [])
     assert not os.path.exists(orphan)
     assert os.path.exists(fresh)
 

@@ -790,57 +790,140 @@ def test_backfill_phase_defers_segment_split(spark, tmp_path):
 
 
 def test_segment_range_sidecars(spark, tmp_path, monkeypatch):
-    """Per-segment key-range sidecars (round 9): every published segment
-    carries _RANGE.json; folds combine ranges driver-side; the terminal
-    probe and fenced-out read skip segments whose range excludes the batch,
-    and a legacy segment WITHOUT a sidecar is conservatively included."""
+    """Terminal segments prune on the s3_key range in their own parquet
+    footers: disjoint segments exclude each other and no keys means no
+    segments; a segment whose file has no s3_key statistics is
+    conservatively included; a fold's merged segment prunes on its own
+    footer; and segments that still carry an old round-9 ``_RANGE.json``
+    sidecar commit and count the same, because nothing reads it."""
     import json as J
 
+    import pyarrow.parquet as pq
+
+    from datalakejson_spark.footers import dir_stats
     from datalakejson_spark.plans import ledger as L
 
-    led = Ledger(spark, str(tmp_path / "led"))
-    led.register(_synth_files(spark, 0, 40))
-    # two disjoint-key segments: f0..f9 (lexical f0,f1,..) and f30..f39
-    c1 = led.claim_batch(20, "r1")
-    led.apply_outcomes([(c1, LedgerStatus.SUCCEEDED, None)], run_id="r1")
-    c2 = led.claim_batch(20, "r2")
-    led.apply_outcomes([(c2, LedgerStatus.SUCCEEDED, None)], run_id="r2")
-    ptr = J.loads((tmp_path / "led" / "_LATEST").read_text())
+    def files(lo, hi):  # zero-padded: lexical order = numeric order
+        return spark.range(lo, hi).select(
+            F.format_string("s3://lake/f%03d", F.col("id")).alias("s3_key"),
+            F.lit(100).cast("long").alias("file_size_bytes"),
+        )
+
+    def key(i):
+        return f"s3://lake/f{i:03d}"
+
+    root = tmp_path / "led"
+    led = Ledger(spark, str(root))
+    for lo in (0, 20):  # two disjoint-key segments: f000-f019, f020-f039
+        led.register(files(lo, lo + 20))
+        c = led.claim_batch(20, f"r{lo}")
+        led.apply_outcomes([(c, LedgerStatus.SUCCEEDED, None)], run_id=f"r{lo}")
+    ptr = J.loads((root / "_LATEST").read_text())
     assert len(ptr["terminal"]) == 2
-    for seg in ptr["terminal"]:
-        r = led._seg_range(seg)
-        assert r is not None and r[0] <= r[1]
-        body = J.loads((tmp_path / "led" / seg / "_RANGE.json").read_text())
-        assert set(body) == {"min", "max"}
-
-    # pruning: keys wholly outside a segment's range exclude it
     seg_a, seg_b = ptr["terminal"]
-    ra, rb = led._seg_range(seg_a), led._seg_range(seg_b)
-    below_all = led._segs_for_keys([seg_a, seg_b], "a", "a")
-    assert below_all == []
-    only_a = led._segs_for_keys([seg_a, seg_b], ra[0], ra[0])
-    assert seg_a in only_a
-    if rb[0] > ra[1]:  # disjoint ranges: b must be pruned
-        assert seg_b not in only_a
-    # no keys -> nothing can hit
-    assert led._segs_for_keys([seg_a, seg_b], None, None) == []
-    # a legacy segment without a sidecar is conservatively included
-    (tmp_path / "led" / seg_a / "_RANGE.json").unlink()
-    assert seg_a in led._segs_for_keys([seg_a, seg_b], "zzz", "zzz")
+    assert not list(root.glob("t*/_RANGE.json"))  # no sidecar is written
+    assert dir_stats(str(root / seg_a), "s3_key") == ((key(0), key(19)), 20)
+    assert dir_stats(str(root / seg_b), "s3_key") == ((key(20), key(39)), 20)
 
-    # folds write a combined sidecar (driver-side when inputs have ranges;
-    # seg_a's deleted sidecar forces the data-scan fallback on this fold)
+    # pruning on the footer ranges
+    assert led._segs_for_keys([seg_a, seg_b], "a", "a") == []
+    assert led._segs_for_keys([seg_a, seg_b], key(5), key(7)) == [seg_a]
+    assert led._segs_for_keys([seg_a, seg_b], key(25), key(39)) == [seg_b]
+    assert led._segs_for_keys([seg_a, seg_b], key(19), key(20)) == [seg_a, seg_b]
+    assert led._segs_for_keys([seg_a, seg_b], None, None) == []
+
+    # a segment file without s3_key statistics is conservatively included
+    bare = "nostats"
+    (root / bare).mkdir()
+    (src,) = (root / seg_a).glob("*.parquet")
+    pq.write_table(
+        pq.read_table(src), str(root / bare / "part-0.parquet"),
+        write_statistics=False,
+    )
+    assert dir_stats(str(root / bare), "s3_key") == (None, 20)
+    assert led._segs_for_keys([bare, seg_b], "zzz", "zzz") == [bare]
+
+    # a fold's merged segment prunes on its own footer
     monkeypatch.setattr(L, "MAX_TERMINAL_SEGMENTS", 1)
-    led.register(_synth_files(spark, 40, 44))
+    led.register(files(40, 44))
     c3 = led.claim_batch(4, "r3")
     led.apply_outcomes([(c3, LedgerStatus.SUCCEEDED, None)], run_id="r3")
-    ptr2 = J.loads((tmp_path / "led" / "_LATEST").read_text())
-    assert len(ptr2["terminal"]) == 1
-    merged = led._seg_range(ptr2["terminal"][0])
-    assert merged is not None
-    lo = min(x for x in [ra[0], rb[0]] if x)
-    assert merged[0] <= lo and merged[1] >= max(ra[1], rb[1])
-    assert led.counts()[LedgerStatus.SUCCEEDED] == 44
+    ptr2 = J.loads((root / "_LATEST").read_text())
+    (merged,) = ptr2["terminal"]
+    assert dir_stats(str(root / merged), "s3_key") == ((key(0), key(43)), 44)
+    assert led._segs_for_keys([merged], "zzz", "zzz") == []
+    assert led._segs_for_keys([merged], key(10), key(10)) == [merged]
+    assert led.counts() == {LedgerStatus.SUCCEEDED: 44}
+
+    # an old sidecar claiming the segment holds nothing is never read: the
+    # re-enqueue still finds its terminal row, and the counts are exact
+    (root / merged / "_RANGE.json").write_text(J.dumps({"min": "a", "max": "a"}))
+    led.set_status([key(5)], LedgerStatus.FAILED, "re-enqueued")
+    assert led.counts() == {LedgerStatus.SUCCEEDED: 43, LedgerStatus.FAILED: 1}
+    assert led.read().select("s3_key").distinct().count() == 44
+
+
+def test_latest_pointer_tmp_orphans_are_swept(spark, tmp_path):
+    """A publisher killed between staging and swapping the ``_LATEST``
+    pointer leaves a ``_LATEST.<hex>.tmp`` behind; the next publish sweeps
+    it once it is older than the tmp grace, and leaves a live writer's
+    fresh tmp alone."""
+    import time
+
+    from datalakejson_spark import fsutil
+
+    root = tmp_path / "led"
+    led = Ledger(spark, str(root))
+    led.register(_synth_files(spark, 0, 4))
+    aged = root / "_LATEST.deadbeef.tmp"
+    fresh = root / "_LATEST.cafecafe.tmp"
+    aged.write_text("{")
+    fresh.write_text("{")
+    old = time.time() - 2 * fsutil.TMP_GRACE_S
+    os.utime(aged, (old, old))
+    claimed = led.claim_batch(4, "r1")
+    led.apply_outcomes([(claimed, LedgerStatus.SUCCEEDED, None)], run_id="r1")
+    assert not aged.exists()
+    assert fresh.exists()
+    assert led.counts() == {LedgerStatus.SUCCEEDED: 4}
+
+
+def test_ledger_mutex_does_not_starve_a_waiting_runner(spark, tmp_path):
+    """Two runners share a backlog, each looping claim then commit. A runner
+    that releases the lock and re-acquires it at once must not win every
+    race against the other runner's 50 ms poll: both runners commit a fair
+    share of the batches, and every file is committed exactly once."""
+    import threading
+
+    led = Ledger(spark, str(tmp_path / "led"))
+    n_files = 40
+    led.register(_synth_files(spark, 0, n_files))
+    done: dict[str, list[str]] = {"a": [], "b": []}
+    errors: list[BaseException] = []
+
+    def runner(name: str) -> None:
+        try:
+            while claimed := led.claim_batch(5, name):
+                fenced = led.apply_outcomes(
+                    [(claimed, LedgerStatus.SUCCEEDED, None)], run_id=name
+                )
+                done[name].extend(p for p in claimed if p not in set(fenced))
+        except BaseException as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=runner, args=(n,)) for n in done]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert set(done["a"]).isdisjoint(done["b"])
+    assert len(done["a"]) + len(done["b"]) == n_files
+    assert min(len(done["a"]), len(done["b"])) >= n_files // 4, {
+        k: len(v) for k, v in done.items()
+    }
+    assert not list((tmp_path / "led").glob("_LOCK.wait.*"))
 
 
 @pytest.mark.soak
@@ -851,7 +934,7 @@ def test_two_runner_soak_through_defer_and_drain(spark, tmp_path):
     active part), and as the backlog shrinks the fraction crosses the
     threshold mid-soak (drain: accumulated terminal rows move to segments)
     — both paths and the transition run under real claim interleaving,
-    with the publish_seq counter and sidecar writes in the loop. Exactly-
+    with the publish_seq counter and segment publishes in the loop. Exactly-
     once per file, nothing lost, bookkeeping consistent at the end."""
     import json as J
     import threading
@@ -901,9 +984,11 @@ def test_two_runner_soak_through_defer_and_drain(spark, tmp_path):
     assert n_deferred_actual <= ptr["deferred_terminal"]
     # each 5-file batch publishes twice (claim's PROCESSING flip + commit)
     assert ptr["publish_seq"] >= 2 * (n_files // 5)
-    # every referenced segment carries a valid range sidecar
+    # every referenced segment's footer gives a usable key range
+    from datalakejson_spark.footers import dir_stats
+
     for seg in ptr["terminal"]:
-        r = led._seg_range(seg)
+        r, _rows = dir_stats(str(tmp_path / "led" / seg), "s3_key")
         assert r is not None and r[0] <= r[1]
 
 

@@ -63,11 +63,6 @@ def _fragment_base(spark, idx: str) -> None:
                 os.path.join(live, f"part-{90000 + i:05d}-{gen}-c000.parquet"),
             )
         os.remove(os.path.join(live, files[0]))
-        # invalidate the sidecar so the new layout is re-read
-        try:
-            os.remove(os.path.join(live, inc._RANGES))
-        except OSError:
-            pass
 
 
 def _seed_index(spark, tmp_path, n_docs: int = 24) -> str:

@@ -102,7 +102,7 @@ def main() -> None:
             write_lane_meta(idx)  # direct writers must stamp the definition
             build_sec = time.time() - t0
             # Steady-state layout: compaction range-sorts each subdir by its
-            # probe key, which is what arms the _RANGES.json file pruning
+            # probe key, which is what arms the footer-range file pruning
             # the micro-batch audits below exercise (round 11).
             t0 = time.time()
             compact_counts = compact_index(spark, idx, target_rows_per_file=target_rows)

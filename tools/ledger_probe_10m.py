@@ -1,6 +1,5 @@
 """Commit-path probe cost at 10^7 terminal files (VERDICT r8 'what's wrong
-#3'): measure the fenced steady batch against a decade-2 terminal history,
-with and without the round-9 per-segment ``_RANGE.json`` key-range sidecars.
+#3'): measure the fenced steady batch against a decade-2 terminal history.
 
 Setup mirrors the real steady state the reference reaches after months of
 ingest: 10^7 completed files whose keys are time-ordered (the common
@@ -13,10 +12,10 @@ which tell which claims were reclaimed (fenced out) and whether the
 transition touches a terminal row.
 
 The probe is range-pruned: the batch's [min,max] key is compared against
-each segment's sidecar, and time-ordered keys fall OUTSIDE every historic
-segment's range, so the probe touches zero terminal segments regardless of
-history size. Deleting the sidecars restores the r8 behavior (conservative
-full-history semi-join) for an apples-to-apples on the same ledger.
+each segment's s3_key range from its parquet footer, and time-ordered keys
+fall OUTSIDE every historic segment's range, so the probe touches zero
+terminal segments regardless of history size. SCALE.md keeps the round-9
+comparison against the unpruned full-history probe.
 
 Usage: python tools/ledger_probe_10m.py [n_terminal] [n_segments]
 Defaults: 10_000_000 rows in 10 segments. Prints one JSON line.
@@ -80,20 +79,9 @@ def main() -> None:
         )
         return round(time.time() - t0, 2)
 
-    # Warm-up, then measured batch WITH sidecars (range-pruned probe).
+    # Warm-up, then the measured range-pruned batch.
     steady_batch("warm")
-    out["steady_batch_sidecars_sec"] = steady_batch("probe-a")
-
-    # Strip every sidecar -> conservative full-history probe (r8 behavior).
-    ptr = json.loads((Path(f"{root}/ledger") / "_LATEST").read_text())
-    stripped = 0
-    for seg in ptr["terminal"]:
-        p = Path(f"{root}/ledger") / seg / "_RANGE.json"
-        if p.exists():
-            p.unlink()
-            stripped += 1
-    out["sidecars_stripped"] = stripped
-    out["steady_batch_full_probe_sec"] = steady_batch("probe-b")
+    out["steady_batch_sec"] = steady_batch("probe")
 
     print(json.dumps(out))
     spark.stop()
