@@ -1,10 +1,11 @@
 """Key ranges and row counts read from parquet FOOTERS.
 
 One question, answered driver-side with no Spark job: what key range and
-how many rows does this parquet file (or dir of files) hold? A columnar
-file's own footer statistics are what a reader skips it by (Dremel, VLDB
-2020), so the ledger's terminal segments and the dedup index's files both
-prune on them instead of keeping a second copy. The answer is
+how many rows does this parquet file (or dir, or list of files) hold? A
+columnar file's own footer statistics are what a reader skips it by
+(Dremel, VLDB 2020), so the ledger's terminal segments and the dedup
+index's files both prune on them instead of keeping a second copy; the
+ANN indexes count their cells' rows from them. The answer is
 conservative: a range is only reported when every row group carries
 usable min/max statistics for the column, and a truncated bound still
 brackets the true one.
@@ -13,6 +14,7 @@ brackets the true one.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 
 class _Undecodable:
@@ -102,3 +104,19 @@ def dir_stats(dirpath: str, column: str) -> tuple[tuple[str, str] | None, int]:
     if not usable or lo is None or hi is None:
         return None, rows
     return (lo, hi), rows
+
+
+def row_count(paths: Iterable[str]) -> int:
+    """Summed footer ``num_rows`` over an explicit list of parquet files. A
+    file that raises ``OSError`` (removed by a racing publish between the
+    caller's listing and this read) is skipped: the next call sees the
+    settled file set."""
+    import pyarrow.parquet as pq
+
+    rows = 0
+    for path in paths:
+        try:
+            rows += pq.ParquetFile(path).metadata.num_rows
+        except OSError:
+            continue
+    return rows

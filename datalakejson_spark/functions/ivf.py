@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from datalakejson_spark.footers import row_count
 from datalakejson_spark.functions.similarity import (
     TOP_K,
     cosine_expr,
@@ -1042,21 +1043,13 @@ def ivf_cell_rows(index_dir: str) -> dict[int, int]:
     compactor)."""
     import os
 
-    import pyarrow.parquet as pq
-
     root = os.path.join(index_dir, _IVF_CELLS)
-    out: dict[int, int] = {}
-    for cell, files in _ivf_live_files(index_dir).items():
-        rows = 0
-        for f in files:
-            try:
-                rows += pq.ParquetFile(
-                    os.path.join(root, cell, f)
-                ).metadata.num_rows
-            except OSError:  # racing publish: settled next call
-                pass
-        out[int(cell.split("=", 1)[1])] = rows
-    return out
+    return {
+        int(cell.split("=", 1)[1]): row_count(
+            os.path.join(root, cell, f) for f in files
+        )
+        for cell, files in _ivf_live_files(index_dir).items()
+    }
 
 
 def ivf_overloaded_cells(

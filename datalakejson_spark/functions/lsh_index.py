@@ -31,6 +31,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from datalakejson_spark.footers import row_count
 from datalakejson_spark.functions.index_maintenance import (
     batch_applied,
     bump_index_count,
@@ -583,20 +584,11 @@ def lsh_bucket_stats(index_dir: str) -> dict:
     Returns {"partitions", "total_rows", "mean_rows", "max_rows"}."""
     import os
 
-    import pyarrow.parquet as pq
-
     root = os.path.join(index_dir, _BUCKETS)
-    per_tb: dict[str, int] = {}
-    for tb, files in live_partition_files(index_dir, _BUCKETS).items():
-        rows = 0
-        for f in files:
-            try:
-                rows += pq.ParquetFile(
-                    os.path.join(root, tb, f)
-                ).metadata.num_rows
-            except OSError:  # racing publish: settled next call
-                pass
-        per_tb[tb] = rows
+    per_tb = {
+        tb: row_count(os.path.join(root, tb, f) for f in files)
+        for tb, files in live_partition_files(index_dir, _BUCKETS).items()
+    }
     counts = [c for c in per_tb.values() if c > 0]
     total = sum(counts)
     return {

@@ -26,6 +26,10 @@ Deliberate improvements over the pseudocode (SURVEY.md §7.0/§7.3):
 - corrupt-record capture is pinned with an explicit schema: Spark only
   materializes ``_corrupt_record`` when it is declared, and an all-corrupt
   file would otherwise fail inference entirely.
+- discovery lists through Spark's own file index, as the streaming plane's
+  file source does: one metadata-only scan of the landing root. It skips
+  ``_``/``.``-prefixed names, and a file archived by another runner between
+  listing and scan is skipped, not raised.
 
 100 TB posture: no data rows ever reach the driver — only the claimed path
 list (bounded by batch_size, the reference's own design: sudo_code.txt:128)
@@ -41,9 +45,10 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+from urllib.parse import unquote
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from datalakejson_spark.session import local_df
@@ -131,44 +136,25 @@ def make_ledger(spark: SparkSession, conf: IngestConfig):
 # --------------------------------------------------------------------------
 # Discovery (S4 + S11 + J1)
 # --------------------------------------------------------------------------
-def _walk_prefix(root: str, suffix: str) -> list[tuple[str, int]]:
-    """List every ``*{suffix}`` file under one prefix (the per-prefix unit of
-    the fan-out; runs on executors in distributed mode)."""
-    rows = []
-    for base, _dirs, files in os.walk(root):
-        for name in files:
-            if name.endswith(suffix):
-                p = Path(base) / name
-                try:
-                    rows.append((str(p), p.stat().st_size))
-                except FileNotFoundError:
-                    continue  # deleted between listdir and stat
-    return rows
-
-
-# Below this many top-level prefixes the fan-out's job overhead exceeds the
-# walk itself; the driver walk is also the only option on a single prefix.
-DISCOVERY_FANOUT_THRESHOLD = 16
-
-
-def discover(
-    spark: SparkSession,
-    conf: IngestConfig,
-    *,
-    distributed: bool | None = None,
-) -> int:
+def discover(spark: SparkSession, conf: IngestConfig) -> int:
     """List the landing zone and register new files as PENDING.
 
     The reference enumerates historical + ``YYYY/weekXX`` prefixes via
     paginated S3 listing (psuedo_code.txt:80-98) and head_objects for size
-    (psuedo_code.txt:107-110). 100 TB posture: listing 10^7+ files from the
-    driver is the bottleneck, so the walk fans out as an RDD of top-level
-    prefixes — each executor walks one subtree and ships (path, size) rows;
-    only the (bounded) newly-registered count returns to the driver. Below
-    ``DISCOVERY_FANOUT_THRESHOLD`` prefixes the driver walk wins (job
-    overhead) and is used automatically; ``distributed`` forces either mode.
-    On S3 the per-prefix unit becomes a paginated ListObjectsV2 call — the
-    fan-out shape and the ledger anti-join are unchanged.
+    (psuedo_code.txt:107-110). Here the listing is Spark's own file index:
+    one metadata-only ``binaryFile`` scan of the landing root, projected to
+    ``path`` and ``length``. The index lists a directory level in parallel
+    JVM tasks once it passes ``spark.sql.sources.parallelPartitionDiscovery
+    .threshold``; on S3, S3A paginates. Keys are Spark's decoded ``path``
+    minus its ``file:`` scheme, byte-identical to an ``os.walk`` path.
+
+    Like the streaming plane's file source, the index skips ``_``- and
+    ``.``-prefixed files and directories. A file listed here but archived
+    by another runner before the scan is skipped (``ignoreMissingFiles``),
+    not raised. Zero-byte files, which the index lists but no scan reads,
+    are added from a driver-side stat so that ingest can quarantine them.
+    A missing or empty landing dir registers nothing and leaves the ledger
+    untouched.
 
     Also completes interrupted archive moves: a run that crashed between its
     fenced SUCCEEDED commit and the archive step (archive runs after the
@@ -177,45 +163,36 @@ def discover(
     reconciliation point that finishes the move (sudo_code.txt:219-224's
     lost-file sweep, inverted). Returns newly registered file count."""
     configure_runtime(spark)
-    suffix = f".{conf.landing_format}"
     try:
-        entries = list(os.scandir(conf.landing_dir))
-    except FileNotFoundError:
+        listing = (
+            spark.read.format("binaryFile")
+            .option("recursiveFileLookup", "true")
+            .option("pathGlobFilter", f"*.{conf.landing_format}")
+            .option("ignoreMissingFiles", "true")
+            .load(conf.landing_dir)
+        )
+    except AnalysisException as exc:
+        if publish.error_condition(exc) != "PATH_NOT_FOUND":
+            raise
         return 0
-    prefixes = sorted(e.path for e in entries if e.is_dir())
-    rows = [
-        (e.path, e.stat().st_size)
-        for e in entries
-        if e.is_file() and e.name.endswith(suffix)
-    ]
-    if not rows and not prefixes:
+    # the driver-side index answers with no job; its JVM array's length is
+    # one py4j call (inputFiles() copies it one call per file)
+    n_listed = len(listing._jdf.inputFiles())
+    if not n_listed:
         return 0
-    fan_out = (
-        distributed
-        if distributed is not None
-        else len(prefixes) >= DISCOVERY_FANOUT_THRESHOLD
+    discovered = listing.select(
+        F.regexp_replace("path", "^file:", "").alias("s3_key"),
+        F.col("length").alias("file_size_bytes"),
     )
-    discovered = local_df(spark, rows, "s3_key string, file_size_bytes long")
-    if prefixes:
-        if fan_out:
-            sc = spark.sparkContext
-            slices = min(len(prefixes), sc.defaultParallelism * 4)
-            listed = spark.createDataFrame(
-                sc.parallelize(prefixes, slices).flatMap(
-                    lambda p, _s=suffix: _walk_prefix(p, _s)
-                ),
-                "s3_key string, file_size_bytes long",
-            )
-        else:
-            listed = local_df(
-                spark,
-                [r for p in prefixes for r in _walk_prefix(p, suffix)],
-                "s3_key string, file_size_bytes long",
-            )
-        discovered = discovered.unionByName(listed)
-    # register's anti-join and the straggler join share ONE listing: the
-    # fan-out runs a Python walk per prefix, so it is materialised once
-    # (by register's first action) instead of walked twice
+    # the index lists zero-byte files but drops them from every scan; when
+    # the planned scan (also no job) holds fewer files, add them back
+    scan = listing._jdf.queryExecution().sparkPlan()
+    if scan.selectedPartitions().totalNumberOfFiles() < n_listed:
+        empty = _zero_byte_files(listing)
+        discovered = discovered.unionByName(
+            local_df(spark, empty, "s3_key string, file_size_bytes long")
+        )
+    # register's anti-join and the straggler join share ONE listing scan
     discovered = discovered.persist()
     try:
         ledger = make_ledger(spark, conf)
@@ -224,6 +201,21 @@ def discover(
     finally:
         discovered.unpersist()
     return registered
+
+
+def _zero_byte_files(listing: DataFrame) -> list[tuple[str, int]]:
+    """(path, 0) of the listed files that are empty. They hold no rows, but
+    each still gets a ledger row, which ingest quarantines for good. A file
+    that vanished since the listing is skipped, as the scan skips it."""
+    rows = []
+    for uri in listing.inputFiles():
+        path = unquote(uri.removeprefix("file://").removeprefix("file:"))
+        try:
+            if os.path.getsize(path) == 0:
+                rows.append((path, 0))
+        except FileNotFoundError:
+            continue
+    return rows
 
 
 def _finish_interrupted_archives(ledger, discovered: DataFrame, conf: IngestConfig) -> None:
@@ -713,8 +705,6 @@ def write_dlq_summary(spark: SparkSession, conf: IngestConfig) -> DataFrame:
     sudo_code.txt:272 'Alarm if DLQ is being actively used'). An empty or
     absent DLQ — the healthy case — returns an empty frame; a DLQ that
     exists but cannot be read raises."""
-    from pyspark.errors import AnalysisException
-
     try:
         df = spark.read.json(os.path.join(conf.dlq_dir, "*"))
     except AnalysisException as exc:

@@ -1095,6 +1095,32 @@ def test_footer_stats_lossy_binary_returns_undecodable(tmp_path):
         assert rng is UNDECODABLE
 
 
+def test_footer_row_count_skips_file_removed_mid_publish(tmp_path, monkeypatch):
+    """The file-list footer row count sums ``num_rows`` and skips a listed
+    file that a racing publish removed before the read, instead of raising;
+    the IVF cell and LSH bucket statistics count through it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datalakejson_spark.footers import row_count
+    from datalakejson_spark.functions import ivf, lsh_index
+
+    cell, bucket = tmp_path / "cells" / "cell=3", tmp_path / "buckets" / "tb=0_1"
+    for part in (cell, bucket):
+        part.mkdir(parents=True)
+        pq.write_table(pa.table({"id": [1, 2, 3]}), str(part / "a.parquet"))
+        pq.write_table(pa.table({"id": [4, 5]}), str(part / "b.parquet"))
+    listed = ["a.parquet", "b.parquet", "gone.parquet"]
+    assert row_count(str(cell / f) for f in listed) == 5
+
+    monkeypatch.setattr(ivf, "_ivf_live_files", lambda d: {"cell=3": listed})
+    assert ivf.ivf_cell_rows(str(tmp_path)) == {3: 5}
+    monkeypatch.setattr(
+        lsh_index, "live_partition_files", lambda d, sub: {"tb=0_1": listed}
+    )
+    assert lsh_index.lsh_bucket_stats(str(tmp_path))["total_rows"] == 5
+
+
 def test_undecodable_stats_survive_the_sidecar_and_never_dirty(tmp_path):
     """The UNDECODABLE classification round-trips through the _RANGES.json
     sidecar cache, prunes as always-scan, and does NOT mark the file

@@ -490,50 +490,115 @@ def test_vacuum_replays_removes_stale_rows_physically(spark, ingest_conf, monkey
     assert vacuum_replays(spark, ingest_conf.curated_dir) == {}
 
 
+# file names that must reach the ledger byte-identical to their on-disk
+# paths: Spark's listing decodes its URIs, and a stray unquote would turn a
+# literal "%20" into a space
+AWKWARD_NAMES = (
+    "a b.json", "pct%20x.json", "p%41.json", "h#x.json", "c:o.json",
+    "q'x.json", 'dq"x.json', "bs\\x.json", "t\tx.json", "n\nx.json",
+    "qm?.json", "st*.json", "[a].json", "{b}.json", "ünï€.json",
+)
+
+
+def _walk_oracle(root: Path, suffix: str = ".json") -> dict[str, int]:
+    """(path -> size) of every ``*suffix`` file under ``root``, skipping
+    ``_``/``.``-prefixed files and directories like Spark's file index."""
+    out = {}
+    for base, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if name.endswith(suffix) and not name.startswith(("_", ".")):
+                p = os.path.join(base, name)
+                out[p] = os.path.getsize(p)
+    return out
+
+
 def test_discover_distributed_matches_driver(spark, tmp_path):
-    """S4 at 100 TB: the RDD-of-prefixes fan-out listing produces the exact
-    same (path, size) discovery set as the driver walk, over a deep tree
-    wide enough to trigger the fan-out automatically."""
-    from datalakejson_spark.plans.ingest import DISCOVERY_FANOUT_THRESHOLD
-
+    """S4 at 100 TB: the Spark file-index listing registers exactly the
+    (path, size) set a driver ``os.walk`` finds over a wide, deep tree —
+    including awkward file names, byte for byte — and skips ``_``/``.``
+    files and directories as the streaming plane's file source does."""
     root = tmp_path / "landing"
-    expect = set()
-    n_prefixes = DISCOVERY_FANOUT_THRESHOLD + 4
-    for i in range(n_prefixes):
+    for i in range(20):
         for j in range(3):
-            p = root / f"2024/week{i:02d}".replace("2024/", f"p{i:02d}/") / f"sub{j}" / f"f_{i}_{j}.json"
-            write_ndjson(p, [good_record(i * 10 + j)])
-            expect.add(str(p))
-    # a root-level file and a non-matching suffix that must be ignored
-    rf = root / "root_file.json"
-    write_ndjson(rf, [good_record(999)])
-    expect.add(str(rf))
+            write_ndjson(
+                root / f"p{i:02d}" / f"sub{j}" / f"f_{i}_{j}.json",
+                [good_record(i * 10 + j)],
+            )
+    for k, name in enumerate(AWKWARD_NAMES):
+        write_ndjson(root / f"p{k % 20:02d}" / name, [good_record(500 + k)])
+    # a root-level file and a zero-byte one (which no Spark scan reads)
+    # count; a non-matching suffix does not
+    write_ndjson(root / "root_file.json", [good_record(999)])
+    write_ndjson(root / "p02" / "empty %41 ü#.json", [])
     write_ndjson(root / "p00" / "notes.txt", ["not a landing file"])
+    hidden = [
+        root / "p01" / "_skip.json",
+        root / "p01" / ".skip.json",
+        root / "_dir" / "x.json",
+    ]
+    for p in hidden:
+        write_ndjson(p, [good_record(998)])
+    expect = _walk_oracle(root)
+    assert len(expect) == 20 * 3 + len(AWKWARD_NAMES) + 2
 
-    def conf_for(tag: str) -> IngestConfig:
+    conf = IngestConfig(
+        landing_dir=str(root),
+        curated_dir=str(tmp_path / "curated"),
+        dlq_dir=str(tmp_path / "dlq"),
+        archive_dir=str(tmp_path / "archive"),
+        ledger_dir=str(tmp_path / "ledger"),
+    )
+    assert discover(spark, conf) == len(expect)
+    got = {
+        r.s3_key: r.file_size_bytes
+        for r in Ledger(spark, conf.ledger_dir).read().collect()
+    }
+    assert got == expect  # identical paths AND sizes
+    assert not {str(p) for p in hidden} & set(got)
+    assert discover(spark, conf) == 0
+
+
+def test_discover_skips_file_archived_after_listing(spark, ingest_conf, monkeypatch):
+    """Race: another runner archives a landing file between the listing and
+    the scan that feeds register. The scan stats every listed file, so the
+    vanished one must be skipped (``ignoreMissingFiles``), not fail
+    discovery."""
+    expect = _walk_oracle(Path(ingest_conf.landing_dir))
+    victim = sorted(expect)[0]
+    real_register = Ledger.register
+
+    def archive_then_register(self, discovered):
+        os.remove(victim)
+        return real_register(self, discovered)
+
+    monkeypatch.setattr(Ledger, "register", archive_then_register)
+    assert discover(spark, ingest_conf) == len(expect) - 1
+    keys = {r.s3_key for r in Ledger(spark, ingest_conf.ledger_dir).read().collect()}
+    assert keys == set(expect) - {victim}
+
+
+def test_discover_missing_or_empty_landing_dir(spark, tmp_path):
+    """A missing landing dir and an empty one both register nothing. The
+    empty one is answered by the driver-side file index (0 Spark jobs), and
+    neither touches the ledger."""
+    def conf_for(landing: Path) -> IngestConfig:
         return IngestConfig(
-            landing_dir=str(root),
-            curated_dir=str(tmp_path / tag / "curated"),
-            dlq_dir=str(tmp_path / tag / "dlq"),
-            archive_dir=str(tmp_path / tag / "archive"),
-            ledger_dir=str(tmp_path / tag / "ledger"),
+            landing_dir=str(landing),
+            curated_dir=str(tmp_path / "curated"),
+            dlq_dir=str(tmp_path / "dlq"),
+            archive_dir=str(tmp_path / "archive"),
+            ledger_dir=str(tmp_path / "ledger"),
         )
 
-    conf_drv, conf_dist, conf_auto = conf_for("drv"), conf_for("dist"), conf_for("auto")
-    assert discover(spark, conf_drv, distributed=False) == len(expect)
-    assert discover(spark, conf_dist, distributed=True) == len(expect)
-    # auto mode picks the fan-out above the threshold — same result again
-    assert discover(spark, conf_auto) == len(expect)
-
-    def keys(conf: IngestConfig) -> dict[str, int]:
-        return {
-            r.s3_key: r.file_size_bytes
-            for r in Ledger(spark, conf.ledger_dir).read().collect()
-        }
-
-    k_drv, k_dist = keys(conf_drv), keys(conf_dist)
-    assert set(k_drv) == expect
-    assert k_drv == k_dist == keys(conf_auto)  # identical paths AND sizes
+    assert discover(spark, conf_for(tmp_path / "missing")) == 0
+    empty = tmp_path / "empty"
+    (empty / "2024" / "week01").mkdir(parents=True)
+    n, jobs = _jobs_of(
+        spark, f"{tmp_path.name}-empty", lambda: discover(spark, conf_for(empty))
+    )
+    assert (n, jobs) == (0, 0)
+    assert not (tmp_path / "ledger").exists()
 
 
 def test_archive_failure_after_commit_is_swept_by_discover(spark, ingest_conf, monkeypatch):
@@ -1092,15 +1157,12 @@ def test_ledger_transition_job_budget(spark, tmp_path):
 
 
 def test_discover_job_budget(spark, tmp_path):
-    """Discovery over a fanned-out zone (>= DISCOVERY_FANOUT_THRESHOLD
-    prefixes) stays within its job budget: the AQE stages of register's
-    anti-join and write and of the interrupted-archive sweep's join. Both
-    read one persisted listing instead of each re-running the per-prefix
-    walk."""
-    from datalakejson_spark.plans.ingest import DISCOVERY_FANOUT_THRESHOLD
-
+    """Discovery over a wide zone (19 prefixes) stays within its job
+    budget: the AQE stages of register's anti-join and write and of the
+    interrupted-archive sweep's join. Both read one persisted listing
+    instead of each re-scanning the landing zone."""
     root = tmp_path / "landing"
-    for i in range(DISCOVERY_FANOUT_THRESHOLD + 3):
+    for i in range(19):
         write_ndjson(root / f"p{i:02d}" / f"f{i}.json", [good_record(i)])
     conf = IngestConfig(
         landing_dir=str(root),
@@ -1111,7 +1173,7 @@ def test_discover_job_budget(spark, tmp_path):
     )
     group = f"{tmp_path.name}-discover"
     n, jobs = _jobs_of(spark, group, lambda: discover(spark, conf))
-    assert n == DISCOVERY_FANOUT_THRESHOLD + 3
+    assert n == 19
     assert jobs <= 8, jobs
     # rediscovery registers nothing and stays within the same budget
     n2, jobs2 = _jobs_of(spark, f"{group}-again", lambda: discover(spark, conf))
