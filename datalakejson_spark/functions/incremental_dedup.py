@@ -7,15 +7,18 @@ The scale-correct pattern is an *index + delta* loop:
    per batch: the exact-hash index (distinct ``md5(text)``, 32 bytes/doc)
    and the LSH band index (``(doc_id, band, band_hash)``,
    NUM_BANDS rows/doc — the same table ``dedup.band_table`` builds).
-2. Each new batch is audited with two semi-join probes: exact collisions on
-   the content hash, near collisions on ``(band, band_hash)`` buckets. Both
-   joins key on fixed-width hashes — document text never shuffles, the probe
-   cost is O(delta + collisions) regardless of corpus size, and both are
-   plain shuffle joins that AQE/bloom-pruning accelerate for a small delta
-   against a huge index.
-3. Survivors' hashes/bands are appended to the indexes (one pipeline, reused
-   from the audit via the shared band table) — the loop invariant that keeps
-   batch N+1 as cheap as batch N.
+2. Each new micro-batch is decided on the driver: one job collects its
+   text hashes and band rows, the driver drops within-batch copies, and
+   one key-filtered scan of the range-pruned indexes returns only the
+   colliding keys — exact collisions on the content hash, near collisions
+   on ``(band, band_hash)`` buckets. Both key on fixed-width hashes, so
+   document text never shuffles and the probe costs O(batch keys x rows
+   per pruned file) regardless of corpus size. ``dedup_audit`` is the
+   same audit as a Spark plan (two flipped broadcast semi-join probes),
+   for deltas that are not driver-bounded.
+3. Survivors' hashes/bands are appended to the indexes from the same
+   collected rows — the loop invariant that keeps batch N+1 as cheap as
+   batch N.
 
 This is the row-level generalization of the reference's file-level
 idempotency loop (``ON CONFLICT DO NOTHING`` per file, sudo_code.txt:90;
@@ -38,7 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from datalakejson_spark import publish
 from datalakejson_spark.footers import UNDECODABLE, _Undecodable, dir_stats
 from datalakejson_spark.footers import footer_stats as _footer_stats
-from datalakejson_spark.functions.dedup import band_table, minhash_signatures
+from datalakejson_spark.functions.dedup import (
+    band_table,
+    keep_first_distinct,
+    minhash_signatures,
+)
 from datalakejson_spark.fsutil import atomic_write_json
 from datalakejson_spark.plans.killpoints import fire
 from datalakejson_spark.publish import STAGING as _STAGING
@@ -48,6 +55,7 @@ from datalakejson_spark.publish import (
     is_missing_file_error,
 )
 from datalakejson_spark.registry import register
+from datalakejson_spark.session import local_df, sql_in
 from datalakejson_spark.sources.tables import load_table
 
 _LOG = logging.getLogger(__name__)
@@ -168,17 +176,17 @@ def _read_index_pair_pruned(
                 "BOTH index dirs to rebuild from scratch."
             )
         stats[sub] = (len(selected), total)
+        # the fixed schema spares each read its schema-inference job
+        reader = spark.read.schema(schemas[sub])
         if len(selected) > (1 - PRUNE_MIN_SKIP_FRACTION) * total:
             # not enough skippable to beat the explicit-list read's
             # per-root listing cost — plain directory read
             stats[sub] = (total, total)
-            out[sub] = spark.read.parquet(live)
+            out[sub] = reader.parquet(live)
         elif not selected:
             out[sub] = spark.createDataFrame([], schemas[sub])
         else:
-            out[sub] = spark.read.parquet(
-                *(os.path.join(live, n) for n in selected)
-            )
+            out[sub] = reader.parquet(*(os.path.join(live, n) for n in selected))
     return out["hashes"], out["bands"], stats
 
 
@@ -1450,16 +1458,12 @@ def dedup_audit(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_delta: bool = True,
-    precomputed_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Per-delta-document audit against the corpus indexes:
-    ``(id, is_exact_dup, is_near_dup, kept)``.
-
-    ``precomputed_bands``: the delta's band table, if the caller already
-    materialized it (ingest_batch_dedup does, for driver-side probe
-    planning) — passing it avoids recomputing the minhash pipeline inside
-    the audit plan. Must be exactly ``band_table(minhash_signatures(delta,
-    text_col, id_col), id_col)``.
+    ``(id, is_exact_dup, is_near_dup, kept)``, as one Spark plan. The
+    micro-batch loop (:func:`ingest_batch_dedup`) makes the same decision
+    on the driver; this plan serves l15 and audits of deltas too big to
+    collect.
 
     ``is_exact_dup``: the text hash already exists in the corpus.
     ``is_near_dup``: at least one LSH band collides with a corpus document
@@ -1484,8 +1488,8 @@ def dedup_audit(
 
     ``broadcast_delta`` (default True) forces the broadcast hints: every
     broadcast side is delta-derived, so the bound is the DELTA's key count
-    — the right posture for the incremental loop, where the delta is one
-    micro-batch (maxFilesPerTrigger). The hints bypass Spark's size
+    — the right posture for a delta of one micro-batch
+    (maxFilesPerTrigger). The hints bypass Spark's size
     safety, so a BULK caller whose delta is itself corpus-scale (a
     backfill re-audit of ~10^7+ documents → NUM_BANDS× that in band keys)
     must pass ``broadcast_delta=False``: the flipped orientation is kept
@@ -1505,11 +1509,7 @@ def dedup_audit(
         .distinct()
         .withColumn("_e", F.lit(True))
     )
-    delta_bands = (
-        precomputed_bands
-        if precomputed_bands is not None
-        else band_table(minhash_signatures(delta, text_col, id_col), id_col)
-    )
+    delta_bands = band_table(minhash_signatures(delta, text_col, id_col), id_col)
     hit_buckets = (
         corpus_bands.select(*BAND_KEY)
         .join(
@@ -1538,26 +1538,6 @@ def dedup_audit(
             .alias("kept"),
         )
     )
-
-
-def dedup_within_batch(
-    delta: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Intra-batch dedup: the corpus probes (dedup_audit) compare the delta
-    against the INDEXES only, so two copies arriving in the SAME batch both
-    pass a corpus-only audit. This stage removes them first — exact dups by
-    content hash (keep lowest id), near dups by LSH candidate pairs over the
-    batch itself (drop the higher id of each colliding pair). Batch-sized
-    work: the self-join is over one micro-batch, never the corpus."""
-    from datalakejson_spark.functions.dedup import (
-        keep_first_distinct,
-        lsh_candidate_pairs,
-    )
-
-    uniq = keep_first_distinct(delta, text_col, id_col)
-    pairs = lsh_candidate_pairs(minhash_signatures(uniq, text_col, id_col), id_col)
-    losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return uniq.join(losers, id_col, "left_anti")
 
 
 COMPACT_TARGET_ROWS_PER_FILE = 1_000_000
@@ -1648,12 +1628,11 @@ def ingest_batch_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     on_kept=None,
-    broadcast_delta: bool = True,
     compact_max_runs: int | None = COMPACT_MAX_RUNS,
     compact_target_rows_per_file: int | None = None,
 ) -> DataFrame:
     """One loop iteration over a parquet-persisted index pair under
-    ``index_dir`` (``hashes/``, ``bands/``): dedup within the batch, audit
+    ``index_dir`` (``hashes/``, ``bands/``): dedup within the batch, probe
     the remainder against the indexes, deliver the survivors, THEN append
     their hashes/bands. Returns the surviving rows (full columns).
 
@@ -1672,7 +1651,7 @@ def ingest_batch_dedup(
     (errorClass PATH_NOT_FOUND, on both paths) falls back to the bootstrap —
     a half-present pair, an emptied dir, or any other read failure raises,
     because auditing against accidentally-empty indexes would silently
-    re-ingest the whole corpus as "novel" (see _read_index_pair).
+    re-ingest the whole corpus as "novel" (see _read_index_pair_pruned).
 
     The two index appends commit atomically-in-effect: both deltas are
     staged under ``{index_dir}/_staging/<token>/`` with a ``_COMMITTED``
@@ -1680,15 +1659,18 @@ def ingest_batch_dedup(
     call first rolls forward any committed-but-unpublished stage from a
     crashed predecessor, so the hash and band indexes can never drift apart.
 
-    Probe planning (round 11): in the micro-batch posture
-    (``broadcast_delta=True``) the delta's distinct text-hash and band-hash
-    key sets — already driver-bounded, they are the broadcast sides — are
-    collected once and used to range-prune the index READ via the
-    cached footer ranges, so each audit scans only the index
-    files whose key range can contain a delta key (sound: a skipped file
-    provably holds no collision). The bulk posture skips pruning — a
-    corpus-proportional delta's key set is not driver-collectable, and it
-    touches every file anyway.
+    The decision is planned on the driver; the delta must be one bounded
+    micro-batch. One job collects each document's text hash and LSH band
+    rows (the shingle→minhash pipeline runs once, in Spark). The driver
+    drops within-batch near dups — every id above the minimum id of its
+    ``(band, band_hash)`` bucket — and probes the index with the
+    survivors' keys: one scan of the range-pruned index files (only files
+    whose cached footer key range can hold a key), filtered by an ``IN``
+    list of text hashes and a broadcast semi-join on the band keys,
+    collecting only the distinct colliding keys.
+    A survivor with no colliding key is kept, and both index appends are
+    written from the collected rows. A corpus-scale backfill goes through
+    :func:`rebuild_index` instead.
 
     Compaction is loop POLICY, not a manual facade call (round 11): after
     the appends publish, if either live subdir holds more than
@@ -1708,143 +1690,109 @@ def ingest_batch_dedup(
     """
     _publish_staged(index_dir)  # roll forward a crashed predecessor first
     _check_lane_meta(index_dir)
-    delta_bands = None
-    if broadcast_delta:
-        # Micro-batch posture (r16, guide §1.2): the shingle→md5→minhash
-        # pipeline is the batch's dominant compute, and the r15 shape ran it
-        # TWICE — once inside dedup_within_batch (the within-batch LSH
-        # self-join) and again to build the survivors' band table. It now
-        # runs ONCE: the full batch's band table is materialized first and
-        # reused for (a) the within-batch candidate pairs (the identical
-        # self-join lsh_candidate_pairs performs, over the checkpointed
-        # table), (b) the corpus near-dup probe, (c) the survivors' index
-        # append, and (d) the driver-side probe keys. Band rows are
-        # per-document and deterministic, so filtering the batch table to
-        # within-batch survivors yields exactly band_table(minhash_signatures
-        # (survivors)) — the same argument the survivors' append already
-        # relied on. Probe keys are collected in ONE job (tagged union of
-        # the two checkpointed key sets) instead of two; collecting them is
-        # bounded by the delta, the same order as the broadcast that ships
-        # them to every executor anyway.
-        from datalakejson_spark.functions.dedup import keep_first_distinct
-
-        uniq = keep_first_distinct(delta, text_col, id_col).localCheckpoint(
-            eager=False
+    uniq = keep_first_distinct(delta, text_col, id_col).localCheckpoint(
+        eager=False
+    )
+    # Spread the micro-batch across the cluster before the per-row
+    # pipeline: the checkpointed uniq frame is typically 1-2 post-AQE
+    # partitions (a micro-batch), which would run the whole shingle
+    # pipeline on one core; a micro-batch stays micro at any corpus scale,
+    # so the exchange is O(batch) by contract (measured 1.5× on the
+    # pipeline job; bit-identical — min/band aggregates are per-document).
+    spread = uniq.repartition(
+        delta.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+    )
+    # ONE job materializes uniq and runs the shingle→minhash pipeline once:
+    # a tagged union of each doc's text hash (band -1) and its band rows.
+    rows = (
+        uniq.select(id_col, F.md5(text_col).alias("k"), F.lit(-1).alias("band"))
+        .unionAll(
+            band_table(minhash_signatures(spread, text_col, id_col), id_col)
+            .select(id_col, F.col("band_hash").alias("k"), "band")
         )
-        # Spread the micro-batch across the cluster before the per-row
-        # pipeline (guide §2.5): the checkpointed uniq frame is typically
-        # 1-2 post-AQE partitions (a micro-batch), which would run the
-        # whole shingle pipeline on one core; a micro-batch stays micro at
-        # any corpus scale, so the exchange is O(batch) by contract
-        # (measured 1.5× on the pipeline job; bit-identical — min/band
-        # aggregates are per-document).
-        spread = uniq.repartition(
-            delta.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-        )
-        batch_bands = band_table(
-            minhash_signatures(spread, text_col, id_col), id_col
-        ).localCheckpoint(eager=True)
-        band_a, band_b = batch_bands.alias("a"), batch_bands.alias("b")
-        losers = (
-            band_a.join(
-                band_b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(F.col(f"b.{id_col}").alias(id_col))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # One materialization of the within-batch survivor set: it feeds the
-        # audit (twice), the kept join, and the key collection — lazy, so it
-        # materializes inside the key-collect job below (no separate job).
-        batch_uniq = uniq.join(losers, id_col, "left_anti").localCheckpoint(
-            eager=False
-        )
-        delta_bands = batch_bands.join(losers, id_col, "left_anti").localCheckpoint(
-            eager=False
-        )
-        keys = (
-            batch_uniq.select(F.md5(text_col).alias("k"), F.lit(0).alias("t"))
-            .distinct()
-            .unionAll(
-                delta_bands.select(F.col("band_hash").alias("k"), F.lit(1).alias("t"))
-                .distinct()
-            )
-            .collect()
-        )
-        hash_keys = [r.k for r in keys if r.t == 0]
-        band_keys = [r.k for r in keys if r.t == 1]
-    else:
-        # Bulk posture: a corpus-proportional delta's band table is too big
-        # to pin with localCheckpoint; keep the single-plan within-batch
-        # dedup (the pipeline recompute is amortized by the backfill's own
-        # scale, and the audit skips pruning anyway).
-        batch_uniq = dedup_within_batch(delta, id_col, text_col).localCheckpoint(
-            eager=True
-        )
-    # The audit reads a SNAPSHOT of the live index files; a CONCURRENT
+        .collect()
+    )
+    rows = [r for r in rows if r[0] is not None]  # a NULL id is never kept
+    text_hash = {r[0]: r[1] for r in rows if r[2] < 0}
+    doc_bands = [(r[0], r[2], r[1]) for r in rows if r[2] >= 0]
+    # Within-batch near dups: every id above the minimum id of its
+    # (band, band_hash) bucket — the higher id of each colliding pair.
+    bucket_min: dict = {}
+    losers = set()
+    for doc, band, h in sorted(doc_bands, key=lambda b: b[0]):
+        if h is not None and bucket_min.setdefault((band, h), doc) != doc:
+            losers.add(doc)
+    survivors = [doc for doc in text_hash if doc not in losers]
+    survivor_bands = [b for b in doc_bands if b[0] not in losers]
+    hash_keys = sorted({text_hash[d] for d in survivors} - {None})
+    band_keys = sorted({(b, h) for _d, b, h in survivor_bands if h is not None})
+    # The probe reads a SNAPSHOT of the live index files; a CONCURRENT
     # maintenance publish (compaction/rebuild on another runner) may delete
     # a subsumed file mid-job, failing the read with a missing-file error.
-    # The audit is pure (no writes happen until after the survivor set is
-    # checkpointed below), so the fix is a bounded re-plan from a fresh
-    # listing — the publish is driver-side file moves, so a second snapshot
-    # is consistent with overwhelming probability (round 12).
+    # The probe is pure (nothing is written until the decision is made), so
+    # the fix is a bounded re-plan from a fresh listing — the publish is
+    # driver-side file moves, so a second snapshot is consistent with
+    # overwhelming probability.
     for attempt in range(3):
         try:
-            if broadcast_delta:
-                corpus_hashes, corpus_bands, _ = _read_index_pair_pruned(
-                    spark, index_dir, id_col, hash_keys, band_keys
-                )
-            else:
-                corpus_hashes, corpus_bands = _read_index_pair(
-                    spark, index_dir, id_col
-                )
-            audit = dedup_audit(
-                batch_uniq, corpus_hashes, corpus_bands, id_col, text_col,
-                broadcast_delta=broadcast_delta,  # False for bulk backfills
-                precomputed_bands=delta_bands,
+            corpus_hashes, corpus_bands, stats = _read_index_pair_pruned(
+                spark, index_dir, id_col, hash_keys, [h for _b, h in band_keys]
             )
-            # localCheckpoint (eager), NOT persist: the survivor set feeds
-            # three consumers (on_kept + two index appends), and the appends
-            # write to the very paths the audit reads. A persisted plan is
-            # recomputed by Spark's CacheManager when a write refreshes
-            # those paths (recacheByPath), which would re-run the audit
-            # against an index that already contains the survivors' own
-            # hashes — every survivor becomes a "duplicate" of itself and
-            # the batch collapses to empty. Checkpointing materializes the
-            # decision first and cuts the lineage, so the subsequent appends
-            # cannot retroactively change it.
-            kept = batch_uniq.join(
-                audit.filter("kept").select(id_col), id_col, "leftsemi"
-            ).localCheckpoint(eager=True)
+            if not any(scanned for scanned, _total in stats.values()):
+                hits = set()  # bootstrap, or every index file pruned away
+                break
+            # A parsed IN list costs Catalyst time linear in its length (~1 s
+            # per 20k keys), so the band keys — four per document — ride a
+            # broadcast semi-join against a driver-built local relation. The
+            # text hashes stay an IN list: a second broadcast would be a
+            # second job. distinct bounds the collect by the batch's own keys
+            # even when the index holds a hot bucket.
+            hits = {
+                (r.band, r.k)
+                for r in corpus_hashes.filter(sql_in("text_hash", hash_keys))
+                .select(F.lit(-1).alias("band"), F.col("text_hash").alias("k"))
+                .unionAll(
+                    corpus_bands.select("band", F.col("band_hash").alias("k")).join(
+                        F.broadcast(local_df(spark, band_keys, "band int, k string")),
+                        ["band", "k"],
+                        "leftsemi",
+                    )
+                )
+                .distinct()
+                .collect()
+            }
             break
         except Exception as exc:  # noqa: BLE001 — retried narrowly below
             if attempt == 2 or not is_missing_file_error(exc):
                 raise
+    dups = {d for d in survivors if (-1, text_hash[d]) in hits} | {
+        d for d, band, h in survivor_bands if (band, h) in hits
+    }
+    kept_ids = [d for d in survivors if d not in dups]
+    # The decision is a literal id list over the checkpointed batch, so the
+    # appends below — which refresh the very paths the probe read — cannot
+    # re-run it against an index that already holds the survivors' own
+    # hashes (a plan over the index would be recomputed by the
+    # CacheManager's recacheByPath and collapse the batch to empty).
+    kept = uniq.filter(sql_in(id_col, kept_ids))
     if on_kept is not None:
         on_kept(kept)
     stage = os.path.join(index_dir, _STAGING, uuid.uuid4().hex)
-    # Micro-posture appends coalesce to ONE file per lane per batch (guide
-    # §6 small files): the batch is driver-bounded by contract, and the r16
-    # spread of the batch pipeline would otherwise fan each tiny append out
-    # to defaultParallelism files — 32× the footers every future pruned
-    # audit has to consider. Bulk backfills keep the planner's layout.
-    fan_in = (lambda df: df.coalesce(1)) if broadcast_delta else (lambda df: df)
-    fan_in(exact_hash_index(kept, text_col)).write.mode("overwrite").parquet(
-        os.path.join(stage, "hashes")
-    )
+    # Both appends are built from the collected rows, ONE file per lane per
+    # batch (every file is a footer the pruned probe must consider); a
+    # null-text survivor still contributes its NULL hash row, as
+    # exact_hash_index does.
+    hashes = local_df(spark, [(text_hash[d],) for d in kept_ids], "text_hash string")
+    hashes.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "hashes"))
     fire("dedup:after_hash_stage")  # half-staged pair: must never publish
-    kept_bands = (
-        # Survivors' bands = the already-materialized delta bands filtered
-        # to survivor ids (identical rows to recomputing the minhash
-        # pipeline over ``kept`` — band_table is deterministic per doc).
-        delta_bands.join(kept.select(id_col), id_col, "leftsemi")
-        if delta_bands is not None
-        else band_table(minhash_signatures(kept, text_col, id_col), id_col)
+    kept_set = set(kept_ids)
+    bands = local_df(
+        spark,
+        [b for b in survivor_bands if b[0] in kept_set],
+        f"`{id_col}` {uniq.schema[id_col].dataType.simpleString()}, "
+        "band int, band_hash string",
     )
-    fan_in(kept_bands).write.mode("overwrite").parquet(os.path.join(stage, "bands"))
+    bands.coalesce(1).write.mode("overwrite").parquet(os.path.join(stage, "bands"))
     fire("dedup:before_commit_marker")  # both staged, marker missing
     publish.commit_stage(stage)
     fire("dedup:after_commit_marker")  # committed, not yet published

@@ -163,6 +163,14 @@ def discover(spark: SparkSession, conf: IngestConfig) -> int:
     reconciliation point that finishes the move (sudo_code.txt:219-224's
     lost-file sweep, inverted). Returns newly registered file count."""
     configure_runtime(spark)
+    # "nothing has landed yet" is healthy: answer it from the landing dir's
+    # own FileSystem, before a load whose resolution would log a JVM
+    # FileNotFoundException. The PATH_NOT_FOUND catch below still covers a
+    # dir removed between this check and the scan.
+    sc = spark.sparkContext
+    root = sc._jvm.org.apache.hadoop.fs.Path(conf.landing_dir)
+    if not root.getFileSystem(sc._jsc.hadoopConfiguration()).exists(root):
+        return 0
     try:
         listing = (
             spark.read.format("binaryFile")

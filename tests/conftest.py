@@ -43,6 +43,17 @@ def write_ndjson(path: Path, records: list) -> Path:
     return path
 
 
+def jobs_of(spark, group: str, fn):
+    """Run ``fn`` under its own Spark job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture()
 def landing(tmp_path: Path) -> Path:
     """A reference-shaped landing zone: historical + weekly prefixes

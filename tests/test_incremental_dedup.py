@@ -1782,3 +1782,136 @@ def test_stats_caches_invalidate_on_publish(spark, tmp_path):
     assert set(d) == set(inc._live_files(live))
     ranges = inc._file_ranges(live, "text_hash")
     assert inc._ranges_disjoint(ranges)
+
+
+def _spy_collects(spark, monkeypatch) -> list[list]:
+    """Record the rows of every ``DataFrame.collect`` from now on."""
+    frame_cls = type(spark.range(1))
+    real, results = frame_cls.collect, []
+
+    def spy(self):
+        out = real(self)
+        results.append(out)
+        return out
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    return results
+
+
+def _reference_kept(spark, batch, idx: str) -> set[int]:
+    """The decision as Spark plans: keep-first-distinct, drop the higher id
+    of every colliding band pair, then ``dedup_audit`` against the full
+    index read."""
+    from datalakejson_spark.functions.dedup import (
+        keep_first_distinct,
+        lsh_candidate_pairs,
+    )
+    from datalakejson_spark.functions.incremental_dedup import _read_index_pair
+
+    uniq = keep_first_distinct(batch)
+    losers = lsh_candidate_pairs(minhash_signatures(uniq)).select(
+        F.col("doc_b").alias("doc_id")
+    )
+    survivors = uniq.join(losers, "doc_id", "left_anti")
+    hashes, bands = _read_index_pair(spark, idx, "doc_id")
+    return {r.doc_id for r in dedup_audit(survivors, hashes, bands).collect() if r.kept}
+
+
+def test_driver_decision_matches_spark_audit(spark, tmp_path, monkeypatch):
+    """The driver-planned micro-batch keeps exactly the ids the Spark-plan
+    audit keeps after the within-batch rule — over in-batch exact copies,
+    a near-dup chain, a null-text row, a NULL id, exact and near
+    collisions with the index, and a hot index bucket of 1,200 rows. The probe collects at
+    most one row per distinct batch key, however hot the bucket."""
+    import random
+
+    idx = str(tmp_path / "idx")
+    ingest_batch_dedup(
+        spark, _docs(spark, [(i, _distinct_text(i)) for i in range(12)]), idx
+    )
+    hot_doc = _distinct_text(900)
+    hot_hash = (
+        band_table(minhash_signatures(_docs(spark, [(1, hot_doc)])))
+        .filter("band = 0")
+        .first()
+        .band_hash
+    )
+    # a hot bucket: 1,200 index rows share the hot document's band-0 key
+    spark.createDataFrame(
+        [(10_000 + i, 0, hot_hash) for i in range(1_200)],
+        "doc_id bigint, band int, band_hash string",
+    ).coalesce(1).write.mode("append").parquet(f"{idx}/bands")
+    for seed in (7, 8):
+        rng = random.Random(seed)
+        base = 1_000 * seed
+        rows = [(base + i, _distinct_text(base + i)) for i in range(6)]
+        rows.append((base + 6, rows[0][1]))  # in-batch exact copy
+        chain_words = _distinct_text(base + 500).split() * 2
+        chain = range(base + 10, base + 16)
+        for doc in chain:  # near-dup chain: one word changed per document
+            words = list(chain_words)
+            words[rng.randrange(len(words))] = f"c{doc}"
+            rows.append((doc, " ".join(words)))
+        rows.append((base + 20, None))
+        rows.append((None, _distinct_text(base + 30)))  # a NULL id is never kept
+        rows.append((base + 21, _distinct_text(3)))  # exact hit on the index
+        rows.append((base + 22, _distinct_text(5) + " tail"))  # near hit
+        rows.append((base + 23, hot_doc))  # lands in the hot bucket
+        rng.shuffle(rows)
+        batch = _docs(spark, rows)
+        expect = _reference_kept(spark, batch, idx)
+        collects = _spy_collects(spark, monkeypatch)
+        kept = ingest_batch_dedup(spark, batch, idx, compact_max_runs=None)
+        monkeypatch.undo()
+        kept = {r.doc_id for r in kept.collect()}
+        assert kept == expect - {None}
+        assert kept & {base + 6, base + 21, base + 22, base + 23} == set()
+        # the first null-text doc is novel; every later one shares its
+        # band signature, so it is a near dup of the indexed first
+        assert (base + 20 in kept) == (seed == 7)
+        assert 1 <= len(kept & set(chain)) < len(chain)
+        batch_rows, probe_rows = collects
+        batch_keys = {(r.band, r.k) for r in batch_rows if r.k is not None}
+        assert len(probe_rows) <= len(batch_keys) < 1_200
+
+
+def test_micro_batch_job_budget(spark, tmp_path, monkeypatch):
+    """A micro-batch is one collect of the batch's hash and band rows, one
+    collect of the pruned index probe, and one write per index lane. The
+    bootstrap batch has no index to probe, so it collects once."""
+    from datalakejson_spark.functions.incremental_dedup import (
+        _live_files,
+        derive_runs,
+    )
+    from tests.conftest import jobs_of
+
+    idx = str(tmp_path / "idx")
+    tag = tmp_path.name
+    collects = _spy_collects(spark, monkeypatch)
+    kept, boot_jobs = jobs_of(
+        spark,
+        f"{tag}-boot",
+        lambda: ingest_batch_dedup(
+            spark, _docs(spark, [(k, _distinct_text(k)) for k in range(6)]), idx
+        ),
+    )
+    assert len(collects) == 1  # the batch's rows; no probe
+    monkeypatch.undo()
+    assert kept.count() == 6
+    for b in (1, 2):
+        ingest_batch_dedup(
+            spark,
+            _docs(spark, [(b * 6 + k, _distinct_text(b * 6 + k)) for k in range(6)]),
+            idx,
+        )
+    assert len(derive_runs(_live_files(f"{idx}/bands"))) == 3
+    batch = _docs(
+        spark,
+        [(100, _distinct_text(100)), (101, _distinct_text(4)), (102, None)],
+    )
+    kept, jobs = jobs_of(
+        spark, f"{tag}-steady", lambda: ingest_batch_dedup(spark, batch, idx)
+    )
+    assert sorted(r.doc_id for r in kept.collect()) == [100, 102]
+    assert boot_jobs <= 6, boot_jobs
+    assert jobs <= 8, jobs

@@ -19,7 +19,7 @@ from datalakejson_spark.plans.ingest import (
     run_until_drained,
 )
 from datalakejson_spark.plans.ledger import Ledger, LedgerStatus
-from tests.conftest import good_record, write_ndjson
+from tests.conftest import good_record, jobs_of, write_ndjson
 
 
 def test_discover_registers_pending_idempotently(spark, ingest_conf):
@@ -580,7 +580,8 @@ def test_discover_skips_file_archived_after_listing(spark, ingest_conf, monkeypa
 
 def test_discover_missing_or_empty_landing_dir(spark, tmp_path):
     """A missing landing dir and an empty one both register nothing. The
-    empty one is answered by the driver-side file index (0 Spark jobs), and
+    missing one is answered by a FileSystem existence check before any
+    load, the empty one by the driver-side file index (0 Spark jobs), and
     neither touches the ledger."""
     def conf_for(landing: Path) -> IngestConfig:
         return IngestConfig(
@@ -591,10 +592,22 @@ def test_discover_missing_or_empty_landing_dir(spark, tmp_path):
             ledger_dir=str(tmp_path / "ledger"),
         )
 
-    assert discover(spark, conf_for(tmp_path / "missing")) == 0
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real_load, loads = DataFrameReader.load, []
+
+    def spy_load(self, *args, **kwargs):
+        loads.append(args)
+        return real_load(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameReader, "load", spy_load)
+        assert discover(spark, conf_for(tmp_path / "missing")) == 0
+    # answered by the FileSystem check: no load, so no JVM stack trace
+    assert loads == []
     empty = tmp_path / "empty"
     (empty / "2024" / "week01").mkdir(parents=True)
-    n, jobs = _jobs_of(
+    n, jobs = jobs_of(
         spark, f"{tmp_path.name}-empty", lambda: discover(spark, conf_for(empty))
     )
     assert (n, jobs) == (0, 0)
@@ -1101,17 +1114,6 @@ def test_retirement_grace_is_publish_count_based(spark, tmp_path, monkeypatch):
             )
 
 
-def _jobs_of(spark, group: str, fn):
-    """Run ``fn`` under its own Spark job group; return (result, job count)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_ledger_transition_job_budget(spark, tmp_path):
     """A list-keyed ledger transition is one bounded probe plus one write:
     a claim is one collect of the claimable keys and one snapshot write; a
@@ -1122,7 +1124,7 @@ def test_ledger_transition_job_budget(spark, tmp_path):
     led.register(_synth_files(spark, 0, 40))
     tag = tmp_path.name
 
-    slow, n_claim = _jobs_of(
+    slow, n_claim = jobs_of(
         spark, f"{tag}-claim", lambda: led.claim_batch(10, "run-slow")
     )
     assert len(slow) == 10
@@ -1131,7 +1133,7 @@ def test_ledger_transition_job_budget(spark, tmp_path):
     fast = led.claim_batch(10, "run-fast", stale_lease_s=0.0)
     assert sorted(fast) == sorted(slow)
 
-    fenced, n_fenced = _jobs_of(
+    fenced, n_fenced = jobs_of(
         spark,
         f"{tag}-fenced",
         lambda: led.apply_outcomes(
@@ -1142,7 +1144,7 @@ def test_ledger_transition_job_budget(spark, tmp_path):
     assert n_fenced == 1, n_fenced
 
     # 10 of 40 rows turn terminal (> 5%): probe + active write + segment
-    _, n_split = _jobs_of(
+    _, n_split = jobs_of(
         spark,
         f"{tag}-split",
         lambda: led.apply_outcomes(
@@ -1172,11 +1174,11 @@ def test_discover_job_budget(spark, tmp_path):
         ledger_dir=str(tmp_path / "ledger"),
     )
     group = f"{tmp_path.name}-discover"
-    n, jobs = _jobs_of(spark, group, lambda: discover(spark, conf))
+    n, jobs = jobs_of(spark, group, lambda: discover(spark, conf))
     assert n == 19
     assert jobs <= 8, jobs
     # rediscovery registers nothing and stays within the same budget
-    n2, jobs2 = _jobs_of(spark, f"{group}-again", lambda: discover(spark, conf))
+    n2, jobs2 = jobs_of(spark, f"{group}-again", lambda: discover(spark, conf))
     assert n2 == 0
     assert jobs2 <= 8, jobs2
 
@@ -1209,6 +1211,37 @@ def test_ledger_transitions_match_awkward_keys(spark, tmp_path):
         **{k: (LedgerStatus.SUCCEEDED, 1) for k in done},
         **{k: (LedgerStatus.FAILED, 1) for k in failed},
     }
+
+
+def test_sql_in_renders_awkward_literals(spark):
+    """``sql_in`` parses one IN list: string literals with quotes,
+    backslashes and non-ASCII characters match themselves exactly,
+    integers render bare, ``None`` is dropped and an empty list is
+    FALSE."""
+    from datalakejson_spark.session import sql_in
+
+    texts = [
+        "it's",
+        'double"quote',
+        "back\\slash",
+        "trailing\\",
+        "\\'",
+        "sp ace\tand\nnewline",
+        "ünïcødé ✓",
+        "%41 \\u0041",
+    ]
+    words = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts + ["plain", "back\\\\slash"])],
+        "id bigint, s string",
+    )
+    got = {r.s for r in words.filter(sql_in("s", texts + [None])).collect()}
+    assert got == set(texts)
+    ids = {r.id for r in words.filter(sql_in("id", [0, 3, None, 2**40])).collect()}
+    assert ids == {0, 3}
+    assert words.filter(sql_in("s", [])).count() == 0
+    assert words.filter(sql_in("s", [None])).count() == 0
+    with pytest.raises(TypeError):
+        sql_in("id", [1.5])
 
 
 def test_bulk_flip_by_dataframe(spark, tmp_path):
