@@ -958,11 +958,10 @@ def compact_index(
                 continue
             key = _PRUNE_KEY[sub]
             # Ranges + per-file row counts from the same sidecar/footer cache —
-            # driver-side metadata, no Spark job (the ledger's
-            # _active_row_count pattern: layout decisions must never cost a
-            # scan of the data they're about). A file whose footer won't read
-            # gets rows=None (treated as target-sized for the layout checks;
-            # never the reason for a rewrite on its own).
+            # driver-side metadata, no Spark job (layout decisions must
+            # never cost a scan of the data they're about). A file whose
+            # footer won't read gets rows=None (treated as target-sized for
+            # the layout checks; never the reason for a rewrite on its own).
             stats = _file_stats(live, key)
             ranges = {f: rng for f, (rng, _r) in stats.items()}
             rows = {f: r for f, (_rng, r) in stats.items()}
@@ -1509,7 +1508,12 @@ def dedup_audit(
         .distinct()
         .withColumn("_e", F.lit(True))
     )
-    delta_bands = band_table(minhash_signatures(delta, text_col, id_col), id_col)
+    # NULL and empty texts share one signature: they get no band rows, so
+    # one indexed document cannot make every later one a near dup
+    delta_bands = band_table(
+        minhash_signatures(delta.filter(F.length(text_col) > 0), text_col, id_col),
+        id_col,
+    )
     hit_buckets = (
         corpus_bands.select(*BAND_KEY)
         .join(
@@ -1704,11 +1708,16 @@ def ingest_batch_dedup(
     )
     # ONE job materializes uniq and runs the shingle→minhash pipeline once:
     # a tagged union of each doc's text hash (band -1) and its band rows.
+    # Only non-empty texts get band rows, as in dedup_audit.
     rows = (
         uniq.select(id_col, F.md5(text_col).alias("k"), F.lit(-1).alias("band"))
         .unionAll(
-            band_table(minhash_signatures(spread, text_col, id_col), id_col)
-            .select(id_col, F.col("band_hash").alias("k"), "band")
+            band_table(
+                minhash_signatures(
+                    spread.filter(F.length(text_col) > 0), text_col, id_col
+                ),
+                id_col,
+            ).select(id_col, F.col("band_hash").alias("k"), "band")
         )
         .collect()
     )

@@ -24,6 +24,8 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from datalakejson_spark.plans.ingest import read_curated
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # parquet sweet spot
 
 
@@ -75,7 +77,10 @@ def compact_partition(
     if n_out >= n_files and not zorder_cols:
         return False  # already at or below target granularity
 
-    df = spark.read.parquet(partition_dir)
+    # the union of the files' schemas, as for the whole lake: a plain read
+    # takes one footer's schema, and the rewrite would drop a column that a
+    # later file added by schema evolution
+    df = read_curated(spark, partition_dir)
     # staging/retired names are '.'-prefixed siblings: Spark's partition
     # discovery ignores dot/underscore-prefixed paths, so a crash that leaves
     # them behind (or a reader racing the swap) can never surface a duplicate
@@ -155,7 +160,7 @@ def vacuum_replays(spark: SparkSession, curated_dir: str) -> dict[str, int]:
 
     out: dict[str, int] = {}
     for part in list_partition_dirs(curated_dir):
-        df = spark.read.parquet(part)
+        df = read_curated(spark, part)  # every evolved column, as in compaction
         if "ingest_run_id" not in df.columns or "source_s3_path" not in df.columns:
             continue
         w = Window.partitionBy("source_s3_path")

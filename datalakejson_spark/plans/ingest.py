@@ -161,15 +161,13 @@ def discover(spark: SparkSession, conf: IngestConfig) -> int:
     commit so a reclaimer can never lose its landing copy mid-read) leaves
     the landing file behind with a SUCCEEDED ledger row; discovery is the
     reconciliation point that finishes the move (sudo_code.txt:219-224's
-    lost-file sweep, inverted). Returns newly registered file count."""
+    lost-file sweep, inverted). The snapshot ledger finds these files in
+    register's own join. Returns newly registered file count."""
     configure_runtime(spark)
-    # "nothing has landed yet" is healthy: answer it from the landing dir's
-    # own FileSystem, before a load whose resolution would log a JVM
-    # FileNotFoundException. The PATH_NOT_FOUND catch below still covers a
-    # dir removed between this check and the scan.
-    sc = spark.sparkContext
-    root = sc._jvm.org.apache.hadoop.fs.Path(conf.landing_dir)
-    if not root.getFileSystem(sc._jsc.hadoopConfiguration()).exists(root):
+    # "nothing has landed yet" is healthy: answer it before any load. The
+    # PATH_NOT_FOUND catch below still covers a dir removed between this
+    # check and the scan.
+    if not _exists(spark, conf.landing_dir):
         return 0
     try:
         listing = (
@@ -200,15 +198,24 @@ def discover(spark: SparkSession, conf: IngestConfig) -> int:
         discovered = discovered.unionByName(
             local_df(spark, empty, "s3_key string, file_size_bytes long")
         )
-    # register's anti-join and the straggler join share ONE listing scan
-    discovered = discovered.persist()
-    try:
-        ledger = make_ledger(spark, conf)
-        registered = ledger.register(discovered)
-        _finish_interrupted_archives(ledger, discovered, conf)
-    finally:
-        discovered.unpersist()
+    ledger = make_ledger(spark, conf)
+    if isinstance(ledger, Ledger):
+        # register's one join also returns the SUCCEEDED stragglers
+        return ledger.register(
+            discovered, on_succeeded=lambda keys: _archive_parallel(keys, conf)
+        )
+    registered = ledger.register(discovered)
+    _finish_interrupted_archives(ledger, discovered, conf)
     return registered
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Does ``path`` exist, asked of its own Hadoop FileSystem? A load of a
+    missing path would log a JVM FileNotFoundException stack trace before
+    failing, so the healthy "nothing there yet" cases ask first."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p)
 
 
 def _zero_byte_files(listing: DataFrame) -> list[tuple[str, int]]:
@@ -227,9 +234,10 @@ def _zero_byte_files(listing: DataFrame) -> list[tuple[str, int]]:
 
 
 def _finish_interrupted_archives(ledger, discovered: DataFrame, conf: IngestConfig) -> None:
-    """Archive any discovered landing file whose ledger row is already
+    """Archive any discovered landing file whose JDBC ledger row is already
     SUCCEEDED — the crash-after-commit-before-archive case. The semi join is
-    distributed; only the straggler list (normally empty) is collected."""
+    distributed; only the straggler list (normally empty) is collected. (The
+    snapshot ledger's register answers this from its own join.)"""
     stragglers = [
         r[0]
         for r in ledger.read()
@@ -711,16 +719,20 @@ def read_curated(spark: SparkSession, curated_dir: str) -> DataFrame:
 def write_dlq_summary(spark: SparkSession, conf: IngestConfig) -> DataFrame:
     """DLQ audit: corrupt rows per run per source file (monitoring surface,
     sudo_code.txt:272 'Alarm if DLQ is being actively used'). An empty or
-    absent DLQ — the healthy case — returns an empty frame; a DLQ that
-    exists but cannot be read raises."""
+    absent DLQ — the healthy case — returns an empty frame. The run dirs
+    are read recursively under the one column the audit needs, so neither
+    case logs a JVM stack trace and no schema-inference pass runs."""
+    empty = local_df(spark, [], "source_s3_path string, n_corrupt_rows long")
+    if not _exists(spark, conf.dlq_dir):
+        return empty  # no DLQ activity yet
     try:
-        df = spark.read.json(os.path.join(conf.dlq_dir, "*"))
+        df = (
+            spark.read.schema("source_s3_path string")
+            .option("recursiveFileLookup", "true")
+            .json(conf.dlq_dir)
+        )
     except AnalysisException as exc:
         if publish.error_condition(exc) != "PATH_NOT_FOUND":
             raise
-        df = None  # no DLQ activity yet
-    if df is None or "source_s3_path" not in df.columns:
-        return local_df(
-            spark, [], "source_s3_path string, n_corrupt_rows long"
-        )
+        return empty  # removed since the check
     return df.groupBy("source_s3_path").agg(F.count("*").alias("n_corrupt_rows"))

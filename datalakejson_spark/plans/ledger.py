@@ -11,8 +11,12 @@ RDS-free redesign (SURVEY.md §7.0): the ledger is a directory of immutable
 parquet snapshots plus a ``_LATEST`` pointer file. Updates write a new
 snapshot and atomically swap the pointer (single-file os.replace — POSIX
 atomic), so a crash mid-update leaves the previous snapshot intact: the
-reference's transactional UPDATE+COMMIT becomes snapshot-and-swap. Ledger
-DataFrame ops (anti-join registration, claim, status upsert) are plain Spark.
+reference's transactional UPDATE+COMMIT becomes snapshot-and-swap. A
+snapshot holds metadata rows only, so every read-modify-write runs on the
+driver in Arrow (``pyarrow.parquet`` + ``pyarrow.compute``), the way the
+reference's driver issues one SQL statement per transition: a Spark job's
+scheduling, Catalyst planning and single-task write cost more than the
+rows themselves. Spark reads the same files for ``read()``.
 
 Status-partitioned snapshot (round 8 — the measured fix for the ~4x10^6-file
 crossover in SCALE.md's ledger curve): the state is split into an ACTIVE part
@@ -28,17 +32,18 @@ falls back to one full compaction write; segment count is bounded by
 compaction at MAX_TERMINAL_SEGMENTS. Legacy single-snapshot pointers are read
 transparently and migrate to the split layout on their next write.
 
-Job budget per transition: on bounded metadata each Spark action is its own
-job, and the job count, not the data, sets the cost. A claim is one collect
-of the claimable keys plus one write. A list-keyed commit (``apply_outcomes``,
-``set_status`` with a list) is one bounded probe — the batch keys' current
-rows, collected — plus one write (two when it splits terminal rows into a
-segment). The probe alone yields the fenced-out keys, whether a terminal
-segment row is being transitioned, and the exact change to the deferred
-terminal count; the update is one projection stamped with a driver-side
-timestamp literal. Keys reach Spark as one parsed ``IN`` list, not one py4j
-literal each. DataFrame-keyed bulk flips (operational tools) join their keys
-instead and keep a count-based probe.
+Job budget: a claim and a list-keyed commit (``apply_outcomes``,
+``set_status`` with a list) launch no Spark job. A claim is a top-k over
+the active part; a commit reads the active part and the terminal segments
+whose footer key range can hold a batch key, derives the fenced-out keys,
+whether a terminal segment row moves, and the split decision on the
+driver, and writes one file (two when it splits terminal rows into a
+segment). ``register`` is one Spark left join of the discovery listing
+against the ledger keys, which collects only the unknown keys and the
+SUCCEEDED ones, followed by an Arrow append. A DataFrame-keyed bulk flip
+(operational tools) collects its key column, then transitions like a list.
+Snapshot files are written with microsecond UTC timestamps; Spark-written
+snapshots (INT96) are read too.
 
 Multi-runner semantics: the reference serializes concurrent claims with
 ``FOR UPDATE SKIP LOCKED`` (psuedo_code.txt:170-181). The filesystem analogue
@@ -60,14 +65,18 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from datalakejson_spark.footers import dir_stats
 from datalakejson_spark.fsutil import atomic_write_json, atomic_write_text
-from datalakejson_spark.session import local_df, sql_in
+from datalakejson_spark.session import local_df
 from pyspark.sql import types as T
 
 
@@ -125,61 +134,94 @@ LEDGER_SCHEMA = T.StructType(
 )
 
 
-def _owned(fence_run_id: str | None) -> Column:
-    """Does a row still carry the fence run_id? (Always, with no fence; a
-    NULL run_id is never owned.)"""
-    if fence_run_id is None:
-        return F.lit(True)
-    return F.coalesce(F.col("run_id") == F.lit(fence_run_id), F.lit(False))
+# The Arrow form of LEDGER_SCHEMA: what every snapshot file is written as,
+# and what a file of either writer is conformed to on read. Timestamps are
+# microseconds in UTC, which Spark reads back exactly as TimestampType (a
+# nanosecond file fails Spark's read under LEDGER_SCHEMA); Spark-written
+# snapshots hold INT96, which is read at microsecond precision.
+_TS = pa.timestamp("us", tz="UTC")
+ARROW_SCHEMA = pa.schema(
+    [
+        ("s3_key", pa.string()),
+        ("file_size_bytes", pa.int64()),
+        ("status", pa.string()),
+        ("retry_count", pa.int32()),
+        ("error_message", pa.string()),
+        ("first_discovered_at", _TS),
+        ("last_updated_at", _TS),
+        ("run_id", pa.string()),
+    ]
+)
+_TERMINAL = pa.array(TERMINAL_STATUSES, pa.string())
+
+
+def _now() -> pa.Scalar:
+    """The driver's clock as a ledger timestamp: one value per operation,
+    so every row an operation writes carries the same stamp."""
+    return pa.scalar(time.time_ns() // 1000, _TS)
+
+
+def _conform(table: pa.Table, schema: pa.Schema = ARROW_SCHEMA) -> pa.Table:
+    """``table``'s columns named by ``schema``, cast to its types (a
+    Spark-written INT96 column reads as naive microseconds, which are UTC)."""
+    return pa.table([table[f.name].cast(f.type) for f in schema], schema=schema)
+
+
+def _is_terminal(table: pa.Table) -> pa.ChunkedArray:
+    return pc.is_in(table["status"], value_set=_TERMINAL)
 
 
 def _transition(
-    df: DataFrame,
-    rules: list[tuple[Column, str, str | None]],
+    table: pa.Table,
+    rules: dict[str, tuple[str, str | None]],
     run_id: str | None,
     fence_run_id: str | None = None,
     increment_retry: bool = False,
-) -> DataFrame:
-    """The one status/fence update, as a projection over the ledger
-    columns: a row takes the first rule whose key test it matches — under a
-    fence only while it still carries ``fence_run_id`` — and gets that
-    rule's status and error, ``run_id`` (when given), retry_count+1 (when
-    asked) and a fresh ``last_updated_at``. The timestamp is a driver-side
-    UTC literal, so every write of one transition stamps the same value."""
-    owned = _owned(fence_run_id)
-    pick = None
-    for i, (test, _status, _msg) in enumerate(rules):
-        pick = (F.when if pick is None else pick.when)(test & owned, F.lit(i))
-    marked = df.withColumn("_rule", pick)
-    hit = F.col("_rule").isNotNull()
+) -> tuple[pa.Table, pa.ChunkedArray]:
+    """The one status/fence update over snapshot rows: a row whose key has a
+    rule — under a fence only while it still carries ``fence_run_id`` —
+    gets that rule's status and error, ``run_id`` (when given),
+    retry_count+1 (when asked) and a fresh ``last_updated_at``. Returns the
+    updated table and the per-row hit mask."""
+    keys = list(rules)
+    pos = pc.index_in(table["s3_key"], value_set=pa.array(keys, pa.string()))
+    hit = pc.is_valid(pos)
+    if fence_run_id is not None:
+        hit = pc.and_(hit, pc.fill_null(pc.equal(table["run_id"], fence_run_id), False))
 
-    def per_rule(values: list, current: str) -> Column:
-        out = F.col(current)
-        for i in reversed(range(len(values))):
-            out = F.when(F.col("_rule") == i, F.lit(values[i])).otherwise(out)
-        return out.alias(current)
+    def on_hit(value, name: str):
+        return pc.if_else(hit, value, table[name])
 
-    def on_hit(value: Column, current: str) -> Column:
-        return F.when(hit, value).otherwise(F.col(current)).alias(current)
+    def per_rule(values: list, name: str):
+        return on_hit(pc.take(pa.array(values, pa.string()), pos), name)
 
-    now = F.timestamp_micros(F.lit(time.time_ns() // 1000))
-    return marked.select(
-        "s3_key",
-        "file_size_bytes",
-        per_rule([status for _, status, _ in rules], "status"),
-        on_hit(F.col("retry_count") + 1, "retry_count") if increment_retry else "retry_count",
-        per_rule([msg for _, _, msg in rules], "error_message"),
-        "first_discovered_at",
-        on_hit(now, "last_updated_at"),
-        on_hit(F.lit(run_id), "run_id") if run_id is not None else "run_id",
-    )
+    retry = table["retry_count"]
+    columns = {
+        "s3_key": table["s3_key"],
+        "file_size_bytes": table["file_size_bytes"],
+        "status": per_rule([rules[k][0] for k in keys], "status"),
+        "retry_count": (
+            on_hit(pc.add(retry, pa.scalar(1, pa.int32())), "retry_count")
+            if increment_retry
+            else retry
+        ),
+        "error_message": per_rule([rules[k][1] for k in keys], "error_message"),
+        "first_discovered_at": table["first_discovered_at"],
+        "last_updated_at": on_hit(_now(), "last_updated_at"),
+        "run_id": (
+            on_hit(pa.scalar(run_id, pa.string()), "run_id")
+            if run_id is not None
+            else table["run_id"]
+        ),
+    }
+    return pa.table(columns, schema=ARROW_SCHEMA), hit
 
 
 # A runner that dies holding the lock must not wedge the fleet: locks whose
 # mtime is older than this are broken. A LIVE holder heartbeats the lockfile
 # mtime every LOCK_HEARTBEAT_S from a daemon thread, so lock age is decoupled
-# from how long the critical section runs (a ledger snapshot write is a full
-# Spark job and can far exceed any fixed budget under GC/FS stalls) — only a
+# from how long the critical section runs (register's join is a Spark job,
+# and any write can far exceed a fixed budget under GC/FS stalls) — only a
 # dead process stops touching its lock. 600 s therefore means "no heartbeat
 # for 10 minutes", not "critical section slower than 10 minutes".
 LOCK_STALE_S = 600.0
@@ -195,7 +237,7 @@ PROCESSING_LEASE_S = 1800.0
 class LedgerLockLost(RuntimeError):
     """The mutex token vanished mid-critical-section: a stale-break racer
     renamed our fresh lock away and its restore lost to a new acquirer
-    (see ``_break_if_stale``). ``overwrite`` raises this BEFORE the pointer
+    (see ``_break_if_stale``). ``_publish`` raises this BEFORE the pointer
     swap — nothing was published — and the public operations retry their
     whole read-modify-write under a fresh acquisition."""
 
@@ -370,51 +412,60 @@ class Ledger:
             return json.loads(txt)
         return None
 
-    def _current_parts(self) -> tuple[str | None, list[str], bool]:
-        """(active_version, terminal_segments, is_legacy). A legacy pointer
-        (pre-split: one bare version name) reads as the active part holding
-        ALL rows — including terminal ones — and migrates to the split
-        layout on its next write."""
+    def _current_parts(self) -> tuple[str | None, list[str]]:
+        """(active_version, terminal_segments). A legacy pointer (pre-split:
+        one bare version name) reads as the active part holding ALL rows —
+        including terminal ones — and migrates to the split layout on its
+        next write."""
         try:
             txt = self._pointer.read_text().strip()
         except FileNotFoundError:
-            return None, [], False
+            return None, []
         if not txt:
-            return None, [], False
+            return None, []
         if txt.startswith("{"):
             d = json.loads(txt)
-            return d.get("active"), list(d.get("terminal", [])), False
-        return txt, [], True
+            return d.get("active"), list(d.get("terminal", []))
+        return txt, []
 
-    def _deferred_terminal(self) -> int | None:
-        """Terminal rows currently riding in the active dir, or None when
-        unknowable (legacy pointer). List-keyed transitions keep it exact
-        (their probe sees every row they change); a count carried over from
-        an older pointer may overcount, which is safe — see _commit_active.
-        Pre-round-9 split pointers lack the field and never deferred, so 0
-        is exact for them."""
-        d = self._pointer_meta()
-        if d is None:
-            return None if self._pointer.exists() else 0
-        return int(d.get("deferred_terminal", 0))
+    def _data_files(self, dirname: str) -> list[Path]:
+        """The parquet files of one snapshot dir, skipping ``_``/``.`` names
+        as Spark's reader does (``_SUCCESS``, checksums, old sidecars)."""
+        return sorted(
+            p
+            for p in (self.root / dirname).iterdir()
+            if p.name.endswith(".parquet") and not p.name.startswith(("_", "."))
+        )
 
-    def _active_row_count(self) -> int | None:
-        """Row count of the active dir (see ``_dir_stats``)."""
-        active, _segs, legacy = self._current_parts()
-        if not active or legacy:
-            return None
-        return self._dir_stats(active)[1]
+    def _load(self, names: list[str], columns: list[str] | None = None) -> pa.Table:
+        """The rows of snapshot dirs as one Arrow table — driver-side, no
+        Spark job. Files of either writer are conformed to ARROW_SCHEMA (or
+        to its ``columns``)."""
+        schema = (
+            ARROW_SCHEMA
+            if columns is None
+            else pa.schema([ARROW_SCHEMA.field(c) for c in columns])
+        )
+        parts = [
+            _conform(
+                pq.read_table(
+                    f, columns=schema.names, coerce_int96_timestamp_unit="us"
+                ),
+                schema,
+            )
+            for n in names
+            for f in self._data_files(n)
+        ]
+        return pa.concat_tables(parts) if parts else schema.empty_table()
 
-    def _dir_stats(self, dirname: str) -> tuple[tuple[str, str] | None, int | None]:
-        """(s3_key range, row count) of a written parquet dir from its
-        FOOTERS (:func:`datalakejson_spark.footers.dir_stats`) — a
-        driver-side file-stat, no Spark job. A missing dir or unreadable
-        footer gives (None, None): the range is then unknown and so is the
-        count."""
+    def _key_range(self, dirname: str) -> tuple[str, str] | None:
+        """The s3_key range of a written parquet dir from its FOOTERS
+        (:func:`datalakejson_spark.footers.dir_stats`). A missing dir or
+        unreadable footer gives None: the range is then unknown."""
         try:
-            return dir_stats(str(self.root / dirname), "s3_key")
+            return dir_stats(str(self.root / dirname), "s3_key")[0]
         except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
-            return None, None
+            return None
 
     def _read_dirs(self, names: list[str]) -> DataFrame:
         paths = [str(self.root / n) for n in names]
@@ -423,7 +474,8 @@ class Ledger:
         return self.spark.read.schema(LEDGER_SCHEMA).parquet(*paths)
 
     def read(self) -> DataFrame:
-        active, segs, _legacy = self._current_parts()
+        """The whole ledger as a Spark DataFrame (monitor, tools, tests)."""
+        active, segs = self._current_parts()
         return self._read_dirs(([active] if active else []) + segs)
 
     # -- per-segment key ranges from the segment footers -------------------
@@ -434,14 +486,8 @@ class Ledger:
     # [min,max] s3_key range can contain a batch key, so probe cost tracks
     # batch locality instead of total history. A segment whose footer lacks
     # usable stats is conservatively probed. Segments written by older
-    # ledgers may still hold an underscore-named range sidecar file; Spark
-    # skips underscore files and nothing reads it.
-    def _key_bounds(self, keys: DataFrame) -> tuple[str | None, str | None]:
-        row = keys.agg(
-            F.min("s3_key").alias("kmin"), F.max("s3_key").alias("kmax")
-        ).first()
-        return (row.kmin, row.kmax) if row else (None, None)
-
+    # ledgers may still hold an underscore-named range sidecar file; no
+    # reader opens it.
     def _segs_for_keys(
         self, segs: list[str], kmin: str | None, kmax: str | None
     ) -> list[str]:
@@ -451,20 +497,14 @@ class Ledger:
             return []  # no keys — nothing can hit
         out = []
         for s in segs:
-            r = self._dir_stats(s)[0]
+            r = self._key_range(s)
             if r is None or (r[0] <= kmax and kmin <= r[1]):
                 out.append(s)
         return out
 
-    def _active_part(self) -> DataFrame:
-        """Contents of the active DIR (unfiltered: under a legacy pointer it
-        still holds terminal rows until the next write migrates them)."""
-        active, _segs, _legacy = self._current_parts()
-        return self._read_dirs([active] if active else [])
-
     def _owns_lock(self) -> bool:
         """Does the lockfile still carry this thread's mutex token? Outside a
-        mutex (direct overwrite in tests/tools) there is nothing to verify."""
+        mutex (direct writes in tests/tools) there is nothing to verify."""
         token = getattr(self._held, "token", None)
         if token is None:
             return True
@@ -473,46 +513,33 @@ class Ledger:
         except OSError:
             return False  # renamed/unlinked — dispossessed either way
 
-    def overwrite(self, df: DataFrame) -> None:
-        """Full-state last-writer-wins write (kept public; used by the rare
-        paths — terminal re-enqueue compaction, tools). Splits ``df`` by
-        status group into a fresh active part + ONE terminal segment: this
-        is also what compacts legacy layouts and folds accumulated
-        segments. A state with zero terminal rows publishes no segment
-        (ADVICE r8: never create empty segment dirs; ``_publish`` drops
-        it). The persist keeps the two filtered writes of a caller's
-        arbitrary ``df`` consistent."""
-        df = df.persist()
-        try:
-            self._publish(
-                df.filter(F.col("status").isin(*ACTIVE_STATUSES)),
-                [],
-                df.filter(F.col("status").isin(*TERMINAL_STATUSES)),
-                deferred_terminal=0,  # active part is status-filtered
-            )
-        finally:
-            df.unpersist()
+    def _rewrite_all(self, table: pa.Table) -> None:
+        """Full-state write (the rare path: a transition that moves a row
+        out of a terminal segment). Splits ``table`` by status group into a
+        fresh active part and ONE terminal segment, which also folds the
+        accumulated segments and migrates a legacy layout. A state with
+        zero terminal rows publishes no segment."""
+        term = _is_terminal(table)
+        self._publish(table.filter(pc.invert(term)), [], table.filter(term))
 
-    def _write_dir(self, df: DataFrame, name: str) -> None:
-        """Write one snapshot dir as a single parquet file. ``coalesce``,
-        not ``repartition``: the inputs are snapshot files, projections of
-        them or persisted frames, so the single task serializes no upstream
-        work, and the write stays one Spark job instead of a shuffle-map
-        job plus a result job."""
-        df.select([f.name for f in LEDGER_SCHEMA.fields]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(self.root / name))
+    def _write_dir(self, table: pa.Table, name: str) -> None:
+        """Write one snapshot dir as a single parquet file, with the footer
+        statistics that segment pruning reads."""
+        d = self.root / name
+        d.mkdir(exist_ok=True)
+        pq.write_table(_conform(table), str(d / "part-00000.parquet"))
 
     def _publish(
         self,
-        active_df: DataFrame,
+        active: pa.Table,
         segments: list[str],
-        new_segment_df: DataFrame | None = None,
-        deferred_terminal: int | None = None,
+        new_segment: pa.Table | None = None,
     ) -> None:
         """Write the active part (and optionally one appended terminal
         segment), fold segments when over MAX_TERMINAL_SEGMENTS, then
-        atomically swap the pointer and prune unreferenced dirs.
+        atomically swap the pointer and prune unreferenced dirs. The
+        pointer's ``deferred_terminal`` is the exact count of terminal rows
+        the written active part holds.
 
         Dispossession guard (the _break_if_stale restore race): immediately
         before the pointer swap, re-verify the lockfile still carries our
@@ -524,30 +551,22 @@ class Ledger:
         read-modify-write under a fresh acquisition."""
         ns = time.time_ns()
         version = f"v{ns}"
-        self._write_dir(active_df, version)
+        self._write_dir(active, version)
         segs = list(segments)
-        if new_segment_df is not None:
+        if new_segment is not None and new_segment.num_rows:
+            # never reference an empty segment
             seg = f"t{ns}"
-            self._write_dir(new_segment_df, seg)
-            if self._dir_stats(seg)[1] == 0:
-                # nothing reached a terminal status: never reference an
-                # empty segment (the footers say so without a count job)
-                shutil.rmtree(self.root / seg, ignore_errors=True)
-            else:
-                segs.append(seg)
+            self._write_dir(new_segment, seg)
+            segs.append(seg)
         if len(segs) > MAX_TERMINAL_SEGMENTS:
             merged = f"t{ns}c"
-            self._write_dir(self._read_dirs(segs), merged)
+            self._write_dir(self._load(segs), merged)
             segs = [merged]
         if not self._owns_lock():
             raise LedgerLockLost(
                 f"ledger lock {self._lockfile} stolen mid-write; snapshot "
                 f"{version} aborted before publish"
             )
-        if deferred_terminal is None:
-            # Preserve the current deferral bookkeeping (writes that cannot
-            # change the active dir's terminal content: register, claim).
-            deferred_terminal = self._deferred_terminal() or 0
         # Monotonic publish counter: read-increment under the mutex, so it
         # advances by exactly one per publish REGARDLESS of which machine's
         # clock minted the version name — the retirement grace counts these,
@@ -560,7 +579,7 @@ class Ledger:
                 {
                     "active": version,
                     "terminal": segs,
-                    "deferred_terminal": deferred_terminal,
+                    "deferred_terminal": pc.sum(_is_terminal(active)).as_py() or 0,
                     "publish_seq": seq,
                 }
             ),
@@ -654,43 +673,65 @@ class Ledger:
             atomic_write_json(str(retired_path), retired)
 
     # -- reference operations ----------------------------------------------
-    def register(self, discovered: DataFrame) -> int:
+    def register(
+        self,
+        discovered: DataFrame,
+        on_succeeded: Callable[[list[str]], None] | None = None,
+    ) -> int:
         """Idempotent insert of (s3_key, file_size_bytes) rows as PENDING —
-        the ``ON CONFLICT DO NOTHING`` anti-join (J1; sudo_code.txt:90).
-        Returns the number of newly registered files."""
+        the ``ON CONFLICT DO NOTHING`` insert (J1; sudo_code.txt:90).
+        Returns the number of newly registered files.
 
-        def body() -> int:
-            # The anti-join reads ALL keys (active + terminal — a completed
-            # file must not re-register), column-pruned to s3_key; the WRITE
-            # touches only the active part (new rows are all PENDING).
-            current = self.read()
-            now = F.current_timestamp()
-            fresh = (
-                discovered.select("s3_key", "file_size_bytes")
-                .dropDuplicates(["s3_key"])
-                .join(current.select("s3_key"), "s3_key", "left_anti")
-                .withColumn("status", F.lit(LedgerStatus.PENDING))
-                .withColumn("retry_count", F.lit(0))
-                .withColumn("error_message", F.lit(None).cast("string"))
-                .withColumn("first_discovered_at", now)
-                .withColumn("last_updated_at", now)
-                .withColumn("run_id", F.lit(None).cast("string"))
-            ).persist()  # count + publish: one anti-join execution
-            try:
-                n_new = fresh.count()
-                if n_new:
-                    _active, segs, legacy = self._current_parts()
-                    if legacy:
-                        self.overwrite(current.unionByName(fresh))
-                    else:
-                        self._publish(
-                            self._active_part().unionByName(fresh), segs
-                        )
-            finally:
-                fresh.unpersist()
-            return n_new
+        One Spark left join of the listing against every ledger key (active
+        and terminal, column-pruned to s3_key and status) collects only the
+        rows the driver needs: the unknown keys, which are appended to the
+        active part as PENDING, and the keys already SUCCEEDED. With
+        ``on_succeeded``, the latter — files completed but still listed, the
+        crash-after-commit-before-archive case — are passed to it after the
+        publish, outside the mutex."""
 
-        return self._retrying(body)
+        def body() -> tuple[int, list[str]]:
+            active, segs = self._current_parts()
+            names = ([active] if active else []) + segs
+            listing = discovered.select("s3_key", "file_size_bytes")
+            if names:
+                known = self._read_dirs(names).select("s3_key", "status")
+                listing = listing.join(known, "s3_key", "left").filter(
+                    F.col("status").isNull()
+                    | (F.col("status") == LedgerStatus.SUCCEEDED)
+                )
+            else:
+                listing = listing.withColumn("status", F.lit(None).cast("string"))
+            got = listing.toArrow()
+            done = got.filter(pc.is_valid(got["status"]))["s3_key"]
+            fresh = got.filter(pc.is_null(got["status"]))
+            # a listing may name a key twice: keep its first row
+            keys = fresh["s3_key"]
+            fresh = fresh.take(pc.index_in(pc.unique(keys), value_set=keys))
+            if fresh.num_rows:
+                now = _now()
+                n = fresh.num_rows
+                rows = pa.table(
+                    {
+                        "s3_key": fresh["s3_key"],
+                        "file_size_bytes": fresh["file_size_bytes"],
+                        "status": pa.repeat(LedgerStatus.PENDING, n),
+                        "retry_count": pa.repeat(pa.scalar(0, pa.int32()), n),
+                        "error_message": pa.nulls(n, pa.string()),
+                        "first_discovered_at": pa.repeat(now, n),
+                        "last_updated_at": pa.repeat(now, n),
+                        "run_id": pa.nulls(n, pa.string()),
+                    },
+                    schema=ARROW_SCHEMA,
+                )
+                current = self._load([active] if active else [])
+                self._publish(pa.concat_tables([current, rows]), segs)
+            return fresh.num_rows, sorted(set(done.to_pylist()))
+
+        n_new, succeeded = self._retrying(body)
+        if on_succeeded is not None and succeeded:
+            on_succeeded(succeeded)
+        return n_new
 
     def claim_batch(
         self,
@@ -711,34 +752,39 @@ class Ledger:
 
         Reads ONLY the active part of the split snapshot — the terminal
         majority never participates in a claim (the reference's
-        ``idx_processing_status`` index, sudo_code.txt:49). One collect of
-        the claimable keys, then one write: the keys come from the active
-        part, so no probe is needed."""
+        ``idx_processing_status`` index, sudo_code.txt:49). The selection is
+        a top-k over (first_discovered_at, s3_key) on the driver; no Spark
+        job."""
         with self._mutex():
-            active, segs, _legacy = self._current_parts()
-            current = self._read_dirs([active] if active else [])
-            stale = (F.col("status") == LedgerStatus.PROCESSING) & (
-                F.col("last_updated_at")
-                < F.current_timestamp() - F.expr(f"INTERVAL {int(stale_lease_s)} SECONDS")
+            active, segs = self._current_parts()
+            current = self._load([active] if active else [])
+            cutoff = pa.scalar(
+                time.time_ns() // 1000 - int(stale_lease_s * 1_000_000), _TS
             )
-            claimable = (
-                current.filter(
-                    F.col("status").isin(LedgerStatus.PENDING, LedgerStatus.FAILED)
-                    | stale
+            status = current["status"]
+            claimable = current.filter(
+                pc.or_(
+                    pc.is_in(
+                        status,
+                        value_set=pa.array([LedgerStatus.PENDING, LedgerStatus.FAILED]),
+                    ),
+                    pc.and_(
+                        pc.equal(status, LedgerStatus.PROCESSING),
+                        pc.less(current["last_updated_at"], cutoff),
+                    ),
                 )
-                .orderBy("first_discovered_at", "s3_key")
-                .limit(batch_size)
             )
-            paths = [r.s3_key for r in claimable.select("s3_key").collect()]
-            if paths:
-                claim = [(sql_in("s3_key", paths), LedgerStatus.PROCESSING, None)]
-                # PROCESSING is not terminal: the deferred count carries over
-                # (None under a legacy pointer, whose next write migrates it)
-                self._commit_active(
-                    _transition(current, claim, run_id, increment_retry=True),
-                    segs,
-                    self._deferred_terminal(),
-                )
+            if not claimable.num_rows:
+                return []
+            oldest = pc.select_k_unstable(
+                claimable,
+                k=min(batch_size, claimable.num_rows),
+                sort_keys=[("first_discovered_at", "ascending"), ("s3_key", "ascending")],
+            )
+            paths = claimable["s3_key"].take(oldest).to_pylist()
+            rules = {p: (LedgerStatus.PROCESSING, None) for p in paths}
+            updated, _hit = _transition(current, rules, run_id, increment_retry=True)
+            self._commit_active(updated, segs)
             return paths
 
     def set_status(
@@ -761,16 +807,11 @@ class Ledger:
         instead of silently overwriting the new owner's state. Returns the
         fenced-out (lost-claim) paths; empty when not fencing.
 
-        A DataFrame of keys is a bulk flip (operational tools): its keys
-        are joined, never collected, so it keeps the range-pruned
-        terminal probe and the split write without the driver-side
-        bookkeeping of the list-keyed path."""
+        A DataFrame of keys is a bulk flip (operational tools): its first
+        column is collected, then it transitions like a list."""
+        if isinstance(paths, DataFrame):
+            paths = paths.select(paths.columns[0]).toArrow().column(0).to_pylist()
         with self._mutex():
-            if isinstance(paths, DataFrame):
-                return self._set_status_frame(
-                    paths, status, error_message, run_id, increment_retry,
-                    fence_run_id,
-                )
             return self._transition_keys(
                 [(list(paths), status, error_message)],
                 run_id,
@@ -800,17 +841,6 @@ class Ledger:
         with self._mutex():
             return self._transition_keys(groups, run_id, run_id if fence else None)
 
-    def _key_state(self, active: str | None, segs: list[str]) -> DataFrame:
-        """The active part plus ``segs``, each row tagged ``in_segment``."""
-        state = self._read_dirs([active] if active else []).withColumn(
-            "in_segment", F.lit(False)
-        )
-        if segs:
-            state = state.unionByName(
-                self._read_dirs(segs).withColumn("in_segment", F.lit(True))
-            )
-        return state
-
     def _transition_keys(
         self,
         groups: list[tuple[list[str], str, str | None]],
@@ -818,183 +848,98 @@ class Ledger:
         fence_run_id: str | None,
         increment_retry: bool = False,
     ) -> list[str]:
-        """List-keyed transition (caller holds the mutex): one bounded
-        probe, then one write. ``groups`` is [(paths, status, error), ...];
-        a key listed twice takes its first group.
+        """Keyed transition (caller holds the mutex) on the driver.
+        ``groups`` is [(paths, status, error), ...]; a key listed twice
+        takes its first group.
 
-        The probe collects the batch keys' current rows from the active part
-        and from the terminal segments whose footer key range can hold a
-        batch key — O(batch) rows, never O(history). From those rows, on
-        the driver:
-
-        - the fenced-out keys: rows not carrying ``fence_run_id`` (lost
-          claims), returned to the caller;
-        - the terminal hit: a transitioning row that lives in a terminal
-          segment routes the update to the rare full compaction. Under a
-          fence a segment row reclaimed-and-completed by another runner
-          carries that runner's id and is fenced out, so a routine
-          lease-expiry race never triggers an O(N) rewrite;
-        - the exact change in terminal rows of the active part, which keeps
-          the pointer's deferred count exact for the split decision.
+        The active part is read whole (it is rewritten anyway); of the
+        terminal segments only those whose footer key range can hold a
+        batch key are read, column-pruned — O(batch) rows, never
+        O(history). A row not carrying ``fence_run_id`` is fenced out (a
+        lost claim) and returned to the caller. A moving row that lives in
+        a terminal segment routes the update to the rare full rewrite;
+        under a fence a segment row reclaimed-and-completed by another
+        runner carries that runner's id and is fenced out, so a routine
+        lease-expiry race never triggers an O(N) rewrite.
 
         A transition that moves no row (every key fenced out or unknown)
         writes nothing."""
-        keys = sorted({p for paths, _, _ in groups for p in paths})
-        if not keys:
-            return []
-        active, segs, _legacy = self._current_parts()
-        rows = (
-            self._key_state(active, self._segs_for_keys(segs, keys[0], keys[-1]))
-            .filter(sql_in("s3_key", keys))
-            .select("s3_key", "status", "run_id", "in_segment")
-            .collect()
-        )
-        moving, fenced_out = [], []
-        for r in rows:
-            if fence_run_id is None or r.run_id == fence_run_id:
-                moving.append(r)
-            else:
-                fenced_out.append(r.s3_key)
-        if not moving:
-            return fenced_out  # nothing transitions: the snapshot stands
-        new_status: dict[str, str] = {}
-        for paths, status, _msg in groups:
+        rules: dict[str, tuple[str, str | None]] = {}
+        for paths, status, msg in groups:
             for p in paths:
-                new_status.setdefault(p, status)
-        rules = [
-            (sql_in("s3_key", paths), status, msg) for paths, status, msg in groups
-        ]
-
-        def transition(df: DataFrame) -> DataFrame:
-            return _transition(df, rules, run_id, fence_run_id, increment_retry)
-
-        if any(r.in_segment for r in moving):
-            self.overwrite(transition(self.read()))
+                rules.setdefault(p, (status, msg))
+        if not rules:
+            return []
+        active, segs = self._current_parts()
+        current = self._load([active] if active else [])
+        updated, hit = _transition(
+            current, rules, run_id, fence_run_id, increment_retry
+        )
+        keys = pa.array(list(rules), pa.string())
+        probed = self._load(
+            self._segs_for_keys(segs, min(rules), max(rules)), ["s3_key", "run_id"]
+        )
+        in_segs = probed.filter(pc.is_in(probed["s3_key"], value_set=keys))
+        if fence_run_id is None:
+            fenced_out: list[str] = []
+            segment_moves = in_segs.num_rows > 0
         else:
-            terminal_rows = self._deferred_terminal()
-            if terminal_rows is not None:
-                terminal_rows = max(
-                    0,
-                    terminal_rows
-                    + sum(
-                        (new_status[r.s3_key] in TERMINAL_STATUSES)
-                        - (r.status in TERMINAL_STATUSES)
-                        for r in moving
-                    ),
-                )
-            self._commit_active(transition(self._active_part()), segs, terminal_rows)
+            seg_owned = pc.fill_null(pc.equal(in_segs["run_id"], fence_run_id), False)
+            listed = pc.is_in(current["s3_key"], value_set=keys)
+            fenced_out = (
+                current.filter(pc.and_(listed, pc.invert(hit)))["s3_key"].to_pylist()
+                + in_segs.filter(pc.invert(seg_owned))["s3_key"].to_pylist()
+            )
+            segment_moves = bool(pc.any(seg_owned).as_py())
+        if segment_moves:
+            everything = pa.concat_tables([current, self._load(segs)])
+            self._rewrite_all(
+                _transition(everything, rules, run_id, fence_run_id, increment_retry)[0]
+            )
+        elif pc.any(hit).as_py():
+            self._commit_active(updated, segs)
         return fenced_out
 
-    def _set_status_frame(
-        self,
-        paths: DataFrame,
-        status: str,
-        error_message: str | None,
-        run_id: str | None,
-        increment_retry: bool,
-        fence_run_id: str | None,
-    ) -> list[str]:
-        # persisted: the probe and both split writes must see one key set,
-        # whatever the caller's frame is built from
-        keys = paths.select(F.col(paths.columns[0]).alias("s3_key")).persist()
-        try:
-            active, segs, _legacy = self._current_parts()
-            probe_segs = self._segs_for_keys(segs, *self._key_bounds(keys)) if segs else []
-            state = self._key_state(active, probe_segs).join(
-                F.broadcast(keys), "s3_key", "left_semi"
-            )
-            owned = _owned(fence_run_id)
-            fenced_out = (
-                []
-                if fence_run_id is None
-                else [r.s3_key for r in state.filter(~owned).select("s3_key").collect()]
-            )
-            rules = [(F.col("_hit").isNotNull(), status, error_message)]
-
-            def transition(df: DataFrame) -> DataFrame:
-                hits = F.broadcast(keys.withColumn("_hit", F.lit(1)))
-                return _transition(
-                    df.join(hits, "s3_key", "left"),
-                    rules,
-                    run_id,
-                    fence_run_id,
-                    increment_retry,
-                )
-
-            if probe_segs and state.filter(F.col("in_segment") & owned).limit(1).count():
-                self.overwrite(transition(self.read()))
-            else:
-                self._commit_active(
-                    transition(self._active_part()),
-                    segs,
-                    # a non-terminal flip can only shrink the deferred
-                    # count; a terminal one is unknown without counting
-                    None if status in TERMINAL_STATUSES else self._deferred_terminal(),
-                )
-            return fenced_out
-        finally:
-            keys.unpersist()
-
-    def _commit_active(
-        self,
-        updated: DataFrame,
-        segs: list[str],
-        terminal_rows: int | None,
-    ) -> None:
-        """Publish an updated ACTIVE part. ``terminal_rows`` bounds the
-        terminal rows it holds (exact for list-keyed transitions; None when
-        unknown — legacy pointers, terminal bulk flips).
+    def _commit_active(self, updated: pa.Table, segs: list[str]) -> None:
+        """Publish an updated ACTIVE part.
 
         Adaptive deferral (round 9): the split into an appended terminal
         segment is paid only once terminal rows exceed
-        TERMINAL_SPLIT_MIN_FRAC of the active dir. Below that — the
-        all-PENDING backfill phase, or a fully fenced-out / no-match commit
-        whose terminal delta is ZERO rows (ADVICE r8: such a commit used to
-        append an EMPTY segment per batch, burning segment slots) — the
-        commit is one plain write and terminal rows ride along in the
-        active part until the fraction crosses the threshold, at which
-        point one segment write drains them all.
-
-        The decision is driver-side metadata, not a Spark job: the pointer
-        carries the deferred count, the probe gives the batch's change to
-        it, and the active dir size comes from parquet footers. The split
-        itself filters one projection twice; the transition's timestamp is
-        a driver-side literal and its inputs are immutable snapshot files,
-        so the two writes agree without a persist, and ``_publish`` drops a
-        segment that came out empty."""
-        if terminal_rows is not None:
-            n_active = self._active_row_count() if terminal_rows else 0
-            if not terminal_rows or (
-                n_active is not None
-                and (n_active == 0 or terminal_rows <= TERMINAL_SPLIT_MIN_FRAC * n_active)
-            ):
-                self._publish(updated, segs, deferred_terminal=terminal_rows)
-                return
-        is_terminal = F.col("status").isin(*TERMINAL_STATUSES)
-        self._publish(
-            updated.filter(~is_terminal),
-            segs,
-            updated.filter(is_terminal),
-            deferred_terminal=0,
-        )
+        TERMINAL_SPLIT_MIN_FRAC of the active part. Below that — the
+        all-PENDING backfill phase — the commit is one plain write and
+        terminal rows ride along in the active part until the fraction
+        crosses the threshold, at which point one segment write drains them
+        all. The count is exact: the updated part is in driver memory."""
+        term = _is_terminal(updated)
+        n_term = pc.sum(term).as_py() or 0
+        if n_term <= TERMINAL_SPLIT_MIN_FRAC * updated.num_rows:
+            self._publish(updated, segs)
+        else:
+            self._publish(updated.filter(pc.invert(term)), segs, updated.filter(term))
 
     def owned_by(self, paths: list[str], run_id: str) -> set[str]:
         """The subset of ``paths`` whose ledger row currently carries
         ``run_id`` — i.e. claims this runner still holds. Read-only (no
         mutex needed: the authoritative check re-runs inside the fenced
-        commit); used to skip side effects for already-reclaimed files."""
+        commit); used to skip side effects for already-reclaimed files.
+        Reads the active part and the range-pruned segments."""
         if not paths:
             return set()
-        return {
-            r.s3_key
-            for r in self.read()
-            .filter(sql_in("s3_key", paths) & (F.col("run_id") == F.lit(run_id)))
-            .select("s3_key")
-            .collect()
-        }
+        active, segs = self._current_parts()
+        names = ([active] if active else []) + self._segs_for_keys(
+            segs, min(paths), max(paths)
+        )
+        rows = self._load(names, ["s3_key", "run_id"])
+        mine = pc.and_(
+            pc.is_in(rows["s3_key"], value_set=pa.array(paths, pa.string())),
+            pc.fill_null(pc.equal(rows["run_id"], run_id), False),
+        )
+        return set(rows.filter(mine)["s3_key"].to_pylist())
 
     def counts(self) -> dict[str, int]:
+        """Files per status, from the status column of every live dir."""
+        active, segs = self._current_parts()
+        status = self._load(([active] if active else []) + segs, ["status"])["status"]
         return {
-            r["status"]: r["n"]
-            for r in self.read().groupBy("status").agg(F.count("*").alias("n")).collect()
+            r["values"]: r["counts"] for r in pc.value_counts(status).to_pylist()
         }

@@ -747,11 +747,12 @@ def test_rebuild_kill_windows(spark, tmp_path):
 
 
 def test_null_text_does_not_poison_pruned_planning(spark, tmp_path):
-    """A null-text document (corrupt landing line) hashes to NULL; NULL
-    join keys match nothing, so the doc must flow through the audit as
-    novel — and must not crash the driver-side pruning key sort (review
-    catch, round 11: sorted() over a None/str mix raises, and a streaming
-    replay of the same file would poison the drain permanently)."""
+    """A null-text document (corrupt landing line) hashes to NULL, which
+    matches nothing, and gets no band rows, so the doc must flow through
+    the audit as novel — and must not crash the driver-side pruning key
+    sort (review catch, round 11: sorted() over a None/str mix raises, and
+    a streaming replay of the same file would poison the drain
+    permanently)."""
     idx = str(tmp_path / "idx")
     ingest_batch_dedup(
         spark, _docs(spark, [(i, _distinct_text(i)) for i in range(6)]), idx
@@ -763,7 +764,23 @@ def test_null_text_does_not_poison_pruned_planning(spark, tmp_path):
     )
     got = {r.doc_id for r in kept.collect()}
     assert 102 in got and 101 not in got
-    assert 100 in got  # null text: no hash, no bands — audited as novel
+    assert 100 in got  # null text: NULL hash, no band rows — audited as novel
+
+
+def test_null_and_empty_texts_do_not_poison_later_batches(spark, tmp_path):
+    """NULL and empty texts would share one MinHash signature, so they get
+    no band rows: neither is a near dup of the other, in its own batch or
+    once indexed. A later NULL text is novel again; a later empty text is
+    still an exact copy of the indexed one."""
+    idx = str(tmp_path / "idx")
+    first = ingest_batch_dedup(
+        spark, _docs(spark, [(1, ""), (2, None), (3, _distinct_text(3))]), idx
+    )
+    assert {r.doc_id for r in first.collect()} == {1, 2, 3}
+    second = ingest_batch_dedup(
+        spark, _docs(spark, [(10, None), (11, ""), (12, _distinct_text(12))]), idx
+    )
+    assert {r.doc_id for r in second.collect()} == {10, 12}
 
 
 @pytest.mark.soak
@@ -1809,7 +1826,8 @@ def _reference_kept(spark, batch, idx: str) -> set[int]:
     from datalakejson_spark.functions.incremental_dedup import _read_index_pair
 
     uniq = keep_first_distinct(batch)
-    losers = lsh_candidate_pairs(minhash_signatures(uniq)).select(
+    texts = uniq.filter(F.length("text") > 0)
+    losers = lsh_candidate_pairs(minhash_signatures(texts)).select(
         F.col("doc_b").alias("doc_id")
     )
     survivors = uniq.join(losers, "doc_id", "left_anti")
@@ -1866,9 +1884,8 @@ def test_driver_decision_matches_spark_audit(spark, tmp_path, monkeypatch):
         kept = {r.doc_id for r in kept.collect()}
         assert kept == expect - {None}
         assert kept & {base + 6, base + 21, base + 22, base + 23} == set()
-        # the first null-text doc is novel; every later one shares its
-        # band signature, so it is a near dup of the indexed first
-        assert (base + 20 in kept) == (seed == 7)
+        # a null-text doc has no band rows: every batch's is novel
+        assert base + 20 in kept
         assert 1 <= len(kept & set(chain)) < len(chain)
         batch_rows, probe_rows = collects
         batch_keys = {(r.band, r.k) for r in batch_rows if r.k is not None}
