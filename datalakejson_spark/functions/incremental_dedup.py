@@ -1395,8 +1395,12 @@ def rebuild_index(
         atomic_write_json(meta_path, ckpt_meta)
     frames = {
         "hashes": lambda: exact_hash_index(docs, text_col),
+        # NULL and empty texts get no band rows, as in the micro-batch
         "bands": lambda: band_table(
-            minhash_signatures(docs, text_col, id_col), id_col
+            minhash_signatures(
+                docs.filter(F.length(text_col) > 0), text_col, id_col
+            ),
+            id_col,
         ),
     }
     rows = {"hashes": n_docs, "bands": n_docs * _num_bands()}

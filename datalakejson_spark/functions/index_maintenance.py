@@ -89,7 +89,7 @@ def load_index_meta(index_dir: str, meta_name: str, build_hint: str) -> dict:
             f"no index at {index_dir} ({meta_name} missing) — build one "
             f"with {build_hint}"
         ) from None
-    meta["n_vectors"] = read_index_count(index_dir, meta.get("n_vectors", 0))
+    meta["n_vectors"] = read_index_count(index_dir)
     return meta
 
 
@@ -101,24 +101,21 @@ def write_index_count(index_dir: str, n: int) -> None:
     atomic_write_json(os.path.join(index_dir, COUNT_SIDECAR), {"n": int(n)})
 
 
-def read_index_count(index_dir: str, default: int = 0) -> int:
+def read_index_count(index_dir: str) -> int:
     try:
         with open(os.path.join(index_dir, COUNT_SIDECAR)) as fh:
             return int(json.load(fh)["n"])
     except (OSError, ValueError, KeyError):
-        return int(default)
+        return 0
 
 
-def bump_index_count(index_dir: str, delta: int, default: int = 0) -> None:
+def bump_index_count(index_dir: str, delta: int) -> None:
     """Advisory read-modify-write of the count sidecar ONLY. Two racing
     appends can lose one increment — acceptable for an observability
     counter; what matters is that this path can never clobber the quantizer
-    meta (ADVICE r13). ``default`` seeds the count when the sidecar is
-    absent (ADVICE r14): callers pass the meta-injected ``n_vectors`` so an
-    index whose count is baked only in a pre-sidecar meta doesn't collapse
-    its advisory count to the first append's batch size (needs_vacuum's
-    relative trigger reads this)."""
-    write_index_count(index_dir, read_index_count(index_dir, default) + delta)
+    meta (ADVICE r13). Every build writes the sidecar before its meta, so
+    the count it bumps starts at the build's row count."""
+    write_index_count(index_dir, read_index_count(index_dir) + delta)
 
 
 # ---------------------------------------------------------------------------
@@ -924,13 +921,7 @@ def vacuum_deleted(
     # probe-filtered and the next vacuum removes the copies and retires.
     cleared = _retire_tombstones_verified(spark, index_dir, subdir, ids, names)
     rows_removed = int(sum(per_part.values()))
-    bump_index_count(
-        index_dir,
-        -vectors_removed,
-        default=load_index_meta(index_dir, meta_name, "build").get(
-            "n_vectors", 0
-        ),
-    )
+    bump_index_count(index_dir, -vectors_removed)
     return {
         "rows_removed": rows_removed,
         "vectors_removed": int(vectors_removed),

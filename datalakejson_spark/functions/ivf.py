@@ -458,7 +458,6 @@ def ivf_index_append(
     new_emb: DataFrame,
     index_dir: str,
     batch_id: str | None = None,
-    legacy_batch_id: str | None = None,
 ) -> int:
     """Assign a delta against the EXISTING quantizer and append it into the
     cell partitions — the classic IVF posture (cells stay fixed between
@@ -476,11 +475,13 @@ def ivf_index_append(
     applied-batch marker after all moves complete, and a replay that finds
     the marker skips — without it a replayed micro-batch would duplicate
     its vectors in the cells and every later top-k would emit duplicate
-    neighbor rows. The row count stays advisory observability and lives in
-    its OWN sidecar (ADVICE r13): the previous whole-meta refresh was an
-    unfenced read-modify-write that could revert a concurrent split's
-    centroid flip, orphaning the new cell — this path never writes the
-    quantizer meta at all now.
+    neighbor rows. The marker is looked up under ``batch_id`` alone, the
+    one spelling its caller writes (``b{N}``, or ``<stream>-b{N}`` from a
+    stream-namespaced loop). The row count stays advisory observability
+    and lives in its OWN sidecar (ADVICE r13): the previous whole-meta
+    refresh was an unfenced read-modify-write that could revert a
+    concurrent split's centroid flip, orphaning the new cell — this path
+    never writes the quantizer meta at all now.
 
     Small-file accumulation per cell (one file per touched cell per
     append) is the known cadence disease — cured in the loop by
@@ -500,15 +501,6 @@ def ivf_index_append(
     # the end — would revert the flip and orphan the new cell forever
     meta = load_ivf_meta(index_dir)
     if batch_id is not None and ivf_batch_applied(index_dir, batch_id):
-        return 0
-    # Read-only legacy-marker fallback (ADVICE r14): an index upgraded to
-    # stream-namespaced ids mid-stream holds pre-upgrade markers spelled
-    # 'b{N}'; a crash-window replay straddling the upgrade must recognize
-    # them, checked AFTER the roll-forward so a committed-but-unpublished
-    # legacy stage gets its marker first.
-    if legacy_batch_id is not None and ivf_batch_applied(
-        index_dir, legacy_batch_id
-    ):
         return 0
     if "embedding_type" in meta:
         new_emb = new_emb.withColumn(
@@ -553,9 +545,7 @@ def ivf_index_append(
         )
     from datalakejson_spark.functions.index_maintenance import bump_index_count
 
-    # seed from the entry-time meta-injected count so a pre-sidecar index
-    # (count baked only in its meta) doesn't collapse to n_new (ADVICE r14)
-    bump_index_count(index_dir, n_new, default=int(meta.get("n_vectors", 0)))
+    bump_index_count(index_dir, n_new)
     return n_new
 
 

@@ -135,14 +135,12 @@ def lsh_index_append(
     new_emb: DataFrame,
     index_dir: str,
     batch_id: str | None = None,
-    legacy_batch_id: str | None = None,
 ) -> int:
     """Bucket a delta under the PERSISTED family definition and append it
     into the tb partitions — staged, exactly-once under ``batch_id``,
     riding the shared publish machinery (see ivf_index_append for the
-    crash-window ledger; identical here with subdir="buckets").
-    ``legacy_batch_id`` is the read-only pre-namespacing marker fallback
-    (ADVICE r14) — see ivf_index_append."""
+    crash-window ledger and the one marker spelling; identical here with
+    subdir="buckets")."""
     import json
     import os
     import shutil
@@ -153,10 +151,6 @@ def lsh_index_append(
     publish_staged(index_dir, _BUCKETS, _LSH_META)
     meta = load_lsh_meta(index_dir)
     if batch_id is not None and batch_applied(index_dir, batch_id):
-        return 0
-    if legacy_batch_id is not None and batch_applied(
-        index_dir, legacy_batch_id
-    ):
         return 0
     if "embedding_type" in meta:
         new_emb = new_emb.withColumn(
@@ -205,9 +199,7 @@ def lsh_index_append(
     # the meta dict loaded at entry could clobber a concurrent rebuild's
     # fresh family definition, silently zeroing recall — the append path
     # never writes _LSH.json now, mirroring the IVF fix)
-    # seed from the entry-time meta-injected count (pre-sidecar indexes:
-    # ADVICE r14 — same contract as ivf_index_append)
-    bump_index_count(index_dir, n_new, default=int(meta.get("n_vectors", 0)))
+    bump_index_count(index_dir, n_new)
     return n_new
 
 

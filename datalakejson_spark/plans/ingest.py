@@ -161,8 +161,8 @@ def discover(spark: SparkSession, conf: IngestConfig) -> int:
     commit so a reclaimer can never lose its landing copy mid-read) leaves
     the landing file behind with a SUCCEEDED ledger row; discovery is the
     reconciliation point that finishes the move (sudo_code.txt:219-224's
-    lost-file sweep, inverted). The snapshot ledger finds these files in
-    register's own join. Returns newly registered file count."""
+    lost-file sweep, inverted): ``register`` hands them to the archive step.
+    Returns newly registered file count."""
     configure_runtime(spark)
     # "nothing has landed yet" is healthy: answer it before any load. The
     # PATH_NOT_FOUND catch below still covers a dir removed between this
@@ -198,15 +198,9 @@ def discover(spark: SparkSession, conf: IngestConfig) -> int:
         discovered = discovered.unionByName(
             local_df(spark, empty, "s3_key string, file_size_bytes long")
         )
-    ledger = make_ledger(spark, conf)
-    if isinstance(ledger, Ledger):
-        # register's one join also returns the SUCCEEDED stragglers
-        return ledger.register(
-            discovered, on_succeeded=lambda keys: _archive_parallel(keys, conf)
-        )
-    registered = ledger.register(discovered)
-    _finish_interrupted_archives(ledger, discovered, conf)
-    return registered
+    return make_ledger(spark, conf).register(
+        discovered, on_succeeded=lambda keys: _archive_parallel(keys, conf)
+    )
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -231,23 +225,6 @@ def _zero_byte_files(listing: DataFrame) -> list[tuple[str, int]]:
         except FileNotFoundError:
             continue
     return rows
-
-
-def _finish_interrupted_archives(ledger, discovered: DataFrame, conf: IngestConfig) -> None:
-    """Archive any discovered landing file whose JDBC ledger row is already
-    SUCCEEDED — the crash-after-commit-before-archive case. The semi join is
-    distributed; only the straggler list (normally empty) is collected. (The
-    snapshot ledger's register answers this from its own join.)"""
-    stragglers = [
-        r[0]
-        for r in ledger.read()
-        .filter(F.col("status") == LedgerStatus.SUCCEEDED)
-        .join(discovered, "s3_key", "left_semi")
-        .select("s3_key")
-        .collect()
-    ]
-    if stragglers:
-        _archive_parallel(stragglers, conf)
 
 
 # --------------------------------------------------------------------------
@@ -584,7 +561,7 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
         # archive files the commit just confirmed ours (and flipped to
         # SUCCEEDED, making them unclaimable). A crash between commit and
         # archive leaves a SUCCEEDED file in landing; the next discover()
-        # sweep finishes the move (_finish_interrupted_archives).
+        # sweep finishes the move (register's ``on_succeeded``).
         fenced = ledger.apply_outcomes(
             [
                 (result.succeeded_files, LedgerStatus.SUCCEEDED, None),

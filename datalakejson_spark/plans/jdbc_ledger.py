@@ -29,6 +29,8 @@ DB-backed and snapshot-backed ledgers are drop-in interchangeable behind
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -140,7 +142,11 @@ class JdbcLedger:
             conn.close()
 
     # -- reference operations ----------------------------------------------
-    def register(self, discovered: DataFrame) -> int:
+    def register(
+        self,
+        discovered: DataFrame,
+        on_succeeded: Callable[[list[str]], None] | None = None,
+    ) -> int:
         """Idempotent PENDING insert — ``ON CONFLICT (s3_key) DO NOTHING``
         (sudo_code.txt:90). PostgreSQL URLs use that exact clause (native,
         race-free) with executeBatch; other dialects (embedded Derby) use
@@ -150,7 +156,13 @@ class JdbcLedger:
         under READ_COMMITTED, and the loser's PK violation must be an
         idempotent skip, not an aborted batch. The discovered list is
         driver-bounded exactly like the reference's own batched INSERTs
-        (psuedo_code.txt:117-131)."""
+        (psuedo_code.txt:117-131).
+
+        Same contract as ``Ledger.register``: with ``on_succeeded``, the
+        listed keys whose row is already SUCCEEDED (completed but still
+        listed: the crash-after-commit-before-archive case) are passed to
+        it after the insert commits. They come from one distributed semi
+        join; only the straggler list (normally empty) is collected."""
         rows = (
             discovered.select("s3_key", "file_size_bytes")
             .dropDuplicates(["s3_key"])
@@ -193,9 +205,20 @@ class JdbcLedger:
                             raise
             conn.commit()
             ps.close()
-            return n_new
         finally:
             conn.close()
+        if on_succeeded is not None:
+            stragglers = [
+                r[0]
+                for r in self.read()
+                .filter(F.col("status") == LedgerStatus.SUCCEEDED)
+                .join(discovered, "s3_key", "left_semi")
+                .select("s3_key")
+                .collect()
+            ]
+            if stragglers:
+                on_succeeded(stragglers)
+        return n_new
 
     def claim_batch(
         self,

@@ -29,8 +29,7 @@ instead of O(all files); claims read ONLY the active part (the reference's
 ``idx_processing_status``, sudo_code.txt:49). The rare operational move of a
 key OUT of a terminal segment (e.g. re-enqueueing a SUCCEEDED file as FAILED)
 falls back to one full compaction write; segment count is bounded by
-compaction at MAX_TERMINAL_SEGMENTS. Legacy single-snapshot pointers are read
-transparently and migrate to the split layout on their next write.
+compaction at MAX_TERMINAL_SEGMENTS.
 
 Job budget: a claim and a list-keyed commit (``apply_outcomes``,
 ``set_status`` with a list) launch no Spark job. A claim is a top-k over
@@ -402,31 +401,18 @@ class Ledger:
     def _pointer(self) -> Path:
         return self.root / "_LATEST"
 
-    def _pointer_meta(self) -> dict | None:
-        """The split-format pointer dict, or None (missing/legacy)."""
+    def _pointer_meta(self) -> dict:
+        """The pointer's JSON dict; ``{}`` before the first publish. A
+        pointer that is not JSON raises."""
         try:
-            txt = self._pointer.read_text().strip()
+            return json.loads(self._pointer.read_text())
         except FileNotFoundError:
-            return None
-        if txt.startswith("{"):
-            return json.loads(txt)
-        return None
+            return {}
 
     def _current_parts(self) -> tuple[str | None, list[str]]:
-        """(active_version, terminal_segments). A legacy pointer (pre-split:
-        one bare version name) reads as the active part holding ALL rows —
-        including terminal ones — and migrates to the split layout on its
-        next write."""
-        try:
-            txt = self._pointer.read_text().strip()
-        except FileNotFoundError:
-            return None, []
-        if not txt:
-            return None, []
-        if txt.startswith("{"):
-            d = json.loads(txt)
-            return d.get("active"), list(d.get("terminal", []))
-        return txt, []
+        """(active_version, terminal_segments)."""
+        meta = self._pointer_meta()
+        return meta.get("active"), list(meta.get("terminal", []))
 
     def _data_files(self, dirname: str) -> list[Path]:
         """The parquet files of one snapshot dir, skipping ``_``/``.`` names
@@ -485,9 +471,7 @@ class Ledger:
     # commit-path probe over 10^8 terminal rows touches only segments whose
     # [min,max] s3_key range can contain a batch key, so probe cost tracks
     # batch locality instead of total history. A segment whose footer lacks
-    # usable stats is conservatively probed. Segments written by older
-    # ledgers may still hold an underscore-named range sidecar file; no
-    # reader opens it.
+    # usable stats is conservatively probed.
     def _segs_for_keys(
         self, segs: list[str], kmin: str | None, kmax: str | None
     ) -> list[str]:
@@ -517,7 +501,7 @@ class Ledger:
         """Full-state write (the rare path: a transition that moves a row
         out of a terminal segment). Splits ``table`` by status group into a
         fresh active part and ONE terminal segment, which also folds the
-        accumulated segments and migrates a legacy layout. A state with
+        accumulated segments. A state with
         zero terminal rows publishes no segment."""
         term = _is_terminal(table)
         self._publish(table.filter(pc.invert(term)), [], table.filter(term))
@@ -571,7 +555,7 @@ class Ledger:
         # advances by exactly one per publish REGARDLESS of which machine's
         # clock minted the version name — the retirement grace counts these,
         # never wall-clock-derived names (see _prune).
-        meta = self._pointer_meta() or {}
+        meta = self._pointer_meta()
         seq = int(meta.get("publish_seq", 0)) + 1
         atomic_write_text(  # atomic commit point
             str(self._pointer),
@@ -611,7 +595,7 @@ class Ledger:
         dropped from the pointer (a fold retires segments that are many
         publishes old), so deletion-by-age would yank dirs out from under a
         lock-free reader holding the immediately-previous pointer
-        (monitor counts, owned_by, _finish_interrupted_archives). Instead,
+        (monitor counts, owned_by, register). Instead,
         an unreferenced segment is first recorded in the advisory
         ``_RETIRED`` journal with the pointer's ``publish_seq`` at
         retirement, and deleted only once at least ``keep`` further
@@ -651,15 +635,10 @@ class Ledger:
                     changed = True
                 continue
             stamp = retired.get(p.name)
-            stamp_seq = stamp.get("seq") if isinstance(stamp, dict) else None
-            if not isinstance(stamp_seq, int):
-                # New retirement — or a legacy entry (r8 timestamp int / r9.0
-                # version-name string), whose grace restarts under the
-                # counter scheme (advisory: the segment merely lingers a few
-                # more publishes).
+            if stamp is None:
                 retired[p.name] = {"seq": seq}  # grace starts at retirement
                 changed = True
-            elif seq - stamp_seq >= keep:
+            elif seq - stamp["seq"] >= keep:
                 # >= ``keep`` publishes since retirement: no lock-free
                 # reader can still hold a pointer naming this segment.
                 shutil.rmtree(p, ignore_errors=True)

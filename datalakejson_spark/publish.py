@@ -138,8 +138,9 @@ def write_subsumed(stage: str, rels: list[str]) -> None:
 
 
 def read_subsumed(stage: str) -> list[str]:
-    """The stage's subsumed relpaths. Both on-disk shapes read: the list
-    of relpaths, and the older dedup ``{subdir: [names]}`` map."""
+    """The stage's subsumed relpaths: the JSON list :func:`write_subsumed`
+    wrote, or ``[]`` for a stage that subsumes nothing. Any other content
+    raises ValueError before the publish moves anything."""
     try:
         with open(os.path.join(stage, _SUBSUMED)) as fh:
             doc = json.load(fh)
@@ -147,9 +148,9 @@ def read_subsumed(stage: str) -> list[str]:
         if not os.path.isdir(stage):
             raise  # another runner finished the stage under us: "raced"
         return []
-    if isinstance(doc, dict):
-        return [f"{sub}/{name}" for sub, names in doc.items() for name in names]
-    return list(doc)
+    if not isinstance(doc, list):
+        raise ValueError(f"{stage}/{_SUBSUMED} is not a list of relpaths")
+    return doc
 
 
 def move_files(src: str, dst: str, rels: list[str]) -> list[str]:
@@ -378,16 +379,17 @@ def publish_staged(store: Store) -> dict[str, str]:
 def _destroyed_files(store: Store, stage: str) -> list[str]:
     """Manifest entries present at NEITHER the stage NOR the live layout.
     A replayed half-moved stage passes (its moved files exist live); only
-    genuinely destroyed data reports. Legacy ``ok`` markers carry no
-    manifest and publish unverified (mid-upgrade roll-forward)."""
-    try:
-        with open(os.path.join(stage, _COMMITTED)) as fh:
-            doc = json.loads(fh.read())
-    except (OSError, ValueError):
-        return []
-    files = doc.get("files") if isinstance(doc, dict) else None
+    genuinely destroyed data reports. A marker that is not the
+    ``{"files": [...]}`` manifest :func:`commit_stage` writes reports
+    itself: nothing can verify that stage. A stage removed under the
+    reader raises FileNotFoundError (``"raced"``)."""
+    with open(os.path.join(stage, _COMMITTED)) as fh:
+        try:
+            files = json.load(fh)["files"]
+        except (ValueError, TypeError, KeyError):
+            files = None
     if not isinstance(files, list):
-        return []
+        return [_COMMITTED]
     src = os.path.join(stage, store.data)
     dst = os.path.join(store.root, store.data)
     return [

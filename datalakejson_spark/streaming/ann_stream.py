@@ -84,64 +84,43 @@ _DELETE_STREAM_SIDECAR = "_STREAM_DELETES.json"
 
 
 def adopt_stream(
-    index_dir: str,
-    stream_id: str,
-    _legacy_markers_ok: bool = False,
-    sidecar: str = _STREAM_SIDECAR,
+    index_dir: str, stream_id: str, sidecar: str = _STREAM_SIDECAR
 ) -> None:
     """Explicitly re-home an index under a new stream/checkpoint identity —
     the operator verb for 'I reset the checkpoint on purpose'. After this,
     the new stream's batches append from its batch 0 (files already
     ingested by the OLD stream will re-ingest if they are still in the new
-    stream's landing source — point the new checkpoint at new data).
-
-    ``_legacy_markers_ok`` (internal, set only by the first-contact
-    auto-adopt) records whether pre-namespacing ``b{N}`` markers may still
-    be honored: True on first contact with an index that predates the
-    stream sidecar (those markers came from THIS continuing checkpoint's
-    pre-upgrade batches — ADVICE r14), False on an explicit operator
-    adoption (a deliberate checkpoint reset restarts batch ids at 0, so a
-    stale ``b{N}`` marker from the old stream must never suppress the new
-    stream's batch N)."""
-    import json
+    stream's landing source — point the new checkpoint at new data). The
+    sidecar holds only ``{"stream_id": ...}``; markers are namespaced by
+    it, so no marker of the old stream can suppress a batch of the new
+    one."""
     import os
 
     os.makedirs(index_dir, exist_ok=True)
     from datalakejson_spark.fsutil import atomic_write_json
 
-    atomic_write_json(
-        os.path.join(index_dir, sidecar),
-        {"stream_id": stream_id, "legacy_markers_ok": _legacy_markers_ok},
-    )
+    atomic_write_json(os.path.join(index_dir, sidecar), {"stream_id": stream_id})
 
 
 def _guard_stream_identity(
     index_dir: str, stream_id: str, sidecar_name: str = _STREAM_SIDECAR
-) -> bool:
+) -> None:
     """Raise loudly when a DIFFERENT stream (new checkpoint) drives an index
     another stream owns; adopt the index on first contact — and ONLY when
     the sidecar is genuinely absent (FileNotFoundError). Any other read
     failure (permissions, transient IO, corrupt JSON) raises instead of
     silently overwriting the owner: failing open would re-home the index
-    exactly when its ownership state is unreadable (ADVICE r14).
-
-    Returns whether legacy un-namespaced ``b{N}`` markers may be honored
-    for this index (see :func:`adopt_stream`)."""
+    exactly when its ownership state is unreadable (ADVICE r14)."""
     import json
     import os
 
     path = os.path.join(index_dir, sidecar_name)
     try:
         with open(path) as fh:
-            sidecar = json.load(fh)
-        owner = sidecar.get("stream_id")
+            owner = json.load(fh).get("stream_id")
     except FileNotFoundError:
-        # First contact: an index that predates the stream sidecar may hold
-        # pre-upgrade b{N} markers from this same continuing checkpoint.
-        adopt_stream(
-            index_dir, stream_id, _legacy_markers_ok=True, sidecar=sidecar_name
-        )
-        return True
+        adopt_stream(index_dir, stream_id, sidecar=sidecar_name)
+        return
     except (OSError, ValueError) as exc:
         raise ValueError(
             f"stream sidecar {path} exists but is unreadable ({exc!r}) — "
@@ -161,9 +140,6 @@ def _guard_stream_identity(
             f"sidecar={sidecar_name!r}) first (new batches will apply from "
             "this stream's batch 0)."
         )
-    # Pre-r15 sidecars lack the key; they were written by the same
-    # first-contact auto-adopt path, so default to honoring legacy markers.
-    return bool(sidecar.get("legacy_markers_ok", True))
 
 
 def streaming_ann_ingest(
@@ -280,16 +256,9 @@ def process_ann_batch(
     from datalakejson_spark.functions.ivf import _IVF_META, load_ivf_meta
 
     batch = batch_df.select("vec_id", "embedding")
-    legacy_bid: str | None = None
     if stream_id is not None:
-        legacy_ok = _guard_stream_identity(index_dir, stream_id)
+        _guard_stream_identity(index_dir, stream_id)
         bid = f"{stream_id}-b{batch_id}"
-        if legacy_ok:
-            # Read-only fallback for indexes predating the stream-id
-            # sidecar (ADVICE r14): their bootstrap/_applied markers use
-            # the un-namespaced spelling, and a crash-window replay
-            # straddling the upgrade must still recognize them.
-            legacy_bid = f"b{batch_id}"
     else:
         bid = f"b{batch_id}"
     if not os.path.exists(os.path.join(index_dir, _IVF_META)):
@@ -307,12 +276,9 @@ def process_ann_batch(
             extra_meta={"bootstrap_batch": bid},
         )
         return
-    bootstrap = load_ivf_meta(index_dir).get("bootstrap_batch")
-    if bootstrap is not None and bootstrap in (bid, legacy_bid):
+    if load_ivf_meta(index_dir).get("bootstrap_batch") == bid:
         return  # replayed bootstrap batch: already the index itself
-    ivf_index_append(
-        spark, batch, index_dir, batch_id=bid, legacy_batch_id=legacy_bid
-    )
+    ivf_index_append(spark, batch, index_dir, batch_id=bid)
     if compact_max_runs_per_cell is not None and ivf_needs_compaction(
         index_dir, compact_max_runs_per_cell
     ):
@@ -527,12 +493,9 @@ def process_lsh_batch(
     )
 
     batch = batch_df.select("vec_id", "embedding")
-    legacy_bid: str | None = None
     if stream_id is not None:
-        legacy_ok = _guard_stream_identity(index_dir, stream_id)
+        _guard_stream_identity(index_dir, stream_id)
         bid = f"{stream_id}-b{batch_id}"
-        if legacy_ok:
-            legacy_bid = f"b{batch_id}"  # pre-sidecar marker spelling
     else:
         bid = f"b{batch_id}"
     if not os.path.exists(os.path.join(index_dir, _LSH_META)):
@@ -543,12 +506,9 @@ def process_lsh_batch(
             batch, index_dir, extra_meta={"bootstrap_batch": bid}, **kwargs
         )
         return
-    bootstrap = load_lsh_meta(index_dir).get("bootstrap_batch")
-    if bootstrap is not None and bootstrap in (bid, legacy_bid):
+    if load_lsh_meta(index_dir).get("bootstrap_batch") == bid:
         return  # replayed bootstrap batch: already the index itself
-    lsh_index_append(
-        spark, batch, index_dir, batch_id=bid, legacy_batch_id=legacy_bid
-    )
+    lsh_index_append(spark, batch, index_dir, batch_id=bid)
     if compact_max_runs_per_bucket is not None and lsh_needs_compaction(
         index_dir, compact_max_runs_per_bucket
     ):

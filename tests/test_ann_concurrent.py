@@ -19,6 +19,7 @@ import time
 import numpy as np
 import pyspark.sql.functions as F
 
+from datalakejson_spark import publish
 from datalakejson_spark.functions.ivf import (
     build_ivf_index,
     compact_ivf_cells,
@@ -149,7 +150,7 @@ def test_racing_compactions_fence_by_snapshot(spark, tmp_path):
     assert won
     rows_after_win = spark.read.parquet(os.path.join(idx, "cells")).count()
 
-    open(os.path.join(loser, "_COMMITTED"), "w").write("ok")
+    publish.commit_stage(loser, "cells")
     out = _publish_ivf_staged(idx)
     assert out.get("t-loser") == "lost"
     assert not os.path.isdir(loser)

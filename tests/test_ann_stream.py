@@ -517,120 +517,3 @@ def test_unreadable_stream_sidecar_refuses_instead_of_readopting(
     assert open(os.path.join(idx, "_STREAM.json")).read() == "{corrupt"
     assert _index_rows(spark, idx) == sorted(i for i, _ in boot)
 
-
-def test_legacy_markers_honored_across_namespacing_upgrade(spark, tmp_path):
-    """An index driven before the stream-id sidecar existed holds markers
-    spelled 'b{N}'. A crash-window replay straddling the upgrade must
-    recognize them (read-only fallback, ADVICE r14): the replayed batch is
-    skipped, not re-appended — duplicates would persist in storage and the
-    advisory count even though probes mask them."""
-    from datalakejson_spark.functions.ivf import load_ivf_meta
-    from datalakejson_spark.streaming.ann_stream import process_ann_batch
-
-    idx = str(tmp_path / "idx")
-    schema = "vec_id bigint, embedding array<double>"
-    boot = _vectors(1, 100, 0)
-    delta = _vectors(2, 40, 5000)
-    # pre-upgrade history: bare ids, no stream sidecar
-    process_ann_batch(
-        spark, spark.createDataFrame(boot, schema), 0, idx, n_cells=16
-    )
-    process_ann_batch(spark, spark.createDataFrame(delta, schema), 1, idx)
-    assert load_ivf_meta(idx).get("bootstrap_batch") == "b0"
-    assert not os.path.exists(os.path.join(idx, "_STREAM.json"))
-
-    # the upgrade lands mid-stream; the same checkpoint replays batches 0
-    # and 1 under the new namespaced ids — both must be recognized via the
-    # legacy spelling (bootstrap_batch == 'b0', _applied/b1)
-    process_ann_batch(
-        spark, spark.createDataFrame(boot, schema), 0, idx, stream_id="sidX"
-    )
-    process_ann_batch(
-        spark, spark.createDataFrame(delta, schema), 1, idx, stream_id="sidX"
-    )
-    expect = sorted(i for i, _ in boot + delta)
-    assert _index_rows(spark, idx) == expect
-    # and NEW batches under the namespaced scheme still append + replay-skip
-    d2 = _vectors(3, 25, 9000)
-    process_ann_batch(
-        spark, spark.createDataFrame(d2, schema), 2, idx, stream_id="sidX"
-    )
-    process_ann_batch(
-        spark, spark.createDataFrame(d2, schema), 2, idx, stream_id="sidX"
-    )
-    assert _index_rows(spark, idx) == sorted(expect + [i for i, _ in d2])
-
-
-def test_explicit_adoption_disables_legacy_markers(spark, tmp_path):
-    """After an operator's adopt_stream (a deliberate checkpoint reset),
-    batch ids restart at 0 — a stale pre-upgrade 'b{N}' marker from the OLD
-    stream must NOT suppress the new stream's batch N (the legacy fallback
-    is only the upgrade bridge for the same continuing checkpoint)."""
-    from datalakejson_spark.streaming.ann_stream import (
-        adopt_stream,
-        process_ann_batch,
-    )
-
-    idx = str(tmp_path / "idx")
-    schema = "vec_id bigint, embedding array<double>"
-    boot = _vectors(1, 100, 0)
-    delta = _vectors(2, 40, 5000)
-    # pre-upgrade history leaves a bare 'b1' applied marker behind
-    process_ann_batch(
-        spark, spark.createDataFrame(boot, schema), 0, idx, n_cells=16
-    )
-    process_ann_batch(spark, spark.createDataFrame(delta, schema), 1, idx)
-    assert os.path.exists(os.path.join(idx, "_applied", "b1"))
-
-    adopt_stream(idx, "freshStream")
-    d_new = spark.createDataFrame(_vectors(3, 30, 9000), schema)
-    process_ann_batch(spark, d_new, 1, idx, stream_id="freshStream")
-    assert _index_rows(spark, idx) == sorted(
-        i for i, _ in boot + delta + _vectors(3, 30, 9000)
-    )
-
-
-def test_lsh_legacy_markers_honored_across_namespacing_upgrade(
-    spark, tmp_path
-):
-    """The LSH twin of the legacy-marker bridge: pre-sidecar 'b{N}'
-    bootstrap/applied markers are recognized by a replay straddling the
-    namespacing upgrade — no bucket-row duplicates."""
-    from datalakejson_spark.functions.lsh_index import load_lsh_meta
-    from datalakejson_spark.streaming.ann_stream import process_lsh_batch
-
-    idx = str(tmp_path / "idx")
-    schema = "vec_id bigint, embedding array<double>"
-    boot = _vectors(21, 120, 0)
-    delta = _vectors(22, 30, 5000)
-    process_lsh_batch(
-        spark, spark.createDataFrame(boot, schema), 0, idx,
-        n_planes=6, n_tables=2,
-    )
-    process_lsh_batch(spark, spark.createDataFrame(delta, schema), 1, idx)
-    assert load_lsh_meta(idx).get("bootstrap_batch") == "b0"
-
-    # the same checkpoint replays both batches under namespaced ids
-    process_lsh_batch(
-        spark, spark.createDataFrame(boot, schema), 0, idx, stream_id="sidL"
-    )
-    process_lsh_batch(
-        spark, spark.createDataFrame(delta, schema), 1, idx, stream_id="sidL"
-    )
-    rows = (
-        spark.read.parquet(os.path.join(idx, "buckets"))
-        .select("vec_id")
-        .distinct()
-        .count()
-    )
-    assert rows == len(boot) + len(delta)
-    # per-table copies are exact (no duplicate bucket rows): every
-    # (vec_id, tb) pair appears exactly once per table the family hashes to
-    dup = (
-        spark.read.parquet(os.path.join(idx, "buckets"))
-        .groupBy("vec_id", "tb")
-        .count()
-        .filter("count > 1")
-        .count()
-    )
-    assert dup == 0

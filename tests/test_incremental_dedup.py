@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from datalakejson_spark import publish
 from datalakejson_spark.functions.incremental_dedup import (
     dedup_audit,
     exact_hash_index,
@@ -245,8 +246,7 @@ def test_committed_stage_rolls_forward_before_audit(spark, tmp_path):
             shutil.move(
                 os.path.join(live_bands, name), os.path.join(stage, "bands", name)
             )
-    with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
-        fh.write("ok")
+    publish.commit_stage(stage)
     # A near-copy of doc 2 must STILL be caught: roll-forward restores bands
     # before the audit reads them.
     near2 = "totally distinct second document content for the staging tests"
@@ -781,6 +781,32 @@ def test_null_and_empty_texts_do_not_poison_later_batches(spark, tmp_path):
         spark, _docs(spark, [(10, None), (11, ""), (12, _distinct_text(12))]), idx
     )
     assert {r.doc_id for r in second.collect()} == {10, 12}
+
+
+def test_rebuild_bands_match_the_micro_batch_loop(spark, tmp_path):
+    """rebuild_index bands exactly the documents the micro-batch loop
+    bands: over a corpus holding NULL, empty and normal texts, the rebuilt
+    index holds the loop's band rows and no row for the NULL or empty
+    text."""
+    import os
+
+    from datalakejson_spark.functions.incremental_dedup import rebuild_index
+
+    rows = [(1, ""), (2, None), (3, _distinct_text(3)), (4, _distinct_text(4))]
+    loop_idx, rebuilt_idx = str(tmp_path / "loop"), str(tmp_path / "rebuilt")
+    ingest_batch_dedup(spark, _docs(spark, rows), loop_idx)
+    rebuild_index(spark, _docs(spark, rows), rebuilt_idx)
+
+    def bands(idx):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(os.path.join(idx, "bands"))
+            .select("doc_id", "band", "band_hash")
+            .collect()
+        )
+
+    assert bands(rebuilt_idx) == bands(loop_idx)
+    assert {r[0] for r in bands(loop_idx)} == {3, 4}
 
 
 @pytest.mark.soak
@@ -1510,14 +1536,14 @@ def test_publish_outcomes_reported(spark, tmp_path):
     idx = str(tmp_path / "idx")
     ingest_batch_dedup(spark, _docs(spark, [(1, _distinct_text(1))]), idx)
 
-    # fabricate a committed APPEND stage (no manifest): publishes
+    # fabricate a committed APPEND stage: publishes
     stage = os.path.join(idx, inc._STAGING, "t-append")
     os.makedirs(os.path.join(stage, "hashes"))
     src = os.path.join(idx, "hashes", inc._live_files(os.path.join(idx, "hashes"))[0])
     import shutil as _sh
 
     _sh.copy(src, os.path.join(stage, "hashes", "part-99999-feedface-c000.snappy.parquet"))
-    open(os.path.join(stage, "_COMMITTED"), "w").write("ok")
+    publish.commit_stage(stage)
     out = inc._publish_staged(idx)
     assert out.get("t-append") == "published"
 
@@ -1525,8 +1551,8 @@ def test_publish_outcomes_reported(spark, tmp_path):
     stage = os.path.join(idx, inc._STAGING, "t-loser")
     os.makedirs(stage)
     with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump({"hashes": ["part-gone-forever.snappy.parquet"]}, fh)
-    open(os.path.join(stage, "_COMMITTED"), "w").write("ok")
+        json.dump(["hashes/part-gone-forever.snappy.parquet"], fh)
+    publish.commit_stage(stage)
     out = inc._publish_staged(idx)
     assert out.get("t-loser") == "lost"
     assert not os.path.isdir(stage)
@@ -1749,8 +1775,8 @@ def test_lost_rebuild_stage_leaves_tombstone(spark, tmp_path):
     stage = os.path.join(idx, inc._STAGING, inc._REBUILD_STAGE)
     os.makedirs(stage)
     with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump({"hashes": ["part-gone-forever.snappy.parquet"]}, fh)
-    open(os.path.join(stage, "_COMMITTED"), "w").write("ok")
+        json.dump(["hashes/part-gone-forever.snappy.parquet"], fh)
+    publish.commit_stage(stage)
 
     out = inc._publish_staged(idx)
     assert out.get(inc._REBUILD_STAGE) == "lost"

@@ -24,6 +24,24 @@ from datalakejson_spark.plans.ledger import Ledger, LedgerStatus
 from tests.conftest import good_record, jobs_of, write_ndjson
 
 
+@pytest.fixture(autouse=True)
+def _pointers_are_json(monkeypatch):
+    """Every ledger ``_LATEST`` these tests publish is the JSON pointer,
+    the one form the ledger reads."""
+    from datalakejson_spark.plans import ledger as L
+
+    real = L.atomic_write_text
+
+    def checked(path: str, text: str) -> None:
+        if os.path.basename(path) == "_LATEST":
+            ptr = json.loads(text)
+            assert isinstance(ptr["active"], str), text
+            assert isinstance(ptr["terminal"], list), text
+        real(path, text)
+
+    monkeypatch.setattr(L, "atomic_write_text", checked)
+
+
 def test_discover_registers_pending_idempotently(spark, ingest_conf):
     n1 = discover(spark, ingest_conf)
     assert n1 == 4  # good_a, good_b, corrupt_mixed, late_week1
@@ -802,42 +820,19 @@ def test_split_snapshot_segment_compaction_bound(spark, tmp_path, monkeypatch):
 
 
 def test_legacy_single_snapshot_pointer_migrates(spark, tmp_path):
-    """A pre-split ledger (bare version-name pointer, one dir holding every
-    status) reads transparently and migrates to the split layout on its
-    next write."""
-    import json as J
-
+    """Every writer publishes the JSON pointer. A bare version-name pointer
+    (the pre-split form) is refused, not read: a read and a claim both
+    raise, and the pointer is left as it was."""
     led = Ledger(spark, str(tmp_path / "led"))
     led.register(_synth_files(spark, 0, 8))
-    c = led.claim_batch(4, "r1")
-    led.apply_outcomes([(c, LedgerStatus.SUCCEEDED, None)], run_id="r1")
-
-    # Rewrite the state as a LEGACY layout: one dir, bare pointer.
-    full = led.read().persist()
-    legacy_dir = tmp_path / "led" / "v1"
-    full.write.mode("overwrite").parquet(str(legacy_dir))
-    full.unpersist()
     ptr_file = tmp_path / "led" / "_LATEST"
-    ptr_file.write_text("v1")
-
-    led2 = Ledger(spark, str(tmp_path / "led"))
-    assert led2.counts() == {
-        LedgerStatus.SUCCEEDED: 4,
-        LedgerStatus.PENDING: 4,
-    }
-    # next write migrates: terminal rows move out of the active dir
-    c2 = led2.claim_batch(2, "r2")
-    led2.apply_outcomes([(c2, LedgerStatus.SUCCEEDED, None)], run_id="r2")
-    ptr = J.loads(ptr_file.read_text())
-    assert ptr["terminal"]
-    active_rows = spark.read.parquet(
-        str(tmp_path / "led" / ptr["active"])
-    ).collect()
-    assert all(r.status != LedgerStatus.SUCCEEDED for r in active_rows)
-    assert led2.counts() == {
-        LedgerStatus.SUCCEEDED: 6,
-        LedgerStatus.PENDING: 2,
-    }
+    active = json.loads(ptr_file.read_text())["active"]
+    ptr_file.write_text(active)
+    with pytest.raises(ValueError):
+        led.counts()
+    with pytest.raises(ValueError):
+        led.claim_batch(2, "r1")
+    assert ptr_file.read_text() == active
 
 
 @pytest.mark.soak
@@ -956,8 +951,7 @@ def test_segment_range_sidecars(spark, tmp_path, monkeypatch):
     footers: disjoint segments exclude each other and no keys means no
     segments; a segment whose file has no s3_key statistics is
     conservatively included; a fold's merged segment prunes on its own
-    footer; and segments that still carry an old round-9 ``_RANGE.json``
-    sidecar commit and count the same, because nothing reads it."""
+    footer; and a re-enqueue out of the merged segment finds its row."""
     import json as J
 
     import pyarrow.parquet as pq
@@ -1017,9 +1011,7 @@ def test_segment_range_sidecars(spark, tmp_path, monkeypatch):
     assert led._segs_for_keys([merged], key(10), key(10)) == [merged]
     assert led.counts() == {LedgerStatus.SUCCEEDED: 44}
 
-    # an old sidecar claiming the segment holds nothing is never read: the
-    # re-enqueue still finds its terminal row, and the counts are exact
-    (root / merged / "_RANGE.json").write_text(J.dumps({"min": "a", "max": "a"}))
+    # the re-enqueue finds its terminal row, and the counts are exact
     led.set_status([key(5)], LedgerStatus.FAILED, "re-enqueued")
     assert led.counts() == {LedgerStatus.SUCCEEDED: 43, LedgerStatus.FAILED: 1}
     assert led.read().select("s3_key").distinct().count() == 44

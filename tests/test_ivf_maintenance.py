@@ -11,6 +11,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
+from datalakejson_spark import publish
 from datalakejson_spark.functions.ivf import (
     N_CELLS,
     N_PROBE,
@@ -326,7 +327,7 @@ def test_publish_race_loser_compaction_is_discarded(spark, tmp_path):
     os.makedirs(stage)
     with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
         json.dump(["cell=0/part-gone-forever.snappy.parquet"], fh)
-    open(os.path.join(stage, "_COMMITTED"), "w").write("ok")
+    publish.commit_stage(stage, "cells")
     out = _publish_ivf_staged(idx)
     assert out.get("t-loser") == "lost"
     assert not os.path.isdir(stage)
@@ -540,7 +541,7 @@ def test_racing_splits_fence_on_the_centroid_slot(spark, tmp_path):
     # the WINNER takes slot 16 first (a real split of cell 3)
     assert split_ivf_cell(spark, idx, 3) == N_CELLS
 
-    open(os.path.join(loser, "_COMMITTED"), "w").write("ok")
+    publish.commit_stage(loser, "cells")
     out = _publish_ivf_staged(idx)
     assert out.get("a-loser") == "lost"
     meta = load_ivf_meta(idx)

@@ -24,6 +24,7 @@ from datalakejson_spark.functions.ivf import (
     retrain_ivf_delta,
     split_ivf_cell,
 )
+from datalakejson_spark import publish
 from datalakejson_spark.plans import killpoints
 from datalakejson_spark.plans.killpoints import InjectedKill
 
@@ -212,7 +213,7 @@ def test_retrain_generation_fence_loses_to_a_split(spark, tmp_path):
     gen_after_split = load_ivf_meta(idx).get("gen", 0)
     assert gen_after_split == meta0.get("gen", 0) + 1
 
-    open(os.path.join(stage, "_COMMITTED"), "w").write("ok")
+    publish.commit_stage(stage, "cells")
     out = _publish_ivf_staged(idx)
     assert out.get("r-loser") == "lost"
     m = load_ivf_meta(idx)

@@ -122,12 +122,19 @@ def test_ingest_kill_matrix(spark, conf, point):
 
 
 @pytest.mark.parametrize(
-    "point", ["ingest:after_claim", "ingest:after_curated_append"]
+    "point",
+    [
+        "ingest:after_claim",
+        "ingest:after_curated_append",
+        "ingest:after_commit_pre_archive",
+    ],
 )
 def test_ingest_kill_matrix_jdbc_ledger(spark, tmp_path, landing, point):
     """The JDBC ledger claims drop-in parity with the parquet ledger, so
     the crash contract must hold through it too: hard death at the two
-    highest-traffic points, then the standard recovery, exactly-once."""
+    highest-traffic points, and between the commit and the archive (the
+    next discover's register archives the SUCCEEDED stragglers), then the
+    standard recovery, exactly-once."""
     from datalakejson_spark.plans.jdbc_ledger import JdbcLedger
 
     conf = IngestConfig(

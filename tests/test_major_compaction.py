@@ -12,6 +12,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from datalakejson_spark import publish
 from datalakejson_spark.functions import incremental_dedup as inc
 from datalakejson_spark.functions.incremental_dedup import (
     compact_index,
@@ -282,8 +283,8 @@ def test_lost_major_stage_leaves_tombstone(spark, tmp_path):
     stage = os.path.join(idx, inc._STAGING, inc._MAJOR_STAGE)
     os.makedirs(stage)
     with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-        json.dump({"hashes": ["part-gone-forever.snappy.parquet"]}, fh)
-    open(os.path.join(stage, "_COMMITTED"), "w").write("ok")
+        json.dump(["hashes/part-gone-forever.snappy.parquet"], fh)
+    publish.commit_stage(stage)
 
     out = inc._publish_staged(idx)
     assert out.get(inc._MAJOR_STAGE) == "lost"

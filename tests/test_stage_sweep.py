@@ -7,8 +7,9 @@ reclaimed mid-flight), reclaims by atomic rename-then-recheck (a commit
 racing the sweep is restored whole or fails loudly, never half-deleted),
 and ``_COMMITTED`` carries a file manifest the publisher verifies — a
 partially destroyed committed stage becomes a loud "corrupt" outcome,
-never a silent partial publish. Stages committed by older code (an ``ok``
-marker, either ``_SUBSUMED.json`` shape) still roll forward.
+never a silent partial publish. A marker in any other format than its
+writer's (an ``ok`` commit marker, a ``{subdir: [names]}`` subsumed map)
+is refused before anything moves.
 """
 
 from __future__ import annotations
@@ -273,36 +274,40 @@ def test_half_moved_replay_passes_manifest_check(spark, tmp_path):
 
 
 def test_legacy_ok_marker_publishes_unverified(spark, tmp_path):
-    """Stages committed by pre-manifest code ('ok' marker — what the dedup
-    writers wrote until they moved onto the shared commit) still roll
-    forward — mid-upgrade compatibility."""
+    """A bare ``ok`` commit marker carries no manifest, and no writer
+    produces one: the publisher cannot verify the stage, so it takes the
+    "corrupt" outcome. The stage is removed and the live data untouched."""
     for store in _stores(spark, tmp_path):
+        n_before = _live_rows(store).count()
         stage = store.stage("batch-legacy", n=5, start=9500, commit=False)
         with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
             fh.write("ok")
         out = store.publish()
-        assert out.get("batch-legacy") == "published", (store.name, out)
-        _assert_landed_once(store, 9500, 5)
+        assert out.get("batch-legacy") == "corrupt", (store.name, out)
+        assert not os.path.isdir(stage), store.name
+        assert _live_rows(store).count() == n_before, store.name
 
 
 def test_legacy_subsumed_shapes_roll_forward(spark, tmp_path):
-    """A committed maintenance stage left on disk by older code rolls
-    forward with its own ``_SUBSUMED.json`` shape: the dedup index's
-    ``{subdir: [names]}`` map and the IVF index's ``[relpaths]`` list —
-    the staged rows land and the subsumed file is deleted."""
+    """``_SUBSUMED.json`` has one shape, the relpath list. A committed
+    stage holding the old dedup ``{subdir: [names]}`` map is refused
+    before any move: the subsumed file and the live rows stay as they
+    were. Rewritten as the list, the same stage rolls forward: the staged
+    rows land once and the subsumed file is deleted."""
     for store in _stores(spark, tmp_path):
         live = os.path.join(store.root, store.data)
-        if store.name == "dedup":
-            name = publish.staged_files(os.path.join(live, "bands"))[0]
-            shape, victim = {"bands": [name]}, os.path.join("bands", name)
-        else:
-            victim = publish.staged_files(live)[0]
-            shape = [victim]
-        stage = store.stage("compact-legacy", n=5, start=9700, commit=False)
+        victim = publish.staged_files(live)[0]
+        sub, name = os.path.split(victim)
+        stage = store.stage("compact-legacy", n=5, start=9700)
         with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
-            json.dump(shape, fh)
-        with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
-            fh.write("ok")
+            json.dump({sub: [name]}, fh)
+        n_before = _live_rows(store).count()
+        with pytest.raises(ValueError, match="not a list"):
+            store.publish()
+        assert os.path.exists(os.path.join(live, victim)), store.name
+        assert _live_rows(store).count() == n_before, store.name
+
+        publish.write_subsumed(stage, [victim])
         out = store.publish()
         assert out.get("compact-legacy") == "published", (store.name, out)
         assert not os.path.exists(os.path.join(live, victim)), store.name

@@ -24,6 +24,7 @@ import shutil
 
 import pyspark.sql.functions as F
 
+from datalakejson_spark import publish
 from datalakejson_spark.functions.index_maintenance import (
     begin_copier_stage,
     load_tombstones,
@@ -203,8 +204,7 @@ def test_publish_rollforwards_serialize_on_the_publish_slot(
         ).parquet(os.path.join(stage, "cells"), mode="overwrite")
         with open(os.path.join(stage, "_SUBSUMED.json"), "w") as fh:
             json.dump([f"{target_part}/{victim}"], fh)
-        with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
-            fh.write("ok")
+        publish.commit_stage(stage, "cells")
         named = os.path.join(os.path.dirname(stage), name)
         os.rename(stage, named)  # deterministic publish order
         return name
@@ -277,8 +277,7 @@ def test_committed_append_replay_is_never_cleared(spark, tmp_path):
     ).mode("overwrite").parquet(os.path.join(stage, "cells"))
     with open(os.path.join(stage, "_BATCH.json"), "w") as fh:
         json.dump({"batch_id": "replay1"}, fh)
-    with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
-        fh.write("ok")
+    publish.commit_stage(stage, "cells")
 
     # wedge the PUBLISH slot with a foreign claim whose "stage" dir exists
     # (claim_slot reads that as a live owner), released after ~1s
@@ -348,8 +347,7 @@ def test_committed_lsh_append_replay_is_never_cleared(spark, tmp_path):
     )
     with open(os.path.join(stage, "_BATCH.json"), "w") as fh:
         json.dump({"batch_id": "replay1"}, fh)
-    with open(os.path.join(stage, "_COMMITTED"), "w") as fh:
-        fh.write("ok")
+    publish.commit_stage(stage, "buckets")
 
     fake = os.path.join(staging, "fakeowner")
     os.makedirs(fake, exist_ok=True)
