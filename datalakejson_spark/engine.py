@@ -155,10 +155,11 @@ class DataLakeEngine:
         return vacuum_replays(self.spark, self.conf.curated_dir)
 
     def optimize(self, zorder_cols: list[str], **kwargs) -> dict[str, bool]:
-        """Compaction + Z-order re-clustering in one pass of partition-atomic
-        rewrites (plans/compact.optimize_table): small files merged AND each
+        """Compaction + Z-order re-clustering in one staged publish
+        (plans/compact.optimize_table): small files merged AND each
         partition sorted along the space-filling curve over ``zorder_cols``
-        so multi-column filters skip row groups (plans/layout.py)."""
+        so multi-column filters skip row groups (plans/layout.py); readers
+        never miss a row (plans/compact.py has the publish window)."""
         from datalakejson_spark.plans.compact import optimize_table
 
         self._fq_table = None

@@ -10,7 +10,7 @@
 Every write goes through the shared staged-publish protocol in
 datalakejson_spark/publish.py (stage → manifest-verified ``_COMMITTED`` →
 idempotent moves → subsumed deletes, with the snapshot loser check). This
-module supplies the ANN indexes' store steps (:class:`_VectorStore`):
+module supplies the ANN indexes' store steps (:class:`VectorStore`):
 
 - publishes of different stages serialize on the PUBLISH slot;
 - quantizer-changing stages (``_SPLIT.json`` cell splits, ``_RETRAIN.json``
@@ -163,7 +163,9 @@ def settle_committed_replay(
         shutil.rmtree(stage, ignore_errors=True)
         return False
     token = os.path.basename(stage)
-    out = await_publish(index_dir, subdir, meta_name, token, attempts, sleep_s)
+    out = publish.await_publish(
+        VectorStore(index_dir, subdir, meta_name), token, attempts, sleep_s
+    )
     if out == "corrupt":
         raise RuntimeError(
             f"replayed batch stage {token} in {index_dir} was committed "
@@ -285,7 +287,7 @@ def _retire_tombstones_verified(
 # ---------------------------------------------------------------------------
 # Staged publish
 # ---------------------------------------------------------------------------
-class _VectorStore(publish.Store):
+class VectorStore(publish.Store):
     """A partition-keyed ANN index (``<subdir>/<col>=N/*.parquet``) on the
     shared staged publish — see the module docstring for its steps."""
 
@@ -377,28 +379,7 @@ class _VectorStore(publish.Store):
 def publish_staged(index_dir: str, subdir: str, meta_name: str) -> dict[str, str]:
     """Roll staged deltas forward into the live partitions; returns
     ``{stage_token: outcome}`` (see datalakejson_spark/publish.py)."""
-    return publish.publish_staged(_VectorStore(index_dir, subdir, meta_name))
-
-
-def await_publish(
-    index_dir: str,
-    subdir: str,
-    meta_name: str,
-    token: str,
-    attempts: int = 20,
-    sleep_s: float = 0.05,
-) -> str:
-    """Publish passes until the committed stage ``token`` reaches a terminal
-    outcome ("raced" once another runner finished it). "pending" means a
-    live competing publish or flip held its slot past every attempt: the
-    stage stays committed and a later entry publish finishes it, so a
-    caller must NOT rerun its verb on top of it."""
-    for _ in range(attempts):
-        out = publish_staged(index_dir, subdir, meta_name).get(token, "raced")
-        if out != "pending":
-            return out
-        time.sleep(sleep_s)
-    return "pending"
+    return publish.publish_staged(VectorStore(index_dir, subdir, meta_name))
 
 
 def _record_planned_moves(stage: str, src_root: str) -> None:

@@ -1021,10 +1021,12 @@ def ivf_needs_retrain(
 
 from datalakejson_spark.functions.index_maintenance import (  # noqa: E402
     APPLIED_RETENTION_S as _APPLIED_RETENTION_S,
-    await_publish,
+    VectorStore,
     probe_retrying,
 )
-from datalakejson_spark.publish import commit_stage, write_subsumed  # noqa: E402
+from datalakejson_spark.publish import (  # noqa: E402
+    await_publish, commit_stage, write_subsumed,
+)
 
 
 def ivf_cell_rows(index_dir: str) -> dict[int, int]:
@@ -1147,7 +1149,7 @@ def split_ivf_cell(
     commit_stage(stage, _IVF_CELLS)
     fire("ivf:split_committed")  # committed, not yet published
     outcome = await_publish(
-        index_dir, _IVF_CELLS, _IVF_META, os.path.basename(stage)
+        VectorStore(index_dir, _IVF_CELLS, _IVF_META), os.path.basename(stage)
     )
     if outcome != "published":
         # "raced" can mean another runner rolled OUR stage forward — check
@@ -1369,7 +1371,7 @@ def retrain_ivf_delta(
     )
     commit_stage(stage, _IVF_CELLS)
     fire("ivf:retrain_committed")  # committed, not yet published
-    outcome = await_publish(index_dir, _IVF_CELLS, _IVF_META, token)
+    outcome = await_publish(VectorStore(index_dir, _IVF_CELLS, _IVF_META), token)
     if outcome != "published":
         if load_ivf_meta(index_dir).get("retrain_token") == token:
             pass  # another runner rolled our stage forward: published

@@ -55,11 +55,18 @@ from datalakejson_spark.session import local_df
 from pyspark.sql import types as T
 
 from datalakejson_spark import publish
+from datalakejson_spark.plans.compact import (
+    TARGET_FILE_BYTES,
+    CuratedStore,
+    compact,
+    vacuum_replays,
+)
 from datalakejson_spark.plans.killpoints import fire
 from datalakejson_spark.plans.ledger import PROCESSING_LEASE_S, Ledger, LedgerStatus
 from datalakejson_spark.plans.schema_evolution import (
     RawSchemaRegistry,
     merge_schemas,
+    read_parquet_union,
     split_compatible_files,
 )
 from datalakejson_spark.session import configure_runtime
@@ -355,27 +362,6 @@ def _archive_parallel(paths: list[str], conf: IngestConfig) -> None:
             f.result()  # surface the first failure (crash-recovery path)
 
 
-#: per-run curated stages live here, invisible to readers and compaction
-#: (``_`` prefix) while they exist
-CURATED_STAGING = "_ingest_staging"
-
-
-def _publish_curated_stage(stage_dir: str, curated_dir: str) -> None:
-    """Move one run's staged curated write into the live partitioned layout
-    with the shared path-preserving mover (see the call site for why
-    staging exists: concurrent direct appends share one committer
-    ``_temporary/0``). Committer markers (``_SUCCESS`` etc.) are dropped.
-    No commit marker: a crash mid-move leaves a partial append with no
-    ledger commit, which deduplicate_replays() resolves after the replay,
-    and the orphaned stage is reclaimed by the next run's stale sweep."""
-    publish.move_files(stage_dir, curated_dir, publish.staged_files(stage_dir))
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    try:  # prune the shared _ingest_staging root once it empties
-        os.rmdir(os.path.dirname(stage_dir))
-    except OSError:
-        pass
-
-
 def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
     """One claim→process→commit cycle. Graceful no-work exit when nothing is
     claimable (sudo_code.txt:136-139)."""
@@ -384,9 +370,10 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
     # per file, so ids must order by attempt time even for same-second
     # retries — zero-padded nanoseconds, uuid only as a collision suffix.
     run_id = f"run-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
-    # a run that crashed between its curated stage write and the publish
-    # left that stage behind; reclaim it once aged past the live-runner grace
-    publish.sweep_stale(os.path.join(conf.curated_dir, CURATED_STAGING))
+    # roll forward the curated stages a crashed run committed (an ingest's
+    # or a compaction's), and reclaim aged uncommitted ones
+    store = CuratedStore(conf.curated_dir)
+    publish.publish_staged(store)
     ledger = make_ledger(spark, conf)
     result = IngestResult(run_id=run_id)
 
@@ -488,29 +475,23 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
                 # source rows under a NEW run id — deduplicate_replays()
                 # resolves such replays downstream (T2 idempotency).
                 curated = curated.withColumn("ingest_run_id", F.lit(run_id))
-                # Stage-then-move (r16, inherited-race fix): a direct
-                # ``mode("append")`` from CONCURRENT runners shares one
-                # Hadoop committer scratch dir (``_temporary/0`` — the app
-                # attempt id, not the job id), and the first job's commit
-                # cleanup deletes the second job's in-flight task files
-                # (reproduced: FileNotFoundException under
-                # FileOutputCommitter.mergePaths, 2-3/3 runs of the
-                # two-runner soak on a loaded box, present at r15 HEAD).
-                # Each run stages under its own hidden per-run dir and
-                # publishes by same-filesystem file moves into the live
-                # layout — task filenames carry the writing job's UUID, so
-                # moves never collide. A crash mid-publish leaves a partial
-                # append with NO ledger commit, which is exactly today's
-                # crash-between-append-and-commit window: the re-claimed
-                # batch re-appends under a new run id and
-                # deduplicate_replays() resolves it (T2 idempotency).
-                stage_dir = os.path.join(
-                    conf.curated_dir, CURATED_STAGING, run_id
-                )
+                # Staged publish, not a direct ``mode("append")``: appends
+                # from CONCURRENT runners share one committer scratch dir
+                # (``_temporary/0``), and one job's cleanup deletes the
+                # other's task files (FileOutputCommitter.mergePaths). A
+                # crash before the commit leaves garbage; after it, the next
+                # publish pass rolls the stage forward. Either way the batch
+                # replays under a new run id (deduplicate_replays, T2).
+                stage = os.path.join(store.staging, run_id)
                 curated.write.mode("overwrite").partitionBy(
                     *PARTITION_COLS
-                ).parquet(stage_dir)
-                _publish_curated_stage(stage_dir, conf.curated_dir)
+                ).parquet(stage)
+                publish.commit_stage(stage)
+                fire("ingest:after_curated_commit")
+                # "pending" (a live publish held the slot throughout) is
+                # durable: the next publish pass makes the rows visible
+                if publish.await_publish(store, run_id) == "corrupt":
+                    raise RuntimeError(f"curated stage {run_id} lost staged files")
                 fire("ingest:after_curated_append")
             raw.unpersist()
 
@@ -635,9 +616,8 @@ def run_until_drained(
     small-file problem (960k files/day at its stated rate): micro-batch
     appends write one file per task per batch, and compaction folds each
     partition back to target-size files without changing query results
-    (old-or-new atomic swap per partition, plans/compact.py)."""
-    from datalakejson_spark.plans.compact import TARGET_FILE_BYTES, compact
-
+    (one staged publish: rows twice inside its window, never missing, and a
+    crashed stage rolls forward on the next batch; plans/compact.py)."""
     target = compact_target_bytes or TARGET_FILE_BYTES
     results = []
     for _ in range(max_runs):
@@ -654,8 +634,6 @@ def run_until_drained(
     if compact_every and results:
         # vacuum BEFORE the final compaction: replay rows from any crashed
         # attempts are dropped first, so compaction never rewrites dead data
-        from datalakejson_spark.plans.compact import vacuum_replays
-
         vacuum_replays(spark, conf.curated_dir)
         compact(spark, conf.curated_dir, target_file_bytes=target)
     return results
@@ -677,20 +655,10 @@ def deduplicate_replays(df: DataFrame) -> DataFrame:
 
 
 def read_curated(spark: SparkSession, curated_dir: str) -> DataFrame:
-    """Schema-evolving read: union of all written schemas, NULL-backfilled
-    (diagram3:110). mergeSchema belongs on the READ (SURVEY.md §1.3); when a
-    numeric column widened across batches (psuedo_code.txt:360) parquet
-    mergeSchema cannot reconcile the physical types, so we fall back to the
-    grouped evolving reader."""
-    configure_runtime(spark)
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(curated_dir)
-        df.schema  # force schema resolution (merge failures surface here)
-        return df
-    except Exception:  # noqa: BLE001 — widened physical types
-        from datalakejson_spark.plans.schema_evolution import read_evolving_parquet
-
-        return read_evolving_parquet(spark, curated_dir)
+    """Schema-evolving read: union of all written schemas, NULL-backfilled,
+    widened where a numeric column widened across batches
+    (plans/schema_evolution.read_parquet_union)."""
+    return read_parquet_union(spark, curated_dir)
 
 
 def write_dlq_summary(spark: SparkSession, conf: IngestConfig) -> DataFrame:

@@ -19,9 +19,14 @@ Compatibility rules (JSON-inference type lattice):
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from datalakejson_spark import publish
+from datalakejson_spark.session import configure_runtime
 
 
 def _kind(dt: T.DataType) -> str:
@@ -172,47 +177,53 @@ def merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
     return T.StructType([T.StructField(n, dt, True) for n, dt in fields.items()])
 
 
-def read_evolving_parquet(spark: SparkSession, curated_dir: str):
-    """Union-of-schemas parquet read that survives numeric widening.
+def read_parquet_union(
+    spark: SparkSession, base: str, rels: list[str] | None = None
+) -> DataFrame:
+    """Union-of-schemas read of the parquet files ``rels`` under ``base``
+    (all of them when None), NULL-backfilled (diagram3:110). ``mergeSchema``
+    belongs on the READ (SURVEY.md §1.3), but it cannot merge a column that
+    widened its physical type (INT64 vs DOUBLE, psuedo_code.txt:360). Then:
 
-    Spark's ``mergeSchema`` cannot merge files whose column changed physical
-    type (INT64 vs DOUBLE) — the vectorized reader has no upcast path. This
-    reader delivers the declared semantics (diagram3:110 "Union of all JSON
-    key evolutions" + widening psuedo_code.txt:360) anyway:
-
-    1. group data files by their footer schema (driver-side pyarrow metadata
-       reads — cheap; at very large file counts fan this out as an RDD over
-       footers),
-    2. read each homogeneous group (no merging needed, ``basePath`` keeps the
-       hive partition columns),
+    1. group the data files by their footer schema (driver-side pyarrow
+       metadata reads — cheap; at very large file counts fan this out as
+       an RDD over footers),
+    2. read each homogeneous group (no merging needed, ``basePath`` keeps
+       the hive partition columns),
     3. cast every group to the widened union schema and unionByName.
 
-    One logical plan, no data rewrite; old files upcast lazily at scan time.
-    """
+    One logical plan, no data rewrite; old files upcast lazily at scan
+    time. Hidden (``_``/``.``) dirs such as publish stages are skipped by
+    Spark's file index and by :func:`publish.staged_files` alike."""
     import pyarrow.parquet as pq
     from functools import reduce
-    from pathlib import Path
 
-    import pyspark.sql.functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    configure_runtime(spark)
+    paths = [base] if rels is None else [os.path.join(base, r) for r in rels]
+    try:
+        df = spark.read.options(mergeSchema="true", basePath=base).parquet(*paths)
+        df.schema  # force schema resolution (merge failures surface here)
+        return df
+    except Exception:  # noqa: BLE001 — widened physical types
+        pass
     groups: dict[str, tuple[T.StructType, list[str]]] = {}
-    for p in sorted(Path(curated_dir).rglob("*.parquet")):
-        if p.name.startswith(("_", ".")):
-            continue
-        arrow_schema = pq.read_schema(p)
+    for rel in publish.staged_files(base) if rels is None else rels:
+        path = os.path.join(base, rel)
+        arrow_schema = pq.read_schema(path)
         key = str(arrow_schema)
         if key in groups:
-            groups[key][1].append(str(p))
+            groups[key][1].append(path)
         else:
-            groups[key] = (from_arrow_schema(arrow_schema), [str(p)])
+            groups[key] = (from_arrow_schema(arrow_schema), [path])
     if not groups:
-        raise FileNotFoundError(f"no parquet files under {curated_dir}")
+        raise FileNotFoundError(f"no parquet files under {base}")
 
     target = reduce(merge_schemas, (s for s, _ in groups.values()))
     frames = []
     for _, (schema, files) in groups.items():
-        df = spark.read.option("basePath", curated_dir).parquet(*files)
+        df = spark.read.option("basePath", base).parquet(*files)
         have = dict(zip(df.columns, df.columns))
         cols = [
             (F.col(f.name).cast(f.dataType) if f.name in have

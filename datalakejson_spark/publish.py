@@ -289,15 +289,6 @@ def _stages(staging: str):
         yield token, stage
 
 
-def sweep_stale(staging: str) -> None:
-    """Reclaim aged uncommitted stages under ``staging`` without publishing
-    anything — for a store whose writer publishes inline and never commits
-    (the curated ingest write), so a crashed run's stage is only garbage."""
-    for _token, stage in _stages(staging):
-        if not is_committed(stage):
-            _reclaim_if_stale(stage)
-
-
 # ---------------------------------------------------------------------------
 # Slot claims
 # ---------------------------------------------------------------------------
@@ -374,6 +365,22 @@ def publish_staged(store: Store) -> dict[str, str]:
             # either terminal state is complete on its own
             outcomes[token] = "raced"
     return outcomes
+
+
+def await_publish(
+    store: Store, token: str, attempts: int = 20, sleep_s: float = 0.05
+) -> str:
+    """Publish passes until the committed stage ``token`` reaches a terminal
+    outcome ("raced" once another runner finished it). "pending" means a
+    live competing publish held the store's slot past every attempt: the
+    stage stays committed and a later publish pass finishes it, so a
+    caller must NOT rerun its verb on top of it."""
+    for _ in range(attempts):
+        out = publish_staged(store).get(token, "raced")
+        if out != "pending":
+            return out
+        time.sleep(sleep_s)
+    return "pending"
 
 
 def _destroyed_files(store: Store, stage: str) -> list[str]:

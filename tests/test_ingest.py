@@ -212,17 +212,16 @@ def test_replay_after_partial_crash_is_deduplicable(spark, ingest_conf, monkeypa
 
 
 def test_orphaned_curated_stage_is_swept(spark, ingest_conf):
-    """A run that died between its curated stage write and the publish
-    leaves ``_ingest_staging/<run_id>`` behind (no ledger commit, so its
-    batch replays). The next ingest_batch reclaims it once every mtime in
-    its tree is older than STALE_STAGE_S, and keeps a fresh one — it may
-    belong to a live concurrent runner."""
+    """A run that died between its curated stage write and the commit
+    leaves an uncommitted ``_staging/<run_id>`` behind (no ledger commit,
+    so its batch replays). The next ingest_batch's publish pass reclaims it
+    once every mtime in its tree is older than STALE_STAGE_S, and keeps a
+    fresh one — it may belong to a live concurrent runner."""
     import time
 
-    from datalakejson_spark.plans.ingest import CURATED_STAGING
-    from datalakejson_spark.publish import STALE_STAGE_S
+    from datalakejson_spark.publish import STAGING, STALE_STAGE_S
 
-    staging = Path(ingest_conf.curated_dir) / CURATED_STAGING
+    staging = Path(ingest_conf.curated_dir) / STAGING
     for run in ("run-old", "run-fresh"):
         part = staging / run / "year=2024" / "part-00000.parquet"
         part.parent.mkdir(parents=True)

@@ -69,6 +69,9 @@ def conf(tmp_path: Path, landing: Path) -> IngestConfig:
 INGEST_MATRIX = {
     "ingest:after_claim": (20, 2),
     "ingest:after_dlq_write": (20, 4),
+    # committed, unpublished: the next batch's publish pass rolls the stage
+    # forward before it claims, and the claim replays the batch
+    "ingest:after_curated_commit": (40, 4),
     "ingest:after_curated_append": (40, 4),
     "ingest:after_commit_pre_archive": (20, 2),
     "ingest:mid_archive_move": (20, 2),
@@ -235,6 +238,47 @@ def test_dedup_kill_matrix(spark, tmp_path, point):
 
     # the whole corpus now audits as duplicate — the index is complete
     assert ingest_batch_dedup(spark, docs, idx).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Curated-lake maintenance on the staged publish (plans/compact.py)
+# ---------------------------------------------------------------------------
+# point → (rows doubled after the kill, _staging empty after the rerun).
+# Before the commit the dead stage is garbage the age sweep reclaims later;
+# after it the rerun's publish pass rolls the stage forward first. Inside
+# the publish the moves are done and the subsumed deletes are not, so a
+# reader sees the rewritten rows twice until the rerun finishes them.
+COMPACT_MATRIX = {
+    "compact:staged": (False, False),
+    "compact:committed": (False, True),
+    "compact:publishing": (True, True),
+}
+
+
+@pytest.mark.parametrize("verb", ["compact", "vacuum_replays"])
+@pytest.mark.parametrize("point", list(COMPACT_MATRIX))
+def test_compact_kill_matrix(spark, tmp_path, point, verb):
+    from datalakejson_spark.plans import compact
+    from datalakejson_spark.publish import STAGING
+    from tests.test_curated_publish import plant, rows
+
+    doubled, drained = COMPACT_MATRIX[point]
+    run = getattr(compact, verb)
+    ref = plant(tmp_path / "ref")
+    run(spark, ref)
+    expected = rows(spark, ref)
+
+    lake = plant(tmp_path / "lake")
+    before = rows(spark, lake)
+    killpoints.kill_once(point)
+    with pytest.raises(InjectedKill):
+        run(spark, lake)
+    # the moved-in rewrite sits beside the files it replaces
+    assert rows(spark, lake) == (before + expected if doubled else before)
+
+    run(spark, lake)
+    assert rows(spark, lake) == expected
+    assert (os.listdir(os.path.join(lake, STAGING)) == []) == drained
 
 
 # ---------------------------------------------------------------------------

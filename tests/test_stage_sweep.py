@@ -192,7 +192,6 @@ def test_vanished_stage_reads_as_fresh(tmp_path):
     gone = str(tmp_path / "_staging" / "vanished")
     before = time.time()
     assert publish.stage_newest_mtime(gone) >= before
-    publish.sweep_stale(str(tmp_path / "_staging"))  # no staging dir: no-op
     publish._reclaim_if_stale(gone)
     assert not os.path.exists(gone)
 

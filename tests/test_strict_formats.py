@@ -5,7 +5,8 @@ committed stage it is handed: ``_COMMITTED`` is the ``{"files": [...]}``
 manifest, and ``_SUBSUMED.json``, when present, is a list of relpaths.
 The writers covered are the dedup append, compaction, major compaction
 and rebuild; the IVF append, compaction, split and retrain; the LSH append
-and compaction; and the tombstone vacuum. The ANN cases also pin that the
+and compaction; the tombstone vacuum; and the curated lake's ingest batch,
+compaction, optimize and replay vacuum. The ANN cases also pin that the
 vector count is kept only in its ``_COUNT.json`` sidecar.
 """
 
@@ -127,3 +128,41 @@ def test_lsh_writers_commit_strict_markers(spark, tmp_path, committed):
         max_runs_per_bucket=1,
     )
     _assert_count_in_sidecar_only(idx, "_LSH.json", 120 + 30 + 30)
+
+
+def test_curated_writers_commit_strict_markers(spark, tmp_path, committed):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datalakejson_spark.plans import compact as cmp
+    from datalakejson_spark.plans import ingest as ing
+    from tests.conftest import good_record, write_ndjson
+
+    for k in range(2):
+        write_ndjson(
+            tmp_path / "landing" / f"f{k}.json",
+            [good_record(10 * k + i, score=10 * k + i) for i in range(5)],
+        )
+    conf = ing.IngestConfig(
+        landing_dir=str(tmp_path / "landing"),
+        curated_dir=str(tmp_path / "curated"),
+        dlq_dir=str(tmp_path / "dlq"),
+        archive_dir=str(tmp_path / "archive"),
+        ledger_dir=str(tmp_path / "ledger"),
+        batch_size=1,
+    )
+    ing.discover(spark, conf)
+    for _ in range(2):
+        _publishes(committed, ing.ingest_batch, spark, conf)
+    assert all(_publishes(committed, cmp.compact, spark, conf.curated_dir).values())
+    # a replayed source: the older run's row is the one vacuum drops
+    (part,) = cmp.list_partition_dirs(conf.curated_dir)
+    for run in ("run-0", "run-1"):
+        pq.write_table(
+            pa.table({"record_id": [run], "source_s3_path": ["x"], "ingest_run_id": [run]}),
+            os.path.join(part, f"part-replay-{run}.parquet"),
+        )
+    assert _publishes(committed, cmp.vacuum_replays, spark, conf.curated_dir) == {part: 1}
+    assert _publishes(
+        committed, cmp.optimize_table, spark, conf.curated_dir, zorder_cols=["score"]
+    ) == {part: True}

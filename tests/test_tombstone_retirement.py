@@ -216,12 +216,12 @@ def test_publish_rollforwards_serialize_on_the_publish_slot(
     def publish_other_midflight():
         # models a second PROCESS publishing stage t2 while this one is
         # inside t1's critical section (different token -> must wait)
-        from datalakejson_spark.functions.index_maintenance import _VectorStore
+        from datalakejson_spark.functions.index_maintenance import VectorStore
         from datalakejson_spark.publish import publish_one
 
         disarm("ivf:publish_publishing")
         inner[t2] = publish_one(
-            _VectorStore(idx, "cells", "_IVF.json"),
+            VectorStore(idx, "cells", "_IVF.json"),
             os.path.join(idx, "_staging", t2),
         )
 
