@@ -1,4 +1,5 @@
-"""Atomic single-file writes, shared by every meta/sidecar writer.
+"""Atomic single-file writes, shared by every meta/sidecar writer, and the
+one file-URI → path mapping.
 
 Torn-read fence (round 15, cross-JVM soak catch): writers staged through
 a FIXED ``<target>.tmp`` name, so two concurrent writers of the same
@@ -23,6 +24,7 @@ import json
 import os
 import time
 import uuid
+from urllib.parse import unquote
 
 #: orphan tmps younger than this are presumed to belong to a live writer
 TMP_GRACE_S = 3600.0
@@ -69,3 +71,10 @@ def sweep_orphan_tmps(path: str, grace_s: float = TMP_GRACE_S) -> None:
                 os.remove(p)
         except OSError:
             pass
+
+
+def uri_path(file_uri: str) -> str:
+    """The plain path of a ``file:`` URI such as ``input_file_name()``
+    yields. Ledger keys are plain paths, and the URI is URL-encoded, so a
+    space or ``%`` in a name must round-trip through ``unquote``."""
+    return unquote(file_uri.removeprefix("file://").removeprefix("file:"))

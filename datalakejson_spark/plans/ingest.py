@@ -45,7 +45,6 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from urllib.parse import unquote
 
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
@@ -55,6 +54,7 @@ from datalakejson_spark.session import local_df
 from pyspark.sql import types as T
 
 from datalakejson_spark import publish
+from datalakejson_spark.fsutil import uri_path
 from datalakejson_spark.plans.compact import (
     TARGET_FILE_BYTES,
     CuratedStore,
@@ -225,7 +225,7 @@ def _zero_byte_files(listing: DataFrame) -> list[tuple[str, int]]:
     that vanished since the listing is skipped, as the scan skips it."""
     rows = []
     for uri in listing.inputFiles():
-        path = unquote(uri.removeprefix("file://").removeprefix("file:"))
+        path = uri_path(uri)
         try:
             if os.path.getsize(path) == 0:
                 rows.append((path, 0))
@@ -382,44 +382,35 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
     if not paths:
         return result
     fire("ingest:after_claim")
-    # Files may have been archived by a crashed-after-write run; treat the
-    # already-moved ones as their archive copies were... they are SUCCEEDED
-    # work whose ledger commit was lost. Re-check existence defensively.
+    # A claimed file missing from landing was either archived by a run that
+    # crashed after its curated write (SUCCEEDED work whose ledger commit was
+    # lost) or genuinely lost; the outcome loop below tells the two apart.
     live_paths = [p for p in paths if os.path.exists(p)]
 
+    raw = None
     try:
-        drift_quarantined: list[str] = []
         if conf.landing_format == "csv" and conf.schema is None:
             raise ValueError("CSV landing zones require an explicit schema")
-        if conf.schema is not None:
-            schema = conf.schema
-        else:
+        schema = conf.schema
+        if schema is None and live_paths:
             # Schema-drift gate (SURVEY §7.3): files whose shape is
             # incompatible with the landing contract (e.g. STRING→STRUCT,
             # psuedo_code.txt:362) are quarantined BEFORE the batch read, so
             # they can't poison the inferred schema or the curated table.
+            # The first batch has no contract to conflict with; its schema
+            # founds it (diagram_1.txt:44).
             registry = RawSchemaRegistry(conf.ledger_dir)
             contract = registry.load()
-            if live_paths and contract is not None:
-                # drift gate + batch inference in ONE data pass
-                live_paths, drifted, schema = split_compatible_files(
-                    spark, live_paths, contract
-                )
-                result.drifted_files = drifted
-                drift_quarantined = list(drifted)
-            else:
-                # first batch: infer the initial contract (diagram_1.txt:44)
-                schema = spark.read.json(live_paths).schema if live_paths else None
-            # Merge into the contract, then pin the corrupt column: without an
-            # explicit schema Spark drops _corrupt_record support for files
-            # that are 100% malformed (SURVEY.md §7.3).
-            if schema is not None:
-                merged = merge_schemas(contract, schema) if contract else schema
-                registry.save(merged)
-                schema = merged
-        if not live_paths:
-            raw = None
-        else:
+            live_paths, result.drifted_files, inferred = split_compatible_files(
+                spark, live_paths, contract
+            )
+            if inferred is not None:
+                schema = merge_schemas(contract, inferred)
+                registry.save(schema)
+        if live_paths:
+            # Pin the corrupt column: without an explicit schema Spark drops
+            # _corrupt_record support for files that are 100% malformed
+            # (SURVEY.md §7.3).
             if CORRUPT_COL not in [f.name for f in schema.fields]:
                 # copy — StructType.add mutates in place and the schema may be
                 # caller-owned (conf.schema) or the shared contract object
@@ -457,8 +448,8 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
             )
             result.corrupt_rows = sum(r.n_corrupt for r in per_file)
             result.good_rows = sum(r.n_good for r in per_file)
-            corrupt_paths = {_norm(r.source_s3_path) for r in per_file if r.n_corrupt}
-            good_paths = {_norm(r.source_s3_path) for r in per_file if r.n_good}
+            corrupt_paths = {uri_path(r.source_s3_path) for r in per_file if r.n_corrupt}
+            good_paths = {uri_path(r.source_s3_path) for r in per_file if r.n_good}
             if result.corrupt_rows:
                 # DLQ: corrupt rows + lineage, bucketed by run id
                 # (sudo_code.txt:169).
@@ -493,16 +484,16 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
                 if publish.await_publish(store, run_id) == "corrupt":
                     raise RuntimeError(f"curated stage {run_id} lost staged files")
                 fire("ingest:after_curated_append")
-            raw.unpersist()
 
         # Per-file outcome classification (sudo_code.txt:202-224). A file with
         # any corrupt row is quarantined even if some rows parsed — its good
         # rows were still written (the reference does the same: the DLQ and
         # curated branches are independent).
+        drift_set, live_set = set(result.drifted_files), set(live_paths)
         for p in paths:
-            if p in drift_quarantined:
+            if p in drift_set:
                 result.quarantined_files.append(p)
-            elif p not in live_paths:
+            elif p not in live_set:
                 # claimed but vanished from landing: either archived by a
                 # crashed run (treat as succeeded) or genuinely lost.
                 if os.path.exists(_archive_path(p, conf.landing_dir, conf.archive_dir)):
@@ -523,14 +514,11 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
                 # the retry loop reclaims
                 result.lost_files.append(p)
 
-        drift_set = set(drift_quarantined)
         corrupt_quarantine = [p for p in result.quarantined_files if p not in drift_set]
         drift_msg = (
             "incompatible schema drift: "
-            + "; ".join(
-                f"{p}: {result.drifted_files[p]}" for p in drift_quarantined
-            )[:500]
-            if drift_quarantined
+            + "; ".join(f"{p}: {c}" for p, c in result.drifted_files.items())[:500]
+            if drift_set
             else None
         )
         # One snapshot write for the whole batch outcome (not one per state).
@@ -548,7 +536,7 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
                 (result.succeeded_files, LedgerStatus.SUCCEEDED, None),
                 (corrupt_quarantine, LedgerStatus.QUARANTINED,
                  "corrupt records routed to DLQ"),
-                (drift_quarantined, LedgerStatus.QUARANTINED, drift_msg),
+                (list(result.drifted_files), LedgerStatus.QUARANTINED, drift_msg),
                 (result.lost_files, LedgerStatus.FAILED,
                  "claimed but produced no rows (lost/empty)"),
             ],
@@ -589,14 +577,9 @@ def ingest_batch(spark: SparkSession, conf: IngestConfig) -> IngestResult:
             fence_run_id=run_id,
         )
         raise
-
-
-def _norm(file_uri: str) -> str:
-    """input_file_name() yields a URL-encoded file: URI; ledger keys are
-    plain paths (spaces etc. must round-trip)."""
-    from urllib.parse import unquote
-
-    return unquote(file_uri.removeprefix("file://").removeprefix("file:"))
+    finally:
+        if raw is not None:
+            raw.unpersist()
 
 
 def run_until_drained(

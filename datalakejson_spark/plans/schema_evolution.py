@@ -5,12 +5,14 @@ psuedo_code.txt:356-358) and compatible widening (INT→BIGINT, FLOAT→DOUBLE,
 psuedo_code.txt:360), and names incompatible changes (STRING→STRUCT,
 psuedo_code.txt:362) as an acknowledged open problem that would corrupt the
 curated table. Our engine closes that gap: before appending, the batch schema
-is checked against the curated schema; on conflict, the *offending files* are
-identified (per-file inference on the conflicted columns only — the rare
-path) and quarantined to the DLQ, while compatible files proceed.
+is checked against the landing contract; on conflict, one aggregate infers
+every file's schema at once to find the *offending files* (the rare path),
+which are quarantined to the DLQ, while compatible files proceed.
 
 Compatibility rules (JSON-inference type lattice):
 - identical types: ok
+- void (no value seen: a null or an empty array element) merges to the
+  other side, so a file that says nothing about a column never conflicts
 - numeric widening long→double: ok (Parquet/catalog stores the wide type)
 - anything↔struct, anything↔array, scalar-kind changes (e.g. string→long is
   NOT inferred ambiguously by Spark — strings stay strings — so a kind
@@ -19,13 +21,18 @@ Compatibility rules (JSON-inference type lattice):
 
 from __future__ import annotations
 
+import json
 import os
+import pathlib
+import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from datalakejson_spark import publish
+from datalakejson_spark.fsutil import atomic_write_json, uri_path
+from datalakejson_spark.plans.variant_ingest import LINEAGE_COL, drift_report
 from datalakejson_spark.session import configure_runtime
 
 
@@ -50,27 +57,14 @@ def _kind(dt: T.DataType) -> str:
 
 
 def compatible(old: T.DataType, new: T.DataType) -> bool:
-    """May data of type ``new`` append into a column historically ``old``?"""
-    ko, kn = _kind(old), _kind(new)
-    if ko == kn:
-        if ko == "struct":
-            old_fields = {f.name: f.dataType for f in old.fields}
-            return all(
-                name not in old_fields or compatible(old_fields[name], f.dataType)
-                for name, f in ((f.name, f) for f in new.fields)
-            )
-        if ko == "array":
-            return compatible(old.elementType, new.elementType)
-        if ko == "map":
-            # must mirror merge_type's recursion: a map whose key/value type
-            # drifted incompatibly would otherwise pass this gate and then
-            # blow up merge_schemas mid-ingest instead of quarantining
-            return compatible(old.keyType, new.keyType) and compatible(
-                old.valueType, new.valueType
-            )
-        return True
-    # numeric widening in either direction is mergeable (result: fractional)
-    return {ko, kn} == {"integral", "fractional"}
+    """May data of type ``new`` append into a column historically ``old``?
+    Exactly when the two types merge (``_merge_type``), so the gate and the
+    contract's evolution rule cannot disagree."""
+    try:
+        _merge_type(old, new)
+    except ValueError:
+        return False
+    return True
 
 
 def incompatible_columns(
@@ -86,57 +80,98 @@ def incompatible_columns(
     return out
 
 
+# ``schema_of_variant`` spells a JSON object OBJECT<...> and a kind conflict
+# VARIANT; names that need quoting are back-quoted and skipped here. An
+# empty object says nothing (JSON inference drops it), and conflicting
+# kinds widen to string, as JSON inference widens them.
+_VARIANT_TOKEN = re.compile(r"(`(?:[^`]|``)*`)|\bOBJECT<>|\bOBJECT<|\bVARIANT\b(?!:)")
+_DDL_OF = {"OBJECT<>": "VOID", "OBJECT<": "STRUCT<", "VARIANT": "STRING"}
+
+
+def _row_type(variant_schema: str) -> T.StructType:
+    """The row type of one file's ``schema_of_variant_agg`` over its lines,
+    each wrapped in an array (see :func:`split_compatible_files`)."""
+    ddl = _VARIANT_TOKEN.sub(lambda m: m.group(1) or _DDL_OF[m.group(0)], variant_schema)
+    rows = T._parse_datatype_string(ddl)
+    if isinstance(rows, T.ArrayType) and isinstance(rows.elementType, T.StructType):
+        return rows.elementType
+    return T.StructType()
+
+
 def split_compatible_files(
     spark: SparkSession,
     paths: list[str],
-    curated: T.StructType,
+    contract: T.StructType,
 ) -> tuple[list[str], dict[str, list[tuple[str, str, str]]], T.StructType | None]:
     """Partition ``paths`` into (compatible, {path: conflicts}, schema_of_good).
+    An empty ``contract`` (the first batch) conflicts with nothing.
 
     Fast path: one batch-level inference; if it is compatible, every file is,
     and the inferred schema is returned for reuse (the caller must not infer
     again — inference is a full data scan). Slow path (a conflict exists):
-    per-file inference to attribute it, then re-infer over the compatible
-    subset — acceptable because conflicts are rare and the batch is bounded
-    (batch_size files, sudo_code.txt:128).
-
-    The per-file inferences are independent one-task jobs, so they run
-    concurrently on a pool bounded by the session's parallelism instead of
-    back to back (a 10k-file batch with one drifted file would otherwise
-    queue 10k jobs). ``inheritable_thread_target`` hands each worker the
-    caller's local properties and session tags, so the caller's job group,
-    scheduler pool and job tags still mark every job."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
+    one aggregate over the batch's lines, grouped by file, merges each
+    file's JSON types into its schema. That is the reduce over most specific
+    supertypes that JSON inference runs over a whole batch (Spark SQL,
+    SIGMOD 2015 §5.1), keyed by file, so attribution costs the same jobs at
+    any file count. Then the compatible subset is re-inferred, with fields
+    that hold no value dropped: a column that a file leaves null or empty
+    passed attribution, and must not conflict with the contract there."""
     batch_schema = spark.read.json(paths).schema
-    if not incompatible_columns(curated, batch_schema):
+    if not incompatible_columns(contract, batch_schema):
         return paths, {}, batch_schema
 
-    def conflicts_of(p: str) -> list[tuple[str, str, str]]:
-        return incompatible_columns(curated, spark.read.json(p).schema)
-
-    workers = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        per_file = list(pool.map(inheritable_thread_target(spark)(conflicts_of), paths))
-    good, bad = [], {}
-    for p, conflicts in zip(paths, per_file):
-        if conflicts:
-            bad[p] = conflicts
-        else:
-            good.append(p)
-    good_schema = spark.read.json(good).schema if good else None
+    # JSON inference reads an object line as a row and an array line as its
+    # rows; any other line is a corrupt record and carries no schema
+    line = F.col("value")
+    doc = F.when(line.rlike(r"^\s*\{"), F.concat(F.lit("["), line, F.lit("]"))).when(
+        line.rlike(r"^\s*\["), line
+    )
+    lines = spark.read.text(paths).select(
+        F.try_parse_json(doc).alias("record"), F.input_file_name().alias(LINEAGE_COL)
+    )
+    schema_of = {
+        uri_path(r[LINEAGE_COL]): r.merged_schema for r in drift_report(lines).collect()
+    }
+    conflicts = {
+        s: incompatible_columns(contract, _row_type(s)) for s in set(schema_of.values())
+    }
+    bad = {p: conflicts[schema_of[p]] for p in paths if conflicts.get(schema_of.get(p))}
+    good = [p for p in paths if p not in bad]
+    good_schema = (
+        spark.read.option("dropFieldIfAllNull", True).json(good).schema if good else None
+    )
     return good, bad, good_schema
 
 
-def curated_schema(spark: SparkSession, curated_dir: str) -> T.StructType | None:
-    try:
-        return (
-            spark.read.option("mergeSchema", "true").parquet(curated_dir).schema
+def _merge_type(a: T.DataType, b: T.DataType) -> T.DataType:
+    """The type that holds data of both ``a`` and ``b``; ValueError when no
+    type does (an incompatible change)."""
+    ka, kb = _kind(a), _kind(b)
+    if ka == "void":
+        return b
+    if kb == "void":
+        return a
+    if ka == kb == "struct":
+        return merge_schemas(a, b)
+    if ka == kb == "array":
+        return T.ArrayType(_merge_type(a.elementType, b.elementType))
+    if ka == kb == "map":
+        # recurse like arrays: map<string,int> + map<string,double> must
+        # widen the value type, not silently keep the narrow one
+        return T.MapType(
+            _merge_type(a.keyType, b.keyType),
+            _merge_type(a.valueType, b.valueType),
         )
-    except Exception:  # noqa: BLE001 — first batch: no curated lake yet
-        return None
+    if ka == kb:
+        # prefer the wider scalar within a kind
+        if ka == "integral":
+            return T.LongType()
+        if ka == "fractional":
+            return T.DoubleType()
+        return a
+    if {ka, kb} == {"integral", "fractional"}:
+        return T.DoubleType()
+    raise ValueError(f"incompatible merge: {a.simpleString()} vs {b.simpleString()}")
 
 
 def merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
@@ -144,35 +179,10 @@ def merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
     fields from both sides; integral+fractional conflicts widen to double;
     structs/arrays merge recursively. Caller must have rejected incompatible
     fields first (``incompatible_columns``)."""
-
-    def merge_type(a: T.DataType, b: T.DataType) -> T.DataType:
-        ka, kb = _kind(a), _kind(b)
-        if ka == kb == "struct":
-            return merge_schemas(a, b)
-        if ka == kb == "array":
-            return T.ArrayType(merge_type(a.elementType, b.elementType))
-        if ka == kb == "map":
-            # recurse like arrays: map<string,int> + map<string,double> must
-            # widen the value type, not silently keep the narrow one
-            return T.MapType(
-                merge_type(a.keyType, b.keyType),
-                merge_type(a.valueType, b.valueType),
-            )
-        if ka == kb:
-            # prefer the wider scalar within a kind
-            if ka == "integral":
-                return T.LongType()
-            if ka == "fractional":
-                return T.DoubleType()
-            return a
-        if {ka, kb} == {"integral", "fractional"}:
-            return T.DoubleType()
-        raise ValueError(f"incompatible merge: {a.simpleString()} vs {b.simpleString()}")
-
     fields: dict[str, T.DataType] = {f.name: f.dataType for f in old.fields}
     for f in new.fields:
         fields[f.name] = (
-            merge_type(fields[f.name], f.dataType) if f.name in fields else f.dataType
+            _merge_type(fields[f.name], f.dataType) if f.name in fields else f.dataType
         )
     return T.StructType([T.StructField(n, dt, True) for n, dt in fields.items()])
 
@@ -243,25 +253,17 @@ class RawSchemaRegistry:
     replace, same crash-safety as the ledger pointer."""
 
     def __init__(self, root: str):
-        import pathlib
-
         self.path = pathlib.Path(root) / "_raw_schema.json"
 
-    def load(self) -> T.StructType | None:
+    def load(self) -> T.StructType:
+        """The contract; empty (nothing conflicts) before the first batch."""
         try:
-            return T.StructType.fromJson(
-                __import__("json").loads(self.path.read_text())
-            )
+            return T.StructType.fromJson(json.loads(self.path.read_text()))
         except FileNotFoundError:
-            return None
+            return T.StructType()
 
     def save(self, schema: T.StructType) -> None:
-        import json
-        import os
-
         # the dir normally exists (snapshot ledger home), but with a JDBC
         # ledger nothing else creates it
         self.path.parent.mkdir(parents=True, exist_ok=True)
-        from datalakejson_spark.fsutil import atomic_write_json
-
         atomic_write_json(str(self.path), schema.jsonValue())

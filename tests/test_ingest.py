@@ -178,6 +178,31 @@ def test_crash_recovery_marks_batch_failed(spark, ingest_conf, monkeypatch):
     assert sum(len(r.succeeded_files) for r in res) == 3
 
 
+def test_failed_batch_releases_cached_batch(spark, ingest_conf):
+    """A batch that fails after caching its raw read (here: at the DLQ
+    write) still releases the cache; it must not stay pinned for the
+    session's life."""
+    from datalakejson_spark.plans import killpoints
+
+    def cached() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    discover(spark, ingest_conf)
+    before = cached()
+
+    def fail() -> None:
+        raise RuntimeError("simulated DLQ write failure")
+
+    killpoints.arm("ingest:after_dlq_write", fail)
+    try:
+        with pytest.raises(RuntimeError, match="simulated DLQ"):
+            ingest_batch(spark, ingest_conf)
+    finally:
+        killpoints.disarm("ingest:after_dlq_write")
+    assert cached() <= before
+    assert Ledger(spark, ingest_conf.ledger_dir).counts() == {LedgerStatus.FAILED: 4}
+
+
 def test_replay_after_partial_crash_is_deduplicable(spark, ingest_conf, monkeypatch):
     """Crash AFTER the curated append but BEFORE archive/ledger commit →
     next run re-appends the same source rows under a new run id;

@@ -7,16 +7,19 @@ from __future__ import annotations
 from pathlib import Path
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import types as T
 
 from datalakejson_spark.plans.ingest import discover, ingest_batch, read_curated
 from datalakejson_spark.plans.ledger import Ledger, LedgerStatus
 from datalakejson_spark.plans.schema_evolution import (
+    RawSchemaRegistry,
     compatible,
     incompatible_columns,
     merge_schemas,
+    split_compatible_files,
 )
-from tests.conftest import good_record, write_ndjson
+from tests.conftest import good_record, jobs_of, write_ndjson
 
 
 def test_compatible_rules():
@@ -50,7 +53,7 @@ def test_merge_widens_and_unions():
     assert set(by_name) == {"x", "keep", "extra"}
 
 
-def test_incompatible_drift_quarantines_file_only(spark, ingest_conf, monkeypatch):
+def test_incompatible_drift_quarantines_file_only(spark, ingest_conf, tmp_path):
     # batch 1 establishes the landing contract (payload is a struct)
     discover(spark, ingest_conf)
     ingest_batch(spark, ingest_conf)
@@ -58,7 +61,9 @@ def test_incompatible_drift_quarantines_file_only(spark, ingest_conf, monkeypatc
     rows_before = curated_before.count()
     assert "transaction_items" in curated_before.columns
 
-    # batch 2: one drifted file (payload became a string) + one good file
+    # batch 2: one drifted file (payload became a string) beside good files,
+    # two of which say nothing about a contract column: an empty items
+    # array, and a numeric field that is null in every row
     week = Path(ingest_conf.landing_dir) / "2024" / "week08"
     write_ndjson(
         week / "drift_incompatible.json",
@@ -71,40 +76,57 @@ def test_incompatible_drift_quarantines_file_only(spark, ingest_conf, monkeypatc
         week / "still_good.json",
         [good_record(500, ts="2024-02-20T01:00:00Z")],
     )
+    no_items = good_record(501, ts="2024-02-20T02:00:00Z")
+    no_items["payload"]["items"] = []
+    write_ndjson(week / "empty_items.json", [no_items])
+    no_qty = [good_record(502 + i, ts="2024-02-20T03:00:00Z") for i in range(2)]
+    for rec in no_qty:
+        rec["payload"]["items"][0]["qty"] = None
+    write_ndjson(week / "null_qty.json", no_qty)
     discover(spark, ingest_conf)
-    # the per-file attribution runs on a thread pool: every one of its jobs
-    # must still carry the caller's job group (1 batch inference + 1 per
-    # file + 1 over the compatible files)
-    import datalakejson_spark.plans.ingest as ingest_mod
 
-    gate = ingest_mod.split_compatible_files
-    sc = spark.sparkContext
-    group = f"drift-gate-{Path(ingest_conf.ledger_dir).parent.name}"
-    seen = {}
-
-    def gate_in_group(spark_, paths, contract):
-        sc.setJobGroup(group, "drift gate")
-        try:
-            return gate(spark_, paths, contract)
-        finally:
-            sc.setJobGroup(None, None)
-            seen["files"] = len(paths)
-
-    monkeypatch.setattr(ingest_mod, "split_compatible_files", gate_in_group)
-    res = ingest_batch(spark, ingest_conf)
-    assert seen["files"] == 2
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == seen["files"] + 2
-
+    # the gate costs the same few jobs at any file count: these 4 files run
+    # the 4 jobs that per-file inference took for 2, and 64 run at most 10
+    batch = sorted(str(p) for p in week.iterdir())
+    filler = [
+        str(write_ndjson(tmp_path / "filler" / f"f{i:02d}.json", [good_record(600 + i)]))
+        for i in range(60)
+    ]
     drifted = str(week / "drift_incompatible.json")
+    contract = RawSchemaRegistry(ingest_conf.ledger_dir).load()
+    for files, budget in ((batch, 4), (batch + filler, 10)):
+        (_, bad, _), jobs = jobs_of(
+            spark,
+            f"drift-gate-{tmp_path.name}-{len(files)}",
+            lambda: split_compatible_files(spark, files, contract),
+        )
+        assert list(bad) == [drifted]
+        assert jobs <= budget, (len(files), jobs)
+    # a no-information file is compatible even when it alone is left to
+    # re-infer the good files' schema
+    empty_items = str(week / "empty_items.json")
+    good, _, good_schema = split_compatible_files(spark, [drifted, empty_items], contract)
+    assert good == [empty_items]
+    assert not incompatible_columns(contract, good_schema)
+
+    res = ingest_batch(spark, ingest_conf)
     assert drifted in res.drifted_files
     assert any(col == "payload" for col, _, _ in res.drifted_files[drifted])
-    assert [Path(p).name for p in res.succeeded_files] == ["still_good.json"]
+    assert sorted(Path(p).name for p in res.succeeded_files) == sorted(
+        Path(p).name for p in batch if p != drifted
+    )
 
-    # curated table grew by exactly the good file's rows; payload-derived
+    # curated table grew by exactly the good files' rows; payload-derived
     # columns keep their struct-derived types
     curated = read_curated(spark, ingest_conf.curated_dir)
-    assert curated.count() == rows_before + 1
+    assert curated.count() == rows_before + 4
     assert curated.filter(F.col("record_id") == "rec-500").count() == 1
+    items = dict(
+        curated.filter(F.col("record_id").isin("rec-501", "rec-502"))
+        .select("record_id", F.size("transaction_items"))
+        .collect()
+    )
+    assert items == {"rec-501": 0, "rec-502": 1}
 
     # ledger: drifted file QUARANTINED with a drift message; still in landing
     row = (
@@ -187,6 +209,7 @@ _SCALARS = st.sampled_from(
         T.BooleanType(),
         T.DateType(),
         T.TimestampType(),
+        T.NullType(),
     ]
 )
 
@@ -222,8 +245,6 @@ def test_lattice_compatible_iff_mergeable(a, b):
         merged = merge_schemas(sa, sb)["f0"].dataType
         assert compatible(merged, a) and compatible(merged, b)
     else:
-        import pytest
-
         with pytest.raises(ValueError):
             merge_schemas(sa, sb)
 
